@@ -1011,9 +1011,11 @@ def compact_line(out: dict) -> str:
         room = MAX_LINE - len(json.dumps(base))
         kept: dict = {}
         for k in ranked:
+            if q.get(k, 0.0) < 1.0:
+                break  # slowest-first: every later entry is sub-second too
             cost = len(json.dumps({**kept, k: cu[k]})) - len(json.dumps(kept))
-            if cost > room or q.get(k, 0.0) < 1.0:
-                break
+            if cost > room:
+                continue  # a shorter-named entry further down may still fit
             kept[k] = cu[k]
             room -= cost
         line_out["queries_control_units"] = kept
@@ -1048,6 +1050,7 @@ def compact_line(out: dict) -> str:
                 "unit": out.get("unit"),
                 "queries": {},
                 "sf": out.get("sf"),
+                "control_sec": out.get("control_sec"),
                 "full_report": "BENCH/bench_full_latest.json",
             }
         )

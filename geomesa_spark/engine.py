@@ -108,9 +108,11 @@ class Engine:
         org/apache/spark/sql/SQLRules.scala:204-256, predicate translation
         table :36-141: split conjuncts, translate ``st_*`` calls over literal
         geometries into index scans, leave the rest as residual filters)
-        applied at the predicate layer (PySpark exposes no optimizer-rule
-        extension point, so the rewrite runs before the plan is built — same
-        plans, same effect).
+        applied to the predicate string before the plan is built
+        (planner_rules.py): it routes each conjunct to a cell-cover, proximity
+        or geometry join, a strategy choice a Catalyst Filter rule cannot
+        make. Plain ``spark.sql`` filters get bbox/cell pushdown from the
+        JVM-side rule instead (extensions.py).
 
         Recognized conjuncts (literal geometry + point columns, either
         order; geometry literals are ``st_geomFromWKT('...')`` or

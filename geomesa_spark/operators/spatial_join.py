@@ -36,6 +36,7 @@ Design wins over the reference worth noting for parity review:
 from __future__ import annotations
 
 import math
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -120,24 +121,27 @@ def pick_resolution(geom: Geometry, max_res: int = DEFAULT_RES) -> int:
 # budget) and costs real time for curved geometries (~70 ms per buffered
 # disc: quadtree descent with per-cell rectangle relations in Python), so
 # repeated plans over the same polygons — interactive reuse, per-round bench
-# calls, tube/route tracks — hit this cache instead of re-descending.
-_COVER_CACHE: dict[tuple, object] = {}
+# calls, tube/route tracks — hit this cache instead of re-descending. LRU:
+# an overflow evicts the least recently used cover, never the working set.
+_COVER_CACHE: OrderedDict[tuple, object] = OrderedDict()
 _COVER_CACHE_MAX = 4096
 
 
 def _cover_cached(g: Geometry, target: int, max_cells: int, scheme: str = "z2"):
     key = (to_wkb(g), target, max_cells, scheme)
     cov = _COVER_CACHE.get(key)
-    if cov is None:
-        if len(_COVER_CACHE) >= _COVER_CACHE_MAX:
-            _COVER_CACHE.clear()
-        if scheme == "s2":
-            from ..core import s2
+    if cov is not None:
+        _COVER_CACHE.move_to_end(key)
+        return cov
+    if scheme == "s2":
+        from ..core import s2
 
-            cov = s2.cover_geometry(g, target, max_cells=max_cells)
-        else:
-            cov = cells.cover_geometry(g, target, max_cells=max_cells)
-        _COVER_CACHE[key] = cov
+        cov = s2.cover_geometry(g, target, max_cells=max_cells)
+    else:
+        cov = cells.cover_geometry(g, target, max_cells=max_cells)
+    _COVER_CACHE[key] = cov
+    if len(_COVER_CACHE) > _COVER_CACHE_MAX:
+        _COVER_CACHE.popitem(last=False)
     return cov
 
 

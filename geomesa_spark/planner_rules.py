@@ -4,10 +4,15 @@ From-scratch analog of the reference's Catalyst extension
 (``org/apache/spark/sql/SQLRules.scala``): its rule walks Filter/Join nodes,
 translates ``st_*`` ScalaUDF calls over literal geometries into GeoTools
 filters pushed into the relation (:216-254, translation table :36-141), and
-leaves untranslatable conjuncts behind as residual Spark filters. PySpark
-exposes no optimizer-rule extension point, so the identical rewrite runs at
-the predicate-string layer before the plan is built — the resulting physical
-plans are the same ones the rule would have produced.
+leaves untranslatable conjuncts behind as residual Spark filters. Two layers
+share that job here. A real Catalyst rule (``extensions.py`` +
+``jvm/src/geomesaspark/ext/BBoxPrefilterRule.java``) injects bbox and
+``p_cell IN (...)`` pushdown conjuncts into plain ``spark.sql`` filters over
+the exact refine UDFs. This module works on the predicate STRING before any
+plan exists (``Engine.where_spatial``): it picks the physical strategy a
+Filter rule cannot choose, routing each conjunct to the cell-cover spatial
+join, the proximity join or the geometry join, with the rest left as
+residual filters.
 
 Parser: a tiny top-level call/arg splitter (quote- and paren-aware), not
 regexes — so nested constructors (``st_makeBBOX`` inside ``st_intersects``)

@@ -11,10 +11,12 @@ so a 32-core local session pays ~30 CPU-seconds of imports again on the
 next Python stage. On a real cluster the preload happens once per
 executor, exactly where a 1000-executor deployment wants it.
 
-Wired up by session.get_spark via spark.python.daemon.module — gated on
-find_spec there, which is a valid probe because that factory always builds
-local[N] (the executor shares the driver's cwd/sys.path, so `python -m
-geomesa_spark.worker_daemon` resolves the same way). NOTE: the daemon
+Wired up by session.get_spark via spark.python.daemon.module. The daemon
+starts as `python -m geomesa_spark.worker_daemon` and resolves that from
+its cwd and PYTHONPATH only, never from the driver's sys.path, so the
+factory merges the directory holding this package into
+spark.executorEnv.PYTHONPATH (a script that reached the package through
+sys.path.insert from another cwd works too). NOTE: the daemon
 module itself must be importable wherever the daemon process starts — if
 it is not, the daemon fails to launch and every Python stage fails; the
 try/except below only degrades the OPTIONAL preloads (e.g. a stripped

@@ -139,6 +139,29 @@ def test_hard_guard_pathological_payload():
         assert key in parsed, key
 
 
+def test_floor_line_keeps_control_sec():
+    """The absolute-floor fallback still carries the normalizer, so control
+    units stay derivable from the line alone."""
+    rep = _worst_case_report()
+    rep["metric"] = "m" * 5000
+    parsed = json.loads(bench.compact_line(rep))
+    assert parsed["queries"] == {}  # the floor line was taken
+    assert parsed["control_sec"] == 99.99
+
+
+def test_control_units_skip_misfit_keep_later_entries():
+    """An entry too long for the room left is skipped, not the end of the
+    fill: slower entries after it that do fit are still kept."""
+    long_name = "q_" + "x" * 1000
+    rep = {"metric": "m", "value": 1.0, "unit": "sec", "sf": 0.1,
+           "control_sec": 1.0,
+           "queries": {long_name: 9.0, "short": 2.0, "fast": 0.5},
+           "queries_control_units": {long_name: 9.0, "short": 2.0, "fast": 0.5}}
+    parsed = json.loads(bench.compact_line(rep))
+    assert parsed["queries_control_units"] == {"short": 2.0}
+    assert len(json.dumps(parsed)) <= bench.MAX_LINE
+
+
 def test_hard_guard_sheds_fastest_first():
     """When queries alone overflow the line, the fastest entries are shed
     and the slowest (judge-comparable) ones survive."""

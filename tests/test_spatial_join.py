@@ -107,6 +107,24 @@ def test_adaptive_resolution():
     assert pick_resolution(world) <= 4
 
 
+def test_cover_cache_evicts_least_recent(monkeypatch):
+    import importlib
+    from collections import OrderedDict
+
+    # the package re-exports a function named spatial_join over the module
+    sj = importlib.import_module("geomesa_spark.operators.spatial_join")
+    monkeypatch.setattr(sj, "_COVER_CACHE", OrderedDict())
+    monkeypatch.setattr(sj, "_COVER_CACHE_MAX", 3)
+    boxes = [from_wkt(f"POLYGON(({i} 0, {i}.5 0, {i}.5 0.5, {i} 0.5, {i} 0))")
+             for i in range(4)]
+    first = [sj._cover_cached(g, 8, 64) for g in boxes[:3]]
+    assert sj._cover_cached(boxes[0], 8, 64) is first[0]  # hit refreshes box 0
+    sj._cover_cached(boxes[3], 8, 64)  # overflow: evicts box 1, the oldest
+    kept = {k[0] for k in sj._COVER_CACHE}
+    assert kept == {sj.to_wkb(boxes[i]) for i in (0, 2, 3)}
+    assert sj._cover_cached(boxes[2], 8, 64) is first[2]
+
+
 def test_salted_shuffle_splits_hot_cell(spark):
     """The salt must be a PER-ROW hash, not a function of the join key: every
     row of one hot cell must spread across >= salt_buckets/2 post-join
