@@ -943,6 +943,13 @@ def run_scaling(n_images: int = 1_200_000,
             "  the hot/spread RATIO is the claim, and sequential arm blocks\n"
             "  let capacity drift between windows masquerade as skew\n"
             "  (observed 2.9x on a drifty window vs ~1.2 steady).\n"
+            "- Interleaving means run_span_skew keeps BOTH arms' persisted\n"
+            "  frames cached for the whole timed window (before round 5 it\n"
+            "  held one at a time), so it puts twice the storage-memory\n"
+            "  pressure on the executor. At larger SPAN_SKEW_DOCS that can\n"
+            "  evict or spill and shift the absolute per-arm seconds against\n"
+            "  pre-r5 artifacts; the hot/spread ratio is unaffected (both\n"
+            "  arms see the same pressure).\n"
             "\n## Minhash witness (round 4, measured once)\n\n"
             "VERDICT r3 #8 asked for an r2-same-config minhash timing beside\n"
             "the banded entry. Finding: no r2 BENCH artifact contains a\n"

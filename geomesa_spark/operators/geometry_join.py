@@ -90,8 +90,15 @@ def geometry_join_time(
         )
     )
     spark = rows.sparkSession
-    win_rows = [(pid, float(t0), float(t1)) for pid, (t0, t1) in time_windows.items()]
-    win_df = spark.createDataFrame(win_rows, schema="poly_id string, __t0 double, __t1 double")
+    # from pandas so the Arrow path starts no Python worker (a list of
+    # tuples would run a PythonRDD job and a second worker daemon)
+    win_df = spark.createDataFrame(
+        pd.DataFrame(
+            [(pid, float(t0), float(t1)) for pid, (t0, t1) in time_windows.items()],
+            columns=["poly_id", "__t0", "__t1"],
+        ),
+        schema="poly_id string, __t0 double, __t1 double",
+    )
 
     joined = spread_small(
         rows.join(cand, row_id)

@@ -806,11 +806,20 @@ def pq_topk_indexed(
     order = np.argsort(-(qn @ cent.T), axis=1, kind="stable")[:, :n_probe]
     lut_bc = spark.sparkContext.broadcast((qid_to_idx, luts))
 
-    probe_rows = [
-        (r[0], int(lst)) for i, r in enumerate(qrows) for lst in order[i]
-    ]
-    probes = spark.createDataFrame(probe_rows, [qid_col, "__probe"])
-    all_lists = sorted({p for _, p in probe_rows})
+    # from pandas, not a list of tuples: the Arrow path starts no Python
+    # worker (a list runs a PythonRDD job and a second daemon; see
+    # geomesa_spark/worker_daemon.py)
+    probes = spark.createDataFrame(
+        pd.DataFrame({
+            qid_col: np.repeat([r[0] for r in qrows], order.shape[1]),
+            "__probe": order.ravel().astype(np.int32),
+        }),
+        schema=T.StructType([
+            T.StructField(qid_col, queries.schema[qid_col].dataType),
+            T.StructField("__probe", T.IntegerType()),
+        ]),
+    )
+    all_lists = np.unique(order).tolist()
     adc_lut = _adc_lut_udf(lut_bc, m_)
 
     cands = (

@@ -94,11 +94,15 @@ def get_spark(
         # reader entirely.
         "spark.sql.parquet.columnarReaderBatchSize": "1024",
     }
-    # Python workers fork from one daemon process per executor; preload the
-    # numpy/pandas/pyarrow + engine import cascade there so forked workers
-    # inherit it copy-on-write instead of each paying ~0.9 s on its first
-    # task (idle workers are reaped between stages, so a warmup stage
-    # cannot pre-pay this). The daemon resolves modules from its cwd and
+    # Python workers fork from a daemon process; preload the numpy/pandas/
+    # pyarrow + engine import cascade there (then gc.freeze it) so forked
+    # workers inherit it copy-on-write instead of each paying ~0.9 s on its
+    # first task (idle workers are reaped between stages, so a warmup stage
+    # cannot pre-pay this). Spark keys daemons by Python executable plus
+    # worker environment, and the RDD runner's environment differs from the
+    # SQL Arrow runners', so engine code builds driver-side frames from
+    # pandas (Arrow, no Python worker): one daemon then serves every Python
+    # stage of the session. The daemon resolves modules from its cwd and
     # PYTHONPATH only, not from this process's sys.path, so the directory
     # holding this package is merged into the executor PYTHONPATH below.
     # A multi-node deployment must ship the package to the executors

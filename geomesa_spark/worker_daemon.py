@@ -1,7 +1,7 @@
 """Python worker daemon that preloads the engine's import cascade.
 
-PySpark forks every Python UDF worker from one long-lived daemon process
-per executor (pyspark/daemon.py); forked children inherit the daemon's
+PySpark forks every Python UDF worker from a long-lived daemon process
+on each executor (pyspark/daemon.py); forked children inherit the daemon's
 already-imported modules via copy-on-write, so anything imported HERE
 costs each worker nothing. Without it, every fresh worker re-imports
 numpy + pandas + pyarrow + pyspark.sql plus whatever engine module the
@@ -10,6 +10,23 @@ workers are reaped between stages (spark.python.worker.idleTimeoutSeconds),
 so a 32-core local session pays ~30 CPU-seconds of imports again on the
 next Python stage. On a real cluster the preload happens once per
 executor, exactly where a 1000-executor deployment wants it.
+
+One daemon per worker environment, not per executor: Spark keys its daemons
+by Python executable plus the environment the runner hands the worker. The
+SQL Arrow runners set SPARK_SIMPLIFIED_TRACEBACK=1 and the RDD PythonRunner
+does not, so a single RDD-backed Python stage (e.g. createDataFrame from a
+list of tuples, which re-pickles the rows through a PythonRDD job) starts a
+SECOND daemon with its own idle workers beside the first. Engine code
+therefore builds driver-side frames from pandas: that goes through Arrow
+and starts no Python worker at all, and every Python stage of a session
+shares the one daemon.
+
+The preload runs with the cyclic GC disabled and ends in gc.freeze(), the
+fork recipe from the CPython gc docs: the preloaded objects move to the
+permanent generation, so the gc.collect() a worker runs after every task
+never writes their GC headers, and those pages stay shared with the daemon
+instead of being copied into each worker (~70 -> ~58 MiB PSS per worker,
+measured with 4 workers on a 4-core local session).
 
 Wired up by session.get_spark via spark.python.daemon.module. The daemon
 starts as `python -m geomesa_spark.worker_daemon` and resolves that from
@@ -27,6 +44,8 @@ set SPARK_GRAFT_NO_DAEMON_PRELOAD=1 to leave the stock daemon in place.
 """
 
 from __future__ import annotations
+
+import gc
 
 
 def _preload() -> None:
@@ -51,9 +70,15 @@ def _preload() -> None:
         pass
 
 
+# no collection during the preload leaves no freed holes among the imported
+# objects; freezing them keeps every forked worker's collections off them
+gc.disable()
 _preload()
 
 from pyspark.daemon import manager  # noqa: E402
+
+gc.freeze()
+gc.enable()
 
 if __name__ == "__main__":
     manager()

@@ -1,12 +1,13 @@
 """get_spark session start: the class-data archive (built once into the user
-cache, mapped by later sessions, never fatal) and the Python worker daemon's
-import path.
+cache, mapped by later sessions, never fatal) and the Python worker daemon
+(its import path, one daemon per session, the frozen preload).
 
-Every session here runs in its own subprocess with a temp XDG_CACHE_HOME:
-the archive applies only where a process launches its driver JVM, and this
-process's JVM may already be up. The subprocesses run against a symlinked
-copy of SPARK_HOME whose conf dir the test controls."""
+Sessions that test the start run in their own subprocess with a temp
+XDG_CACHE_HOME: the archive applies only where a process launches its
+driver JVM, and this process's JVM may already be up. The subprocesses run
+against a symlinked copy of SPARK_HOME whose conf dir the test controls."""
 
+import gc
 import json
 import os
 import subprocess
@@ -144,3 +145,56 @@ out["udf"] = int(spark.range(10).select(plus_one("id")).toPandas().iloc[:, 0].su
     out = _session(home, tmp_path / "cache", tmp_path, extra=udf)
     assert out["udf"] == 55
     assert REPO in out["conf"]["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
+
+
+def test_python_stages_share_one_worker_daemon(tmp_path):
+    """An ANN build + indexed search with rerank, then a fused density scan:
+    every Python stage forks from the same daemon. Spark keys daemons by
+    worker environment, and a PythonRDD job (e.g. createDataFrame from a
+    list of tuples) gets a different one than the SQL Arrow runners."""
+    home = _spark_home(tmp_path / "spark", {"spark-defaults.conf": "# none\n"})
+    ops = f"""
+import numpy as np, pandas as pd
+from pyspark.sql import functions as F
+from geomesa_spark.operators.similarity import build_pq_index, pq_topk_indexed
+from geomesa_spark.sources.images import images_df
+from geomesa_spark.sources.parquet_scan import density_scan
+rng = np.random.default_rng(5)
+vecs = spark.createDataFrame(pd.DataFrame({{
+    "vec_id": np.arange(200),
+    "embedding": rng.normal(size=(200, 16)).astype(np.float32).tolist()}}))
+queries = vecs.filter("vec_id < 4").select(
+    F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
+build_pq_index(vecs, {str(tmp_path / "pq")!r}, dim=16, m=4, ksub=16, n_centroids=4)
+out["ann"] = pq_topk_indexed(spark, {str(tmp_path / "pq")!r}, queries, k=3,
+                             n_probe=2, rerank=10, vectors=vecs).count()
+images_df(spark, 100, partitions=2).write.parquet({str(tmp_path / "img")!r})
+out["tiles"] = density_scan(spark, {str(tmp_path / "img")!r}, {{
+    "nyc": "POLYGON((-74.6 40.2, -73.4 40.2, -73.4 41.2, -74.6 41.2, -74.6 40.2))",
+}}).count()
+import os
+jvm = spark.sparkContext._gateway.proc.pid
+out["daemons"] = 0
+for p in filter(str.isdigit, os.listdir("/proc")):
+    try:
+        cmd = open(f"/proc/{{p}}/cmdline", "rb").read().split(b"\\0")
+        stat = open(f"/proc/{{p}}/stat").read()
+    except OSError:
+        continue
+    ppid = int(stat[stat.rindex(")") + 2:].split()[1])
+    out["daemons"] += ppid == jvm and b"geomesa_spark.worker_daemon" in cmd
+"""
+    out = _session(home, tmp_path / "cache", tmp_path, extra=ops)
+    assert out["ann"] == 4 * 3
+    assert out["tiles"] > 0
+    assert out["daemons"] == 1
+
+
+def test_workers_fork_from_a_frozen_preload(spark):
+    """The daemon freezes its preloaded objects before it forks workers, so
+    a worker's collections leave those pages shared with the daemon."""
+    from pyspark.sql.functions import pandas_udf
+
+    freeze_count = pandas_udf(lambda s: s * 0 + gc.get_freeze_count(), "long")
+    counts = spark.range(4).select(freeze_count("id").alias("n")).toPandas()["n"]
+    assert (counts > 0).all(), counts.tolist()
