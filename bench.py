@@ -451,13 +451,15 @@ ANN_REPS = 3
 
 
 def run_ann(spark) -> dict:
-    """ANN path comparison (round 5, IVF-PQ addition): brute-force exact
-    cosine vs trained IVF vs IVF-PQ with exact rerank, same synthetic
-    clustered corpus (150k x 64f, 64 clusters, deterministic), k=10,
-    Q=32 queries. Each arm is timed as the user calls it (training
-    included — both approximate paths pay their bounded driver-sample
-    k-means) with 1 warmup + median of ANN_REPS; recall@10 is measured
-    against the brute arm's output.
+    """ANN path comparison: brute-force exact cosine vs trained IVF vs
+    IVF-PQ with exact rerank, same synthetic clustered corpus (150k x 64f,
+    64 clusters, deterministic), k=10, Q=32 queries. Brute and IVF are
+    timed as the user calls them (IVF training included). IVF-PQ is
+    build-once/search-many: ``build_pq_index`` trains, encodes and writes
+    the index ONCE, outside the rep loop (reported as ``pq.build_s``), and
+    the recurring arm is ``pq_topk_indexed`` search only — probe, ADC and
+    rerank. Every arm: 1 warmup + median of ANN_REPS; recall@10 is
+    measured against the brute arm's output.
 
     The structural difference the arms witness: IVF's candidate join
     ships dim*4 = 256 bytes of vector per candidate row; PQ's ships the
@@ -474,6 +476,7 @@ def run_ann(spark) -> dict:
     embedding distributions with heavier-tailed neighbor margins, drops
     to ~0.1 on this fixture). The arm reports whatever it measures."""
     import statistics
+    import tempfile
     import time as _t
 
     import numpy as np
@@ -481,8 +484,9 @@ def run_ann(spark) -> dict:
 
     from geomesa_spark.operators.similarity import (
         brute_force_topk,
+        build_pq_index,
         ivf_topk,
-        pq_topk,
+        pq_topk_indexed,
     )
 
     rng = np.random.default_rng(23)
@@ -499,49 +503,56 @@ def run_ann(spark) -> dict:
     queries = spark.createDataFrame(pdf.head(ANN_Q).rename(
         columns={"vec_id": "qid", "embedding": "qvec"}
     ))
-
-    def arm_brute():
-        return brute_force_topk(df, queries, k=10)
-
-    def arm_ivf():
-        return ivf_topk(
-            df, queries, k=10, dim=ANN_DIM, n_centroids=64, n_probe=8
+    with tempfile.TemporaryDirectory(prefix="bench-pq-") as index_dir:
+        pq_path = os.path.join(index_dir, "index")
+        t0 = _t.time()
+        build_pq_index(
+            df, pq_path, dim=ANN_DIM, m=16, ksub=256, n_centroids=64
         )
+        pq_build_s = round(_t.time() - t0, 3)
 
-    def arm_pq():
-        return pq_topk(
-            df, queries, k=10, dim=ANN_DIM, m=16, ksub=256,
-            n_centroids=64, n_probe=8, rerank=1000,
-        )
+        def arm_brute():
+            return brute_force_topk(df, queries, k=10)
 
-    arms: dict = {}
-    truth: dict[int, set] = {}
-    for name, fn in (("brute", arm_brute), ("ivf", arm_ivf), ("pq", arm_pq)):
-        got = fn().toPandas()  # warmup rep doubles as the recall sample
-        if name == "brute":
-            for qid, grp in got.groupby("qid"):
-                truth[qid] = set(grp["vec_id"])
-            recall = 1.0
-        else:
-            # denominator over ALL truth qids: a query the arm returned
-            # nothing for counts 0.0, not silently omitted
-            by_q = {qid: set(grp["vec_id"]) for qid, grp in got.groupby("qid")}
-            per_q = [
-                len(truth[qid] & by_q.get(qid, set())) / max(len(truth[qid]), 1)
-                for qid in truth
-            ]
-            recall = round(float(np.mean(per_q)), 3) if per_q else 0.0
-        samples = []
-        for _ in range(ANN_REPS):
-            t0 = _t.time()
-            _noop_write(fn())
-            samples.append(round(_t.time() - t0, 3))
-        arms[name] = {
-            "samples": samples,
-            "seconds": statistics.median(samples),
-            "recall_at_10": recall,
-        }
+        def arm_ivf():
+            return ivf_topk(
+                df, queries, k=10, dim=ANN_DIM, n_centroids=64, n_probe=8
+            )
+
+        def arm_pq():
+            return pq_topk_indexed(
+                spark, pq_path, queries, k=10, n_probe=8, rerank=1000, vectors=df
+            )
+
+        arms: dict = {}
+        truth: dict[int, set] = {}
+        for name, fn in (("brute", arm_brute), ("ivf", arm_ivf), ("pq", arm_pq)):
+            got = fn().toPandas()  # warmup rep doubles as the recall sample
+            if name == "brute":
+                for qid, grp in got.groupby("qid"):
+                    truth[qid] = set(grp["vec_id"])
+                recall = 1.0
+            else:
+                # denominator over ALL truth qids: a query the arm returned
+                # nothing for counts 0.0, not silently omitted
+                by_q = {qid: set(grp["vec_id"]) for qid, grp in got.groupby("qid")}
+                per_q = [
+                    len(truth[qid] & by_q.get(qid, set())) / max(len(truth[qid]), 1)
+                    for qid in truth
+                ]
+                recall = round(float(np.mean(per_q)), 3) if per_q else 0.0
+            samples = []
+            for _ in range(ANN_REPS):
+                t0 = _t.time()
+                _noop_write(fn())
+                samples.append(round(_t.time() - t0, 3))
+            arms[name] = {
+                "samples": samples,
+                "seconds": statistics.median(samples),
+                "recall_at_10": recall,
+            }
     df.unpersist()
+    arms["pq"]["build_s"] = pq_build_s
     arms["candidate_row_bytes"] = {"ivf_vector": ANN_DIM * 4, "pq_code": 16}
     arms["pq_config"] = {"m": 16, "ksub": 256, "n_probe": 8, "rerank": 1000}
     return arms

@@ -1907,40 +1907,28 @@ def _cos_sql(a: str, b: str) -> str:
     return f"{_DOT.format(a=a, b=b)} / ({_NORM.format(c=a)} * {_NORM.format(c=b)})"
 
 
-def q_ann_ivf(spark, sf_dir):
-    from .operators.similarity import ivf_topk_native
-
-    (emb,) = _load(spark, sf_dir, "embeddings")
-    queries = (
-        emb.filter(F.col("vec_id") < ANN_NQ)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    )
-    out = ivf_topk_native(
-        emb, queries, k=ANN_K, n_centroids=IVF_C, n_probe=IVF_PROBE
-    )
-    return out.select(
-        F.col("qid").cast("long"), F.col("vec_id").cast("long"),
-        F.col("rnk").cast("int"),
-    )
-
-
-def q_ann_ivf_udf(spark, sf_dir):
-    """The UDF-argmax IVF path (ivf_topk — the 100 TB scale shape: the
-    assignment never leaves the map side, no N x C rows exist anywhere)
-    under the SAME oracle as ann_ivf: centroids are the first IVF_C
-    embeddings L2-normalized, so cosine argmax/probing/rerank replay in SQL
-    identically to the native path."""
-    from .operators.similarity import ivf_topk
-
-    (emb,) = _load(spark, sf_dir, "embeddings")
-    cent_pdf = (
-        emb.filter(F.col("vec_id") < IVF_C)
+def _head_unit_vectors(emb, n: int) -> np.ndarray:
+    """The first ``n`` embeddings by vec_id, L2-normalized: the
+    deterministic head-sampled model the ANN oracles replay in SQL."""
+    pdf = (
+        emb.filter(F.col("vec_id") < n)
         .orderBy("vec_id")
         .select("embedding")
         .toPandas()
     )
-    cent = np.array(cent_pdf["embedding"].tolist(), dtype=np.float64)
-    cent /= np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
+    head = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    return head / np.maximum(np.linalg.norm(head, axis=1, keepdims=True), 1e-12)
+
+
+def q_ann_ivf_udf(spark, sf_dir):
+    """IVF (ivf_topk — the 100 TB scale shape: the assignment never leaves
+    the map side, no N x C rows exist anywhere) with the first IVF_C
+    embeddings L2-normalized as centroids, so cosine argmax, probing and
+    rerank replay in SQL."""
+    from .operators.similarity import ivf_topk
+
+    (emb,) = _load(spark, sf_dir, "embeddings")
+    cent = _head_unit_vectors(emb, IVF_C)
     queries = (
         emb.filter(F.col("vec_id") < ANN_NQ)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
@@ -1991,25 +1979,27 @@ PQ_RERANK = 30
 
 
 def q_ann_pq(spark, sf_dir):
-    """Fully native IVF-PQ (pq_topk_native): deterministic head-sampled
-    codebooks + coarse centroids, min_by encode (the N x m x ksub
-    assignment never shuffles), reconstruction as an array column so the
-    ADC score is ONE row-wise sequential fold, exact rerank of the ADC
-    top-PQ_RERANK. The DuckDB oracle replays the ENTIRE pipeline —
-    encode, reconstruction, ADC, rerank — so the driver hash verifies the
-    product-quantization operator itself (the trained-codebook pq_topk is
-    the production path, pytest-gated; this is its oracle-able twin, the
-    ann_ivf_udf <-> ivf_topk_native relationship)."""
-    from .operators.similarity import pq_topk_native
+    """IVF-PQ (pq_topk: list-assign and encode UDFs, broadcast-LUT ADC over
+    m-byte codes, exact rerank of the ADC top-PQ_RERANK) with a
+    deterministic head-sampled model: the first PQ_KSUB unit embeddings,
+    split into PQ_M subspaces, are the codebooks, and the first IVF_C are
+    the coarse centroids. The DuckDB oracle replays the ENTIRE pipeline —
+    encode, reconstruction, ADC, probing, rerank — so the driver hash
+    verifies the product-quantization operator itself."""
+    from .operators.similarity import pq_topk
 
     (emb,) = _load(spark, sf_dir, "embeddings")
+    head = _head_unit_vectors(emb, max(PQ_KSUB, IVF_C))
+    dsub = 64 // PQ_M
+    books = head[:PQ_KSUB].reshape(PQ_KSUB, PQ_M, dsub).transpose(1, 0, 2)
     queries = (
         emb.filter(F.col("vec_id") < ANN_NQ)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     )
-    out = pq_topk_native(
+    out = pq_topk(
         emb, queries, k=ANN_K, dim=64, m=PQ_M, ksub=PQ_KSUB,
         n_centroids=IVF_C, n_probe=IVF_PROBE, rerank=PQ_RERANK,
+        codebooks=books, centroids=head[:IVF_C],
     )
     return out.select(
         F.col("qid").cast("long"), F.col("vec_id").cast("long"),
@@ -2983,8 +2973,6 @@ RETIRED_QUERIES = {
     "embed_norms": (q_embed_norms, _oracle_embed_norms()),
     # representative: embed_neardup (LSH path; exact is the labeled baseline)
     "embed_neardup_exact": (q_embed_neardup_exact, _oracle_embed_neardup()),
-    # representative: ann_ivf_udf (shared oracle; grid-centroid native variant)
-    "ann_ivf": (q_ann_ivf, _oracle_ann_ivf()),
     # representative: img_density_scan (the fused-scan superset)
     "img_tile_density": (q_img_tile_density, _oracle_img_tile_density()),
 }

@@ -40,11 +40,9 @@ from .similarity import (  # noqa: F401
     brute_force_topk,
     embedding_neardup_pairs,
     ivf_topk,
-    ivf_topk_native,
     lsh_topk,
     pq_encode,
     pq_topk,
-    pq_topk_native,
     build_pq_index,
     pq_topk_indexed,
     train_pq_codebooks,

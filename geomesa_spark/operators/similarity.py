@@ -1,24 +1,28 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
 Training-data-pipeline operator (no GeoMesa analog; the kNN ring-expansion
-pattern of knn.py is its spatial cousin). Paths, in increasing scale:
+pattern of knn.py is its spatial cousin). One implementation per algorithm,
+in increasing scale:
 
 - brute_force_topk: exact cosine top-k. The dot products run JVM-side via
   zip_with/aggregate on the embedding arrays — no Python — so the only cost
   is the Q x N candidate expansion (Q broadcast), then a window top-k.
-- lsh_topk: scale path. Random-hyperplane LSH (Charikar 2002) bucketing via
-  one Arrow-batched UDF; queries probe their own bucket (+ multiprobe
-  neighbors), so each query scores only its bucket's vectors. Recall is
-  tunable by (n_planes, n_tables); exactness is NOT guaranteed — the bench
-  compares it against brute force for recall.
-- ivf_topk / ivf_topk_native: data-adaptive routing — each vector joins its
-  nearest coarse-centroid list; queries probe n_probe lists and exact-rerank
-  only those candidates.
-- train_pq_codebooks / pq_encode / pq_topk: IVF-PQ (Jegou et al. 2011), the
-  100-TB layout — candidates are scored from m-byte product-quantization
-  codes via broadcast lookup tables, so neither the candidate shuffle nor
-  the scoring stage ever touches a raw vector; exact cosine returns only
-  for the Q x rerank survivors.
+- lsh_topk: random-hyperplane LSH (Charikar 2002) bucketing via one
+  Arrow-batched UDF; queries score only the vectors that share a bucket in
+  some table. Recall is tunable by (n_planes, n_tables); exactness is NOT
+  guaranteed — the bench compares it against brute force for recall.
+- ivf_topk: data-adaptive routing — each vector joins its nearest
+  coarse-centroid list; queries probe n_probe lists and exact-rerank only
+  those candidates.
+- pq_topk / build_pq_index + pq_topk_indexed: IVF-PQ (Jegou et al. 2011),
+  the 100-TB layout. Candidates are scored from m-byte product-quantization
+  codes against broadcast per-query lookup tables, so neither the candidate
+  join nor the scoring stage touches a raw vector; exact cosine returns only
+  for the Q x rerank survivors. pq_topk encodes in memory, pq_topk_indexed
+  reads the persisted index; both search through one core (_pq_search).
+
+Every exact re-rank ends in the same tail (_exact_topk): cosine over the
+candidate pairs, a per-query row_number window, rnk <= k.
 """
 
 from __future__ import annotations
@@ -42,6 +46,58 @@ def _dot_expr(a: str, b: str) -> str:
     )
 
 
+def _cosine(a: str, b: str):
+    return F.expr(_dot_expr(a, b)) / (F.expr(_norm_expr(a)) * F.expr(_norm_expr(b)))
+
+
+def _top_per_query(df: DataFrame, score: str, k: int, id_col: str, qid_col: str) -> DataFrame:
+    """Rows ranked 1..k per query by (score DESC, id ASC), as column rnk."""
+    w = Window.partitionBy(qid_col).orderBy(F.col(score).desc(), F.col(id_col).asc())
+    return df.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def _exact_topk(
+    cands: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    qvec_col: str,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Exact cosine top-k over (qid, qvec, id, vec) candidate pairs:
+    -> (qid, vec_id, sim, rnk)."""
+    cands = cands.withColumn("sim", _cosine(vec_col, qvec_col))
+    if exclude_self:
+        cands = cands.filter(F.col(id_col) != F.col(qid_col))
+    return _top_per_query(cands, "sim", k, id_col, qid_col).select(
+        qid_col, id_col, "sim", "rnk"
+    )
+
+
+def _unit_rows(vs, dim: int = -1) -> np.ndarray:
+    """Vectors as an L2-normalized float64 (n, dim) matrix."""
+    X = np.array(list(vs), dtype=np.float64).reshape(len(vs), dim)
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    return X
+
+
+def _probe_lists(qn: np.ndarray, cent: np.ndarray, n_probe: int) -> np.ndarray:
+    """Each unit query's n_probe nearest lists. The stable sort ranks ties
+    by list index ascending, the SQL oracles' (sim DESC, cid ASC) order."""
+    return np.argsort(-(qn @ cent.T), axis=1, kind="stable")[:, :n_probe]
+
+
+def _list_assign_udf(cent: np.ndarray):
+    """vec -> index of its nearest coarse centroid (cosine argmax)."""
+
+    @F.pandas_udf("int")
+    def assign(vs: pd.Series) -> pd.Series:
+        return pd.Series(np.argmax(_unit_rows(vs) @ cent.T, axis=1).astype(np.int32))
+
+    return assign
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -53,19 +109,9 @@ def brute_force_topk(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k: -> (qid, vec_id, sim, rnk). Queries broadcast."""
-    cand = vectors.crossJoin(F.broadcast(queries))
-    sim = (
-        F.expr(_dot_expr(vec_col, qvec_col))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr(qvec_col)))
-    )
-    cand = cand.withColumn("sim", sim)
-    if exclude_self:
-        cand = cand.filter(F.col(id_col) != F.col(qid_col))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
+    return _exact_topk(
+        vectors.crossJoin(F.broadcast(queries)),
+        k, id_col, vec_col, qid_col, qvec_col, exclude_self,
     )
 
 
@@ -84,19 +130,6 @@ def sign_planes(dim: int, n_planes: int, table: int) -> np.ndarray:
     )
     bits = splitmix64_np(seeds.ravel()) & np.uint64(1)
     return (2.0 * bits.reshape(n_planes, dim).astype(np.float64)) - 1.0
-
-
-def hyperplane_bucket_udf(dim: int, n_planes: int = 12, table: int = 0):
-    planes = sign_planes(dim, n_planes, table)
-
-    @F.pandas_udf(T.LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.array(vecs.tolist(), dtype=np.float64)
-        signs = (m @ planes.T) > 0
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series((signs @ weights).astype(np.int64))
-
-    return bucket
 
 
 def multi_table_bucket_udf(dim: int, n_planes: int, n_tables: int):
@@ -146,17 +179,7 @@ def lsh_topk(
     )
     cands = v.join(F.broadcast(q), ["__t", "__b"]).drop("__t", "__b")
     cands = cands.dropDuplicates([qid_col, id_col])
-    sim = (
-        F.expr(_dot_expr(vec_col, qvec_col))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr(qvec_col)))
-    )
-    cands = cands.withColumn("sim", sim).filter(F.col(id_col) != F.col(qid_col))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
+    return _exact_topk(cands, k, id_col, vec_col, qid_col, qvec_col)
 
 
 def embedding_neardup_pairs(
@@ -199,12 +222,8 @@ def embedding_neardup_pairs(
             .drop("__t", "__b")
             .dropDuplicates(["id_a", "id_b"])
         )
-    sim = (
-        F.expr(_dot_expr("__va", "__vb"))
-        / (F.expr(_norm_expr("__va")) * F.expr(_norm_expr("__vb")))
-    )
     return (
-        cands.withColumn("sim", F.round(sim, 6))
+        cands.withColumn("sim", F.round(_cosine("__va", "__vb"), 6))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
@@ -230,8 +249,7 @@ def train_ivf_centroids(
         raise ValueError(
             "train_ivf_centroids: vectors table is empty — nothing to sample"
         )
-    X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows(pdf[vec_col])
     rng = np.random.default_rng(seed)
     cent = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
     for _ in range(iters):
@@ -248,89 +266,6 @@ def train_ivf_centroids(
             np.linalg.norm(v, axis=1, keepdims=True), 1e-12
         )
     return cent
-
-
-def ivf_topk_native(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_centroids: int = 32,
-    n_probe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """IVF cosine top-k with a FULLY NATIVE plan (zero Python): the coarse
-    quantizer is the table's first ``n_centroids`` vectors (deterministic
-    sampling init — the standard k-means seeding step without the Lloyd
-    iterations, so an ANSI-SQL oracle can reproduce the whole pipeline).
-
-    Plan: assignment = broadcast cross join against the centroid table +
-    ``min_by`` argmax aggregate (N x C JVM-side dot products — the canonical
-    IVF assign cost — but the N x C candidate set NEVER shuffles: min_by has
-    a partial-aggregate form, so each map task collapses its rows to one per
-    vector id before the exchange; only N (id, vec, list) rows cross the
-    wire, vs the round-2 row_number window that shuffled and sorted all
-    N x C rows with full embedding payloads); probing = per-query window over
-    the tiny Q x C set; rerank = exact cosine over probed lists only.
-    -> (qid, vec_id, sim, rnk). Use :func:`ivf_topk` for the trained k-means
-    quantizer.
-    """
-    cent = F.broadcast(
-        vectors.orderBy(F.col(id_col).asc()).limit(n_centroids).select(
-            F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cvec")
-        )
-    )
-    csim = (
-        F.expr(_dot_expr(vec_col, "__cvec"))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr("__cvec")))
-    )
-    # argmax by (sim DESC, cid ASC) == min_by over (-sim, cid) — identical
-    # tie-breaking to the SQL oracle's row_number ordering. NaN guard: a
-    # zero-norm vector yields NaN cosine; pin it to -2 (below any real
-    # cosine) so degenerate centroids are never selected — NaN ordering
-    # would otherwise differ between min_by and the window formulation.
-    csim = F.nanvl(csim, F.lit(-2.0))
-    assign = (
-        vectors.crossJoin(cent)
-        .withColumn("__csim", csim)
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.col("__cid"),
-                F.struct((-F.col("__csim")).alias("ns"), F.col("__cid").alias("c")),
-            ).alias("__list"),
-            F.any_value(F.col(vec_col)).alias(vec_col),
-        )
-        .select(id_col, vec_col, "__list")
-    )
-    qsim = (
-        F.expr(_dot_expr(qvec_col, "__cvec"))
-        / (F.expr(_norm_expr(qvec_col)) * F.expr(_norm_expr("__cvec")))
-    )
-    wq = Window.partitionBy(qid_col).orderBy(F.col("__qsim").desc(), F.col("__cid").asc())
-    probes = (
-        queries.crossJoin(cent)
-        .withColumn("__qsim", qsim)
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= n_probe)
-        .select(qid_col, qvec_col, F.col("__cid").alias("__probe"))
-    )
-    cands = assign.join(
-        F.broadcast(probes), assign["__list"] == probes["__probe"]
-    ).drop("__list", "__probe")
-    sim = (
-        F.expr(_dot_expr(vec_col, qvec_col))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr(qvec_col)))
-    )
-    cands = cands.withColumn("sim", sim).filter(F.col(id_col) != F.col(qid_col))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
 
 
 def ivf_topk(
@@ -358,63 +293,29 @@ def ivf_topk(
         vectors, dim, n_centroids, vec_col
     )
 
-    @F.pandas_udf("int")
-    def assign_udf(vs: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(X @ cent.T, axis=1).astype(np.int32))
-
     @F.pandas_udf("array<int>")
     def probe_udf(vs: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        # stable sort: ties rank by list index ascending, matching the
-        # SQL oracle's (sim DESC, cid ASC) ordering deterministically
-        order = np.argsort(-(X @ cent.T), axis=1, kind="stable")[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
+        order = _probe_lists(_unit_rows(vs), cent, n_probe)
+        return pd.Series(list(order.astype(np.int32)))
 
-    v = vectors.withColumn("__list", assign_udf(F.col(vec_col)))
+    v = vectors.withColumn("__list", _list_assign_udf(cent)(F.col(vec_col)))
     q = queries.withColumn("__probe", F.explode(probe_udf(F.col(qvec_col))))
     cands = v.join(
         F.broadcast(q), v["__list"] == q["__probe"]
     ).drop("__list", "__probe")
-    sim = (
-        F.expr(_dot_expr(vec_col, qvec_col))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr(qvec_col)))
-    )
-    cands = cands.withColumn("sim", sim).filter(F.col(id_col) != F.col(qid_col))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
+    return _exact_topk(cands, k, id_col, vec_col, qid_col, qvec_col)
 
 
-# beyond this many queries, pq_topk's per-query ADC lookup tables would
-# exceed ~32 MB of broadcast (1024 x m=16 x ksub=256 x 8 B) — degrade to
-# carrying the query vector per candidate row instead
+# the per-query ADC lookup tables are built driver-side and broadcast: past
+# this many queries they would exceed ~32 MB (1024 x m=16 x ksub=256 x 8 B),
+# so a search raises and asks the caller to batch
 MAX_ADC_LUT_QUERIES = 1024
 
 
-def _query_luts(qrows, books: np.ndarray):
-    """Shared ADC-LUT builder for the two LUT-scoring paths
-    (:func:`pq_topk` / :func:`pq_topk_indexed`): from collected
-    (qid, qvec) rows -> (qid_to_idx, qn, luts) where ``qn`` is the
-    L2-normalized query matrix and ``LUT[q, j, c]`` = codebook[j, c] .
-    qn[q]'s j-th subvector. One einsum, computed driver-side once per
-    call; the caller broadcasts (qid_to_idx, luts)."""
-    m_, _, dsub = books.shape
-    qn = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn /= np.maximum(np.linalg.norm(qn, axis=1, keepdims=True), 1e-12)
-    luts = np.einsum("jcd,qjd->qjc", books, qn.reshape(len(qn), m_, dsub))
-    return {r[0]: i for i, r in enumerate(qrows)}, qn, luts
-
-
 def _adc_lut_udf(lut_bc, m_: int):
-    """Shared vectorized ADC scorer over broadcast LUTs: rows are
-    (qid, m-byte code) — the gather L[q, j, code[j]].sum(j) is the whole
-    score; no vectors cross the exchange."""
+    """Vectorized ADC scorer over broadcast LUTs: rows are (qid, m-byte
+    code) — the gather L[q, j, code[j]].sum(j) is the whole score; no
+    vectors cross the exchange."""
 
     @F.pandas_udf("double")
     def adc_lut(qids: pd.Series, codes: pd.Series) -> pd.Series:
@@ -458,8 +359,7 @@ def train_pq_codebooks(
         raise ValueError(
             "train_pq_codebooks: vectors table is empty — nothing to sample"
         )
-    X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows(pdf[vec_col])
     rng = np.random.default_rng(seed)
     books = np.empty((m, ksub, dsub), dtype=np.float64)
     k_eff = min(ksub, len(X))
@@ -506,8 +406,7 @@ def pq_encode(
 
     @F.pandas_udf("binary")
     def encode(vs: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        X = _unit_rows(vs)
         codes = np.empty((len(X), m), dtype=np.uint8)
         for j in range(m):
             S = X[:, j * dsub : (j + 1) * dsub]
@@ -515,6 +414,125 @@ def pq_encode(
         return pd.Series([c.tobytes() for c in codes])
 
     return vectors.withColumn(code_col, encode(F.col(vec_col))).drop(vec_col)
+
+
+def _pq_model(
+    vectors: DataFrame,
+    dim: int,
+    m: int,
+    ksub: int,
+    n_centroids: int,
+    vec_col: str,
+    codebooks: np.ndarray | None,
+    centroids: np.ndarray | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(codebooks, centroids): the arrays given, else trained on bounded
+    driver samples."""
+    if codebooks is None:
+        codebooks = train_pq_codebooks(vectors, dim, m=m, ksub=ksub, vec_col=vec_col)
+    if centroids is None:
+        centroids = train_ivf_centroids(vectors, dim, n_centroids, vec_col)
+    return codebooks, centroids
+
+
+def _pq_index(
+    vectors: DataFrame,
+    books: np.ndarray,
+    cent: np.ndarray,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The IVF-PQ index frame: (id, __list, pq_code), one Arrow pass each
+    for the list assignment and the encode."""
+    return pq_encode(
+        vectors.select(id_col, vec_col).withColumn(
+            "__list", _list_assign_udf(cent)(F.col(vec_col))
+        ),
+        books,
+        vec_col=vec_col,
+    )
+
+
+def _pq_search(
+    index: DataFrame,
+    queries: DataFrame,
+    books: np.ndarray,
+    cent: np.ndarray,
+    k: int,
+    n_probe: int,
+    rerank: int,
+    vectors: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    qvec_col: str,
+) -> DataFrame:
+    """The one IVF-PQ search over an (id, __list, pq_code) index frame.
+
+    The queries are collected (at most MAX_ADC_LUT_QUERIES), so probing and
+    the per-query lookup tables ``LUT[q, j, c]`` = codebook[j, c] . unit
+    query q's j-th subvector are computed on the driver in numpy. The probed
+    lists become a STATIC ``__list IN (...)`` filter — on a list-partitioned
+    parquet index that prunes at file-listing time (PartitionFilters in the
+    plan), not left to runtime DPP; on pq_topk's in-memory frame Catalyst
+    pushes it below the encode, so only probed lists are encoded.
+
+    ADC scores (qid, code) rows through :func:`_adc_lut_udf`; ``rerank > 0``
+    re-scores the ADC top-``rerank`` ids per query with exact cosine against
+    ``vectors`` (a semi-join of survivors only — at most Q x rerank rows
+    broadcast). With ``rerank=0`` the ADC estimate itself ranks (sim is then
+    the PQ approximation). With no queries the same plan runs on an empty
+    probe frame, so the empty result has the same schema as any other.
+    """
+    qrows = queries.select(qid_col, qvec_col).limit(
+        MAX_ADC_LUT_QUERIES + 1
+    ).collect()
+    if len(qrows) > MAX_ADC_LUT_QUERIES:
+        raise ValueError(
+            f"IVF-PQ search supports <= {MAX_ADC_LUT_QUERIES} queries per "
+            "call (driver-side probe + LUT); batch larger query sets"
+        )
+    m_, _, dsub = books.shape
+    qids = [r[0] for r in qrows]
+    qn = _unit_rows([r[1] for r in qrows], m_ * dsub)
+    luts = np.einsum("jcd,qjd->qjc", books, qn.reshape(len(qn), m_, dsub))
+    order = _probe_lists(qn, cent, n_probe)
+    spark = index.sparkSession
+    lut_bc = spark.sparkContext.broadcast(({q: i for i, q in enumerate(qids)}, luts))
+
+    # from pandas, not a list of tuples: the Arrow path starts no Python
+    # worker (a list runs a PythonRDD job and a second daemon; see
+    # geomesa_spark/worker_daemon.py)
+    probes = spark.createDataFrame(
+        pd.DataFrame({
+            qid_col: np.repeat(np.array(qids, dtype=object), order.shape[1]),
+            "__probe": order.ravel().astype(np.int32),
+        }),
+        schema=T.StructType([
+            T.StructField(qid_col, queries.schema[qid_col].dataType),
+            T.StructField("__probe", T.IntegerType()),
+        ]),
+    )
+    cands = (
+        index.filter(F.col("__list").isin(np.unique(order).tolist()))
+        .join(F.broadcast(probes), index["__list"] == probes["__probe"])
+        .drop("__list", "__probe")
+        .filter(F.col(id_col) != F.col(qid_col))
+        .withColumn("__adc", _adc_lut_udf(lut_bc, m_)(F.col(qid_col), F.col("pq_code")))
+    )
+    if rerank <= 0:
+        return _top_per_query(cands, "__adc", k, id_col, qid_col).select(
+            qid_col, id_col, F.col("__adc").alias("sim"), "rnk"
+        )
+    survivors = (
+        _top_per_query(cands, "__adc", rerank, id_col, qid_col)
+        .select(qid_col, id_col)
+        .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
+    )
+    return _exact_topk(
+        vectors.join(F.broadcast(survivors), id_col),
+        k, id_col, vec_col, qid_col, qvec_col, exclude_self=False,
+    )
 
 
 def pq_topk(
@@ -533,7 +551,6 @@ def pq_topk(
     qvec_col: str = "qvec",
     codebooks: np.ndarray | None = None,
     centroids: np.ndarray | None = None,
-    adc_by_lut: bool = True,
 ) -> DataFrame:
     """IVF-PQ approximate cosine top-k: -> (qid, vec_id, sim, rnk).
 
@@ -545,145 +562,18 @@ def pq_topk(
     shrinks by ~dim*4/m (384x for dim=768, m=8) and the whole scoring
     stage stays memory-resident at 10^11 rows.
 
-    Plan:
-      1. train codebooks + coarse centroids on bounded driver samples
-         (deterministic; pass precomputed arrays to skip);
-      2. ONE Arrow pass over the table emits (id, list, m-byte code) —
-         raw vectors are never touched again until rerank;
-      3. queries probe their ``n_probe`` nearest lists (broadcast side);
-      4. ADC (asymmetric distance computation): a vectorized UDF gathers
-         each candidate's per-subspace codebook entries and dots them
-         against the query subvectors — score ~= cosine(q, x);
-      5. ``rerank > 0``: the ADC top-``rerank`` ids per query join back
-         to the vector table (semi-join of survivors only — at most
-         Q x rerank rows broadcast) for exact cosine, then top-k. With
-         ``rerank=0`` the ADC estimate itself ranks (sim is then the
-         PQ approximation, monotone in reconstruction quality).
-
-    ``adc_by_lut`` (default): the per-query (m x ksub) dot-product
-    lookup tables are precomputed driver-side (queries are already
-    required to be broadcast-small) and shipped ONCE per executor as a
-    Spark broadcast, so the ADC stage's Arrow transfer is (qid, m-byte
-    code) per candidate — ~24 B/row instead of carrying the dim x 4-byte
-    query vector alongside every candidate (~280 B/row at dim=64). The
-    two formulations compute the identical score (parity-tested); the
-    LUT path silently degrades to the vector-carrying path beyond
-    ``MAX_ADC_LUT_QUERIES`` (LUT broadcast would exceed ~32 MB).
+    Codebooks and coarse centroids are trained on bounded driver samples
+    (deterministic; pass precomputed arrays to skip), the table is
+    assigned and encoded in memory, and the search is the one
+    :func:`pq_topk_indexed` runs over a persisted index (see
+    :func:`_pq_search`): at most ``MAX_ADC_LUT_QUERIES`` queries per call.
     """
-    books = (
-        codebooks
-        if codebooks is not None
-        else train_pq_codebooks(vectors, dim, m=m, ksub=ksub, vec_col=vec_col)
+    books, cent = _pq_model(
+        vectors, dim, m, ksub, n_centroids, vec_col, codebooks, centroids
     )
-    m_, _, dsub = books.shape
-    cent = (
-        centroids
-        if centroids is not None
-        else train_ivf_centroids(vectors, dim, n_centroids, vec_col)
-    )
-
-    @F.pandas_udf("int")
-    def assign_udf(vs: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(X @ cent.T, axis=1).astype(np.int32))
-
-    @F.pandas_udf("array<int>")
-    def probe_udf(vs: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(X @ cent.T), axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(order.astype(np.int32)))
-
-    index = pq_encode(
-        vectors.withColumn("__list", assign_udf(F.col(vec_col))),
-        books,
-        vec_col=vec_col,
-    )
-    probes = queries.withColumn("__probe", F.explode(probe_udf(F.col(qvec_col))))
-
-    use_lut = adc_by_lut
-    if use_lut:
-        qrows = (
-            queries.select(qid_col, qvec_col)
-            .limit(MAX_ADC_LUT_QUERIES + 1)
-            .collect()
-        )
-        if len(qrows) > MAX_ADC_LUT_QUERIES or len(qrows) == 0:
-            # degrade: carry qvec per candidate instead (too many queries
-            # for the LUT broadcast; or zero queries — the vector path
-            # returns the correct empty frame without special-casing)
-            use_lut = False
-        else:
-            qid_to_idx, _, luts = _query_luts(qrows, books)
-            lut_bc = vectors.sparkSession.sparkContext.broadcast(
-                (qid_to_idx, luts)
-            )
-
-    if use_lut:
-        adc_lut = _adc_lut_udf(lut_bc, m_)
-        ps = probes.select(qid_col, "__probe")
-        cands = (
-            index.join(F.broadcast(ps), index["__list"] == ps["__probe"])
-            .drop("__list", "__probe")
-            .filter(F.col(id_col) != F.col(qid_col))
-            .withColumn("__adc", adc_lut(F.col(qid_col), F.col("pq_code")))
-        )
-    else:
-
-        @F.pandas_udf("double")
-        def adc(qvs: pd.Series, codes: pd.Series) -> pd.Series:
-            Q = np.array(qvs.tolist(), dtype=np.float64)
-            Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-            C = np.frombuffer(b"".join(codes.tolist()), dtype=np.uint8).reshape(
-                len(codes), m_
-            )
-            # gather each row's m codebook entries -> (B, m, dsub), dot
-            # against the matching query subvectors in one einsum
-            rec = books[np.arange(m_)[None, :], C]  # (B, m, dsub)
-            return pd.Series(
-                np.einsum("bmd,bmd->b", rec, Q.reshape(len(Q), m_, dsub))
-            )
-
-        cands = (
-            index.join(F.broadcast(probes), index["__list"] == probes["__probe"])
-            .drop("__list", "__probe")
-            .filter(F.col(id_col) != F.col(qid_col))
-            .withColumn("__adc", adc(F.col(qvec_col), F.col("pq_code")))
-        )
-    w_adc = Window.partitionBy(qid_col).orderBy(
-        F.col("__adc").desc(), F.col(id_col).asc()
-    )
-    if rerank <= 0:
-        return (
-            cands.withColumn("rnk", F.row_number().over(w_adc))
-            .filter(F.col("rnk") <= k)
-            .select(qid_col, id_col, F.col("__adc").alias("sim"), "rnk")
-        )
-    survivors = (
-        cands.withColumn("__r", F.row_number().over(w_adc))
-        .filter(F.col("__r") <= rerank)
-        .select(
-            *([qid_col, id_col] if use_lut else [qid_col, qvec_col, id_col])
-        )
-    )
-    if use_lut:  # reattach qvec to the tiny survivor frame for exact rerank
-        survivors = survivors.join(
-            F.broadcast(queries.select(qid_col, qvec_col)), qid_col
-        )
-    exact = vectors.join(
-        F.broadcast(survivors), id_col
-    )  # survivors <= Q x rerank rows: always the broadcast side
-    sim = (
-        F.expr(_dot_expr(vec_col, qvec_col))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr(qvec_col)))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        exact.withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
+    return _pq_search(
+        _pq_index(vectors, books, cent, id_col, vec_col), queries, books, cent,
+        k, n_probe, rerank, vectors, id_col, vec_col, qid_col, qvec_col,
     )
 
 
@@ -714,30 +604,10 @@ def build_pq_index(
 
     Returns (codebooks, centroids) — also what the sidecar stores.
     """
-    books = (
-        codebooks
-        if codebooks is not None
-        else train_pq_codebooks(vectors, dim, m=m, ksub=ksub, vec_col=vec_col)
+    books, cent = _pq_model(
+        vectors, dim, m, ksub, n_centroids, vec_col, codebooks, centroids
     )
-    cent = (
-        centroids
-        if centroids is not None
-        else train_ivf_centroids(vectors, dim, n_centroids, vec_col)
-    )
-
-    @F.pandas_udf("int")
-    def assign_udf(vs: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(X @ cent.T, axis=1).astype(np.int32))
-
-    index = pq_encode(
-        vectors.select(id_col, vec_col).withColumn(
-            "__list", assign_udf(F.col(vec_col))
-        ),
-        books,
-        vec_col=vec_col,
-    )
+    index = _pq_index(vectors, books, cent, id_col, vec_col)
     index.write.mode("overwrite").partitionBy("__list").parquet(path)
     import io as _io
     import os as _os
@@ -764,13 +634,11 @@ def pq_topk_indexed(
 ) -> DataFrame:
     """Search a :func:`build_pq_index` index: -> (qid, vec_id, sim, rnk).
 
-    The probed list ids are known driver-side (Q x n_probe ints from the
-    sidecar centroids — no cluster job), so the scan gets a STATIC
-    ``__list IN (...)`` filter: partition pruning is guaranteed at
-    file-listing time (assertable as PartitionFilters in the plan), not
-    left to runtime DPP. Scoring is the same broadcast-LUT ADC as
-    :func:`pq_topk`; ``rerank > 0`` requires the original ``vectors``
-    table (the index deliberately does not store vectors).
+    The same search as :func:`pq_topk` (:func:`_pq_search`) over the
+    persisted index, with the model read from its sidecar. The static
+    ``__list IN (...)`` filter prunes the list directories at file-listing
+    time. ``rerank > 0`` requires the original ``vectors`` table (the index
+    deliberately does not store vectors).
     """
     import os as _os
 
@@ -778,266 +646,9 @@ def pq_topk_indexed(
         model = np.load(fh)
         books = model["codebooks"]
         cent = model["centroids"]
-    m_, ksub_, dsub = books.shape
     if rerank > 0 and vectors is None:
         raise ValueError("rerank > 0 needs the original vectors table")
-
-    qrows = queries.select(qid_col, qvec_col).limit(
-        MAX_ADC_LUT_QUERIES + 1
-    ).collect()
-    if len(qrows) > MAX_ADC_LUT_QUERIES:
-        raise ValueError(
-            f"pq_topk_indexed supports <= {MAX_ADC_LUT_QUERIES} queries "
-            "per call (driver-side probe + LUT); batch larger query sets"
-        )
-    index = spark.read.parquet(path)
-    if not qrows:
-        return (
-            index.limit(0)
-            .select(
-                F.lit(None).cast("long").alias(qid_col),
-                F.col(id_col),
-                F.lit(0.0).alias("sim"),
-                F.lit(0).alias("rnk"),
-            )
-            .limit(0)
-        )
-    qid_to_idx, qn, luts = _query_luts(qrows, books)
-    order = np.argsort(-(qn @ cent.T), axis=1, kind="stable")[:, :n_probe]
-    lut_bc = spark.sparkContext.broadcast((qid_to_idx, luts))
-
-    # from pandas, not a list of tuples: the Arrow path starts no Python
-    # worker (a list runs a PythonRDD job and a second daemon; see
-    # geomesa_spark/worker_daemon.py)
-    probes = spark.createDataFrame(
-        pd.DataFrame({
-            qid_col: np.repeat([r[0] for r in qrows], order.shape[1]),
-            "__probe": order.ravel().astype(np.int32),
-        }),
-        schema=T.StructType([
-            T.StructField(qid_col, queries.schema[qid_col].dataType),
-            T.StructField("__probe", T.IntegerType()),
-        ]),
-    )
-    all_lists = np.unique(order).tolist()
-    adc_lut = _adc_lut_udf(lut_bc, m_)
-
-    cands = (
-        index.filter(F.col("__list").isin(all_lists))  # static partition prune
-        .join(F.broadcast(probes), index["__list"] == probes["__probe"])
-        .drop("__list", "__probe")
-        .filter(F.col(id_col) != F.col(qid_col))
-        .withColumn("__adc", adc_lut(F.col(qid_col), F.col("pq_code")))
-    )
-    w_adc = Window.partitionBy(qid_col).orderBy(
-        F.col("__adc").desc(), F.col(id_col).asc()
-    )
-    if rerank <= 0:
-        return (
-            cands.withColumn("rnk", F.row_number().over(w_adc))
-            .filter(F.col("rnk") <= k)
-            .select(qid_col, id_col, F.col("__adc").alias("sim"), "rnk")
-        )
-    survivors = (
-        cands.withColumn("__r", F.row_number().over(w_adc))
-        .filter(F.col("__r") <= rerank)
-        .select(qid_col, id_col)
-        .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
-    )
-    exact = vectors.join(F.broadcast(survivors), id_col)
-    sim = (
-        F.expr(_dot_expr(vec_col, qvec_col))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr(qvec_col)))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        exact.withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
-
-
-def pq_topk_native(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-    m: int = 8,
-    ksub: int = 32,
-    n_centroids: int = 32,
-    n_probe: int = 8,
-    rerank: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """IVF-PQ top-k with a FULLY NATIVE plan (zero Python), the
-    :func:`ivf_topk_native` analog for the PQ family: the coarse quantizer
-    is the table's first ``n_centroids`` vectors and the per-subspace
-    codebook is the matching slice of the table's first ``ksub`` vectors
-    (deterministic sampling init without the Lloyd iterations), so an
-    ANSI-SQL oracle can replay the ENTIRE pipeline — encode, ADC, rerank —
-    and the driver hash verifies the approximate operator itself.
-
-    Scale shape (same arguments as the trained path):
-      - encode: the N x m x ksub assignment candidate set collapses through
-        a map-side-combinable ``min_by`` per (vector, subspace) — it never
-        shuffles; only N x m (id, j, code) rows exist after the aggregate.
-      - the vector's PQ reconstruction is materialized ONCE as an
-        array<double> column via array_sort(collect_list(struct(j, sub)))
-        + flatten — deterministic order by subspace index, so the ADC dot
-        is a single row-wise sequential fold (bit-stable across engines;
-        a float groupBy-sum over the m parts would accumulate in partition
-        order and flip near-ties between engines).
-      - ADC ranking is per-query-scale-invariant, so the raw query vector
-        dots against the reconstruction (no query normalization step to
-        disagree about).
-      - ``rerank``: exact cosine over the ADC top-``rerank`` survivors
-        only, the standard two-stage ranking.
-
-    -> (qid, vec_id, sim_adc or sim, rnk). Use :func:`pq_topk` for trained
-    codebooks + broadcast-LUT ADC at production scale.
-    """
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
-    dsub = dim // m
-    # norm hoisted to its own projection: embedding _norm_expr (an O(dim)
-    # aggregate) INSIDE the transform lambda would re-evaluate it per
-    # ELEMENT — O(dim^2) per row; lambda bodies block Catalyst's common
-    # subexpression elimination. Same arithmetic, computed once.
-    base = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.expr(_norm_expr(vec_col)).alias("__nrm"),
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.expr(
-            f"transform({vec_col}, x -> cast(x as double) / __nrm)"
-        ).alias("__nv"),
-    )
-    # codebook: subspace j of the first ksub normalized vectors (broadcast)
-    cb = F.broadcast(
-        base.orderBy(F.col(id_col).asc())
-        .limit(ksub)
-        .select(
-            F.col(id_col).alias("__c"),
-            F.explode(F.expr(f"sequence(0, {m - 1})")).alias("__j"),
-            F.col("__nv"),
-        )
-        .select(
-            "__c",
-            "__j",
-            F.expr(f"slice(__nv, __j * {dsub} + 1, {dsub})").alias("__cb"),
-        )
-    )
-    # encode: argmin ||v_sub - cb||^2 == argmax (dot - ||cb||^2/2) via
-    # min_by over (-score, code id) — identical tie-breaking to the SQL
-    # oracle's row_number (score DESC, c ASC)
-    vsub = base.select(
-        F.col(id_col),
-        F.explode(F.expr(f"sequence(0, {m - 1})")).alias("__j"),
-        F.col("__nv"),
-    ).select(
-        id_col, "__j",
-        F.expr(f"slice(__nv, __j * {dsub} + 1, {dsub})").alias("__vs"),
-    )
-    score = F.expr(_dot_expr("__vs", "__cb")) - 0.5 * F.expr(
-        _dot_expr("__cb", "__cb")
-    )
-    codes = (
-        vsub.join(cb, "__j")
-        .withColumn("__s", F.nanvl(score, F.lit(float("-inf"))))
-        .groupBy(id_col, "__j")
-        .agg(
-            F.min_by(
-                F.struct(F.col("__c"), F.col("__cb")),
-                F.struct((-F.col("__s")).alias("ns"), F.col("__c").alias("c")),
-            ).alias("__e")
-        )
-    )
-    # reconstruction: subspace entries flattened in j order (deterministic)
-    rec = codes.groupBy(id_col).agg(
-        F.flatten(
-            F.expr(
-                "transform(array_sort(collect_list(struct(__j, __e.__cb as cb))),"
-                " p -> p.cb)"
-            )
-        ).alias("__rec")
-    )
-    # coarse assignment (ivf_topk_native pattern)
-    cent = F.broadcast(
-        base.orderBy(F.col(id_col).asc())
-        .limit(n_centroids)
-        .select(F.col(id_col).alias("__cid"), F.col("__nv").alias("__cv"))
-    )
-    csim = F.nanvl(
-        F.expr(_dot_expr("__nv", "__cv")), F.lit(float("-inf"))
-    )
-    assign = (
-        base.crossJoin(cent)
-        .withColumn("__cs", csim)
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.col("__cid"),
-                F.struct((-F.col("__cs")).alias("ns"), F.col("__cid").alias("c")),
-            ).alias("__list")
-        )
-    )
-    qsim = F.nanvl(F.expr(_dot_expr("__qn", "__cv")), F.lit(float("-inf")))
-    wq = Window.partitionBy(qid_col).orderBy(F.col("__qs").desc(), F.col("__cid").asc())
-    probes = (
-        queries.select(
-            qid_col,
-            qvec_col,
-            F.expr(_norm_expr(qvec_col)).alias("__qnrm"),
-        )
-        .select(
-            qid_col,
-            qvec_col,
-            F.expr(
-                f"transform({qvec_col}, x -> cast(x as double) / __qnrm)"
-            ).alias("__qn"),
-        )
-        .crossJoin(cent)
-        .withColumn("__qs", qsim)
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= n_probe)
-        .select(qid_col, qvec_col, F.col("__cid").alias("__p"))
-    )
-    cands = (
-        assign.join(F.broadcast(probes), assign["__list"] == probes["__p"])
-        .drop("__list", "__p")
-        .filter(F.col(id_col) != F.col(qid_col))
-        .join(rec, id_col)
-        .withColumn("__adc", F.expr(_dot_expr("__rec", qvec_col)))
-    )
-    w_adc = Window.partitionBy(qid_col).orderBy(
-        F.col("__adc").desc(), F.col(id_col).asc()
-    )
-    if rerank <= 0:
-        return (
-            cands.withColumn("rnk", F.row_number().over(w_adc))
-            .filter(F.col("rnk") <= k)
-            .select(qid_col, id_col, F.col("__adc").alias("sim"), "rnk")
-        )
-    survivors = (
-        cands.withColumn("__r", F.row_number().over(w_adc))
-        .filter(F.col("__r") <= rerank)
-        .select(qid_col, qvec_col, id_col)
-    )
-    exact = vectors.join(F.broadcast(survivors), id_col)
-    sim = (
-        F.expr(_dot_expr(vec_col, qvec_col))
-        / (F.expr(_norm_expr(vec_col)) * F.expr(_norm_expr(qvec_col)))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        exact.withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
+    return _pq_search(
+        spark.read.parquet(path), queries, books, cent, k, n_probe, rerank,
+        vectors, id_col, vec_col, qid_col, qvec_col,
     )

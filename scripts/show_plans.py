@@ -26,7 +26,7 @@ HEADLINE = [
     "geo_proximity_join",
     "geo_tube_select",
     "geo_route_search",
-    "ann_ivf",
+    "ann_ivf_udf",
     "ann_pq",
     "geo_geom_join_time",
     "geo_where_spatial",

@@ -48,22 +48,3 @@ def test_ivf_full_probe_equals_exact(spark, vec_data):
     e = exact.sort_values(key).reset_index(drop=True)
     f = full.sort_values(key).reset_index(drop=True)
     assert (e["vec_id"].to_numpy() == f["vec_id"].to_numpy()).all()
-
-
-def test_ivf_native_assignment_has_no_vector_window(spark, vec_data):
-    """The N x C centroid-assignment candidate set must collapse through a
-    partial-aggregable min_by (map-side combine), never a row_number Window
-    partitioned by the vector id (round-2 scale defect: that window shuffled
-    and sorted all N x C rows with full embedding payloads)."""
-    from geomesa_spark.operators.similarity import ivf_topk_native
-
-    df, queries = vec_data
-    out = ivf_topk_native(df, queries, k=5, n_centroids=8, n_probe=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    for line in plan.splitlines():
-        if "Window" in line and "windowspecdefinition(vec_id" in line:
-            raise AssertionError(f"vector-id Window in IVF plan: {line.strip()}")
-    assert "min_by" in plan
-    # and the aggregate result is still correct vs the window formulation
-    got = out.toPandas().sort_values(["qid", "rnk"]).reset_index(drop=True)
-    assert len(got) > 0 and (got.groupby("qid")["rnk"].max() <= 5).all()

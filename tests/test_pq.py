@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geomesa_spark.operators.similarity import (
+    MAX_ADC_LUT_QUERIES,
     brute_force_topk,
     build_pq_index,
     pq_encode,
@@ -115,59 +116,51 @@ def test_pq_validation(spark, vec_data):
 
 
 def test_pq_candidate_join_ships_codes_not_vectors(spark, vec_data):
-    """Plan shape: the ADC scoring stage must not carry ANY vector — with
-    the default LUT path its udf input is (qid, pq_code); the raw
-    embedding column reappears solely in the rerank-survivor join."""
+    """Plan shape: the ADC scoring stage must not carry ANY vector — its
+    udf input is (qid, pq_code); the raw embedding column reappears solely
+    in the rerank-survivor join."""
     df, queries = vec_data
     out = pq_topk(
         df, queries, k=5, dim=32, m=8, ksub=32,
         n_centroids=8, n_probe=2, rerank=20,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    adc_lines = [
-        line for line in plan.splitlines()
-        if "adc_lut(" in line or "adc(" in line
-    ]
+    adc_lines = [line for line in plan.splitlines() if "adc_lut(" in line]
     assert adc_lines, "no ADC stage in plan"
-    assert any("adc_lut(" in line for line in adc_lines), (
-        "default path must score via the broadcast LUT udf"
-    )
     for line in adc_lines:
         assert "embedding" not in line and "qvec" not in line, line.strip()
     assert "pq_code" in plan
 
 
-def test_pq_lut_and_vector_paths_identical(spark, vec_data):
-    """adc_by_lut=True (broadcast lookup tables, (qid, code) Arrow rows)
-    and adc_by_lut=False (query vector carried per candidate) are two
-    formulations of the SAME score — outputs must match row for row,
-    in both rerank and pure-ADC modes."""
-    df, queries = vec_data
-    for rerank in (0, 20):
-        a = pq_topk(
-            df, queries, k=5, dim=32, m=8, ksub=32,
-            n_centroids=8, n_probe=2, rerank=rerank, adc_by_lut=True,
-        ).toPandas().sort_values(["qid", "rnk"]).reset_index(drop=True)
-        b = pq_topk(
-            df, queries, k=5, dim=32, m=8, ksub=32,
-            n_centroids=8, n_probe=2, rerank=rerank, adc_by_lut=False,
-        ).toPandas().sort_values(["qid", "rnk"]).reset_index(drop=True)
-        assert (a["vec_id"].to_numpy() == b["vec_id"].to_numpy()).all()
-        assert np.allclose(a["sim"], b["sim"], atol=1e-9)
-
-
 def test_pq_degenerate_inputs(spark, vec_data):
     df, queries = vec_data
-    # empty queries: LUT path degrades to the vector path, which returns
-    # the correct empty frame (no driver-side AxisError)
+    # empty queries: the correct empty frame (no driver-side AxisError)
     out = pq_topk(
         df, queries.filter("qid < 0"), k=5, dim=32, m=8, ksub=32,
         n_centroids=8, n_probe=2, rerank=10,
     )
     assert out.count() == 0
+    # more queries than the broadcast LUTs allow: clear error, batch instead
+    many = spark.range(MAX_ADC_LUT_QUERIES + 1).select(
+        F.col("id").alias("qid"), F.array_repeat(F.lit(1.0), 32).alias("qvec")
+    )
+    with pytest.raises(ValueError, match="batch"):
+        pq_topk(df, many, k=5, dim=32, m=8, ksub=32, n_centroids=8, n_probe=2)
     # empty vectors table: clear error, not a numpy traceback
     with pytest.raises(ValueError, match="empty"):
         train_pq_codebooks(df.filter("vec_id < 0"), dim=32, m=8, ksub=32)
+
+
+def test_pq_tiny_table(spark, vec_data):
+    """A table smaller than ksub and n_centroids: the codebooks pad with
+    repeats and the coarse quantizer shrinks to the table size."""
+    df, queries = vec_data
+    tiny = df.filter(F.col("vec_id") < 10)
+    out = pq_topk(
+        tiny, queries.filter(F.col("qid") < 2), k=3, dim=32, m=8, ksub=32,
+        n_centroids=16, n_probe=4, rerank=5,
+    ).toPandas()
+    assert len(out) > 0 and (out.groupby("qid")["rnk"].max() <= 3).all()
 
 
 def test_ivf_trainer_empty_table_clear_error(spark, vec_data):
@@ -220,34 +213,24 @@ def test_pq_index_degenerate(spark, vec_data, tmp_path):
     assert out.columns == ["qid", "vec_id", "sim", "rnk"]
 
 
-def test_pq_native_recall_and_shape(spark, vec_data):
-    """pq_topk_native (the oracle-able zero-Python twin): decent recall on
-    the clustered fixture with rerank, fully native plan (no Python
-    nodes), and it tolerates a codebook/centroid sample larger than the
-    table head requires."""
+def test_pq_empty_result_keeps_qid_type(spark, vec_data, tmp_path):
+    """An int qid comes back as int whether or not there are queries: the
+    empty result has the same schema as a non-empty one."""
     df, queries = vec_data
-    exact = brute_force_topk(df, queries, k=10).toPandas()
-    from geomesa_spark.operators.similarity import pq_topk_native
-
-    out = pq_topk_native(
-        df, queries, k=10, dim=32, m=8, ksub=32,
-        n_centroids=16, n_probe=6, rerank=100,
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    for marker in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
-        assert marker not in plan, marker
-    got = out.toPandas()
-    assert _recall(exact, got) >= 0.8
-    # reranked sims are exact cosines
-    merged = got.merge(exact, on=["qid", "vec_id"], suffixes=("_pq", "_bf"))
-    assert len(merged) > 0 and np.allclose(
-        merged["sim_pq"], merged["sim_bf"], atol=1e-9
-    )
-    # tiny table: head-sampled codebook/centroids shrink to the table size
-    tiny = df.filter(F.col("vec_id") < 10)
-    tq = queries.filter(F.col("qid") < 2)
-    small = pq_topk_native(
-        tiny, tq, k=3, dim=32, m=8, ksub=32, n_centroids=16, n_probe=4,
-        rerank=5,
-    ).toPandas()
-    assert len(small) > 0 and (small.groupby("qid")["rnk"].max() <= 3).all()
+    path = str(tmp_path / "pqidx3")
+    books, cent = build_pq_index(df, path, dim=32, m=8, ksub=32, n_centroids=8)
+    qi = queries.select(F.col("qid").cast("int"), "qvec")
+    for rerank in (0, 10):
+        for search in (
+            lambda q: pq_topk_indexed(
+                spark, path, q, k=5, n_probe=2, rerank=rerank, vectors=df
+            ),
+            lambda q: pq_topk(
+                df, q, k=5, dim=32, n_probe=2, rerank=rerank,
+                codebooks=books, centroids=cent,
+            ),
+        ):
+            full, empty = search(qi), search(qi.filter("qid < 0"))
+            assert empty.count() == 0
+            assert empty.schema == full.schema
+            assert full.schema["qid"].dataType.simpleString() == "int"
