@@ -402,7 +402,7 @@ def q_geo_knn_table(spark, sf_dir):
     # results identical — the guarantee radius makes any start exact)
     out = knn_join_table(
         pts, queries, k=KNN_K, point_id="event_id",
-        metric="planar", res=8, radius=4,
+        metric="planar", res=8, radius=4, exclude_self=True,
     )
     return out.select(
         F.col("query_id").cast("long"),
@@ -1148,15 +1148,16 @@ WHERE CAST(ns AS DOUBLE) / least(sa.nfp, sb.nfp) >= {min_overlap}
 """
 
 
-def q_dedup_clusters(spark, sf_dir):
+def q_dedup_clusters_star(spark, sf_dir):
     """Near-dup pair graph -> duplicate clusters: winnowing overlap pairs
-    (same config as text_winnow_pairs) fed through iterative min-label
-    connected components — the keep-one-per-cluster step of a dedup
-    pipeline. The DuckDB oracle recomputes the SAME pair graph (full winnow
-    replay) and labels components with a RECURSIVE transitive-closure CTE —
-    an independent fixpoint, so the engine's round-based propagation is
-    checked for transitivity (chains A~B~C where A!~C), not just cliques.
-    Every document appears: singletons label themselves."""
+    (same config as text_winnow_pairs) fed through star-contraction
+    connected components (Kiveris et al. 2014) — the keep-one-per-cluster
+    step of a dedup pipeline. The DuckDB oracle recomputes the SAME pair
+    graph (full winnow replay) and labels components with a RECURSIVE
+    transitive-closure CTE — an independent fixpoint, so the engine's
+    round-based contraction is checked for transitivity (chains A~B~C
+    where A!~C), not just cliques. Every document appears: singletons
+    label themselves."""
     from .operators.dedup import connected_components, winnow_overlap_pairs
 
     (docs,) = _load(spark, sf_dir, "documents")
@@ -1169,30 +1170,6 @@ def q_dedup_clusters(spark, sf_dir):
         min_overlap=WINNOW_MIN_OVERLAP,
     )
     return connected_components(pairs, docs).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
-    )
-
-
-def q_dedup_clusters_star(spark, sf_dir):
-    """Same pair graph and labeling contract as dedup_clusters, but through
-    the alternating large-star/small-star contraction (Kiveris et al. 2014)
-    — the O(log² n)-round path for adversarial graph shapes (long edit
-    chains) where diameter-bound propagation degenerates. Checked against
-    the identical recursive-CTE oracle: the two algorithms must agree with
-    the independent fixpoint and with each other."""
-    from .operators.dedup import connected_components_star, winnow_overlap_pairs
-
-    (docs,) = _load(spark, sf_dir, "documents")
-    pairs = winnow_overlap_pairs(
-        docs,
-        kgram=WINNOW_K,
-        window=WINNOW_W,
-        min_shared=WINNOW_MIN_SHARED,
-        max_df=WINNOW_MAX_DF,
-        min_overlap=WINNOW_MIN_OVERLAP,
-    )
-    return connected_components_star(pairs, docs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
     )
@@ -2962,8 +2939,6 @@ RETIRED_QUERIES = {
     "lang_stats": (q_lang_stats, _oracle_lang_stats()),
     # representative: text_winnow_pairs (fingerprints are its first stage)
     "text_fingerprint": (q_text_fingerprint, _oracle_text_fingerprint()),
-    # representative: dedup_clusters_star (shared oracle, scale algorithm)
-    "dedup_clusters": (q_dedup_clusters, _oracle_dedup_clusters()),
     # representative: minhash_pairs_banded (production banding config)
     "minhash_pairs": (q_minhash_pairs, _oracle_minhash_pairs()),
     # representative: text_dup_spans_hashed (the 100TB-shaped form; this

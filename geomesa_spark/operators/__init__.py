@@ -2,7 +2,6 @@
 
 from .dedup import (  # noqa: F401
     connected_components,
-    connected_components_star,
     dup_span_stats,
     exact_dedup,
     hamming_neardup_pairs,

@@ -686,107 +686,19 @@ def connected_components(
     id_col: str = "doc_id",
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_iter: int = 25,
-    fallback_star: bool = True,
+    max_iter: int = 50,
 ) -> DataFrame:
     """-> (id_col, cluster_id) duplicate-cluster labels over a pair graph:
     cluster_id = the smallest node id reachable through the pairs. This is
     the step that turns near-dup PAIRS (minhash/simhash/winnow/embedding)
     into keep-one-per-cluster decisions; nodes absent from ``pairs`` come
-    out as their own singleton cluster.
+    out as their own singleton cluster, and pair ids absent from ``nodes``
+    never relay connectivity.
 
-    Plan: iterative min-label propagation — per round ONE equi-join of the
-    (u, v) edge list against the current (u, label) frame plus a min
-    aggregate, so only id/label longs ever shuffle; each round's label
-    frame is ``localCheckpoint``-ed to truncate lineage (superseded rounds
-    are freed by the ContextCleaner once unreferenced). Converges in
-    graph-diameter rounds — near-dup graphs are USUALLY shallow (exact-dup
-    cliques have diameter 1, chain-of-edits components a few hops).
-
-    If the graph turns out deeper than ``max_iter`` (chained templates at
-    larger corpus scale — measured at sf0.1: the winnow pair graph exceeds
-    25 rounds), the operator delegates to
-    :func:`connected_components_star` (O(log² n) rounds on any shape)
-    instead of failing — pass ``fallback_star=False`` to get the hard
-    error (used by tests and by callers that budget rounds).
-    """
-    e = pairs.select(
-        F.col(a_col).cast("long").alias("u"), F.col(b_col).cast("long").alias("v")
-    )
-    edges = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .persist()
-    )
-    # iterative frames MUST truncate lineage per round (eager
-    # localCheckpoint): a persist alone caches data but the LOGICAL plan
-    # still nests the previous round's plan, doubling per round —
-    # round ~10 plans OOM the driver just being stringified. Superseded
-    # rounds' blocks are dropped by the ContextCleaner once unreferenced.
-    # At production scale substitute a reliable checkpoint dir
-    # (sc.setCheckpointDir + .checkpoint()) for executor-loss tolerance.
-    labels = nodes.select(
-        F.col(id_col).cast("long").alias("u"), F.col(id_col).cast("long").alias("lbl")
-    ).localCheckpoint()
-    try:
-        for _ in range(max_iter):
-            nbr = (
-                edges.alias("e")
-                .join(labels.alias("s"), F.col("e.v") == F.col("s.u"))
-                .groupBy(F.col("e.u").alias("u"))
-                .agg(F.min("s.lbl").alias("nlbl"))
-            )
-            new_labels = (
-                labels.join(nbr, "u", "left")
-                .select(
-                    "u",
-                    F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "u")
-                .filter(F.col("n.lbl") != F.col("o.lbl"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            if fallback_star:
-                return connected_components_star(
-                    pairs, nodes, id_col=id_col, a_col=a_col, b_col=b_col
-                )
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds; "
-                "the pair graph has a longer diameter than a dedup graph "
-                "should — raise max_iter or use star-contraction"
-            )
-    finally:
-        edges.unpersist()
-    return labels.select(F.col("u").alias(id_col), F.col("lbl").alias("cluster_id"))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """-> (id_col, cluster_id): same contract as :func:`connected_components`
-    (cluster_id = min reachable node id), but via alternating
-    large-star / small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014) — O(log² n) rounds on
-    ANY graph shape, where min-label propagation needs graph-diameter
-    rounds. This is the adversarial-input path (long edit chains, linked
-    boilerplate); propagation stays the default for dedup graphs, whose
-    components are near-cliques.
-
-    Per round, each operation is ONE groupBy(min) + ONE equi-join over
-    (long, long) rows — the same shuffle shape as propagation:
+    Plan: alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) —
+    O(log² n) rounds on ANY graph shape. Per round, each operation is ONE
+    groupBy(min) + ONE equi-join over (long, long) rows:
 
     - large-star: every neighbor v > u of each node u re-attaches to
       m = min({u} ∪ N(u));
@@ -795,9 +707,18 @@ def connected_components_star(
 
     Both preserve connectivity and strictly flatten trees; the fixpoint is
     a forest of stars rooted at component minima. Fixpoint detection
-    compares (count, sum of pair hashes) between rounds — no exceptAll
-    scan. Each round's edge frame is ``localCheckpoint``-ed like
-    propagation's label frames (lineage doubles per round otherwise).
+    compares (count, bit_xor of pair hashes) between rounds — no exceptAll
+    scan.
+
+    Min-label propagation was the previous default and was removed: it
+    needs graph-diameter rounds, and star contraction was faster on every
+    rep at every fixture size of the ``dedup_clusters_star`` winnow pair
+    graph (4-core host, graph materialized once, identical labels):
+    sf0.001 4.8 s vs 5.9 s, sf0.01 4.5 s vs 5.9 s, sf0.1 5.1 s vs 15.5 s
+    — at sf0.1 propagation exhausted 25 rounds and restarted as star.
+
+    Raises ``RuntimeError`` if the fixpoint is not reached in ``max_iter``
+    rounds.
     """
     node_ids = nodes.select(F.col(id_col).cast("long").alias("__nid"))
     e = (
@@ -806,11 +727,9 @@ def connected_components_star(
             F.col(b_col).cast("long").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        # contract parity with propagation: ids absent from ``nodes`` never
-        # relay connectivity there (the label join only carries node labels),
-        # so drop edges touching them — otherwise contraction could emit a
-        # cluster_id that is not any node's id and merge clusters propagation
-        # keeps apart
+        # ids absent from ``nodes`` must not relay connectivity — otherwise
+        # contraction could emit a cluster_id that is not any node's id and
+        # merge clusters through a non-node
         .join(node_ids.withColumnRenamed("__nid", "u"), "u", "left_semi")
         .join(node_ids.withColumnRenamed("__nid", "v"), "v", "left_semi")
         .distinct()
@@ -858,6 +777,10 @@ def connected_components_star(
         ).collect()[0]
         return (row["n"], row["h"])
 
+    # each round's edge frame is localCheckpoint-ed: a persist alone keeps
+    # the LOGICAL plan nesting the previous round's, doubling per round
+    # until stringifying it OOMs the driver. Superseded rounds' blocks are
+    # dropped by the ContextCleaner once unreferenced.
     edges = e.localCheckpoint()
     sig = _sig(edges)
     for _ in range(max_iter):
@@ -868,8 +791,8 @@ def connected_components_star(
         sig = new_sig
     else:
         raise RuntimeError(
-            f"star contraction did not converge in {max_iter} rounds "
-            "(O(log^2 n) expected — the edge frame is likely corrupt)"
+            f"connected_components did not converge in {max_iter} rounds "
+            "(O(log^2 n) expected)"
         )
     # fixpoint edges are (node -> component root); roots and isolated
     # nodes label themselves

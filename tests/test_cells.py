@@ -281,6 +281,36 @@ class TestKnnJoinTable:
             f"(baseline={baseline}, now={n_persistent()})"
         )
 
+    def test_query_id_equal_to_point_id_is_kept(self, spark):
+        """A query that is not drawn from the point table may share an id
+        with a point; that point is still a neighbor unless exclude_self."""
+        import numpy as np
+        import pandas as pd
+
+        from geomesa_spark.operators.knn import knn_join, knn_join_table
+
+        rng = np.random.default_rng(6)
+        lon, lat = rng.uniform(0, 10, 200), rng.uniform(0, 10, 200)
+        lon[0], lat[0] = 5.0, 5.0
+        pts_pdf = pd.DataFrame({"image_id": np.arange(200), "lon": lon, "lat": lat})
+        qpdf = pd.DataFrame({"query_id": [0], "qlon": [5.001], "qlat": [5.001]})
+        pts = spark.createDataFrame(pts_pdf)
+        queries = spark.createDataFrame(qpdf)
+
+        d = np.hypot(lon - 5.001, lat - 5.001)
+        brute = np.lexsort((pts_pdf["image_id"].to_numpy(), d))[:4].tolist()
+        assert brute[0] == 0
+
+        def ids(df):
+            return [r.image_id for r in df.orderBy("rnk").collect()]
+
+        kw = dict(k=3, point_id="image_id", metric="planar", res=6)
+        assert ids(knn_join_table(pts, queries, **kw)) == brute[:3]
+        assert ids(knn_join(pts, qpdf, qlon="qlon", qlat="qlat", **kw)) == brute[:3]
+        assert ids(
+            knn_join_table(pts, queries, exclude_self=True, **kw)
+        ) == brute[1:4]
+
 
 class TestZ3:
     """True 3-way (lon, lat, time) interleave (Z3SFC.scala:22-47 parity)."""

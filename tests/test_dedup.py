@@ -207,11 +207,11 @@ def test_winnow_overlap_pairs_and_max_df_guard(spark, docs_pdf):
 
 
 def test_connected_components_chain_clique_singleton(spark):
-    """Min-label propagation must be TRANSITIVE (chains, not just cliques),
-    leave singletons self-labeled, and converge via the no-change check."""
+    """Labels must be TRANSITIVE (chains, not just cliques), leave
+    singletons self-labeled, and converge via the fixpoint check."""
     from geomesa_spark.operators.dedup import connected_components
 
-    # chain 1-2-3-4 (diameter 3, forces multi-round propagation),
+    # chain 1-2-3-4 (diameter 3, forces multi-round contraction),
     # clique {10,11,12}, cross pair (20,21); nodes 30, 31 are singletons
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
@@ -231,16 +231,16 @@ def test_connected_components_chain_clique_singleton(spark):
 def test_connected_components_nonconvergence_guard(spark):
     from geomesa_spark.operators.dedup import connected_components
 
-    # path of length 5 cannot converge in 2 rounds
+    # a 6-node path does not reach the star fixpoint in 2 rounds
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], ["id_a", "id_b"]
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, nodes, max_iter=2, fallback_star=False)
-    # default: a too-deep graph falls back to star contraction, not an error
+        connected_components(pairs, nodes, max_iter=2)
+    # the default round budget labels the whole path
     out = {r["doc_id"]: r["cluster_id"]
-           for r in connected_components(pairs, nodes, max_iter=2).collect()}
+           for r in connected_components(pairs, nodes).collect()}
     assert out == {i: 1 for i in range(1, 7)}
 
 
@@ -373,14 +373,11 @@ def test_dup_span_stats_fuzz_vs_brute_force(spark):
         assert got == want, f"trial {trial}: {docs}"
 
 
-def test_star_contraction_matches_propagation_and_brute_force(spark):
+def test_star_contraction_matches_brute_force(spark):
     """Large-star/small-star must produce the identical min-id labeling as
-    propagation AND a python union-find, on cliques, chains, and random
-    graphs — including shapes with shared structure across components."""
-    from geomesa_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    a python union-find, on cliques, chains, and random graphs — including
+    shapes with shared structure across components."""
+    from geomesa_spark.operators.dedup import connected_components
 
     rng = np.random.default_rng(3)
 
@@ -403,7 +400,7 @@ def test_star_contraction_matches_propagation_and_brute_force(spark):
         return {i: min(members) for members in comp.values() for i in members}
 
     cases = [
-        # clique + chain + cross pair + singletons (the propagation fixture)
+        # clique + chain + cross pair + singletons
         ([(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
          [1, 2, 3, 4, 10, 11, 12, 20, 21, 30, 31]),
         # two random graphs
@@ -420,47 +417,35 @@ def test_star_contraction_matches_propagation_and_brute_force(spark):
         pdf = spark.createDataFrame(pairs, ["id_a", "id_b"])
         ndf = spark.createDataFrame([(i,) for i in node_ids], ["doc_id"])
         want = brute(pairs, node_ids)
-        star = {r["doc_id"]: r["cluster_id"]
-                for r in connected_components_star(pdf, ndf).collect()}
-        prop = {r["doc_id"]: r["cluster_id"]
-                for r in connected_components(pdf, ndf).collect()}
-        assert star == want and prop == want
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in connected_components(pdf, ndf).collect()}
+        assert got == want
 
 
 def test_star_contraction_beats_diameter_bound(spark):
-    """A 64-node path has diameter 63 — propagation cannot finish in 12
-    rounds, star contraction must (O(log^2 n))."""
-    from geomesa_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """A 64-node path has diameter 63 — star contraction must still finish
+    in 12 rounds (O(log^2 n)), far below the diameter."""
+    from geomesa_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], ["id_a", "id_b"]
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 65)], ["doc_id"])
-    out = connected_components_star(pairs, nodes, max_iter=12).collect()
+    out = connected_components(pairs, nodes, max_iter=12).collect()
     assert {r["cluster_id"] for r in out} == {1} and len(out) == 64
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, nodes, max_iter=12, fallback_star=False)
 
 
 def test_star_contraction_ignores_non_node_pair_ids(spark):
-    """Contract parity with propagation: pair ids absent from ``nodes``
-    never relay connectivity and never appear as cluster ids."""
-    from geomesa_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """Pair ids absent from ``nodes`` never relay connectivity and never
+    appear as cluster ids."""
+    from geomesa_spark.operators.dedup import connected_components
 
     # chain 10—5—20 where 5 is NOT a node: 10 and 20 must stay separate
     pairs = spark.createDataFrame([(10, 5), (5, 20), (30, 31)], ["id_a", "id_b"])
     nodes = spark.createDataFrame([(i,) for i in (10, 20, 30, 31)], ["doc_id"])
-    star = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components_star(pairs, nodes).collect()}
-    prop = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components(pairs, nodes).collect()}
-    assert star == prop == {10: 10, 20: 20, 30: 30, 31: 30}
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in connected_components(pairs, nodes).collect()}
+    assert got == {10: 10, 20: 20, 30: 30, 31: 30}
 
 
 def test_dup_span_stats_hashed_parity_with_exact(spark):
