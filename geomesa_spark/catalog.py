@@ -1687,9 +1687,9 @@ def q_geo_geom_join_tables(spark, sf_dir):
     left = _event_box_geoms(_points(spark, sf_dir)).select("event_id", "geom")
     (nation,) = _load(spark, sf_dir, "nation")
     nb = nation.select(
-        # the raw (int32) key is intentionally NOT cast: the bbox-keys
-        # Arrow stage emits against its declared schema, so native dtypes
-        # work — this entry exercises that path through the driver gate
+        # the raw (int32) key is intentionally NOT cast: the native cell
+        # keys carry any id dtype, and this entry keeps an int32 join key
+        # under the oracle check
         "n_nationkey",
         F.expr(NATION_LON).cast("double").alias("lon"),
         F.expr(NATION_LAT).cast("double").alias("lat"),

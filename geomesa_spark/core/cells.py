@@ -291,7 +291,11 @@ def cell_sql_expr(lon_col: str, lat_col: str, res: int) -> str:
     Runs JVM-side under whole-stage codegen in Spark (no Python), and
     bit-identically in DuckDB for the correctness oracle.
     """
-    x, y = xy_sql_expr(lon_col, lat_col, res)
+    return encode_xy_sql(*xy_sql_expr(lon_col, lat_col, res))
+
+
+def encode_xy_sql(x: str, y: str) -> str:
+    """SQL twin of :func:`encode_xy`: morton-interleave integer grid coords."""
     return f"(({_spread_sql(x)}) | (({_spread_sql(y)}) * 2))"
 
 

@@ -196,33 +196,13 @@ def with_bbox_columns(df: DataFrame, geom_col: str = "geom") -> DataFrame:
 
     Null geometry -> null bbox columns (any range conjunct then evaluates
     null and the row drops, matching the refine UDF's False on null)."""
-    bbox_udf = _bbox_struct_udf()
+    from .operators.geometry_join import _BBOX, _bbox_struct_udf
+
     b = f"__{geom_col}_bbox"
-    out = df.withColumn(b, bbox_udf(F.col(geom_col)))
-    for part in ("xmin", "xmax", "ymin", "ymax"):
+    out = df.withColumn(b, _bbox_struct_udf()(F.col(geom_col)))
+    for part in _BBOX:
         out = out.withColumn(f"{geom_col}_{part}", F.col(f"{b}.{part}"))
     return out.drop(b)
-
-
-def _bbox_struct_udf():
-    from .core.geometry import from_wkb
-
-    schema = T.StructType(
-        [T.StructField(p, T.DoubleType()) for p in ("xmin", "xmax", "ymin", "ymax")]
-    )
-
-    @F.pandas_udf(schema)
-    def geom_bbox(wkb: pd.Series) -> pd.DataFrame:
-        rows = []
-        for buf in wkb:
-            if buf is None:
-                rows.append((None, None, None, None))
-                continue
-            x0, y0, x1, y1 = from_wkb(bytes(buf)).bounds()
-            rows.append((float(x0), float(x1), float(y0), float(y1)))
-        return pd.DataFrame(rows, columns=["xmin", "xmax", "ymin", "ymax"])
-
-    return geom_bbox
 
 
 def with_point_cell_column(

@@ -6,58 +6,58 @@ sequence length chosen from its extent (``geomesa-z3/.../curve/
 XZ2SFC.scala:54-77``), query-window decomposition with contained/overlapping
 cells (:146-252). Here:
 
-    rows (WKB geometry) --mapInArrow--> (row, cell@res_j) keys of the bbox
+    rows (WKB geometry) --one geom_bbox UDF--> 4-double bbox
+        --native sequence/explode--> (row, cell@res_j) keys
     polygons --driver cover--> cells expanded/coarsened to the SAME res_j
     equi-join on cell -> dropDuplicates(row, poly)  [multi-cell matches]
     exact DE-9IM refine (relate) on the distinct surviving pairs
 
 One fixed join resolution keeps it a single hash join; the polygon cover's
-finer cells collapse to res_j ancestors (marked refine) and coarser cells
-expand to res_j children — both directions bounded by the cover budget.
-Unlike the point path a (row, polygon) pair CAN match through several cells,
-so the dedup the reference leaves as a TODO (RelationUtils.scala:39-53) is
-explicit here.
+finer cells collapse to res_j ancestors and coarser cells expand to res_j
+children — both directions bounded by the cover budget. Unlike the point
+path a (row, polygon) pair CAN match through several cells, so the dedup
+the reference leaves as a TODO (RelationUtils.scala:39-53) is explicit here.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import cells
 from ..core.geometry import Geometry, from_wkb, from_wkt, relate, to_wkb
 
 DEFAULT_JOIN_RES = 8       # 256x256 world grid (~1.4 deg cells)
-MAX_CELLS_PER_ROW = 256    # bbox cover cap per row geometry
+_BBOX = ("xmin", "xmax", "ymin", "ymax")
 
 
 # re-spread rationale (shared impl: operators/util.spread_small): small-SF
 # parquet arrives as ONE split and AQE coalesces small exchanges to ~1
-# partition, either of which serializes the mapInArrow bbox-keys stage /
-# the DE-9IM refine on one core (measured: 13 s and ~14 s single-task at
-# sf0.1). The join-output spreads are gated on the NARROW input's probe —
-# probing the shuffle-rooted join itself would execute its stages twice.
+# partition, either of which serializes the bbox UDF / the DE-9IM refine
+# on one core (measured: 13 s and ~14 s single-task at sf0.1). The
+# join-output spreads are gated on the NARROW input's probe — probing the
+# shuffle-rooted join itself would execute its stages twice.
 from .util import narrow_is_small, spread_small
 
 
 def _poly_cells_at(prepared_cover_rows, res_j: int) -> pd.DataFrame:
-    """Expand/coarsen a prepared polygon cover onto one fixed resolution."""
-    out: dict[tuple[int, str], bool] = {}
-    for r, c, pid, refine in prepared_cover_rows:
+    """Expand/coarsen a prepared polygon cover onto one fixed resolution:
+    the distinct (ccell, poly_id) keys. The cover's refine flags are not
+    kept — XZ is a loose index, so every candidate pair is refined."""
+    keys: set[tuple[int, str]] = set()
+    for r, c, pid, _ in prepared_cover_rows:
         if r == res_j:
-            keys = [int(c)]
+            cs = [c]
         elif r < res_j:
-            keys = [int(x) for x in cells.children(c, r, res_j)]
+            cs = cells.children(c, r, res_j)
         else:
-            keys = [int(cells.parent(np.array([c]), r, res_j)[0])]
-            refine = True  # coarsened cell over-covers; must refine
-        for k in keys:
-            prev = out.get((k, pid))
-            out[(k, pid)] = refine if prev is None else (prev and refine)
-    rows = [(k, pid, refine) for (k, pid), refine in out.items()]
-    return pd.DataFrame(rows, columns=["ccell", "poly_id", "refine"])
+            cs = cells.parent(np.array([c]), r, res_j)
+        keys.update((int(k), pid) for k in cs)
+    return pd.DataFrame(
+        {"ccell": np.array([k for k, _ in keys], dtype=np.int64),
+         "poly_id": [pid for _, pid in keys]}
+    )
 
 
 def geometry_join_time(
@@ -83,167 +83,156 @@ def geometry_join_time(
     the index prefilter, exactly as the reference's coarse Z3 ranges are.
     Returns input columns + poly_id.
     """
-    cand, rows, row_id, gen_rid, polys_parsed, small_input = (
-        _geom_time_candidates(
-            rows, polygons, time_windows, geom_col, ts, row_id, res_j,
-            period_s, max_cells,
-        )
-    )
-    spark = rows.sparkSession
-    # from pandas so the Arrow path starts no Python worker (a list of
-    # tuples would run a PythonRDD job and a second worker daemon)
-    win_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(pid, float(t0), float(t1)) for pid, (t0, t1) in time_windows.items()],
-            columns=["poly_id", "__t0", "__t1"],
-        ),
-        schema="poly_id string, __t0 double, __t1 double",
+    return _geom_join(
+        rows, polygons, geom_col=geom_col, row_id=row_id, predicate=predicate,
+        res_j=res_j, max_cells=max_cells, time_windows=time_windows, ts=ts,
+        period_s=period_s,
     )
 
-    joined = spread_small(
-        rows.join(cand, row_id)
-        .join(F.broadcast(win_df), "poly_id")
-        .filter((F.col(ts) >= F.col("__t0")) & (F.col(ts) < F.col("__t1")))
-        .drop("__t0", "__t1"),
-        known_small=small_input,
+
+def _geom_join(
+    rows, polygons, geom_col, row_id, predicate, res_j, max_cells,
+    time_windows=None, ts=None, period_s=None,
+):
+    """The body of both polygon-dict joins: candidate pairs, then the exact
+    DE-9IM refine on the re-spread (rows x candidates) join."""
+    cand, rows, row_id, gen_rid, polys_parsed, small_input = _geom_candidates(
+        rows, polygons, geom_col, row_id, res_j, max_cells,
+        time_windows=time_windows, ts=ts, period_s=period_s,
     )
-    out = _relate_refine_filter(joined, polys_parsed, predicate, geom_col)
+    out = _relate_refine_filter(
+        spread_small(rows.join(cand, row_id), known_small=small_input),
+        polys_parsed, predicate, geom_col,
+    )
     return out.drop("__rid") if gen_rid else out
 
 
-def _geom_time_candidates(
-    rows, polygons, time_windows, geom_col, ts, row_id, res_j, period_s,
-    max_cells,
+def _window_bins(t0: float, t1: float, period_s: int) -> np.ndarray:
+    """Epoch bins the half-open window [t0, t1) touches: t0 // p ..
+    ceil(t1 / p) - 1, the last in float-floor form (``t1 - eps`` is ``t1``
+    at epoch-second magnitudes and would add the bin that starts at t1).
+    No bins when t1 <= t0."""
+    lo = int(t0 // period_s)
+    return np.arange(lo, int(-(-t1 // period_s)) if t1 > t0 else lo)
+
+
+def _geom_candidates(
+    rows, polygons, geom_col, row_id, res_j, max_cells,
+    time_windows=None, ts=None, period_s=None,
 ):
-    """(row_id, poly_id) candidate pairs keyed by (bbox cell, epoch bin).
-    Factored out so tests can assert the bin key PRUNES (rows in epochs a
-    polygon's window never touches produce zero candidates)."""
+    """(row_id, poly_id) candidate pairs — the one candidate builder of
+    both polygon-dict joins. Keys are bbox cells @ res_j; with
+    ``time_windows`` they are (bbox cell, epoch bin) and the exact
+    [t0, t1) test runs on the keys, so rows outside a polygon's window
+    never become candidates (tests assert that pruning here).
+
+    -> (cand, rows, row_id, gen_rid, polys_parsed, small_input): ``rows``
+    comes back re-spread and carrying the generated ``__rid`` if any."""
     from .spatial_join import prepare_polygons
 
     polys_parsed = {
         pid: (from_wkt(g) if isinstance(g, str) else g) for pid, g in polygons.items()
     }
     prepared = prepare_polygons(polys_parsed, max_cells=max_cells)
-    cover_pdf = _poly_cells_at(prepared.cover_rows, res_j)
-    # expand each polygon's cover across its window's epoch bins
-    frames = []
-    for pid, (t0, t1) in time_windows.items():
-        bins = np.arange(int(t0 // period_s), int((t1 - 1e-9) // period_s) + 1)
-        sub = cover_pdf[cover_pdf["poly_id"] == pid]
-        if len(bins) * max(len(sub), 1) > 2_000_000:
-            # the (cell x bin) product is the BROADCAST side — cap it at the
-            # same limit the point join uses for its cover (a years-long
-            # window at a fine period would bloat it; the reference's range
-            # budget likewise splits its target across bins,
-            # Z3IndexKeySpace.scala:162-190)
-            raise ValueError(
-                f"time window for {pid!r} spans {len(bins)} bins x "
-                f"{len(sub)} cells > 2e6 broadcast budget; use a coarser "
-                f"period_s or res_j"
-            )
-        if not len(sub) or not len(bins):
-            continue
-        rep = sub.loc[sub.index.repeat(len(bins))].reset_index(drop=True)
-        rep["wbin"] = np.tile(bins, len(sub))
-        frames.append(rep)
-    if frames:
-        cov_all = pd.concat(frames, ignore_index=True)
-        cov_all = cov_all[["ccell", "poly_id", "refine", "wbin"]]
-    else:  # no windows / empty covers: empty candidate set, not a crash
-        cov_all = pd.DataFrame(
-            {"ccell": pd.Series(dtype="int64"),
-             "poly_id": pd.Series(dtype="object"),
-             "refine": pd.Series(dtype="bool"),
-             "wbin": pd.Series(dtype="int64")}
-        )
+    cover = _poly_cells_at(prepared.cover_rows, res_j)
 
-    spark = rows.sparkSession
     gen_rid = row_id is None
     if gen_rid:
         row_id = "__rid"
         rows = rows.withColumn(row_id, F.monotonically_increasing_id())
     small_input = narrow_is_small(rows)
     rows = spread_small(rows, known_small=small_input)
-    with_bin = rows.withColumn(
-        "__wbin", F.floor(F.col(ts) / F.lit(period_s)).cast("long")
-    )
 
-    keys = _bbox_cell_keys(with_bin, geom_col, row_id, res_j, extra=["__wbin"])
-    cov_df = spark.createDataFrame(
-        cov_all, schema="ccell long, poly_id string, refine boolean, wbin long"
+    keyed, extra, in_window = rows, [], F.lit(True)
+    if time_windows is not None:
+        # each cover repeated across the bins its window touches; the
+        # typed seed frame gives the right columns with no windows at all
+        frames = [cover.iloc[:0].assign(wbin=np.arange(0), __t0=0.0, __t1=0.0)]
+        for pid, (t0, t1) in time_windows.items():
+            bins = _window_bins(t0, t1, period_s)
+            sub = cover[cover["poly_id"] == pid]
+            if len(bins) * max(len(sub), 1) > 2_000_000:
+                # the (cell x bin) product is the BROADCAST side — cap it at
+                # the point join's cover limit (a years-long window at a
+                # fine period would bloat it; the reference's range budget
+                # likewise splits across bins, Z3IndexKeySpace.scala:162-190)
+                raise ValueError(
+                    f"time window for {pid!r} spans {len(bins)} bins x "
+                    f"{len(sub)} cells > 2e6 broadcast budget; use a coarser "
+                    f"period_s or res_j"
+                )
+            frames.append(sub.loc[sub.index.repeat(len(bins))].assign(
+                wbin=np.tile(bins, len(sub)), __t0=float(t0), __t1=float(t1)
+            ))
+        cover = pd.concat(frames, ignore_index=True)
+        keyed = rows.withColumn(
+            "wbin", F.floor(F.col(ts) / F.lit(period_s)).cast("long")
+        )
+        extra = ["wbin", ts]
+        in_window = (F.col(ts) >= F.col("__t0")) & (F.col(ts) < F.col("__t1"))
+    # no cell cap on the row side: dropping cells would silently lose
+    # candidate pairs. worst case (a global geometry) emits 4^res_j keys for
+    # that row — pick a smaller res_j when rows carry huge geometries.
+    keys = _bbox_cell_keys(keyed, geom_col, row_id, res_j, extra=extra)
+    cov_df = rows.sparkSession.createDataFrame(
+        cover, schema="ccell long, poly_id string"
+        + (", wbin long, __t0 double, __t1 double" if extra else ""),
     )
     cand = (
-        keys.join(F.broadcast(cov_df),
-                  (keys["ccell"] == cov_df["ccell"])
-                  & (keys["__wbin"] == cov_df["wbin"]))
+        keys.join(F.broadcast(cov_df), ["ccell", *extra[:1]])
+        .filter(in_window)
         .select(row_id, "poly_id")
         .dropDuplicates([row_id, "poly_id"])
     )
     return cand, rows, row_id, gen_rid, polys_parsed, small_input
 
 
-_ARROW_OF_SPARK = {
-    "tinyint": pa.int8(),
-    "smallint": pa.int16(),
-    "int": pa.int32(),
-    "bigint": pa.int64(),
-    "float": pa.float32(),
-    "double": pa.float64(),
-    "string": pa.string(),
-}
+def _bbox_struct_udf():
+    """The package's one WKB -> bounding-box parser: a pandas UDF returning
+    struct<xmin, xmax, ymin, ymax> doubles (all null for a null geometry).
+    Feeds the join keys below and ``extensions.with_bbox_columns``."""
+
+    @F.pandas_udf(", ".join(f"{p} double" for p in _BBOX))
+    def geom_bbox(wkb: pd.Series) -> pd.DataFrame:
+        rows = []
+        for w in wkb:
+            if w is None:
+                rows.append((None,) * 4)
+                continue
+            x0, y0, x1, y1 = from_wkb(bytes(w)).bounds()
+            rows.append((x0, x1, y0, y1))
+        return pd.DataFrame(rows, columns=list(_BBOX))
+
+    return geom_bbox
 
 
 def _bbox_cell_keys(rows, geom_col, row_id, res_j, extra=()):
-    """(row_id, *extra, ccell) keys: one row per bbox cover cell of the row's
-    geometry at res_j (mapInArrow; shared by geometry_join and the XZ3 path).
+    """(row_id, *extra, ccell) keys: one row per res_j cell of the row
+    geometry's bounding box, expanded natively (sequence/explode + the
+    morton SQL), so any id dtype passes through untouched. The bbox comes
+    from one ``geom_bbox`` UDF pass.
 
-    Batches are built against the DECLARED Arrow schema: pandas infers int64
-    for integer lists, which crashes the stage with a schema mismatch when
-    the id column is int32 (e.g. a raw TPC-H key) — the explicit schema
-    makes every caller's dtype work without caller-side casts."""
-    extra = list(extra)
-    dtypes = dict(rows.dtypes)
-    out_schema = pa.schema(
-        [(row_id, _ARROW_OF_SPARK.get(dtypes[row_id], pa.int64()))]
-        + [(name, _ARROW_OF_SPARK.get(dtypes[name], pa.int64())) for name in extra]
-        + [("ccell", pa.int64())]
+    A null bbox emits no key. ``greatest()`` skips nulls, so a null bound
+    would clamp into cell 0; a null sequence START explodes to no rows
+    instead. Not a ``.filter``: Catalyst pushes that below the caller's
+    re-spread exchange, and both the bbox UDF and the caller's geometry
+    UDF then run twice. For the same reason each explode takes its
+    sequence expression inline: over a plain column, Catalyst infers a
+    ``size(col) > 0`` filter and pushes it, UDF and all, below the
+    generator."""
+    rows = rows.withColumn("__bbox", _bbox_struct_udf()(F.col(geom_col)))
+    xmin, xmax, ymin, ymax = bbox = [f"__bbox.{p}" for p in _BBOX]
+    x0, y0 = cells.xy_sql_expr(xmin, ymin, res_j)
+    x1, y1 = cells.xy_sql_expr(xmax, ymax, res_j)
+    valid = " AND ".join(f"{c} IS NOT NULL" for c in bbox)
+    ids = [row_id, *extra]
+    return (
+        rows.select(*ids, "__bbox", F.explode(
+            F.expr(f"sequence(CASE WHEN {valid} THEN {x0} END, {x1})")
+        ).alias("__x"))
+        .select(*ids, "__x", F.explode(F.expr(f"sequence({y0}, {y1})")).alias("__y"))
+        .select(*ids, F.expr(cells.encode_xy_sql("__x", "__y")).alias("ccell"))
     )
-
-    def bbox_cells(batches):
-        for b in batches:
-            pdf = b.to_pandas()
-            rids, extras, ccells = [], [], []
-            for tup in pdf[[row_id, geom_col] + extra].itertuples(index=False):
-                rid, wkb = tup[0], tup[1]
-                if wkb is None:
-                    continue
-                g = from_wkb(bytes(wkb))
-                x0, y0, x1, y1 = g.bounds()
-                cx0, cy0 = cells.xy_of(np.array([x0]), np.array([y0]), res_j)
-                cx1, cy1 = cells.xy_of(np.array([x1]), np.array([y1]), res_j)
-                xs = np.arange(int(cx0[0]), int(cx1[0]) + 1)
-                ys = np.arange(int(cy0[0]), int(cy1[0]) + 1)
-                cc = cells.encode_xy(np.repeat(xs, len(ys)), np.tile(ys, len(xs)))
-                rids.extend([rid] * len(cc))
-                extras.extend([tup[2:]] * len(cc))
-                ccells.append(cc)
-            if not rids:
-                continue
-            out = {row_id: rids}
-            for j, name in enumerate(extra):
-                out[name] = [e[j] for e in extras]
-            out["ccell"] = np.concatenate(ccells)
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame(out), preserve_index=False, schema=out_schema
-            )
-
-    dtypes = dict(rows.dtypes)
-    schema = ", ".join(
-        [f"{row_id} {dtypes[row_id]}"]
-        + [f"{name} {dtypes[name]}" for name in extra]
-        + ["ccell long"]
-    )
-    return rows.select(row_id, geom_col, *extra).mapInArrow(bbox_cells, schema=schema)
 
 
 def _relate_refine_filter(df, polys_parsed, predicate, geom_col, poly_col="poly_id"):
@@ -285,44 +274,13 @@ def geometry_join(
     ``row_id`` names a unique row key (required for dedup); defaults to a
     generated ``__rid`` from a monotonically increasing id.
     """
-    from .spatial_join import prepare_polygons
-
-    polys_parsed = {
-        pid: (from_wkt(g) if isinstance(g, str) else g) for pid, g in polygons.items()
-    }
-    prepared = prepare_polygons(polys_parsed, max_cells=max_cells)
-    cover_pdf = _poly_cells_at(prepared.cover_rows, res_j)
-    spark = rows.sparkSession
-
-    gen_rid = row_id is None
-    if gen_rid:
-        row_id = "__rid"
-        rows = rows.withColumn(row_id, F.monotonically_increasing_id())
-    small_input = narrow_is_small(rows)
-    rows = spread_small(rows, known_small=small_input)
-
-    # no cell cap on the row side: dropping cells would silently lose
-    # candidate pairs. worst case (a global geometry) emits 4^res_j keys for
-    # that row — pick a smaller res_j when rows carry huge geometries.
-    keys = _bbox_cell_keys(rows, geom_col, row_id, res_j)
-
-    cov_df = spark.createDataFrame(cover_pdf)
-    cand = (
-        keys.join(F.broadcast(cov_df), "ccell")
-        .select(row_id, "poly_id")
-        .dropDuplicates([row_id, "poly_id"])
-    )
-
     # XZ is a LOOSE index: a bbox cell inside the polygon does not imply the
     # geometry touches that cell, so the exact predicate always runs (the
     # reference likewise always applies the full filter on XZ scans).
-    out = _relate_refine_filter(
-        spread_small(rows.join(cand, row_id), known_small=small_input),
-        polys_parsed,
-        predicate,
-        geom_col,
+    return _geom_join(
+        rows, polygons, geom_col=geom_col, row_id=row_id, predicate=predicate,
+        res_j=res_j, max_cells=max_cells,
     )
-    return out.drop("__rid") if gen_rid else out
 
 
 def geometry_join_tables(
@@ -341,15 +299,16 @@ def geometry_join_tables(
     reference's GeoMesaJoinRelation, RelationUtils.scala:39-53, with the
     dedup it leaves as a TODO made explicit).
 
-    Plan: each side maps to (id, bbox cell @ res_j) keys (one mapInArrow
-    pass per side), ONE equi-join on the cell key — the grid partitioning:
-    both sides shuffle on cell, co-locating spatial neighborhoods — then
-    dropDuplicates((left_id, right_id)) collapses multi-cell matches, the
-    geometries are re-fetched by id (candidates carry two longs through
-    the dedup shuffle, never WKB payloads), and the exact DE-9IM refine
-    runs as a mapInPandas barrier. Hot cells are AQE skew-join territory;
-    ids must be unique per side (required for the dedup and re-fetch) and
-    the two id column names must differ (the pair output carries both).
+    Plan: each side maps to (id, bbox cell @ res_j) keys — one ``geom_bbox``
+    UDF pass per side, then a native cell expansion — then ONE equi-join on
+    the cell key — the grid partitioning: both sides shuffle on cell,
+    co-locating spatial neighborhoods — then dropDuplicates((left_id,
+    right_id)) collapses multi-cell matches, the geometries are re-fetched
+    by id (candidates carry two ids through the dedup shuffle, never WKB
+    payloads), and the exact DE-9IM refine runs as a mapInPandas barrier. Hot cells are AQE
+    skew-join territory; ids must be unique per side (required for the
+    dedup and re-fetch) and the two id column names must differ (the pair
+    output carries both).
 
     Inputs should be scan-rooted (or cheap to recompute): the small-input
     probe materializes a shuffle-rooted input's stages once extra (see
@@ -363,24 +322,15 @@ def geometry_join_tables(
         cand.join(left.select(left_id, F.col(left_geom).alias("__lg")), left_id)
         .join(right.select(right_id, F.col(right_geom).alias("__rg")), right_id)
     )
-    # Explicit repartition (fixed N — AQE does not re-coalesce a
-    # user-numbered repartition) before the CPU-bound DE-9IM refine.
-    # Round-3 shipped this gated on "both inputs small", which misses the
-    # common case: well-partitioned INPUTS whose candidate-pair exchanges
-    # are byte-small, so AQE (sizing in BYTES, refine costing per ROW)
-    # coalesced the refine to a handful of tasks — measured 44 s of a 58 s
-    # two-table join at 900k pairs on 7 tasks vs ~2 s spread (SCALE.md
-    # "Python stages vs AQE partition coalescing", third occurrence of the
-    # same failure mode). N = max(defaultParallelism, shuffle.partitions)
-    # keeps every core busy locally and matches the configured width on a
-    # cluster; the exchange it adds carries each surviving pair + its two
-    # geometries exactly once — the dedup shuffle before it still moves
-    # ids only. ROUND-ROBIN, not keyed: a (left_id, right_id) hash
-    # partitioning is identical to the dedup exchange's, so EnsureRequirements
-    # elides the keyed form as redundant (verified in the executed plan) and
-    # the refine lands back on the coalesced partitions; round-robin is never
-    # elided and row-balances the per-row-cost stage exactly, immune even to
-    # hot ids.
+    # Fixed-N ROUND-ROBIN repartition before the CPU-bound refine, always:
+    # well-partitioned inputs still give byte-small candidate exchanges that
+    # AQE (sizing in BYTES; the refine costs per ROW) coalesces to a few
+    # tasks — measured 44 s of a 58 s join at 900k pairs on 7 tasks vs ~2 s
+    # spread (SCALE.md "Python stages vs AQE partition coalescing"). AQE
+    # never re-coalesces a user-numbered repartition; N = max(parallelism,
+    # shuffle.partitions). Not keyed: a (left_id, right_id) hash layout
+    # equals the dedup exchange's, so EnsureRequirements elides it and the
+    # refine lands back on the coalesced partitions.
     spark = pairs.sparkSession
     n_spread = max(
         spark.sparkContext.defaultParallelism,
@@ -429,16 +379,17 @@ def geometry_join_tables_candidates(
             f"left_id and right_id must differ (both {left_id!r}); alias "
             "one side before joining"
         )
-    lk = _bbox_cell_keys(
-        spread_small(left.select(left_id, left_geom), known_small=narrow_is_small(left)),
-        left_geom, left_id, res_j,
-    )
-    rk = _bbox_cell_keys(
-        spread_small(right.select(right_id, right_geom), known_small=narrow_is_small(right)),
-        right_geom, right_id, res_j,
-    )
+
+    def keys(df, id_col, geom_col):
+        narrow = df.select(id_col, geom_col)
+        return _bbox_cell_keys(
+            spread_small(narrow, known_small=narrow_is_small(df)),
+            geom_col, id_col, res_j,
+        )
+
     return (
-        lk.join(rk, "ccell")
+        keys(left, left_id, left_geom)
+        .join(keys(right, right_id, right_geom), "ccell")
         .select(left_id, right_id)
         .dropDuplicates([left_id, right_id])
     )

@@ -140,10 +140,8 @@ def knn_join_table(
                 .withColumn("__ny", F.col("__qy") + F.col("__dy"))
                 .filter((F.col("__ny") >= 0) & (F.col("__ny") < n))
             )
-            sx = cells._spread_sql("__nx")
-            sy = cells._spread_sql("__ny")
             nq = nq.withColumn(
-                "__jcell", F.expr(f"({sx}) | (({sy}) * 2)")
+                "__jcell", F.expr(cells.encode_xy_sql("__nx", "__ny"))
             ).drop("__dx", "__dy", "__nx", "__ny")
             cand = pts.join(nq, pts["__cell"] == nq["__jcell"], "inner")
 

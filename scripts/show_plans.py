@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -51,6 +52,17 @@ HEADLINE = [
 ]
 
 
+# the physical nodes that run Python workers; tests count them too
+PYTHON_NODES = ("ArrowEvalPython", "MapInArrow", "MapInPandas", "FlatMapGroupsInPandas")
+PYTHON_NODE = re.compile(rf"^\(\d+\) ({'|'.join(PYTHON_NODES)})\b", re.M)
+
+
+def python_nodes(formatted_plan: str) -> int:
+    """Python plan nodes in an ``explain("formatted")`` dump: each node has
+    exactly one numbered detail entry, ``(N) <name>``."""
+    return len(PYTHON_NODE.findall(formatted_plan))
+
+
 def main() -> None:
     from geomesa_spark.catalog import ALL_QUERIES as QUERIES
     from geomesa_spark.session import get_spark
@@ -63,7 +75,8 @@ def main() -> None:
         "filters appear in `PushedFilters`/partition filters at the scan;\n"
         "small sides broadcast (`BroadcastHashJoin`); `WholeStageCodegen` spans\n"
         "cover the hot expressions; Python appears only in deliberate\n"
-        "`ArrowEvalPython`/`MapInArrow`/`FlatMapGroupsInPandas` stages.\n"
+        "`ArrowEvalPython`/`MapInArrow`/`MapInPandas`/`FlatMapGroupsInPandas`\n"
+        "stages, counted per query as `Python nodes: N`.\n"
     )
     for name in HEADLINE:
         fn, _ = QUERIES[name]
@@ -71,7 +84,10 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        out.append(f"\n## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
+        plan = buf.getvalue().strip()
+        out.append(
+            f"\n## {name}\n\nPython nodes: {python_nodes(plan)}\n\n```\n{plan}\n```\n"
+        )
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import os
+import re
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from geomesa_spark.core.geometry import box, from_wkt, relate, to_wkb
 from geomesa_spark.operators.geometry_join import geometry_join
@@ -86,7 +91,7 @@ def test_geometry_join_time_semantics_and_pruning(spark):
     candidate pairs (they are filtered by the join key, not by a refine)."""
     import numpy as np
     from geomesa_spark.operators.geometry_join import (
-        _geom_time_candidates,
+        _geom_candidates,
         geometry_join_time,
     )
 
@@ -121,8 +126,9 @@ def test_geometry_join_time_semantics_and_pruning(spark):
     assert got == {("a", "west"), ("c", "east")}
 
     # pruning assertion: row b (week 5) must not even become a candidate
-    cand, rows2, rid, _, _, _ = _geom_time_candidates(
-        df, POLYS, windows, "geom", "ts_s", "gid", 8, week, 2048
+    cand, rows2, rid, _, _, _ = _geom_candidates(
+        df, POLYS, "geom", "gid", 8, 2048,
+        time_windows=windows, ts="ts_s", period_s=week,
     )
     cpdf = cand.toPandas()
     assert "b" not in set(cpdf["gid"])       # epoch-bin key pruned it
@@ -168,9 +174,9 @@ def test_geometry_join_tables_brute_force(spark):
 
 
 def test_geometry_join_tables_int32_ids_and_same_name_guard(spark):
-    """int32 id columns must work without caller-side casts (the Arrow
-    stage emits against the declared schema), and identical id names on
-    both sides are rejected up front."""
+    """int32 id columns must work without caller-side casts (the native
+    cell keys carry any id dtype), and identical id names on both sides
+    are rejected up front."""
     import struct
 
     from pyspark.sql import functions as F
@@ -195,3 +201,133 @@ def test_geometry_join_tables_int32_ids_and_same_name_guard(spark):
     with pytest.raises(ValueError, match="must differ"):
         geometry_join_tables(l, r.withColumnRenamed("rid", "lid"),
                              left_id="lid", right_id="lid")
+
+
+def test_geometry_join_time_window_ending_on_bin_boundary(spark):
+    """A half-open window [t0, t1) whose t1 starts an epoch bin covers bins
+    t0 // p .. t1 // p - 1 only. At epoch-second magnitudes (~1.7e9)
+    ``t1 - 1e-9 == t1``, so that form broadcast the bin starting at t1 and
+    a row in it (ts >= t1) became a candidate; an empty window on a
+    boundary got a bin too."""
+    from geomesa_spark.operators.geometry_join import (
+        _geom_candidates,
+        _window_bins,
+    )
+
+    week = 604_800
+    t0, t1 = float(2817 * week + 100), float(2819 * week)
+    assert _window_bins(t0, t1, week).tolist() == [2817, 2818]
+    assert _window_bins(t0, t1 + 1.0, week).tolist() == [2817, 2818, 2819]
+    assert _window_bins(t1, t1, week).tolist() == []
+    assert _window_bins(t1, t0, week).tolist() == []
+    g = to_wkb(box(-10, -10, -8, -8))  # inside 'west'
+    df = spark.createDataFrame(
+        pd.DataFrame({"gid": ["in", "after"], "geom": [g, g],
+                      "ts_s": [t0 + 3600.0, t1 + 3600.0]})
+    )
+
+    def cand_ids(window):
+        cand, *_ = _geom_candidates(
+            df, {"west": POLYS["west"]}, "geom", "gid", 8, 2048,
+            time_windows={"west": window}, ts="ts_s", period_s=week,
+        )
+        return set(cand.toPandas()["gid"])
+
+    assert cand_ids((t0, t1)) == {"in"}
+    assert cand_ids((t1, t1)) == set()
+
+
+def _edge_geoms():
+    """Bounding boxes on the grid's awkward spots."""
+    return [
+        box(-180.0, -90.0, -179.0, -89.0),        # lon -180 / lat -90 corner
+        box(179.5, 89.5, 180.0, 90.0),            # lon +180 / lat +90 corner
+        box(-180.0, -1.0, 180.0, 1.0),            # full-width band
+        box(12.3, 45.6, 12.3, 45.6),              # zero area
+        box(1.40625, 0.703125, 2.8125, 1.40625),  # exact res-8 cell edges
+        from_wkt("LINESTRING(-20.5 -33.2, 14.1 8.7)"),
+    ]
+
+
+@pytest.mark.parametrize("res", [4, 8, 10])
+def test_bbox_cell_keys_match_numpy_reference(spark, res):
+    """Native cell keys equal the numpy encoder over Geometry.bounds(); the
+    int32 id keeps its dtype, and a null geometry emits no key (a null
+    bound must not clamp into cell 0)."""
+    from geomesa_spark.core import cells
+    from geomesa_spark.operators.geometry_join import _bbox_cell_keys
+
+    geoms = _edge_geoms()
+    want = set()
+    for gid, g in enumerate(geoms):
+        x0, y0, x1, y1 = g.bounds()
+        (cx0, cx1), (cy0, cy1) = cells.xy_of([x0, x1], [y0, y1], res)
+        xs, ys = np.meshgrid(np.arange(cx0, cx1 + 1), np.arange(cy0, cy1 + 1))
+        want |= {(gid, int(c)) for c in cells.encode_xy(xs.ravel(), ys.ravel())}
+    null_gid = len(geoms)
+    df = spark.createDataFrame(
+        pd.DataFrame({"gid": np.arange(null_gid + 1, dtype=np.int32),
+                      "geom": [to_wkb(g) for g in geoms] + [None]}),
+        schema="gid int, geom binary",
+    )
+    keys = _bbox_cell_keys(df, "geom", "gid", res)
+    assert keys.schema["gid"].dataType.simpleString() == "int"
+    got = [(r["gid"], r["ccell"]) for r in keys.collect()]
+    assert len(got) == len(set(got))
+    assert null_gid not in {gid for gid, _ in got}
+    assert set(got) == want
+
+
+def _python_nodes(df):
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts"))
+    from show_plans import PYTHON_NODES
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln for ln in plan.splitlines() if re.search("|".join(PYTHON_NODES), ln)]
+
+
+def test_geometry_join_tables_bbox_udf_once_per_side(spark):
+    """Over UDF-built WKB the key path parses each side's geometry for its
+    bbox in ONE ArrowEvalPython (no second evaluation pushed below the
+    explode or an exchange)."""
+    from geomesa_spark.operators.geometry_join import geometry_join_tables
+
+    @F.pandas_udf("binary")
+    def box_wkb(v: pd.Series) -> pd.Series:
+        return pd.Series([to_wkb(box(x, x / 2, x + 3, x / 2 + 3)) for x in v])
+
+    def side(n, id_col):
+        return spark.range(n).select(
+            F.col("id").alias(id_col),
+            box_wkb((F.col("id") % 40).cast("double")).alias("geom"),
+        )
+
+    left, right = side(200, "lid"), side(50, "rid")
+    joined = geometry_join_tables(left, right, "lid", "rid")
+    nodes = _python_nodes(joined)
+    bbox_nodes = [n for n in nodes if "geom_bbox" in n]
+    assert len(bbox_nodes) == 2
+    assert all("ArrowEvalPython" in n for n in bbox_nodes)
+    # + one WKB re-fetch per side and the refine: nothing evaluated twice
+    assert len(nodes) == 5
+
+
+
+def test_bbox_udf_fields_in_schema_order(spark):
+    """geom_bbox emits its columns in the declared (xmin, xmax, ymin, ymax)
+    order, so the struct is right also when Spark assigns pandas columns
+    by position rather than by name."""
+    from geomesa_spark.extensions import with_bbox_columns
+
+    key = "spark.sql.legacy.execution.pandas.groupedMap.assignColumnsByName"
+    df = spark.createDataFrame(
+        pd.DataFrame({"geom": [to_wkb(box(1.0, 2.0, 3.0, 4.0))]})
+    )
+    spark.conf.set(key, "false")
+    try:
+        row = with_bbox_columns(df).first()
+    finally:
+        spark.conf.unset(key)
+    assert (row["geom_xmin"], row["geom_xmax"], row["geom_ymin"],
+            row["geom_ymax"]) == (1.0, 3.0, 2.0, 4.0)
