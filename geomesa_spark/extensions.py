@@ -157,7 +157,7 @@ def register_st_dwithin_pt(spark: SparkSession):
     recognizes: st_dwithin_pt(lon, lat, lon0, lat0, meters) -> boolean.
     Vectorized numpy great-circle distance (same EARTH_RADIUS_M as
     operators.proximity.haversine_sql)."""
-    EARTH_RADIUS_M = 6371008.8
+    from .core.geometry import EARTH_RADIUS_M
 
     @F.pandas_udf(T.BooleanType())
     def st_dwithin_pt(

@@ -128,7 +128,7 @@ def _geom_candidates(
 
     -> (cand, rows, row_id, gen_rid, polys_parsed, small_input): ``rows``
     comes back re-spread and carrying the generated ``__rid`` if any."""
-    from .spatial_join import prepare_polygons
+    from .spatial_join import BROADCAST_COVER_LIMIT, prepare_polygons
 
     polys_parsed = {
         pid: (from_wkt(g) if isinstance(g, str) else g) for pid, g in polygons.items()
@@ -151,7 +151,7 @@ def _geom_candidates(
         for pid, (t0, t1) in time_windows.items():
             bins = _window_bins(t0, t1, period_s)
             sub = cover[cover["poly_id"] == pid]
-            if len(bins) * max(len(sub), 1) > 2_000_000:
+            if len(bins) * max(len(sub), 1) > BROADCAST_COVER_LIMIT:
                 # the (cell x bin) product is the BROADCAST side — cap it at
                 # the point join's cover limit (a years-long window at a
                 # fine period would bloat it; the reference's range budget

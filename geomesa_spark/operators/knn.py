@@ -5,11 +5,11 @@ From-scratch analog of the reference's KNN process
 loop issues an initial window query, doubles the window while fewer than k
 hits (``KnnWindow.expand``, :278-300), and terminates when the kth distance is
 covered by the searched window. Ours replaces the window with Chebyshev cell
-*disks* and runs each round as ONE broadcast join over the (never-shuffled)
-point table:
+*disks* and runs each round as ONE join over the (never-shuffled) point
+table:
 
-    round i: unresolved queries -> disk(cell, R_i) cells (driver, numpy)
-             -> broadcast -> equi-join on point cell -> per-query top-k
+    round i: unresolved queries -> disk(cell, R_i) cells
+             -> equi-join on point cell -> per-query top-k
              -> resolve if n >= k AND d_k <= guarantee(R_i)
 
 ``guarantee(R)`` is a conservative lower bound on the distance to any point
@@ -17,39 +17,50 @@ OUTSIDE Chebyshev radius R (latitude band + cos-scaled longitude bound), so a
 resolved query provably has its true top-k — the same termination contract as
 the reference's hole-punched window, restated for a sphere-aware grid.
 
-Scale notes: the point side is scanned once per round with a broadcast hash
-join (no shuffle); rounds only re-visit *unresolved* queries, and the ring
-radius doubles, so rounds are O(log(max_radius)). Query count Q is assumed
-driver-manageable (<= ~100k), matching the reference's client-side process.
+Both loops — :func:`knn_join` (pandas queries on the driver, the reference's
+client process) and :func:`knn_join_table` (DataFrame queries, table-scale
+Q) — call one :func:`_round`: candidate join, distance, exclude_self, window
+top-k and guarantee. Each keeps the two steps whose cost depends on where
+the queries live. The client loop builds disk cells in vectorized numpy and
+broadcasts them (a native explode costs it more per round than the numpy
+build) and resolves in pandas on the collected top-k. The table loop never
+brings query rows to the driver: native ``sequence``/``explode`` disks and a
+filter over the persisted round. Rounds re-visit only unresolved queries
+and the radius doubles, so there are O(log(max_radius)) of them.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..core import cells
 from .proximity import haversine_sql
+from .spatial_join import add_cell_column
 
 M_PER_DEG = 111194.93  # meters per degree of latitude at EARTH_RADIUS_M
-
 MAX_CLIENT_QUERIES = 100_000  # hard guard on the driver-side query set
 
 
-def _guarantee_m(radius: int, res: int, qlat: np.ndarray) -> np.ndarray:
-    """Distance lower bound to any point outside Chebyshev ``radius`` cells."""
-    dlon_deg, dlat_deg = cells.cell_size_deg(res)
-    lat_reach = np.abs(qlat) + (radius + 1) * dlat_deg
-    cosl = np.cos(np.radians(np.minimum(lat_reach, 90.0)))
-    lat_bound = (radius - 1) * dlat_deg * M_PER_DEG
-    lon_bound = (radius - 1) * dlon_deg * M_PER_DEG * np.maximum(cosl, 0.0)
-    return np.maximum(np.minimum(lat_bound, lon_bound), 0.0)
+def _covers_world(r: int, res: int) -> bool:
+    return 2 * r + 1 >= 1 << res
 
 
-def _guarantee_planar(radius: int, res: int) -> float:
+def _guarantee(metric: str, r: int, res: int, qlat: str) -> Column:
+    """Distance lower bound from a query at latitude ``qlat`` to any point
+    outside its Chebyshev ``r``-cell disk. One SQL string, so building it
+    costs one py4j call per round instead of one per Column operator."""
     dlon_deg, dlat_deg = cells.cell_size_deg(res)
-    return max(radius - 1, 0) * min(dlon_deg, dlat_deg)
+    steps = max(r - 1, 0)
+    if metric == "planar":
+        return F.expr(f"{steps * min(dlon_deg, dlat_deg)!r}D")
+    # lon bound: cos of the most poleward latitude the disk reaches (<= 90)
+    reach = f"least(abs({qlat}) + {(r + 1) * dlat_deg!r}D, 90.0D)"
+    return F.expr(
+        f"least({steps * dlat_deg * M_PER_DEG!r}D, "
+        f"{steps * dlon_deg * M_PER_DEG!r}D * cos(radians({reach})))"
+    )
 
 
 def _dist_sql(metric: str, lon: str, lat: str, qlon: str, qlat: str) -> str:
@@ -65,6 +76,68 @@ def _dist_sql(metric: str, lon: str, lat: str, qlon: str, qlat: str) -> str:
             f"(({lat}) - ({qlat})) * (({lat}) - ({qlat})))"
         )
     raise ValueError(metric)
+
+
+def _round(
+    pts: DataFrame, qcells: DataFrame, r: int, res: int, k: int,
+    point_id: str, lon: str, lat: str, metric: str, exclude_self: bool,
+) -> DataFrame:
+    """One kNN round: ``qcells`` (``__qid, __qlon, __qlat`` + one ``__jcell``
+    row per disk cell, none once the disk covers the world) joined to the
+    points -> per-query top-k (__qid, <point_id>, dist, rnk, __g), ``__g``
+    the query's guarantee (+inf on a covers-world round). A query resolves
+    when its ``rnk == k`` row exists and has ``dist <= __g``: rows rank by
+    distance, so that row is the farthest of a full top-k."""
+    if _covers_world(r, res):
+        cand, g = pts.crossJoin(qcells), F.lit(float("inf"))
+    else:
+        cand = pts.join(qcells, F.col("__cell") == F.col("__jcell"))
+        g = _guarantee(metric, r, res, "__qlat")
+    dist = _dist_sql(metric, lon, lat, "__qlon", "__qlat")
+    cand = cand.withColumn("__dist", F.expr(dist))
+    if exclude_self:
+        cand = cand.filter(F.col(point_id) != F.col("__qid"))
+    w = Window.partitionBy("__qid").orderBy("__dist", point_id)
+    return (
+        cand.withColumn("__rnk", F.row_number().over(w))
+        .filter(F.col("__rnk") <= k)
+        .select(
+            "__qid", point_id, F.col("__dist").alias("dist"),
+            F.col("__rnk").alias("rnk"), g.alias("__g"),
+        )
+    )
+
+
+def _disk_cells_np(q: pd.DataFrame, r: int, res: int) -> pd.DataFrame:
+    """Each query row once per cell of its Chebyshev ``r``-disk (``__jcell``),
+    all queries in one numpy pass; longitude wraps, latitude stops at poles."""
+    n = 1 << res
+    qx, qy = cells.xy_of(q["__qlon"].to_numpy(), q["__qlat"].to_numpy(), res)
+    d = np.arange(-r, r + 1)
+    gx, gy = np.broadcast_arrays(
+        (qx[:, None, None] + d[None, :, None]) % n, qy[:, None, None] + d
+    )
+    keep = (gy >= 0) & (gy < n)
+    row = np.broadcast_to(np.arange(len(q))[:, None, None], keep.shape)[keep]
+    out = q.iloc[row].reset_index(drop=True)
+    out["__jcell"] = cells.encode_xy(gx[keep], gy[keep])
+    return out
+
+
+def _disk_cells_sql(q: DataFrame, r: int, res: int) -> DataFrame:
+    """:func:`_disk_cells_np` as native ``sequence``/``explode`` plus the
+    morton spread the encoder uses (``q`` carries ``__qx, __qy``)."""
+    n = 1 << res
+    d = F.sequence(F.lit(-r), F.lit(r))
+    return (
+        q.withColumn("__dx", F.explode(d))
+        .withColumn("__dy", F.explode(d))
+        .withColumn("__nx", F.pmod(F.col("__qx") + F.col("__dx"), F.lit(n)))
+        .withColumn("__ny", F.col("__qy") + F.col("__dy"))
+        .filter((F.col("__ny") >= 0) & (F.col("__ny") < n))
+        .withColumn("__jcell", F.expr(cells.encode_xy_sql("__nx", "__ny")))
+        .drop("__dx", "__dy", "__nx", "__ny")
+    )
 
 
 def knn_join_table(
@@ -89,139 +162,55 @@ def knn_join_table(
     per-feature, :222-301, re-expressed as set-at-a-time joins).
 
     Fully distributed — no per-query driver work and no LocalTableScan:
-    each round explodes unresolved queries to their (2R+1)^2 cell disk with
-    a NATIVE sequence/explode + morton-interleave expression, equi-joins the
-    (once-encoded) point table on the cell key, takes the per-query window
-    top-k, and keeps queries whose kth distance is within the provable
-    guarantee radius (same termination contract as knn_join). Unresolved
-    queries re-enter with doubled radius; the driver only ever sees a
-    resolved/unresolved COUNT, never rows. Returns
-    (query_id, point_id, dist, rnk).
+    each round explodes unresolved queries to their (2R+1)^2 cell disk
+    natively, runs the shared round, and keeps queries whose kth distance is
+    within the guarantee; the rest re-enter with doubled radius. The driver
+    only sees a COUNT, never rows. Returns (query_id, point_id, dist, rnk).
 
     ``exclude_self`` drops candidates whose ``point_id`` equals the
     ``query_id`` (queries drawn from the point table itself); by default a
     point is a neighbor of any query, whatever their ids.
 
-    Sizing ``radius``: any start is EXACT (the kth-distance guarantee
-    gates resolution), so pick it for cost — the first disk should
-    usually contain k neighbors for the SPARSEST expected query cell.
-    Under-sizing pays whole extra rounds (each a join + window top-k +
-    anti-join); over-sizing pays only (2R+1)^2 explode rows per query.
+    Sizing ``radius``: any start is EXACT (the guarantee gates resolution),
+    so pick it for cost — the first disk should usually hold k neighbors for
+    the SPARSEST expected query cell. Under-sizing pays whole extra rounds;
+    over-sizing pays only (2R+1)^2 explode rows per query.
     """
-    from .spatial_join import add_cell_column
-
-    n = 1 << res
-    spark = points.sparkSession
     pts = add_cell_column(points, res, lon, lat, out="__cell").persist()
-
     qx, qy = cells.xy_sql_expr(qlon, qlat, res)
-    q = queries.select(
-        F.col(query_id), F.col(qlon), F.col(qlat),
+    unresolved = queries.select(
+        F.col(query_id).alias("__qid"), F.col(qlon).alias("__qlon"),
+        F.col(qlat).alias("__qlat"),
         F.expr(qx).alias("__qx"), F.expr(qy).alias("__qy"),
     )
-
-    dist_expr = _dist_sql(metric, lon, lat, qlon, qlat)
-    dlon_deg, dlat_deg = cells.cell_size_deg(res)
-    results = None
-    unresolved = q
-    r = radius
-    for round_no in range(max_rounds):
-        covers_world = 2 * r + 1 >= n
+    results, r = None, radius
+    for _ in range(max_rounds):
+        covers_world = _covers_world(r, res)
+        qcells = unresolved if covers_world else _disk_cells_sql(unresolved, r, res)
+        # persisted: the round fans out three ways (resolved-id filter, semi
+        # join, anti join). Its outputs are localCheckpoint-ed (lineage cut)
+        # and the cache unpersisted at round end, so repeated calls leave no
+        # net persisted blocks (the connected_components pattern).
+        topk = _round(
+            pts, qcells, r, res, k, point_id, lon, lat, metric, exclude_self
+        ).persist()
         if covers_world:
-            cand = pts.crossJoin(unresolved)
-        else:
-            # native disk expansion: (2R+1)^2 neighbor cells per query via
-            # sequence/explode + the same morton spread the encoder uses
-            nq = (
-                unresolved
-                .withColumn("__dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-                .withColumn("__dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-                .withColumn("__nx", F.pmod(F.col("__qx") + F.col("__dx"), F.lit(n)))
-                .withColumn("__ny", F.col("__qy") + F.col("__dy"))
-                .filter((F.col("__ny") >= 0) & (F.col("__ny") < n))
-            )
-            nq = nq.withColumn(
-                "__jcell", F.expr(cells.encode_xy_sql("__nx", "__ny"))
-            ).drop("__dx", "__dy", "__nx", "__ny")
-            cand = pts.join(nq, pts["__cell"] == nq["__jcell"], "inner")
-
-        cand = cand.withColumn("__dist", F.expr(dist_expr))
-        if exclude_self:
-            cand = cand.filter(F.col(point_id) != F.col(query_id))
-        w = Window.partitionBy(query_id).orderBy(
-            F.col("__dist").asc(), F.col(point_id).asc()
-        )
-        topk = (
-            cand.withColumn("__rnk", F.row_number().over(w))
-            .filter(F.col("__rnk") <= k)
-            .select(
-                query_id, point_id, F.col(qlat).alias("__ql"),
-                F.col("__dist").alias("dist"), F.col("__rnk").alias("rnk"),
-            )
-        )
-        # the round's expensive explode+join DAG fans out three ways (per_q
-        # agg, resolved-result semi join, next round's anti join) — persist
-        # it so it materializes ONCE within the round. The round's OUTPUTS
-        # (resolved top-k, surviving queries) are localCheckpoint-ed below,
-        # which truncates their lineage off this cache, so it is unpersisted
-        # at the END of the round: repeated calls in one session leave no
-        # net persisted blocks behind (the connected_components pattern).
-        topk = topk.persist()
-        if covers_world:
-            got = topk.drop("__ql").localCheckpoint(eager=True)
+            got = topk.drop("__g").localCheckpoint(eager=True)
             topk.unpersist()
             results = got if results is None else results.unionByName(got)
-            unresolved = unresolved.limit(0)
             break
-        # provable-guarantee filter, fully native (same bound as knn_join):
-        # minimum distance to anything outside Chebyshev radius r
-        per_q = topk.groupBy(query_id).agg(
-            F.max("rnk").alias("__n"), F.max("dist").alias("__dk"),
-            F.first("__ql").alias("__qlv"),
-        )
-        if metric == "haversine":
-            guarantee = F.greatest(
-                F.least(
-                    F.lit(max(r - 1, 0) * dlat_deg * M_PER_DEG),
-                    F.lit(max(r - 1, 0) * dlon_deg * M_PER_DEG)
-                    * F.greatest(
-                        F.cos(
-                            F.radians(
-                                F.least(
-                                    F.abs(F.col("__qlv"))
-                                    + F.lit((r + 1) * dlat_deg),
-                                    F.lit(90.0),
-                                )
-                            )
-                        ),
-                        F.lit(0.0),
-                    ),
-                ),
-                F.lit(0.0),
-            )
-        else:
-            guarantee = F.lit(_guarantee_planar(r, res))
-        per_q = per_q.withColumn(
-            "__ok", (F.col("__n") >= k) & (F.col("__dk") <= guarantee)
-        )
-        ok_ids = per_q.filter(F.col("__ok")).select(query_id)
-        # localCheckpoint (eager): materializes the round output AND cuts
-        # its lineage, so the round's topk cache and the superseded query
-        # frame become unreferenced — the ContextCleaner frees them once
-        # GC'd instead of every round's DAG staying live in the result
-        got = (
-            topk.join(F.broadcast(ok_ids), query_id, "left_semi")
-            .drop("__ql")
-            .localCheckpoint(eager=True)
-        )
+        ok_ids = topk.filter(
+            (F.col("rnk") == k) & (F.col("dist") <= F.col("__g"))
+        ).select("__qid")
+        got = topk.join(F.broadcast(ok_ids), "__qid", "left_semi").drop("__g")
+        got = got.localCheckpoint(eager=True)
         results = got if results is None else results.unionByName(got)
         # the shrinking query set, lineage-free; driver sees only the count
-        remaining = unresolved.join(
-            F.broadcast(ok_ids), query_id, "left_anti"
+        unresolved = unresolved.join(
+            F.broadcast(ok_ids), "__qid", "left_anti"
         ).localCheckpoint(eager=True)
-        n_left = remaining.count()
+        n_left = unresolved.count()
         topk.unpersist()
-        unresolved = remaining
         if n_left == 0:
             break
         r *= 2
@@ -229,7 +218,7 @@ def knn_join_table(
         pts.unpersist()
         raise RuntimeError("knn_join_table did not resolve within max_rounds")
     pts.unpersist()
-    return results
+    return results.withColumnRenamed("__qid", query_id)
 
 
 def knn_join(
@@ -256,8 +245,10 @@ def knn_join(
     the caller picks the loop by the query input it has. This client loop
     stays because it is the cheaper one for driver-sized query sets — on
     the perfbench ``interactive`` kNN op (4-core host, 8 alternating pairs)
-    it took a median 2.0 s and 21 Spark jobs per op, against 7.3 s and 59
-    jobs for a thin wrapper over :func:`knn_join_table`.
+    it took a median 2.0 s and 21 Spark jobs (SparkContext jobs, not the
+    7 SQL executions perfbench reports as ``knn.jobs_per_op``) per op,
+    against 7.3 s and 59 jobs for a thin wrapper over
+    :func:`knn_join_table`.
     """
     if len(queries_pdf) > MAX_CLIENT_QUERIES:
         raise ValueError(
@@ -265,118 +256,42 @@ def knn_join(
             f"top-k is bounded by Q*k); got Q={len(queries_pdf)} > "
             f"{MAX_CLIENT_QUERIES}. Use knn_join_table for table-scale Q."
         )
-    spark = points.sparkSession
-    q = queries_pdf[[query_id, qlon, qlat]].copy()
-    q["__qcell"] = cells.encode(q[qlon].to_numpy(), q[qlat].to_numpy(), res)
-
-    from .spatial_join import add_cell_column
-
-    pts = add_cell_column(points, res, lon, lat, out="__cell")
-    n_queries_total = len(q)
-    if n_queries_total == 0:
+    if len(queries_pdf) == 0:
         raise ValueError("no queries")
-    pts = pts.persist()
-
-    dist_expr = _dist_sql(metric, lon, lat, "__qlon", "__qlat")
-
-    n = 1 << res
-    unresolved = q
-    results: list[pd.DataFrame] = []
-    radius = 1
+    spark = points.sparkSession
+    unresolved = queries_pdf[[query_id, qlon, qlat]].set_axis(
+        ["__qid", "__qlon", "__qlat"], axis=1
+    )
+    pts = add_cell_column(points, res, lon, lat, out="__cell").persist()
+    results, r = [], 1
     for _ in range(max_rounds):
         if unresolved.empty:
             break
-        # expand each unresolved query to its cell disk (numpy, driver-side)
-        qx, qy = cells.decode_xy(unresolved["__qcell"].to_numpy())
-        rows = []
-        covers_world = radius * 2 + 1 >= n
-        for i in range(len(unresolved)):
-            if covers_world:
-                continue
-            dxy = np.arange(-radius, radius + 1)
-            gx = (qx[i] + dxy) % n
-            gy = qy[i] + dxy
-            gy = gy[(gy >= 0) & (gy < n)]
-            cc = cells.encode_xy(
-                np.repeat(gx, len(gy)), np.tile(gy, len(gx))
-            )
-            rows.append(
-                pd.DataFrame(
-                    {
-                        "__qid": unresolved[query_id].iloc[i],
-                        "__qlon": unresolved[qlon].iloc[i],
-                        "__qlat": unresolved[qlat].iloc[i],
-                        "__jcell": np.unique(cc),
-                    }
-                )
-            )
-        if covers_world:
-            # brute-force fallback: cross join the remaining queries
-            qdf = spark.createDataFrame(
-                unresolved[[query_id, qlon, qlat]].rename(
-                    columns={query_id: "__qid", qlon: "__qlon", qlat: "__qlat"}
-                )
-            )
-            cand = pts.crossJoin(F.broadcast(qdf))
-        else:
-            qcells = pd.concat(rows, ignore_index=True)
-            qdf = spark.createDataFrame(qcells)
-            cand = pts.join(F.broadcast(qdf), pts["__cell"] == qdf["__jcell"], "inner")
-
-        cand = cand.withColumn("__dist", F.expr(dist_expr))
-        if exclude_self:
-            cand = cand.filter(F.col(point_id) != F.col("__qid"))
-        w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col(point_id).asc())
-        topk = (
-            cand.withColumn("__rnk", F.row_number().over(w))
-            .filter(F.col("__rnk") <= k)
-            .select(
-                F.col("__qid").alias(query_id),
-                F.col(point_id),
-                F.col("__dist").alias("dist"),
-                F.col("__rnk").alias("rnk"),
-            )
-        )
-        got = topk.toPandas()
-
-        # resolution test: enough neighbors AND kth distance within guarantee
+        covers_world = _covers_world(r, res)
+        qcells = unresolved if covers_world else _disk_cells_np(unresolved, r, res)
+        got = _round(
+            pts, F.broadcast(spark.createDataFrame(qcells)), r, res, k,
+            point_id, lon, lat, metric, exclude_self,
+        ).toPandas()
         if covers_world:
             results.append(got)
             unresolved = unresolved.iloc[0:0]
             break
-        counts = got.groupby(query_id)["rnk"].max()
-        dk = got.groupby(query_id)["dist"].max()
-        if metric == "haversine":
-            glist = _guarantee_m(radius, res, unresolved[qlat].to_numpy())
-        else:
-            glist = np.full(len(unresolved), _guarantee_planar(radius, res))
-        gmap = dict(zip(unresolved[query_id], glist))
-        ok_ids = [
-            qid
-            for qid in unresolved[query_id]
-            if counts.get(qid, 0) >= k and dk.get(qid, np.inf) <= gmap[qid]
-        ]
-        if ok_ids:
-            results.append(got[got[query_id].isin(ok_ids)])
-            unresolved = unresolved[~unresolved[query_id].isin(ok_ids)]
-        radius *= 2
-
+        kth = got[got["rnk"] == k]
+        ok = kth.loc[kth["dist"] <= kth["__g"], "__qid"]
+        results.append(got[got["__qid"].isin(ok)])
+        unresolved = unresolved[~unresolved["__qid"].isin(ok)]
+        r *= 2
     pts.unpersist()
-    if unresolved is not None and not unresolved.empty:
+    if not unresolved.empty:
         raise RuntimeError(f"kNN did not resolve {len(unresolved)} queries")
-    out = pd.concat(results, ignore_index=True)
-    qid_type = (
-        T.LongType()
-        if pd.api.types.is_integer_dtype(queries_pdf[query_id])
-        else T.StringType()
-    )
-    schema = T.StructType(
-        [
-            T.StructField(query_id, qid_type),
-            T.StructField(point_id, points.schema[point_id].dataType),
-            T.StructField("dist", T.DoubleType()),
-            T.StructField("rnk", T.IntegerType()),
-        ]
-    )
-    out["rnk"] = out["rnk"].astype("int32")
+    out = pd.concat(results, ignore_index=True).drop(columns="__g")
+    out = out.rename(columns={"__qid": query_id}).astype({"rnk": "int32"})
+    int_qid = pd.api.types.is_integer_dtype(queries_pdf[query_id])
+    schema = T.StructType([
+        T.StructField(query_id, T.LongType() if int_qid else T.StringType()),
+        T.StructField(point_id, points.schema[point_id].dataType),
+        T.StructField("dist", T.DoubleType()),
+        T.StructField("rnk", T.IntegerType()),
+    ])
     return spark.createDataFrame(out, schema=schema)

@@ -19,10 +19,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.geometry import buffer_point_deg
+from ..core.geometry import EARTH_RADIUS_M, buffer_point_deg
 from .spatial_join import spatial_join
-
-EARTH_RADIUS_M = 6371008.8
 
 
 def haversine_sql(lon_a: str, lat_a: str, lon_b: str, lat_b: str) -> str:

@@ -34,7 +34,6 @@ COST_TEMPORAL = 450
 COST_FULL_SCAN = 10_000
 
 BLOCK_FULL_SCAN_THRESHOLD = 1_000  # QueryProperties.scala:40-54 analog
-BROADCAST_COVER_LIMIT = 2_000_000
 
 
 class FullTableScanBlocked(Exception):
@@ -105,7 +104,7 @@ def plan_query(
     plan = SpatialQueryPlan(strategy=strategy, cost=cost)
 
     if geom is not None and strategy in ("z2", "z3"):
-        from ..operators.spatial_join import prepare_polygons
+        from ..operators.spatial_join import BROADCAST_COVER_LIMIT, prepare_polygons
 
         if isinstance(geom, str):
             geom = from_wkt(geom)

@@ -86,6 +86,29 @@ def test_ring_clamps_poles():
     assert len(r1) == 5  # top row clipped
 
 
+def test_knn_disk_cells_match_per_query_disk():
+    """The kNN client loop's vectorized disk build equals cells.disk per
+    query, including antimeridian wrap and the pole clamp."""
+    import pandas as pd
+
+    from geomesa_spark.operators.knn import _disk_cells_np
+
+    q = pd.DataFrame({
+        "__qid": np.arange(5),
+        "__qlon": [10.0, -179.999, 179.999, 0.0, -60.0],
+        "__qlat": [20.0, 0.0, -45.0, 89.999, -89.999],
+    })
+    for res, r in ((8, 1), (8, 3), (4, 7)):
+        got = _disk_cells_np(q, r, res)
+        assert list(got.columns) == ["__qid", "__qlon", "__qlat", "__jcell"]
+        for i, qc in enumerate(cells.encode(q["__qlon"], q["__qlat"], res)):
+            mine = got.loc[got["__qid"] == i, "__jcell"].to_numpy()
+            assert len(mine) == len(np.unique(mine))
+            np.testing.assert_array_equal(
+                np.sort(mine), cells.disk(int(qc), res, r)
+            )
+
+
 COVER_GEOMS = [
     "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))",
     "POLYGON((-5 -5, 5 -2, 8 7, -3 6, -5 -5))",
@@ -310,6 +333,112 @@ class TestKnnJoinTable:
         assert ids(
             knn_join_table(pts, queries, exclude_self=True, **kw)
         ) == brute[1:4]
+
+    @staticmethod
+    def _brute(pts_pdf, qpdf, k, qlon="qlon", qlat="qlat"):
+        """{(query_id, image_id, rnk): meters} of a numpy haversine top-k,
+        ids breaking ties."""
+        from geomesa_spark.core.geometry import haversine_m
+
+        ids = pts_pdf["image_id"].to_numpy()
+        px, py = pts_pdf["lon"].to_numpy(), pts_pdf["lat"].to_numpy()
+        out = {}
+        for q in qpdf.itertuples(index=False):
+            d = haversine_m(getattr(q, qlon), getattr(q, qlat), px, py)
+            for rnk, j in enumerate(np.lexsort((ids, d))[:k], 1):
+                out[(q.query_id, ids[j], rnk)] = d[j]
+        return out
+
+    @staticmethod
+    def _both_loops(spark, pts_pdf, qpdf, k, **kw):
+        """{(query_id, image_id, rnk): dist} from knn_join and knn_join_table."""
+        from geomesa_spark.operators.knn import knn_join, knn_join_table
+
+        pts = spark.createDataFrame(pts_pdf)
+        qdf = spark.createDataFrame(qpdf)
+        return [
+            {(r.query_id, r.image_id, r.rnk): r.dist for r in df.collect()}
+            for df in (knn_join(pts, qpdf, k, **kw),
+                       knn_join_table(pts, qdf, k, **kw))
+        ]
+
+    @staticmethod
+    def _assert_matches(got, want):
+        assert set(got) == set(want)
+        np.testing.assert_allclose(
+            [got[key] for key in want], list(want.values()), rtol=1e-9
+        )
+
+    def test_query_columns_named_like_point_columns(self, spark):
+        """Query coordinates in columns named ``lon``/``lat``, as on the
+        point frame: both loops resolve them against the query side."""
+        import pandas as pd
+
+        rng = np.random.default_rng(9)
+        pts_pdf = pd.DataFrame({
+            "image_id": np.arange(300),
+            "lon": rng.uniform(0, 10, 300), "lat": rng.uniform(0, 10, 300),
+        })
+        qpdf = pd.DataFrame({
+            "query_id": np.arange(20),
+            "lon": rng.uniform(1, 9, 20), "lat": rng.uniform(1, 9, 20),
+        })
+        want = self._brute(pts_pdf, qpdf, 3, "lon", "lat")
+        for got in self._both_loops(
+            spark, pts_pdf, qpdf, 3, qlon="lon", qlat="lat"
+        ):
+            self._assert_matches(got, want)
+
+    def test_haversine_poles_antimeridian_and_empty_region(self, spark):
+        """Great-circle kNN next to the poles, across the antimeridian (disk
+        x wraps through pmod) and from an empty region that takes several
+        rounds, against a numpy haversine top-k for both loops."""
+        import pandas as pd
+
+        rng = np.random.default_rng(10)
+        lon = np.concatenate([
+            rng.uniform(-180, 180, 400),
+            rng.uniform(175, 180, 15), rng.uniform(-180, -175, 15),
+            rng.uniform(-180, 180, 20),
+        ])
+        lat = np.concatenate([
+            rng.uniform(-85, 85, 400), rng.uniform(0, 20, 15),
+            rng.uniform(-20, 0, 15), rng.choice([-1, 1], 20) * rng.uniform(85, 90, 20),
+        ])
+        empty = (lon > -70) & (lon < 10) & (np.abs(lat) < 40)
+        pts_pdf = pd.DataFrame({
+            "image_id": np.arange(int((~empty).sum())),
+            "lon": lon[~empty], "lat": lat[~empty],
+        })
+        qpdf = pd.DataFrame({
+            "query_id": np.arange(6),
+            "qlon": [0.0, 120.0, 179.9, -179.9, -30.0, 179.9],
+            "qlat": [89.5, -89.5, 10.0, -10.0, 0.0, -89.5],
+        })
+        kw = dict(qlon="qlon", qlat="qlat", metric="haversine", res=6)
+        want = self._brute(pts_pdf, qpdf, 4)
+        for got in self._both_loops(spark, pts_pdf, qpdf, 4, **kw):
+            self._assert_matches(got, want)
+
+    def test_covers_world_round_returns_every_point(self, spark):
+        """k above the point count: both loops reach the round whose disk
+        covers the world and return all 5 points per query."""
+        import pandas as pd
+
+        pts_pdf = pd.DataFrame({
+            "image_id": np.arange(5),
+            "lon": [-170.0, -60.0, 0.0, 90.0, 179.0],
+            "lat": [-80.0, 10.0, 45.0, -30.0, 85.0],
+        })
+        qpdf = pd.DataFrame({
+            "query_id": np.arange(3),
+            "qlon": [0.0, 179.9, -100.0], "qlat": [0.0, 89.5, -45.0],
+        })
+        kw = dict(qlon="qlon", qlat="qlat", metric="haversine", res=3)
+        want = self._brute(pts_pdf, qpdf, 10)
+        assert len(want) == 15
+        for got in self._both_loops(spark, pts_pdf, qpdf, 10, **kw):
+            self._assert_matches(got, want)
 
 
 class TestZ3:
