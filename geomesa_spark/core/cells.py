@@ -115,11 +115,6 @@ def cell_bounds(cell, res: int):
     return lon0, lat0, lon0 + dlon, lat0 + dlat
 
 
-def cell_center(cell, res: int):
-    lon0, lat0, lon1, lat1 = cell_bounds(cell, res)
-    return (lon0 + lon1) / 2.0, (lat0 + lat1) / 2.0
-
-
 def parent(cell, res: int, parent_res: int) -> np.ndarray:
     """Ancestor cell at a coarser resolution: drop 2 bits per level."""
     if parent_res > res:

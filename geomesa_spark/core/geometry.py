@@ -32,6 +32,7 @@ from dataclasses import dataclass
 import numpy as np
 
 EARTH_RADIUS_M = 6371008.8  # mean earth radius; spherical model
+M_PER_DEG = EARTH_RADIUS_M * math.pi / 180  # meters per degree of latitude
 
 _EPS = 1e-12
 
@@ -731,12 +732,6 @@ def _collinear_overlap(a: Geometry, b: Geometry) -> bool:
                 if min(hi1, hi2) - max(lo1, lo2) > _EPS:
                     return True
     return False
-
-
-def distance_sphere_m(a: Geometry, b: Geometry) -> float:
-    """Point-to-point spherical distance (meters)."""
-    assert a.kind == "Point" and b.kind == "Point"
-    return float(haversine_m(a.coords[0], a.coords[1], b.coords[0], b.coords[1]))
 
 
 # ---------------------------------------------------------------------------

@@ -124,40 +124,22 @@ def extended_session(
 
 def register_st_pip_wkt(spark: SparkSession):
     """Register the exact point-in-polygon refine UDF the JVM rule
-    recognizes: st_pip_wkt(lon, lat, wkt) -> boolean. Arrow-batched; the
-    polygon parses once per batch (the WKT argument is a literal, so the
-    whole column is one repeated value). Returns the UDF handle for
-    DataFrame-API use; also registered for spark.sql use."""
-    from .core.geometry import from_wkt, points_in_polygon, polygon_edges
+    recognizes: st_pip_wkt(lon, lat, wkt) -> boolean — the spatial join's
+    PIP UDF keyed by the WKT literal, so each distinct polygon parses once
+    per task. Returns the UDF handle for DataFrame-API use; also
+    registered for spark.sql use."""
+    from .core.geometry import from_wkt, polygon_edges
+    from .operators.spatial_join import _pip_refine_udf
 
-    cache: dict[str, np.ndarray] = {}
-
-    @F.pandas_udf(T.BooleanType())
-    def st_pip_wkt(
-        lon: pd.Series, lat: pd.Series, wkt: pd.Series
-    ) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        lons = lon.to_numpy(dtype=np.float64)
-        lats = lat.to_numpy(dtype=np.float64)
-        wkts = wkt.to_numpy()
-        for w in pd.unique(wkts):
-            edges = cache.get(w)
-            if edges is None:
-                edges = cache[w] = polygon_edges(from_wkt(w))
-            m = wkts == w
-            out[m] = points_in_polygon(lons[m], lats[m], edges)
-        return pd.Series(out)
-
-    spark.udf.register("st_pip_wkt", st_pip_wkt)
-    return st_pip_wkt
+    pip = _pip_refine_udf(lambda wkt: polygon_edges(from_wkt(wkt)))
+    return spark.udf.register("st_pip_wkt", pip)
 
 
 def register_st_dwithin_pt(spark: SparkSession):
     """Register the exact haversine-radius refine UDF the JVM rule also
-    recognizes: st_dwithin_pt(lon, lat, lon0, lat0, meters) -> boolean.
-    Vectorized numpy great-circle distance (same EARTH_RADIUS_M as
-    operators.proximity.haversine_sql)."""
-    from .core.geometry import EARTH_RADIUS_M
+    recognizes: st_dwithin_pt(lon, lat, lon0, lat0, meters) -> boolean,
+    the great-circle distance of ``core.geometry.haversine_m``."""
+    from .core.geometry import haversine_m
 
     @F.pandas_udf(T.BooleanType())
     def st_dwithin_pt(
@@ -167,21 +149,10 @@ def register_st_dwithin_pt(spark: SparkSession):
         lat0: pd.Series,
         meters: pd.Series,
     ) -> pd.Series:
-        la = np.radians(lat.to_numpy(dtype=np.float64))
-        lb = np.radians(lat0.to_numpy(dtype=np.float64))
-        dla = lb - la
-        dlo = np.radians(
-            lon0.to_numpy(dtype=np.float64) - lon.to_numpy(dtype=np.float64)
-        )
-        h = (
-            np.sin(dla / 2) ** 2
-            + np.cos(la) * np.cos(lb) * np.sin(dlo / 2) ** 2
-        )
-        d = 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0)))
+        d = haversine_m(lon, lat, lon0, lat0)
         return pd.Series(d <= meters.to_numpy(dtype=np.float64))
 
-    spark.udf.register("st_dwithin_pt", st_dwithin_pt)
-    return st_dwithin_pt
+    return spark.udf.register("st_dwithin_pt", st_dwithin_pt)
 
 
 def with_bbox_columns(df: DataFrame, geom_col: str = "geom") -> DataFrame:
@@ -263,29 +234,23 @@ def cell_pruning_conf(
 def register_st_intersects_wkb(spark: SparkSession):
     """Register the exact geometry-column refine UDF the JVM rule
     recognizes: st_intersects_wkb(geom_wkb, wkt) -> boolean — full DE-9IM
-    intersects (core.geometry.relate) of each row's WKB geometry against
-    the WKT literal, parsed once per batch. Null geometry -> False."""
-    from .core.geometry import from_wkb, from_wkt, relate
+    intersects of each row's WKB geometry against the WKT literal, through
+    the geometry joins' batch refine; each distinct literal parses once per
+    task. Null geometry -> False."""
+    from .core.geometry import from_wkt
+    from .operators.geometry_join import _relate_mask
 
     cache: dict[str, object] = {}
 
     @F.pandas_udf(T.BooleanType())
     def st_intersects_wkb(geom: pd.Series, wkt: pd.Series) -> pd.Series:
-        wkts = wkt.to_numpy()
-        out = np.zeros(len(geom), dtype=bool)
-        for w in pd.unique(wkts):
-            q = cache.get(w)
-            if q is None:
-                q = cache[w] = from_wkt(w)
-            idx = np.nonzero(wkts == w)[0]
-            for i in idx:
-                buf = geom.iloc[int(i)]
-                if buf is not None:
-                    out[i] = relate(from_wkb(bytes(buf)), q, "intersects")
-        return pd.Series(out)
+        for w in pd.unique(wkt):
+            if w not in cache:
+                cache[w] = from_wkt(w)
+        queries = map(cache.__getitem__, wkt)
+        return pd.Series(_relate_mask(geom, queries, "intersects"))
 
-    spark.udf.register("st_intersects_wkb", st_intersects_wkb)
-    return st_intersects_wkb
+    return spark.udf.register("st_intersects_wkb", st_intersects_wkb)
 
 
 def where_intersects_sql(

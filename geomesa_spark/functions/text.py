@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 # tiny per-language stopword markers for the n-gram-free heuristic language ID
 _LANG_MARKERS = {
@@ -152,13 +152,6 @@ def lang_id_expr(col: str) -> str:
         expr = f"case when {s} > greatest({best}, 0) then '{lang}' else {expr} end"
         best = f"greatest({best}, {s})"
     return expr
-
-
-def add_text_features(df: DataFrame, col: str = "text") -> DataFrame:
-    out = df
-    for name, e in quality_exprs(col, "spark").items():
-        out = out.withColumn(name, F.expr(e))
-    return out.withColumn("lang_pred", F.expr(lang_id_expr(col)))
 
 
 def fingerprint_weights(window: int) -> list[int]:

@@ -5,15 +5,14 @@ standard public algorithms (Broder 1997 MinHash; Charikar 2002 SimHash;
 banded LSH from Mining of Massive Datasets ch.3), expressed Spark-first:
 
 - exact_dedup: hash-groupBy, fully native.
-- minhash_lsh_dedup: shingle -> minhash signature (one Arrow-batched pandas
+- minhash_lsh_pairs: shingle -> minhash signature (one Arrow-batched pandas
   UDF) -> band buckets (native explode) -> bucket equi-join -> exact Jaccard
   verify on candidates only. The join is on short band-hash keys, never on
   document text; the text is re-joined by id afterwards, so 100 TB of
   payloads never crosses the candidate shuffle.
-- simhash_dedup: 64-bit SimHash + banding into 4x16-bit chunks (hamming<=3
+- simhash_pairs: 64-bit SimHash + banding into 4x16-bit chunks (hamming<=3
   guarantee within <=4 chunks by pigeonhole) -> chunk equi-join -> exact
   hamming verify.
-- ngram_jaccard_join: exact n-gram Jaccard over candidate pairs.
 
 Checkpoint discipline (applies to every ``localCheckpoint`` in this
 package): shared frames are eager-localCheckpoint-ed, not persisted, so
@@ -170,36 +169,6 @@ def minhash_signature_udf(num_hashes: int = 64, shingle_n: int = 5):
         return pd.Series(out)
 
     return sig
-
-
-def jaccard_udf(shingle_n: int = 5):
-    """EXACT character-n-gram Jaccard (not hashed): set ops over the literal
-    shingle strings, so a SQL oracle recomputes the identical value from
-    ``substr`` shingle tables (intersection / union of distinct n-grams)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def jac(t1: pd.Series, t2: pd.Series) -> pd.Series:
-        # candidate pairs repeat the same documents heavily — memoize the
-        # shingle set per distinct text within the batch (measured ~10x on
-        # the certified bands==hashes config where candidates are dense)
-        cache: dict[str, frozenset] = {}
-
-        def sh(t: str) -> frozenset:
-            s = cache.get(t)
-            if s is None:
-                s = frozenset(_char_shingles(t, shingle_n))
-                cache[t] = s
-            return s
-
-        out = np.zeros(len(t1))
-        for i, (x, y) in enumerate(zip(t1, t2)):
-            s1, s2 = sh(x or ""), sh(y or "")
-            inter = len(s1 & s2)
-            u = len(s1) + len(s2) - inter
-            out[i] = inter / u if u else 1.0
-        return pd.Series(out)
-
-    return jac
 
 
 def minhash_lsh_pairs(

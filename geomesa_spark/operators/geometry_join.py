@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import cells
-from ..core.geometry import Geometry, from_wkb, from_wkt, relate, to_wkb
+from ..core.geometry import Geometry, from_wkb, from_wkt, relate
 
 DEFAULT_JOIN_RES = 8       # 256x256 world grid (~1.4 deg cells)
 _BBOX = ("xmin", "xmax", "ymin", "ymax")
@@ -235,6 +235,21 @@ def _bbox_cell_keys(rows, geom_col, row_id, res_j, extra=()):
     )
 
 
+def _relate_mask(geoms, others, predicate: str) -> np.ndarray:
+    """The package's one batch DE-9IM refine: ``relate(from_wkb(g), o,
+    predicate)`` per pair of a WKB column and an iterable of parsed
+    geometries; a null geometry is False. Behind both geometry joins and
+    the JVM rule's ``st_intersects_wkb`` (extensions.py)."""
+    return np.fromiter(
+        (
+            g is not None and bool(relate(from_wkb(bytes(g)), o, predicate))
+            for g, o in zip(geoms, others)
+        ),
+        dtype=bool,
+        count=len(geoms),
+    )
+
+
 def _relate_refine_filter(df, polys_parsed, predicate, geom_col, poly_col="poly_id"):
     """Exact DE-9IM refine as a mapInPandas FILTER stage (rows failing the
     predicate dropped inside the batch). A ``.filter(pandas_udf(...))``
@@ -243,18 +258,12 @@ def _relate_refine_filter(df, polys_parsed, predicate, geom_col, poly_col="poly_
     -> 20 s on geo_geom_join at sf0.1. mapInPandas is a barrier the filter
     cannot be pulled out of, so it stays glued to the exchange above it
     (the same pattern as minhash's exact-Jaccard verify)."""
-    edges_wkb = {pid: to_wkb(g) for pid, g in polys_parsed.items()}
     schema = df.schema
 
     def refine(batches):
-        cache: dict[str, Geometry] = {}
         for pdf in batches:
-            keep = np.empty(len(pdf), dtype=bool)
-            for i, (w, p) in enumerate(zip(pdf[geom_col], pdf[poly_col])):
-                if p not in cache:
-                    cache[p] = from_wkb(edges_wkb[p])
-                keep[i] = bool(relate(from_wkb(bytes(w)), cache[p], predicate))
-            yield pdf.loc[keep]
+            polys = map(polys_parsed.__getitem__, pdf[poly_col])
+            yield pdf.loc[_relate_mask(pdf[geom_col], polys, predicate)]
 
     return df.mapInPandas(refine, schema=schema)
 
@@ -345,11 +354,8 @@ def geometry_join_tables(
 
     def refine(batches):
         for pdf in batches:
-            keep = np.empty(len(pdf), dtype=bool)
-            for i, (lw, rw) in enumerate(zip(pdf["__lg"], pdf["__rg"])):
-                keep[i] = bool(
-                    relate(from_wkb(bytes(lw)), from_wkb(bytes(rw)), predicate)
-                )
+            rights = (from_wkb(bytes(w)) for w in pdf["__rg"])
+            keep = _relate_mask(pdf["__lg"], rights, predicate)
             yield pdf.loc[keep, [c for c in pdf.columns if c in (left_id, right_id)]]
 
     return pairs.mapInPandas(refine, schema=schema)

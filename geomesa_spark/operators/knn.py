@@ -36,10 +36,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..core import cells
+from ..core.geometry import M_PER_DEG
 from .proximity import haversine_sql
 from .spatial_join import add_cell_column
 
-M_PER_DEG = 111194.93  # meters per degree of latitude at EARTH_RADIUS_M
 MAX_CLIENT_QUERIES = 100_000  # hard guard on the driver-side query set
 
 
@@ -153,7 +153,6 @@ def knn_join_table(
     metric: str = "haversine",
     res: int = 8,
     radius: int = 2,
-    max_rounds: int = 6,
     exclude_self: bool = False,
 ) -> DataFrame:
     """Table-to-table kNN: top-k nearest points per QUERY ROW of a DataFrame
@@ -174,8 +173,12 @@ def knn_join_table(
     Sizing ``radius``: any start is EXACT (the guarantee gates resolution),
     so pick it for cost — the first disk should usually hold k neighbors for
     the SPARSEST expected query cell. Under-sizing pays whole extra rounds;
-    over-sizing pays only (2R+1)^2 explode rows per query.
+    over-sizing pays only (2R+1)^2 explode rows per query. The radius
+    doubles every round, so the loop always reaches the covers-world round,
+    which resolves every query left.
     """
+    if radius < 1:  # doubling never grows r = 0: the loop would not end
+        raise ValueError(f"radius must be >= 1, got {radius}")
     pts = add_cell_column(points, res, lon, lat, out="__cell").persist()
     qx, qy = cells.xy_sql_expr(qlon, qlat, res)
     unresolved = queries.select(
@@ -184,7 +187,7 @@ def knn_join_table(
         F.expr(qx).alias("__qx"), F.expr(qy).alias("__qy"),
     )
     results, r = None, radius
-    for _ in range(max_rounds):
+    while True:
         covers_world = _covers_world(r, res)
         qcells = unresolved if covers_world else _disk_cells_sql(unresolved, r, res)
         # persisted: the round fans out three ways (resolved-id filter, semi
@@ -214,9 +217,6 @@ def knn_join_table(
         if n_left == 0:
             break
         r *= 2
-    else:
-        pts.unpersist()
-        raise RuntimeError("knn_join_table did not resolve within max_rounds")
     pts.unpersist()
     return results.withColumnRenamed("__qid", query_id)
 
@@ -233,11 +233,12 @@ def knn_join(
     qlat: str = "lat",
     metric: str = "haversine",
     res: int = 10,
-    max_rounds: int = 12,
     exclude_self: bool = False,
 ) -> DataFrame:
     """Top-k nearest points for each query row. Returns
     (query_id, <point_id>, dist, rnk) with rnk in 1..k, ties broken by id.
+    The first disk has radius 1 and the radius doubles every round, so the
+    loop ends at the latest on the covers-world round.
 
     ``queries_pdf`` is a driver-side pandas frame (the reference's KNN is
     likewise a client-driven process over a query feature collection).
@@ -264,9 +265,7 @@ def knn_join(
     )
     pts = add_cell_column(points, res, lon, lat, out="__cell").persist()
     results, r = [], 1
-    for _ in range(max_rounds):
-        if unresolved.empty:
-            break
+    while not unresolved.empty:
         covers_world = _covers_world(r, res)
         qcells = unresolved if covers_world else _disk_cells_np(unresolved, r, res)
         got = _round(
@@ -275,7 +274,6 @@ def knn_join(
         ).toPandas()
         if covers_world:
             results.append(got)
-            unresolved = unresolved.iloc[0:0]
             break
         kth = got[got["rnk"] == k]
         ok = kth.loc[kth["dist"] <= kth["__g"], "__qid"]
@@ -283,8 +281,6 @@ def knn_join(
         unresolved = unresolved[~unresolved["__qid"].isin(ok)]
         r *= 2
     pts.unpersist()
-    if not unresolved.empty:
-        raise RuntimeError(f"kNN did not resolve {len(unresolved)} queries")
     out = pd.concat(results, ignore_index=True).drop(columns="__g")
     out = out.rename(columns={"__qid": query_id}).astype({"rnk": "int32"})
     int_qid = pd.api.types.is_integer_dtype(queries_pdf[query_id])

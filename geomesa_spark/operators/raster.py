@@ -13,7 +13,8 @@ Execution shape (the part that must survive 100 TB):
   the stage emits compact (image_id, tile_cell, weight) rows pre-aggregated
   per image, so the shuffle that follows carries NO image payloads.
 - decode is per-format vectorized numpy (png/qjz/raw) from functions.image;
-  per-image pixel->cell encode is one vectorized cells.encode call.
+  decode -> tile cells is one kernel, :func:`image_tiles`, which the fused
+  scan (sources/parquet_scan.process_density_split) runs too.
 - the final groupBy(tile_cell) is a plain partial+final native agg.
 """
 
@@ -27,6 +28,39 @@ from ..core import cells
 from ..functions.image import decode_image
 
 GRAY = np.array([0.299, 0.587, 0.114])
+
+
+def image_tiles(
+    data: bytes, fmt: str, w: int, h: int, lon0: float, lat0: float,
+    res: int, pixel_pitch_deg: float,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One image -> (tile_cell, weight) arrays: the package's one
+    decode -> gray -> block-sum -> tile-cell kernel, shared by
+    :func:`tile_assignments` and the fused ``parquet_scan`` density scan.
+
+    Pixel (row, col) sits at (lon0 + col*pitch, lat0 - row*pitch). The
+    columns' cell-x and the rows' cell-y indices are each MONOTONIC, so the
+    image partitions into contiguous rectangular blocks per tile. Two
+    nested np.add.reduceat calls produce every block's intensity sum in one
+    pass — O(w+h) cell-index math per image instead of O(w*h) per-pixel
+    encode + a sort."""
+    nres = np.int64(1) << np.int64(res)
+    gray = (decode_image(data, fmt, w, h).astype(np.float64) @ GRAY) / 255.0
+    h, w = gray.shape
+    xi = np.floor(
+        (lon0 + np.arange(w) * pixel_pitch_deg + 180.0) * nres / 360.0
+    ).astype(np.int64)
+    yi = np.floor(
+        (lat0 - np.arange(h) * pixel_pitch_deg + 90.0) * nres / 180.0
+    ).astype(np.int64)
+    np.clip(xi, 0, nres - 1, out=xi)
+    np.clip(yi, 0, nres - 1, out=yi)
+    cs = np.concatenate(([0], np.flatnonzero(np.diff(xi)) + 1))
+    rs = np.concatenate(([0], np.flatnonzero(np.diff(yi)) + 1))
+    blocks = np.add.reduceat(np.add.reduceat(gray, rs, axis=0), cs, axis=1)
+    cx = cells.encode_xy(xi[cs], np.zeros(len(cs), dtype=np.int64))
+    cy = cells.encode_xy(np.zeros(len(rs), dtype=np.int64), yi[rs])
+    return (cy[:, None] | cx[None, :]).ravel(), blocks.ravel()
 
 
 def tile_assignments(
@@ -43,43 +77,19 @@ def tile_assignments(
     row/column orientation."""
 
     needed = images.select("image_id", "bytes", "w", "h", "fmt", lon, lat)
-    nres = np.int64(1) << np.int64(res)
 
     def assign(batches):
         for pdf in batches:
-            # Per image, the pixel grid's column cell-x indices and row cell-y
-            # indices are each MONOTONIC (lon increases with col, lat decreases
-            # with row), so the image partitions into contiguous rectangular
-            # blocks per tile. Two nested np.add.reduceat calls produce every
-            # block's intensity sum in one pass — O(w+h) cell-index math per
-            # image instead of O(w*h) per-pixel encode + a batch-wide sort.
             out_ids, out_cells, out_w = [], [], []
             img_ids = pdf["image_id"].to_numpy()
             for k, row in enumerate(pdf.itertuples(index=False)):
-                arr = decode_image(row.bytes, row.fmt, row.w, row.h)
-                gray = (arr.astype(np.float64) @ GRAY) / 255.0
-                h, w = gray.shape
-                lon0 = getattr(row, lon)
-                lat0 = getattr(row, lat)
-                xi = np.floor(
-                    (lon0 + np.arange(w) * pixel_pitch_deg + 180.0) * nres / 360.0
-                ).astype(np.int64)
-                yi = np.floor(
-                    (lat0 - np.arange(h) * pixel_pitch_deg + 90.0) * nres / 180.0
-                ).astype(np.int64)
-                np.clip(xi, 0, nres - 1, out=xi)
-                np.clip(yi, 0, nres - 1, out=yi)
-                cs = np.concatenate(([0], np.flatnonzero(np.diff(xi)) + 1))
-                rs = np.concatenate(([0], np.flatnonzero(np.diff(yi)) + 1))
-                blocks = np.add.reduceat(
-                    np.add.reduceat(gray, rs, axis=0), cs, axis=1
-                )  # (n_row_groups, n_col_groups)
-                cx = cells.encode_xy(xi[cs], np.zeros(len(cs), dtype=np.int64))
-                cy = cells.encode_xy(np.zeros(len(rs), dtype=np.int64), yi[rs])
-                cell = (cy[:, None] | cx[None, :]).ravel()
+                cell, weight = image_tiles(
+                    row.bytes, row.fmt, row.w, row.h, getattr(row, lon),
+                    getattr(row, lat), res, pixel_pitch_deg,
+                )
                 out_ids.append(np.full(cell.size, k, dtype=np.int64))
                 out_cells.append(cell)
-                out_w.append(blocks.ravel())
+                out_w.append(weight)
             if not out_ids:
                 continue
             yield pd.DataFrame(

@@ -236,13 +236,18 @@ def _ancestor_expr(cell_col: str, scheme: str, res: int, r: int):
     return F.shiftrightunsigned(F.col(cell_col), 2 * (res - r))
 
 
-def _pip_refine_udf(edges: dict[str, np.ndarray], include_boundary: bool):
-    """Vectorized Arrow-batched PIP refine: one bool per (lon, lat, poly_id).
+def _pip_refine_udf(edges_of, include_boundary: bool = True):
+    """Vectorized Arrow-batched PIP refine: one bool per (lon, lat, key) —
+    the package's one PIP UDF, behind the join's refine (key = poly_id) and
+    the JVM rule's ``st_pip_wkt`` (key = the WKT literal, extensions.py).
 
     The row-level exact-predicate stage (SpatialRelationFunctions.scala:29-39
-    analog) — batches are grouped by poly_id inside numpy, so each polygon's
-    edge array is applied once per batch, not per row.
+    analog) — batches are grouped by key inside numpy, so each polygon's
+    edge array is applied once per batch, not per row. ``edges_of(key)``
+    returns a polygon's edge array; it runs once per distinct key in a
+    task.
     """
+    cache: dict = {}
 
     @F.pandas_udf(T.BooleanType())
     def pip(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
@@ -251,9 +256,12 @@ def _pip_refine_udf(edges: dict[str, np.ndarray], include_boundary: bool):
         lats = lat.to_numpy(dtype=np.float64)
         pids = pid.to_numpy()
         for p in pd.unique(pids):
+            edges = cache.get(p)
+            if edges is None:
+                edges = cache[p] = edges_of(p)
             m = pids == p
             out[m] = points_in_polygon(
-                lons[m], lats[m], edges[p], include_boundary=include_boundary
+                lons[m], lats[m], edges, include_boundary=include_boundary
             )
         return pd.Series(out)
 
@@ -422,7 +430,7 @@ def spatial_join(
         for _, _, pid, refine in prepared.cover_rows
     )
     if needs_pip:
-        pip = _pip_refine_udf(prepared.edges, include_boundary)
+        pip = _pip_refine_udf(prepared.edges.__getitem__, include_boundary)
         keep = keep | (~F.col("is_box") & pip(F.col(lon), F.col(lat), F.col("poly_id")))
     out = out.filter(keep)
 

@@ -5,60 +5,81 @@ The reference parses a stats DSL string ("Count();MinMax(a);Histogram(b,...)",
 computed server-side (``iterators/StatsScan.scala``). Spark's partial+final
 aggregation IS that architecture, so each stat maps to a built-in aggregate:
 
-| reference stat (file)                  | Spark mapping                      |
-|----------------------------------------|------------------------------------|
-| Count()            (Stat.scala)        | count(*)                           |
-| MinMax(a)          (MinMax.scala)      | min(a), max(a)                     |
-| MinMax HLL cardinality (MinMax.scala)  | approx_count_distinct (HLL++)      |
-| Enumeration(a)     (EnumerationStat)   | groupBy(a).count()                 |
-| TopK(a)            (TopK.scala)        | groupBy+count+row_number<=k        |
-| Histogram(a,n,lo,hi) (Histogram.scala) | floor((a-lo)/w) bucket + groupBy   |
-| Frequency(a)       (Frequency.scala, CMS) | exact groupBy count (documented substitution: Spark's shuffle makes exact counts cheaper than CMS maintenance; approx_count_distinct covers the sketched-cardinality use) |
-| DescriptiveStats(a) (DescriptiveStats.scala) | avg/var_samp/stddev/skewness/kurtosis |
-| GroupBy(a, stat)   (GroupBy.scala)     | groupBy(a).agg(...)                |
-| IteratorStackCount                      | n/a (no iterators; Spark metrics)  |
+| reference stat (file) | function: Spark mapping |
+|---|---|
+| Count() (Stat.scala) | row_count: count(*) |
+| MinMax(a) (MinMax.scala) | minmax: min, max and the HLL cardinality MinMax carries (approx_count_distinct, HLL++) |
+| Enumeration(a) (EnumerationStat) | enumeration: groupBy(a).count() |
+| TopK(a) (TopK.scala) | top_k: enumeration + row_number <= k |
+| Histogram(a,n,lo,hi) (Histogram.scala) | histogram: clamped floor((a-lo)/w) bucket + groupBy |
+| Frequency(a) (Frequency.scala, CMS) | frequency: enumeration's exact counts (documented substitution: Spark's shuffle makes exact counts cheaper than CMS maintenance; approx_count_distinct covers the sketched-cardinality use) |
+| DescriptiveStats(a) (DescriptiveStats.scala) | descriptive: count/min/max/avg/var_samp/stddev/skewness/kurtosis |
+| Z3Histogram(...) (Z3Histogram.scala) | z3_histogram: (epoch bin, cell) counts |
+| GroupBy(a, stat) (GroupBy.scala) | the stat's function with ``a`` appended to ``group_cols`` |
+| IteratorStackCount | iterator_stack_count: n/a (no iterators); distinct partitions holding rows |
+
+``run_stats`` parses the DSL and dispatches each term to the function in
+its row, so the DSL and the Python API share one body per stat.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def histogram(df: DataFrame, col: str, bins: int, lo: float, hi: float) -> DataFrame:
-    """-> (bucket, n) for ``bins`` equal buckets over [lo, hi); values at/above
-    ``hi`` clamp into the last bucket, below ``lo`` into the first — matching
-    the reference's BinnedArray index clamping (Histogram.scala)."""
+def row_count(df: DataFrame, group_cols: Sequence[str] = ()) -> DataFrame:
+    """Count() analog: -> (*group_cols, cnt)."""
+    return df.groupBy(*group_cols).agg(F.count("*").alias("cnt"))
+
+
+def histogram(
+    df: DataFrame, col: str, bins: int, lo: float, hi: float,
+    group_cols: Sequence[str] = (),
+) -> DataFrame:
+    """-> (*group_cols, bucket, n) for ``bins`` equal buckets over [lo, hi);
+    values at/above ``hi`` clamp into the last bucket, below ``lo`` into the
+    first — matching the reference's BinnedArray index clamping
+    (Histogram.scala)."""
     w = (hi - lo) / bins
     bucket = F.least(
         F.greatest(F.floor((F.col(col) - lo) / w).cast("long"), F.lit(0)),
         F.lit(bins - 1),
     )
-    return df.groupBy(bucket.alias("bucket")).agg(F.count("*").alias("n"))
+    return df.groupBy(*group_cols, bucket.alias("bucket")).agg(
+        F.count("*").alias("n")
+    )
 
 
-def top_k(df: DataFrame, col: str, k: int) -> DataFrame:
-    """-> (value, n, rnk): exact top-k by frequency, deterministic tiebreak by
-    value (TopK.scala's StreamSummary is approximate; exact groupBy is the
-    idiomatic Spark equivalent and strictly stronger)."""
-    counts = df.groupBy(F.col(col).alias("value")).agg(F.count("*").alias("n"))
-    w = Window.orderBy(F.col("n").desc(), F.col("value").asc())
+def top_k(df: DataFrame, col: str, k: int, group_cols: Sequence[str] = ()) -> DataFrame:
+    """-> (*group_cols, value, n, rnk): exact top-k by frequency per group,
+    deterministic tiebreak by value (TopK.scala's StreamSummary is
+    approximate; exact groupBy is the idiomatic Spark equivalent and
+    strictly stronger)."""
+    w = Window.partitionBy(*group_cols).orderBy(
+        F.col("n").desc(), F.col("value").asc()
+    )
     return (
-        counts.withColumn("rnk", F.row_number().over(w))
+        enumeration(df, col, group_cols)
+        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
     )
 
 
-def enumeration(df: DataFrame, col: str) -> DataFrame:
-    """UniqueProcess analog: distinct values with counts."""
-    return df.groupBy(F.col(col).alias("value")).agg(F.count("*").alias("n"))
+def enumeration(df: DataFrame, col: str, group_cols: Sequence[str] = ()) -> DataFrame:
+    """UniqueProcess analog: -> (*group_cols, value, n), distinct values
+    with counts."""
+    return df.groupBy(*group_cols, F.col(col).alias("value")).agg(
+        F.count("*").alias("n")
+    )
 
 
-def descriptive(df: DataFrame, col: str) -> DataFrame:
-    """DescriptiveStats analog: one row of moments for a numeric column."""
+def descriptive(df: DataFrame, col: str, group_cols: Sequence[str] = ()) -> DataFrame:
+    """DescriptiveStats analog: one row of moments per group."""
     c = F.col(col)
-    return df.agg(
+    return df.groupBy(*group_cols).agg(
         F.count(c).alias("cnt"),
         F.min(c).alias("min_v"),
         F.max(c).alias("max_v"),
@@ -100,24 +121,32 @@ def quantiles_by(
     )
 
 
-def minmax(df: DataFrame, col: str) -> DataFrame:
+def minmax(df: DataFrame, col: str, group_cols: Sequence[str] = ()) -> DataFrame:
     """MinMaxProcess analog, incl. the HLL cardinality MinMax carries."""
     c = F.col(col)
-    return df.agg(
+    return df.groupBy(*group_cols).agg(
         F.min(c).alias("min_v"),
         F.max(c).alias("max_v"),
         F.approx_count_distinct(c).alias("approx_distinct"),
     )
 
 
-def frequency(df: DataFrame, col: str) -> DataFrame:
+def frequency(df: DataFrame, col: str, group_cols: Sequence[str] = ()) -> DataFrame:
     """Frequency(a) analog (Frequency.scala:17-62 keeps a CountMinSketch).
 
     Documented substitution: Spark's shuffle makes EXACT per-value counts
     cheaper than maintaining mergeable CMS state, and the result is strictly
     stronger (no over-count bias). Same output shape as a CMS point query
-    for every observed value."""
-    return df.groupBy(F.col(col).alias("value")).agg(F.count("*").alias("n"))
+    for every observed value: :func:`enumeration`'s."""
+    return enumeration(df, col, group_cols)
+
+
+def iterator_stack_count(df: DataFrame) -> DataFrame:
+    """IteratorStackCount analog: no server-side iterators exist, so report
+    the number of executor partitions that hold rows."""
+    return df.select(F.spark_partition_id().alias("pid")).agg(
+        F.countDistinct("pid").alias("cnt")
+    )
 
 
 def z3_histogram(
@@ -154,8 +183,8 @@ def _eval_stat(df: DataFrame, part: str, group_cols: list[str]) -> DataFrame:
     """Evaluate one stat term, optionally nested under GroupBy columns.
 
     Any stat nests (GroupBy.scala supports arbitrary nested stats, incl.
-    GroupBy(GroupBy(...)) — :36-40): grouping columns accumulate and every
-    leaf stat is expressed against ``df.groupBy(*group_cols)``.
+    GroupBy(GroupBy(...)) — :36-40): grouping columns accumulate and the
+    leaf stat's function runs with them as ``group_cols``.
     """
     if part.lower().startswith("groupby("):
         inner = part[len("groupby(") : -1]
@@ -167,54 +196,22 @@ def _eval_stat(df: DataFrame, part: str, group_cols: list[str]) -> DataFrame:
         raise ValueError(f"bad stat spec: {part}")
     name = m.group(1)
     args = [a.strip() for a in m.group(2).split(",") if a.strip()]
-    g = df.groupBy(*group_cols) if group_cols else df.groupBy()
 
     if name == "Count":
-        return g.agg(F.count("*").alias("cnt"))
+        return row_count(df, group_cols)
     if name == "MinMax":
-        return g.agg(
-            F.min(args[0]).alias("min_v"),
-            F.max(args[0]).alias("max_v"),
-            F.approx_count_distinct(args[0]).alias("approx_distinct"),
-        )
+        return minmax(df, args[0], group_cols)
     if name == "DescriptiveStats":
-        c = F.col(args[0])
-        return g.agg(
-            F.count(c).alias("cnt"),
-            F.min(c).alias("min_v"),
-            F.max(c).alias("max_v"),
-            F.avg(c).alias("mean_v"),
-            F.var_samp(c).alias("var_v"),
-            F.stddev_samp(c).alias("std_v"),
-            F.skewness(c).alias("skew_v"),
-            F.kurtosis(c).alias("kurt_v"),
-        )
+        return descriptive(df, args[0], group_cols)
     if name == "Histogram":
-        col, bins, lo, hi = args[0], int(args[1]), float(args[2]), float(args[3])
-        w = (hi - lo) / bins
-        bucket = F.least(
-            F.greatest(F.floor((F.col(col) - lo) / w).cast("long"), F.lit(0)),
-            F.lit(bins - 1),
-        )
-        return df.groupBy(*group_cols, bucket.alias("bucket")).agg(
-            F.count("*").alias("n")
-        )
-    if name in ("Enumeration", "Frequency", "Z3Frequency"):
-        return df.groupBy(*group_cols, F.col(args[0]).alias("value")).agg(
-            F.count("*").alias("n")
-        )
+        bins, lo, hi = int(args[1]), float(args[2]), float(args[3])
+        return histogram(df, args[0], bins, lo, hi, group_cols)
+    if name in ("Enumeration", "Z3Frequency"):
+        return enumeration(df, args[0], group_cols)
+    if name == "Frequency":
+        return frequency(df, args[0], group_cols)
     if name == "TopK":
-        col, k = args[0], int(args[1])
-        counts = df.groupBy(*group_cols, F.col(col).alias("value")).agg(
-            F.count("*").alias("n")
-        )
-        w = (
-            Window.partitionBy(*group_cols) if group_cols else Window.partitionBy()
-        ).orderBy(F.col("n").desc(), F.col("value").asc())
-        return (
-            counts.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-        )
+        return top_k(df, args[0], int(args[1]), group_cols)
     if name == "Z3Histogram":
         if group_cols:
             raise ValueError("GroupBy(Z3Histogram) not supported")
@@ -224,10 +221,7 @@ def _eval_stat(df: DataFrame, part: str, group_cols: list[str]) -> DataFrame:
             res=int(args[4]) if len(args) > 4 else 4,
         )
     if name == "IteratorStackCount":
-        # no server-side iterators exist; report executor partition count
-        return df.select(F.spark_partition_id().alias("pid")).agg(
-            F.countDistinct("pid").alias("cnt")
-        )
+        return iterator_stack_count(df)
     raise ValueError(f"unknown stat: {name}")
 
 

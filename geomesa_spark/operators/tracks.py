@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..core.geometry import buffer_point_deg
+from ..core.geometry import M_PER_DEG, buffer_point_deg
 
 
 def point2point(
@@ -67,9 +67,6 @@ def track_label(
     )
     w = Window.partitionBy(track).orderBy(*order_cols)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-M_PER_DEG = 111194.93  # meters per degree of latitude at EARTH_RADIUS_M
 
 
 def track_segments(track_pdf: pd.DataFrame, lon: str, lat: str,

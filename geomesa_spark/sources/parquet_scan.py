@@ -40,8 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..core import cells
 
-GRAY_R, GRAY_G, GRAY_B = 0.299, 0.587, 0.114
-
 
 def list_row_groups(path: str) -> list[tuple[str, int, int]]:
     """(file, row_group_index, num_rows) for every row group under ``path``.
@@ -192,7 +190,7 @@ def process_density_split(
     (same-socket turbo/steal effects) against the engine's measured scaling.
     """
     from ..core.geometry import points_in_polygon
-    from ..functions.image import decode_image
+    from ..operators.raster import image_tiles
 
     top_res = prepared.res
     cover: dict[tuple[int, int], list[tuple[str, bool]]] = {}
@@ -201,7 +199,6 @@ def process_density_split(
     res_list = sorted({r for r, _, _, _ in prepared.cover_rows})
     boxes = prepared.boxes
     edges = prepared.edges
-    nres_tile = np.int64(1) << np.int64(res)
 
     tbl = pq.ParquetFile(file).read_row_group(
         rg, columns=["image_id", "bytes", "w", "h", "fmt", "lon", "lat"]
@@ -256,25 +253,10 @@ def process_density_split(
     tiles_by_row = {}
     for i in np.unique(rows_all):
         i = int(i)
-        arr = decode_image(byt[i].as_py(), fmts[i], int(wcol[i]), int(hcol[i]))
-        gray = (
-            arr[..., 0] * GRAY_R + arr[..., 1] * GRAY_G + arr[..., 2] * GRAY_B
-        ) / 255.0
-        h, w = gray.shape
-        xi = np.floor(
-            (lon[i] + np.arange(w) * pixel_pitch_deg + 180.0) * nres_tile / 360.0
-        ).astype(np.int64)
-        yi = np.floor(
-            (lat[i] - np.arange(h) * pixel_pitch_deg + 90.0) * nres_tile / 180.0
-        ).astype(np.int64)
-        np.clip(xi, 0, nres_tile - 1, out=xi)
-        np.clip(yi, 0, nres_tile - 1, out=yi)
-        cs = np.concatenate(([0], np.flatnonzero(np.diff(xi)) + 1))
-        rs = np.concatenate(([0], np.flatnonzero(np.diff(yi)) + 1))
-        blocks = np.add.reduceat(np.add.reduceat(gray, rs, axis=0), cs, axis=1)
-        cx = cells.encode_xy(xi[cs], np.zeros(len(cs), dtype=np.int64))
-        cy = cells.encode_xy(np.zeros(len(rs), dtype=np.int64), yi[rs])
-        tiles_by_row[i] = ((cy[:, None] | cx[None, :]).ravel(), blocks.ravel())
+        tiles_by_row[i] = image_tiles(
+            byt[i].as_py(), fmts[i], int(wcol[i]), int(hcol[i]), lon[i], lat[i],
+            res, pixel_pitch_deg,
+        )
     for i, pid in zip(rows_all, pids_all):
         tc, tw = tiles_by_row[int(i)]
         o_ids.append(np.full(len(tc), ids[int(i)], dtype=object))

@@ -420,6 +420,28 @@ class TestKnnJoinTable:
         for got in self._both_loops(spark, pts_pdf, qpdf, 4, **kw):
             self._assert_matches(got, want)
 
+    def test_polar_query_with_default_sizes(self, spark):
+        """A query next to the pole has a near-zero guarantee until its disk
+        covers the world. With their default res and radius, both loops must
+        still reach that round and return the numpy top-k; a start radius
+        below 1 (which doubling never grows) is rejected."""
+        import pandas as pd
+
+        from geomesa_spark.operators.knn import knn_join_table
+
+        rng = np.random.default_rng(12)
+        pts_pdf = pd.DataFrame({
+            "image_id": np.arange(2000),
+            "lon": rng.uniform(-180, 180, 2000), "lat": rng.uniform(-90, 90, 2000),
+        })
+        qpdf = pd.DataFrame({"query_id": [0], "qlon": [10.0], "qlat": [89.5]})
+        want = self._brute(pts_pdf, qpdf, 3)
+        for got in self._both_loops(spark, pts_pdf, qpdf, 3, qlon="qlon", qlat="qlat"):
+            self._assert_matches(got, want)
+        qdf = spark.createDataFrame(qpdf)
+        with pytest.raises(ValueError, match="radius"):
+            knn_join_table(spark.createDataFrame(pts_pdf), qdf, 3, radius=0)
+
     def test_covers_world_round_returns_every_point(self, spark):
         """k above the point count: both loops reach the round whose disk
         covers the world and return all 5 points per query."""

@@ -85,11 +85,58 @@ class TestStatsDSL:
         assert hist == {0: 20, 1: 20, 2: 20, 3: 20, 4: 20}
         freq = {r.value: r.n for r in out["Frequency(cat)"].collect()}
         assert freq == {"a": 50, "b": 50}
+        pdf = df.toPandas()
+        counts = pdf["cat"].value_counts()
+        # TopK: highest count first, ties by value ascending
+        top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:1]
+        got = [(r.value, r.n, r.rnk) for r in out["TopK(cat,1)"].collect()]
+        assert got == [(v, n, i + 1) for i, (v, n) in enumerate(top)]
+        enum = {r.value: r.n for r in out["Enumeration(cat)"].collect()}
+        assert enum == counts.to_dict()
+        ds = out["DescriptiveStats(v)"].collect()[0]
+        v = pdf["v"]
+        assert ds.cnt == v.count()
+        assert (ds.min_v, ds.max_v) == (v.min(), v.max())
+        np.testing.assert_allclose(
+            [ds.mean_v, ds.var_v, ds.std_v, ds.skew_v],
+            [v.mean(), v.var(ddof=1), v.std(ddof=1), v.skew()],
+            rtol=1e-9, atol=1e-12,
+        )
+        # Spark's kurtosis is the population excess kurtosis (Fisher, biased)
+        z = (v - v.mean()) / v.std(ddof=0)
+        assert ds.kurt_v == pytest.approx((z**4).mean() - 3.0, rel=1e-9)
+        # no iterators: the stat counts the partitions that hold rows
+        assert out["IteratorStackCount()"].collect()[0].cnt >= 1
+        isc = run_stats(df.repartition(3), "IteratorStackCount()")
+        assert isc["IteratorStackCount()"].collect()[0].cnt == 3
 
     def test_groupby_stat(self, df):
-        out = run_stats(df, "GroupBy(cat, MinMax(v))")
-        rows = {r.cat: (r.min_v, r.max_v) for r in list(out.values())[0].collect()}
-        assert rows["a"] == (0.0, 98.0) and rows["b"] == (1.0, 99.0)
+        mm, top, hist = (
+            "GroupBy(cat, MinMax(v))", "GroupBy(cat, TopK(v,1))",
+            "GroupBy(cat, Histogram(v,5,0,100))",
+        )
+        stats = run_stats(df, f"{mm}; {top}; {hist}")
+        out = {spec: frame.toPandas() for spec, frame in stats.items()}
+        pdf = df.toPandas()
+
+        got = out[mm]
+        rows = {r.cat: (r.min_v, r.max_v) for r in got.itertuples()}
+        assert rows == {"a": (0.0, 98.0), "b": (1.0, 99.0)}
+        # HLL++ at its default 5% relative standard deviation
+        assert ((got["approx_distinct"] - 50).abs() <= 10).all()
+
+        # every v is distinct, so each group's top value is its smallest
+        got = out[top]
+        assert sorted(got.columns) == ["cat", "n", "rnk", "value"]
+        assert (got["n"] == 1).all() and (got["rnk"] == 1).all()
+        want = pdf.groupby("cat")["v"].min()
+        assert dict(zip(got["cat"], got["value"])) == want.to_dict()
+
+        got = out[hist]
+        bucket = np.clip(np.floor(pdf["v"] / 20.0), 0, 4).astype(np.int64)
+        want = pdf.assign(bucket=bucket).groupby(["cat", "bucket"]).size()
+        assert sorted(got.columns) == ["bucket", "cat", "n"]
+        assert got.set_index(["cat", "bucket"])["n"].to_dict() == want.to_dict()
 
     def test_z3_histogram(self, df):
         out = z3_histogram(df, period="day", res=2).toPandas()
