@@ -11,16 +11,17 @@ Provides exactly what the engine needs:
   ``SpatialRelationFunctions.scala:29-39``, re-expressed for Arrow batches).
 - rectangle-vs-geometry relation (drives the quad-tree cover in
   ``cells.cover_geometry``, analog of ``XZ2SFC.scala:146-252``).
-- named spatial predicates (contains/covers/crosses/disjoint/equals/
-  intersects/overlaps/touches/within) over simple geometries — the golden
-  DE-9IM semantics pinned by the reference's
-  ``SparkSQLSpatialRelationshipsTest.scala:50-140``.
+- one exact DE-9IM kernel (``de9im``) on mutually noded edges, behind
+  ``st_relate`` and every named predicate (contains/covers/coveredby/
+  crosses/equals/overlaps/touches/within as OGC patterns; intersects/
+  disjoint on an exact fast path) — the golden DE-9IM semantics pinned by
+  the reference's ``SparkSQLSpatialRelationshipsTest.scala:50-140``.
 - spherical distance (haversine; analog of ``st_distanceSphere``,
   ``SpatialRelationFunctions.scala:137-141``).
 
 All coordinates are EPSG:4326 lon/lat degrees. Geometries are simple
-(non-self-intersecting); polygons may carry holes for parsing/PIP but the
-predicate engine assumes hole-free shells (all reference fixtures are).
+(non-self-intersecting); polygons may carry holes and multi-parts, in the
+predicates as in point-in-polygon.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from __future__ import annotations
 import math
 import struct
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
@@ -339,22 +341,43 @@ def polygon_edges(g: Geometry) -> np.ndarray:
     return np.concatenate(segs, axis=0)
 
 
-def points_in_polygon(
-    lon: np.ndarray, lat: np.ndarray, edges: np.ndarray, include_boundary: bool = True
-) -> np.ndarray:
-    """Vectorized even-odd ray cast of N points against one polygon's edges.
+def _orient(ax, ay, bx, by, cx, cy):
+    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
 
-    O(N*E) with numpy broadcasting, chunked to bound memory. Half-open vertex
-    rule avoids double counting; boundary points handled explicitly so the
-    result matches the closed (``covers``) or open (``contains``) convention.
-    """
+
+def _on_line(d, px, py, x0, y0, x1, y1):
+    """Point p, at orientation ``d`` against segment (x0, y0)-(x1, y1), lies
+    on the closed segment: collinear within tolerance and inside the
+    tolerance-widened bbox (tested only once some point is collinear)."""
+    on = np.abs(d) <= _EPS * np.maximum(1.0, np.abs(x1 - x0) + np.abs(y1 - y0))
+    if on.any():
+        on &= (
+            (px >= np.minimum(x0, x1) - _EPS)
+            & (px <= np.maximum(x0, x1) + _EPS)
+            & (py >= np.minimum(y0, y1) - _EPS)
+            & (py <= np.maximum(y0, y1) + _EPS)
+        )
+    return on
+
+
+def _on_segments(px, py, segs: np.ndarray) -> np.ndarray:
+    """(N, E) mask: point i lies on closed segment j (within tolerance)."""
+    px = np.asarray(px, dtype=np.float64)[:, None]
+    py = np.asarray(py, dtype=np.float64)[:, None]
+    x0, y0, x1, y1 = (segs[:, i] for i in range(4))
+    return _on_line(_orient(x0, y0, x1, y1, px, py), px, py, x0, y0, x1, y1)
+
+
+def _pip(lon, lat, edges: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(inside by the even-odd ray cast, on an edge) per point; O(N*E) with
+    numpy broadcasting, chunked to bound memory."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     n = lon.shape[0]
     inside = np.zeros(n, dtype=bool)
     on_edge = np.zeros(n, dtype=bool)
     if n == 0 or edges.shape[0] == 0:
-        return inside
+        return inside, on_edge
     x0, y0, x1, y1 = edges[:, 0], edges[:, 1], edges[:, 2], edges[:, 3]
     chunk = max(1, int(4_000_000 // max(1, edges.shape[0])))
     for s in range(0, n, chunk):
@@ -368,21 +391,20 @@ def points_in_polygon(
             )
         crossings = (cond & (px < xint)).sum(axis=1)
         inside[s : s + chunk] = (crossings % 2) == 1
-        # boundary test: point collinear with edge and within its bbox
-        dx = x1[None, :] - x0[None, :]
-        dy = y1[None, :] - y0[None, :]
-        cross = (px - x0[None, :]) * dy - (py - y0[None, :]) * dx
-        within_x = (px >= np.minimum(x0, x1)[None, :] - _EPS) & (
-            px <= np.maximum(x0, x1)[None, :] + _EPS
-        )
-        within_y = (py >= np.minimum(y0, y1)[None, :] - _EPS) & (
-            py <= np.maximum(y0, y1)[None, :] + _EPS
-        )
-        on_edge[s : s + chunk] = (
-            (np.abs(cross) <= _EPS * np.maximum(1.0, np.abs(dx) + np.abs(dy)))
-            & within_x
-            & within_y
-        ).any(axis=1)
+        on_edge[s : s + chunk] = _on_segments(px[:, 0], py[:, 0], edges).any(axis=1)
+    return inside, on_edge
+
+
+def points_in_polygon(
+    lon: np.ndarray, lat: np.ndarray, edges: np.ndarray, include_boundary: bool = True
+) -> np.ndarray:
+    """Vectorized even-odd ray cast of N points against one polygon's edges.
+
+    Half-open vertex rule avoids double counting; boundary points handled
+    explicitly so the result matches the closed (``covers``) or open
+    (``contains``) convention.
+    """
+    inside, on_edge = _pip(lon, lat, edges)
     if include_boundary:
         return inside | on_edge
     return inside & ~on_edge
@@ -395,6 +417,33 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     dlat = lat2 - lat1
     a = np.sin(dlat / 2) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2) ** 2
     return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
+
+
+def _segment_pairs(sa: np.ndarray, sb: np.ndarray):
+    """The one pairwise segment primitive: (N, M) arrays ``(cross, touch,
+    ta, tb)`` for segments ``sa`` (N, 4) and ``sb`` (M, 4), rows
+    [x0, y0, x1, y1].
+
+    ``touch`` marks an endpoint of one segment lying on the other (every
+    collinear overlap is one). ``cross`` marks a proper crossing, a single
+    point interior to both segments, at parameter ``ta`` along ``sa`` and
+    ``tb`` along ``sb``.
+    """
+    ax0, ay0, ax1, ay1 = a = tuple(sa[:, i, None] for i in range(4))
+    bx0, by0, bx1, by1 = b = tuple(sb[None, :, i] for i in range(4))
+    d1 = _orient(*a, bx0, by0)
+    d2 = _orient(*a, bx1, by1)
+    d3 = _orient(*b, ax0, ay0)
+    d4 = _orient(*b, ax1, ay1)
+    touch = (
+        _on_line(d1, bx0, by0, *a)
+        | _on_line(d2, bx1, by1, *a)
+        | _on_line(d3, ax0, ay0, *b)
+        | _on_line(d4, ax1, ay1, *b)
+    )
+    cross = ((d1 * d2) < 0) & ((d3 * d4) < 0) & ~touch
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return cross, touch, d3 / (d3 - d4), d1 / (d1 - d2)
 
 
 # ---------------------------------------------------------------------------
@@ -412,458 +461,186 @@ def rect_relation(g: Geometry, lon0: float, lat0: float, lon1: float, lat1: floa
     glon0, glat0, glon1, glat1 = g.bounds()
     if lon1 < glon0 or lon0 > glon1 or lat1 < glat0 or lat0 > glat1:
         return "disjoint"
-    if g.dim < 2:
-        return "overlapping" if _rect_intersects_lowdim(g, lon0, lat0, lon1, lat1) else "disjoint"
-
-    edges = polygon_edges(g)
-    corners_x = np.array([lon0, lon1, lon1, lon0])
-    corners_y = np.array([lat0, lat0, lat1, lat1])
-    corners_in = points_in_polygon(corners_x, corners_y, edges, include_boundary=True)
-    rect_edges = np.array(
-        [
-            [lon0, lat0, lon1, lat0],
-            [lon1, lat0, lon1, lat1],
-            [lon1, lat1, lon0, lat1],
-            [lon0, lat1, lon0, lat0],
-        ]
-    )
-    crossing = _any_segment_intersection(rect_edges, edges)
-    if corners_in.all() and not crossing:
-        return "contained"
-    if corners_in.any() or crossing:
-        return "overlapping"
-    # no corner inside, no edge crossing: either disjoint, or g inside rect
-    p0 = next(_iter_points(g))
-    if lon0 <= p0[0] <= lon1 and lat0 <= p0[1] <= lat1:
-        return "overlapping"  # geometry inside rect
-    return "disjoint"
-
-
-def _rect_intersects_lowdim(g: Geometry, lon0, lat0, lon1, lat1) -> bool:
-    if g.kind in ("Point", "MultiPoint"):
-        for p in _iter_points(g):
-            if lon0 <= p[0] <= lon1 and lat0 <= p[1] <= lat1:
-                return True
-        return False
-    rect_edges = np.array(
-        [
-            [lon0, lat0, lon1, lat0],
-            [lon1, lat0, lon1, lat1],
-            [lon1, lat1, lon0, lat1],
-            [lon0, lat1, lon0, lat0],
-        ]
-    )
-    for path in g.rings():
-        segs = np.concatenate([path[:-1], path[1:]], axis=1)
-        if _any_segment_intersection(segs, rect_edges):
-            return True
-        # fully inside rect?
-        if (
-            (path[:, 0] >= lon0).all()
-            and (path[:, 0] <= lon1).all()
-            and (path[:, 1] >= lat0).all()
-            and (path[:, 1] <= lat1).all()
-        ):
-            return True
-    return False
-
-
-def _orient(ax, ay, bx, by, cx, cy):
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
-def _any_segment_intersection(segs_a: np.ndarray, segs_b: np.ndarray) -> bool:
-    """True if any segment of A intersects any segment of B (incl. touching)."""
-    ax0, ay0, ax1, ay1 = (segs_a[:, i][:, None] for i in range(4))
-    bx0, by0, bx1, by1 = (segs_b[:, i][None, :] for i in range(4))
-    d1 = _orient(ax0, ay0, ax1, ay1, bx0, by0)
-    d2 = _orient(ax0, ay0, ax1, ay1, bx1, by1)
-    d3 = _orient(bx0, by0, bx1, by1, ax0, ay0)
-    d4 = _orient(bx0, by0, bx1, by1, ax1, ay1)
-    proper = ((d1 * d2) < 0) & ((d3 * d4) < 0)
-    if proper.any():
-        return True
-    # collinear / endpoint touch
-    def on_seg(px, py, sx0, sy0, sx1, sy1, d):
-        return (
-            (np.abs(d) <= _EPS)
-            & (px >= np.minimum(sx0, sx1) - _EPS)
-            & (px <= np.maximum(sx0, sx1) + _EPS)
-            & (py >= np.minimum(sy0, sy1) - _EPS)
-            & (py <= np.maximum(sy0, sy1) + _EPS)
+    paths = list(g.rings())
+    edges = np.concatenate([np.concatenate([p[:-1], p[1:]], axis=1) for p in paths])
+    if g.dim == 2:
+        corners_in = points_in_polygon(
+            np.array([lon0, lon1, lon1, lon0]), np.array([lat0, lat0, lat1, lat1]), edges
         )
-
-    touch = (
-        on_seg(bx0, by0, ax0, ay0, ax1, ay1, d1)
-        | on_seg(bx1, by1, ax0, ay0, ax1, ay1, d2)
-        | on_seg(ax0, ay0, bx0, by0, bx1, by1, d3)
-        | on_seg(ax1, ay1, bx0, by0, bx1, by1, d4)
-    )
-    return bool(touch.any())
-
-
-# ---------------------------------------------------------------------------
-# Named predicates (golden DE-9IM semantics)
-# ---------------------------------------------------------------------------
-
-def _classify_point(p, g: Geometry) -> str:
-    """'interior' | 'boundary' | 'exterior' of point p w.r.t. geometry g."""
-    px, py = float(p[0]), float(p[1])
-    if g.kind in ("Point", "MultiPoint"):
-        for q in _iter_points(g):
-            if abs(px - q[0]) <= _EPS and abs(py - q[1]) <= _EPS:
-                return "interior"
-        return "exterior"
-    if g.kind in ("LineString", "MultiLineString"):
-        for part in g.parts():
-            pts = np.asarray(part.coords, dtype=np.float64)
-            segs = np.concatenate([pts[:-1], pts[1:]], axis=1)
-            for x0, y0, x1, y1 in segs:
-                d = _orient(x0, y0, x1, y1, px, py)
-                if (
-                    abs(d) <= _EPS * max(1.0, abs(x1 - x0) + abs(y1 - y0))
-                    and min(x0, x1) - _EPS <= px <= max(x0, x1) + _EPS
-                    and min(y0, y1) - _EPS <= py <= max(y0, y1) + _EPS
-                ):
-                    # endpoints of a non-closed line are the boundary
-                    ends = [part.coords[0], part.coords[-1]]
-                    closed = part.coords[0] == part.coords[-1]
-                    if not closed and any(
-                        abs(px - e[0]) <= _EPS and abs(py - e[1]) <= _EPS for e in ends
-                    ):
-                        return "boundary"
-                    return "interior"
-        return "exterior"
-    edges = polygon_edges(g)
-    on = points_in_polygon(np.array([px]), np.array([py]), edges, include_boundary=True)[0]
-    strict = points_in_polygon(np.array([px]), np.array([py]), edges, include_boundary=False)[0]
-    if strict:
-        return "interior"
-    if on:
-        return "boundary"
-    return "exterior"
-
-
-def _edge_array(g: Geometry) -> np.ndarray:
-    segs = []
-    for path in g.rings():
-        if path.shape[0] >= 2:
-            segs.append(np.concatenate([path[:-1], path[1:]], axis=1))
-    if not segs:
-        return np.zeros((0, 4))
-    return np.concatenate(segs, axis=0)
-
-
-def _sample_points(g: Geometry, per_edge: int = 7):
-    """Representative points on g (vertices + edge subdivisions + centroids)."""
-    pts = list(_iter_points(g))
-    for path in g.rings():
-        for i in range(path.shape[0] - 1):
-            for t in np.linspace(0, 1, per_edge + 2)[1:-1]:
-                pts.append(tuple(path[i] * (1 - t) + path[i + 1] * t))
-    if g.dim == 2:
-        for part in g.parts():
-            sh = part.shell()
-            pts.append((float(sh[:-1, 0].mean()), float(sh[:-1, 1].mean())))
-    return pts
-
-
-def _interior_probe(g: Geometry):
-    """A point in the interior of g (for simple convex-ish fixtures)."""
-    if g.dim == 2:
-        for part in g.parts():
-            sh = part.shell()
-            c = (float(sh[:-1, 0].mean()), float(sh[:-1, 1].mean()))
-            if _classify_point(c, part) == "interior":
-                return c
-        return None
-    if g.dim == 1:
-        for path in g.rings():
-            mid = tuple((path[0] + path[1]) / 2.0)
-            return mid
-    return next(_iter_points(g), None)
-
-
-def relate(a: Geometry, b: Geometry, predicate: str) -> bool:
-    """Evaluate a named spatial predicate with DE-9IM semantics.
-
-    Implemented from the published predicate definitions (OGC SFS), validated
-    against the reference's golden fixture
-    (``SparkSQLSpatialRelationshipsTest.scala``). Sound for simple
-    points/lines/polygons without holes — the engine's refine path for joins
-    uses the vectorized :func:`points_in_polygon` instead.
-    """
-    predicate = predicate.lower()
-    if predicate == "disjoint":
-        return not relate(a, b, "intersects")
-    if predicate == "within":
-        return relate(b, a, "contains")
-    if predicate == "coveredby":
-        return relate(b, a, "covers")
-    if predicate == "equals":
-        return relate(a, b, "covers") and relate(b, a, "covers")
-
-    if predicate == "intersects":
-        return _intersects(a, b)
-    if predicate in ("contains", "covers"):
-        # every sample point of b must be non-exterior to a
-        cls = [_classify_point(p, a) for p in _sample_points(b)]
-        if any(c == "exterior" for c in cls):
-            return False
-        # no edge of b may properly cross out of a (sampled densely above)
-        if predicate == "covers":
-            return True
-        # contains additionally needs interior∩interior ≠ ∅
-        return _interiors_intersect(a, b)
-    if predicate == "touches":
-        if not _intersects(a, b):
-            return False
-        return not _interiors_intersect(a, b)
-    if predicate == "crosses":
-        if a.dim == b.dim and a.dim != 1:
-            return False
-        if not _interiors_intersect(a, b):
-            return False
-        if a.dim == b.dim == 1:
-            # line/line cross: intersection must be 0-dimensional (a point)
-            return not _collinear_overlap(a, b) and _has_proper_crossing(a, b)
-        lo, hi = (a, b) if a.dim < b.dim else (b, a)
-        # part of lo's interior must lie outside hi
-        cls = [_classify_point(p, hi) for p in _sample_points(lo)]
-        return any(c == "exterior" for c in cls)
-    if predicate == "overlaps":
-        if a.dim != b.dim:
-            return False
-        if not _interiors_intersect(a, b):
-            return False
-        if relate(a, b, "covers") or relate(b, a, "covers"):
-            return False
-        return True
-    raise ValueError(f"unknown predicate: {predicate}")
-
-
-def _intersects(a: Geometry, b: Geometry) -> bool:
-    abounds, bbounds = a.bounds(), b.bounds()
+        if corners_in.any() != corners_in.all():
+            return "overlapping"
+    if edges.size:
+        rect_edges = np.array(
+            [
+                [lon0, lat0, lon1, lat0],
+                [lon1, lat0, lon1, lat1],
+                [lon1, lat1, lon0, lat1],
+                [lon0, lat1, lon0, lat0],
+            ]
+        )
+        cross, touch, _, _ = _segment_pairs(rect_edges, edges)
+        if cross.any() or touch.any():
+            return "overlapping"
+    # no boundary contact: every point, path and ring of g lies wholly inside
+    # or outside the rect, so one vertex of each says whether it is inside
+    heads = np.array([p[0] for p in paths])
     if (
-        abounds[2] < bbounds[0] - _EPS
-        or abounds[0] > bbounds[2] + _EPS
-        or abounds[3] < bbounds[1] - _EPS
-        or abounds[1] > bbounds[3] + _EPS
-    ):
-        return False
-    if a.dim == 0:
-        return any(_classify_point(p, b) != "exterior" for p in _iter_points(a))
-    if b.dim == 0:
-        return any(_classify_point(p, a) != "exterior" for p in _iter_points(b))
-    ea, eb = _edge_array(a), _edge_array(b)
-    if ea.shape[0] and eb.shape[0] and _any_segment_intersection(ea, eb):
-        return True
-    # containment without boundary contact
-    pa = _interior_probe(a)
-    pb = _interior_probe(b)
-    if pb is not None and _classify_point(pb, a) != "exterior":
-        return True
-    if pa is not None and _classify_point(pa, b) != "exterior":
-        return True
-    return False
-
-
-def _interiors_intersect(a: Geometry, b: Geometry) -> bool:
-    if a.dim == 0:
-        return any(_classify_point(p, b) == "interior" for p in _iter_points(a))
-    if b.dim == 0:
-        return any(_classify_point(p, a) == "interior" for p in _iter_points(b))
-    if a.dim == 2 and b.dim == 2:
-        # proper edge crossing, or a sample interior point of one inside the other
-        if _has_proper_crossing(a, b):
-            return True
-        pb = _interior_probe(b)
-        pa = _interior_probe(a)
-        return (pb is not None and _classify_point(pb, a) == "interior") or (
-            pa is not None and _classify_point(pa, b) == "interior"
-        )
-    # line vs area / line vs line: sample line interior points
-    lo, hi = (a, b) if a.dim <= b.dim else (b, a)
-    if _has_proper_crossing(a, b):
-        return True
-    samples = _sample_points(lo)
-    # exclude line endpoints (they are boundary, not interior)
-    if lo.dim == 1:
-        eps_pts = set()
-        for part in lo.parts():
-            if part.coords[0] != part.coords[-1]:
-                eps_pts.add(part.coords[0])
-                eps_pts.add(part.coords[-1])
-        samples = [p for p in samples if tuple(p) not in eps_pts]
-    for p in samples:
-        if _classify_point(p, hi) == "interior" and _classify_point(p, lo) == "interior":
-            return True
-    return False
-
-
-def _has_proper_crossing(a: Geometry, b: Geometry) -> bool:
-    ea, eb = _edge_array(a), _edge_array(b)
-    if not (ea.shape[0] and eb.shape[0]):
-        return False
-    ax0, ay0, ax1, ay1 = (ea[:, i][:, None] for i in range(4))
-    bx0, by0, bx1, by1 = (eb[:, i][None, :] for i in range(4))
-    d1 = _orient(ax0, ay0, ax1, ay1, bx0, by0)
-    d2 = _orient(ax0, ay0, ax1, ay1, bx1, by1)
-    d3 = _orient(bx0, by0, bx1, by1, ax0, ay0)
-    d4 = _orient(bx0, by0, bx1, by1, ax1, ay1)
-    return bool((((d1 * d2) < -_EPS) & ((d3 * d4) < -_EPS)).any())
-
-
-def _collinear_overlap(a: Geometry, b: Geometry) -> bool:
-    ea, eb = _edge_array(a), _edge_array(b)
-    for x0, y0, x1, y1 in ea:
-        for u0, v0, u1, v1 in eb:
-            if (
-                abs(_orient(x0, y0, x1, y1, u0, v0)) <= _EPS
-                and abs(_orient(x0, y0, x1, y1, u1, v1)) <= _EPS
-            ):
-                # collinear: check 1D overlap of projections
-                if abs(x1 - x0) >= abs(y1 - y0):
-                    lo1, hi1 = sorted((x0, x1))
-                    lo2, hi2 = sorted((u0, u1))
-                else:
-                    lo1, hi1 = sorted((y0, y1))
-                    lo2, hi2 = sorted((v0, v1))
-                if min(hi1, hi2) - max(lo1, lo2) > _EPS:
-                    return True
-    return False
+        (heads[:, 0] >= lon0) & (heads[:, 0] <= lon1) & (heads[:, 1] >= lat0) & (heads[:, 1] <= lat1)
+    ).any():
+        return "overlapping"
+    return "contained" if g.dim == 2 and corners_in.all() else "disjoint"
 
 
 # ---------------------------------------------------------------------------
-# DE-9IM matrix, simplicity, closest point (st_relate / st_isSimple /
-# st_closestPoint analogs — SpatialRelationFunctions.scala:40-46,
-# GeometricAccessorFunctions.scala:55-70)
+# The DE-9IM kernel: named predicates, st_relate (golden DE-9IM semantics)
 # ---------------------------------------------------------------------------
 
-_PART_DIM = {"I": None, "B": None, "E": 2}  # I/B depend on the geometry
+_I, _B, _E = 0, 1, 2  # interior / boundary / exterior: DE-9IM row and column
 
 
-def _region_dim(g: Geometry, part: str) -> int:
-    """Topological dimension of I/B/E of g (-1 = empty set)."""
-    if part == "E":
-        return 2
-    if part == "I":
-        return g.dim
-    # boundary
+class _Prepared(NamedTuple):
+    dim: int
+    pts: np.ndarray    # (V, 2) vertices
+    own: np.ndarray    # (V,) location code of each vertex on the geometry itself
+    heads: np.ndarray  # (R, 2) first vertex of every point, path and ring
+    segs: np.ndarray   # (E, 4) non-degenerate edges [x0, y0, x1, y1]
+    left: np.ndarray   # (E,) polygons: the interior lies left of the edge
+    bnd: np.ndarray    # (K, 2) lines: boundary points (mod-2 rule over path ends)
+
+
+def _coincide(pts: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """(N,) mask: point i equals some row of ``q`` (within tolerance)."""
+    return (
+        (np.abs(pts[:, :1] - q[:, 0]) <= _EPS) & (np.abs(pts[:, 1:] - q[:, 1]) <= _EPS)
+    ).any(axis=1)
+
+
+def _prepare(g: Geometry) -> _Prepared:
+    """The arrays the DE-9IM kernel reads from ``g``."""
+    paths = list(g.rings())
+    heads = np.array([p[0] for p in paths])
+    if g.dim == 0:
+        pts = np.concatenate(paths)
+        no_edges = np.zeros((0, 4))
+        return _Prepared(0, pts, np.full(len(pts), _I), heads, no_edges, np.zeros(0, dtype=bool), pts[:0])
+    segs = np.concatenate([np.concatenate([p[:-1], p[1:]], axis=1) for p in paths])
     if g.dim == 2:
-        return 1
-    if g.dim == 1:
-        closed = all(p.coords[0] == p.coords[-1] for p in g.parts())
-        return -1 if closed else 0
-    return -1  # points have empty boundary
+        pts = np.concatenate([p[:-1] for p in paths])
+        own, bnd = np.full(len(pts), _B), np.zeros((0, 2))
+        # the interior is left of a ccw shell's edges and right of a ccw hole's
+        shell = [k == 0 for part in g.parts() for k in range(len(part.coords))]
+        left = np.concatenate([
+            np.full(len(p) - 1, (np.sum(p[:-1, 0] * p[1:, 1] - p[1:, 0] * p[:-1, 1]) > 0) == s)
+            for p, s in zip(paths, shell)
+        ])
+    else:
+        pts = np.concatenate(paths)
+        ends, cnt = np.unique(
+            np.concatenate([p[[0, -1]] for p in paths]), axis=0, return_counts=True
+        )
+        bnd = ends[cnt % 2 == 1]
+        own = np.where(_coincide(pts, bnd), _B, _I)
+        left = np.zeros(len(segs), dtype=bool)
+    keep = (segs[:, 0] != segs[:, 2]) | (segs[:, 1] != segs[:, 3])
+    return _Prepared(g.dim, pts, own, heads, segs[keep], left[keep], bnd)
 
 
-def _de9im_candidates(a: Geometry, b: Geometry):
-    """Candidate probe points: vertices, dense edge samples, pairwise edge
-    intersections, interior probes, and far-exterior points. Returns
-    (points, adjacency) where adjacency marks consecutive samples along one
-    edge (used to promote dimension 0 -> 1)."""
-    pts: list[tuple[float, float]] = []
-    runs: list[tuple[int, int]] = []  # [start, end) index ranges of edge runs
-    for g in (a, b):
-        for path in g.rings():
-            for i in range(path.shape[0] - 1):
-                s = len(pts)
-                for t in np.linspace(0.0, 1.0, 17):
-                    p = path[i] * (1 - t) + path[i + 1] * t
-                    pts.append((float(p[0]), float(p[1])))
-                runs.append((s, len(pts)))
-        if g.kind in ("Point", "MultiPoint"):
-            pts.extend((float(p[0]), float(p[1])) for p in _iter_points(g))
-    ea, eb = _edge_array(a), _edge_array(b)
-    for x0, y0, x1, y1 in ea:
-        for u0, v0, u1, v1 in eb:
-            d1 = (x1 - x0, y1 - y0)
-            d2 = (u1 - u0, v1 - v0)
-            den = d1[0] * d2[1] - d1[1] * d2[0]
-            if abs(den) < _EPS:
-                continue
-            ta = ((u0 - x0) * d2[1] - (v0 - y0) * d2[0]) / den
-            tb = ((u0 - x0) * d1[1] - (v0 - y0) * d1[0]) / den
-            if -_EPS <= ta <= 1 + _EPS and -_EPS <= tb <= 1 + _EPS:
-                pts.append((x0 + ta * d1[0], y0 + ta * d1[1]))
-    for g in (a, b):
-        p = _interior_probe(g)
-        if p is not None:
-            pts.append((float(p[0]), float(p[1])))
-    # offset probes around every vertex/crossing: populate the interior/
-    # exterior classes on both sides of boundaries
-    delta = 1e-6
-    base = list(pts)
-    for px, py in base:
-        for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1), (1, 1), (-1, -1), (1, -1), (-1, 1)):
-            pts.append((px + dx * delta, py + dy * delta))
-    # coarse grid over the expanded union bbox: area-class coverage (IE/EI/EE)
-    ab = a.bounds()
-    bb = b.bounds()
-    x0, y0 = min(ab[0], bb[0]) - 1.0, min(ab[1], bb[1]) - 1.0
-    x1, y1 = max(ab[2], bb[2]) + 1.0, max(ab[3], bb[3]) + 1.0
-    for gx in np.linspace(x0, x1, 7):
-        for gy in np.linspace(y0, y1, 7):
-            pts.append((float(gx), float(gy)))
-    return pts, runs
+def _locate(pts: np.ndarray, p: _Prepared) -> np.ndarray:
+    """Location code (_I, _B or _E) on ``p`` of each point of ``pts`` (N, 2)."""
+    if p.dim == 2:
+        inside, on_edge = _pip(pts[:, 0], pts[:, 1], p.segs)
+        return np.where(on_edge, _B, np.where(inside, _I, _E))
+    if p.dim == 1:
+        on = _on_segments(pts[:, 0], pts[:, 1], p.segs).any(axis=1)
+        return np.where(_coincide(pts, p.bnd), _B, np.where(on, _I, _E))
+    return np.where(_coincide(pts, p.pts), _I, _E)
+
+
+def _param(px, py, x0, y0, x1, y1):
+    """Projection parameter of point(s) along non-degenerate segment(s)."""
+    dx, dy = x1 - x0, y1 - y0
+    return ((px - x0) * dx + (py - y0) * dy) / (dx * dx + dy * dy)
+
+
+def _sub_edges(p: _Prepared, ei, t, other: np.ndarray):
+    """Midpoints and edge indices of ``p``'s sub-edges: its edges noded at the
+    crossing parameters ``t`` of edges ``ei`` and at every point of
+    ``other`` (N, 2) that lies on an edge (collinear-overlap ends included)."""
+    n = p.segs.shape[0]
+    vi, vj = np.nonzero(_on_segments(other[:, 0], other[:, 1], p.segs))
+    s = p.segs[vj]
+    tv = np.clip(_param(other[vi, 0], other[vi, 1], s[:, 0], s[:, 1], s[:, 2], s[:, 3]), 0.0, 1.0)
+    e = np.concatenate([np.arange(n), np.arange(n), ei, vj])
+    t = np.concatenate([np.zeros(n), np.ones(n), t, tv])
+    order = np.lexsort((t, e))
+    e, t = e[order], t[order]
+    keep = (e[1:] == e[:-1]) & (t[1:] - t[:-1] > _EPS)
+    e, tm = e[1:][keep], (t[1:][keep] + t[:-1][keep]) / 2
+    s = p.segs[e]
+    return s[:, :2] + tm[:, None] * (s[:, 2:] - s[:, :2]), e
+
+
+def _faces(loc, mid, e, p: _Prepared, q: _Prepared):
+    """Location on polygon ``q`` of the two faces beside each boundary
+    sub-edge of polygon ``p`` (midpoints ``mid`` on edges ``e``, located at
+    ``loc`` on q): (face on p's interior side, face on p's exterior side).
+    Off q's boundary both faces share the sub-edge's location; on a shared
+    sub-edge they are read from the two rings' interior sides."""
+    fi, fe = loc.copy(), loc.copy()
+    sh = np.nonzero(loc == _B)[0]
+    if sh.size:
+        j = _on_segments(mid[sh, 0], mid[sh, 1], q.segs).argmax(axis=1)
+        ps, qs = p.segs[e[sh]], q.segs[j]
+        along = (ps[:, 2] - ps[:, 0]) * (qs[:, 2] - qs[:, 0]) + (ps[:, 3] - ps[:, 1]) * (
+            qs[:, 3] - qs[:, 1]
+        ) > 0
+        same = p.left[e[sh]] == (q.left[j] == along)
+        fi[sh] = np.where(same, _I, _E)
+        fe[sh] = np.where(same, _E, _I)
+    return fi, fe
 
 
 def de9im(a: Geometry, b: Geometry) -> str:
-    """DE-9IM matrix string (row-major II IB IE / BI BB BE / EI EB EE).
+    """DE-9IM matrix string (row-major II IB IE / BI BB BE / EI EB EE) of two
+    simple points, lines or polygons, holes and multi-parts included.
 
-    Probe-based: classifies a dense candidate set (vertices, edge samples,
-    edge crossings, interior probes) against both geometries and infers each
-    entry's dimension — exact for the simple point/line/polygon fixtures the
-    reference's relate tests cover (SparkSQLSpatialRelationshipsTest), with
-    dimension promoted to 1 when a whole edge-sample run matches and to 2
-    for polygon interior overlaps.
+    Exact on noded edges: both geometries' edges are split at their mutual
+    intersections (proper crossings and every vertex of one lying on an edge
+    of the other). Each vertex and crossing node marks its (location on a,
+    location on b) entry with dimension 0, and each sub-edge, located by its
+    midpoint, with dimension 1. The area entries come from the faces on
+    either side of every polygon boundary sub-edge (:func:`_faces`): a
+    bounded component of ``I(a) ∩ I(b)``, ``I(a) ∩ E(b)`` or ``E(a) ∩ I(b)``
+    is fenced by such sub-edges.
     """
-    pts, runs = _de9im_candidates(a, b)
-    cls_a = [_classify_point(p, a) for p in pts]
-    cls_b = [_classify_point(p, b) for p in pts]
-    code = {"interior": "I", "boundary": "B", "exterior": "E"}
-    cls_a = [code[c] for c in cls_a]
-    cls_b = [code[c] for c in cls_b]
-
-    out = []
-    for pa in "IBE":
-        for pb in "IBE":
-            da, db = _region_dim(a, pa), _region_dim(b, pb)
-            if da < 0 or db < 0:
-                out.append("F")
-                continue
-            matches = [
-                i for i in range(len(pts)) if cls_a[i] == pa and cls_b[i] == pb
-            ]
-            if not matches:
-                out.append("F")
-                continue
-            cap = min(da, db)
-            if pa == "E" and pb == "E":
-                out.append("2")  # exteriors of bounded geometries
-                continue
-            if cap == 0:
-                out.append("0")
-                continue
-            if pa == "I" and pb == "I" and a.dim == 2 and b.dim == 2:
-                out.append("2")
-                continue
-            if (pa, pb) in (("I", "E"), ("E", "I")) and max(
-                (a.dim if pa == "I" else b.dim), 0
-            ) == 2:
-                out.append(str(cap))
-                continue
-            # promote to 1 when >= 3 consecutive samples of one edge match
-            mset = set(matches)
-            dim1 = False
-            for s, e in runs:
-                row = [i in mset for i in range(s, e)]
-                if any(row[i] and row[i + 1] and row[i + 2] for i in range(len(row) - 2)):
-                    dim1 = True
-                    break
-            out.append("1" if dim1 and cap >= 1 else "0")
-    return "".join(out)
+    pa, pb = _prepare(a), _prepare(b)
+    m = np.full((3, 3), -1)
+    m[_E, _E] = 2
+    # where an edge's own points lie: interior of a line, boundary of an area
+    la, lb = (_I if p.dim == 1 else _B for p in (pa, pb))
+    cross, _, ta, tb = _segment_pairs(pa.segs, pb.segs)
+    ia, ib = np.nonzero(cross)
+    if ia.size:
+        m[la, lb] = max(m[la, lb], 0)
+    np.maximum.at(m, (pa.own, _locate(pa.pts, pb)), 0)
+    np.maximum.at(m, (_locate(pb.pts, pa), pb.own), 0)
+    mid_a, ea = _sub_edges(pa, ia, ta[ia, ib], pb.pts)
+    mid_b, eb = _sub_edges(pb, ib, tb[ia, ib], pa.pts)
+    loc_a, loc_b = _locate(mid_a, pb), _locate(mid_b, pa)
+    np.maximum.at(m, (la, loc_a), 1)
+    np.maximum.at(m, (loc_b, lb), 1)
+    if pa.dim == 2 and pb.dim == 2:
+        fi, fe = _faces(loc_a, mid_a, ea, pa, pb)
+        m[_I, fi] = 2
+        m[_E, fe] = 2
+        fi, fe = _faces(loc_b, mid_b, eb, pb, pa)
+        m[fi, _I] = 2
+        m[fe, _E] = 2
+    elif pa.dim == 2:
+        m[_I, _E] = 2  # a line or point cannot cover an open area
+    elif pb.dim == 2:
+        m[_E, _I] = 2
+    return "".join("F" if v < 0 else str(v) for v in m.ravel())
 
 
 def de9im_matches(matrix: str, pattern: str) -> bool:
@@ -881,93 +658,136 @@ def de9im_matches(matrix: str, pattern: str) -> bool:
     return True
 
 
+# OGC SFS definitions of the named predicates (any pattern matching suffices)
+_PATTERNS = {
+    "contains": ("T*****FF*",),
+    "within": ("T*F**F***",),
+    "covers": ("T*****FF*", "*T****FF*", "***T**FF*", "****T*FF*"),
+    "coveredby": ("T*F**F***", "*TF**F***", "**FT*F***", "**F*TF***"),
+    "equals": ("T*F**FFF*",),
+    "touches": ("FT*******", "F**T*****", "F***T****"),
+}
+
+
+def relate(a: Geometry, b: Geometry, predicate: str) -> bool:
+    """Evaluate a named spatial predicate with DE-9IM semantics.
+
+    ``intersects``/``disjoint`` take the exact fast path
+    (:func:`_intersects`); every other predicate is its OGC SFS pattern
+    matched against :func:`de9im`, validated against the reference's golden
+    fixture (``SparkSQLSpatialRelationshipsTest.scala``). ``crosses`` and
+    ``overlaps`` depend on the two dimensions, and are False without
+    computing the matrix where the definition excludes the pair.
+    """
+    predicate = predicate.lower()
+    if predicate in ("intersects", "disjoint"):
+        return _intersects(a, b) == (predicate == "intersects")
+    if predicate == "crosses":
+        if a.dim == b.dim:
+            patterns = ("0********",) if a.dim == 1 else ()
+        else:
+            patterns = ("T*T******",) if a.dim < b.dim else ("T*****T**",)
+    elif predicate == "overlaps":
+        if a.dim != b.dim:
+            patterns = ()
+        else:
+            patterns = ("1*T***T**",) if a.dim == 1 else ("T*T***T**",)
+    elif predicate in _PATTERNS:
+        patterns = _PATTERNS[predicate]
+    else:
+        raise ValueError(f"unknown predicate: {predicate}")
+    if not patterns:
+        return False
+    matrix = de9im(a, b)
+    return any(de9im_matches(matrix, p) for p in patterns)
+
+
+def _intersects(a: Geometry, b: Geometry) -> bool:
+    """Exact intersects: bbox reject, then any edge contact by the segment
+    primitive; without one, every path and ring lies wholly inside or
+    outside the other geometry, so one vertex of each settles it."""
+    abounds, bbounds = a.bounds(), b.bounds()
+    if (
+        abounds[2] < bbounds[0] - _EPS
+        or abounds[0] > bbounds[2] + _EPS
+        or abounds[3] < bbounds[1] - _EPS
+        or abounds[1] > bbounds[3] + _EPS
+    ):
+        return False
+    pa, pb = _prepare(a), _prepare(b)
+    if pa.segs.size and pb.segs.size:
+        cross, touch, _, _ = _segment_pairs(pa.segs, pb.segs)
+        if cross.any() or touch.any():
+            return True
+    return bool((_locate(pa.heads, pb) != _E).any() or (_locate(pb.heads, pa) != _E).any())
+
+
+# ---------------------------------------------------------------------------
+# Simplicity, closest point (st_isSimple / st_closestPoint analogs —
+# GeometricAccessorFunctions.scala:55-70)
+# ---------------------------------------------------------------------------
+
 def is_simple(g: Geometry) -> bool:
-    """OGC isSimple: no self-intersections (anchored at non-adjacent
-    segments); MultiPoint simple iff no duplicate points."""
-    if g.kind in ("Point",):
-        return True
-    if g.kind == "MultiPoint":
-        seen = set()
-        for p in _iter_points(g):
-            key = (round(p[0], 12), round(p[1], 12))
-            if key in seen:
-                return False
-            seen.add(key)
-        return True
-    for part in g.parts():
-        segs = []
-        for path in part.rings():
-            arr = np.asarray(path, dtype=np.float64)
-            closed = np.allclose(arr[0], arr[-1])
-            n = arr.shape[0] - 1
-            for i in range(n):
-                segs.append((arr[i], arr[i + 1], i, n, closed))
-        for i in range(len(segs)):
-            for j in range(i + 1, len(segs)):
-                a0, a1, ia, na, ca = segs[i]
-                b0, b1, ib, nb, cb = segs[j]
-                adjacent = abs(ia - ib) == 1 or (
-                    ca and {ia, ib} == {0, na - 1}
-                )
-                sa = np.array([[a0[0], a0[1], a1[0], a1[1]]])
-                sb = np.array([[b0[0], b0[1], b1[0], b1[1]]])
-                if adjacent:
-                    # only a proper (interior) crossing counts for neighbours
-                    d1 = _orient(a0[0], a0[1], a1[0], a1[1], b0[0], b0[1])
-                    d2 = _orient(a0[0], a0[1], a1[0], a1[1], b1[0], b1[1])
-                    d3 = _orient(b0[0], b0[1], b1[0], b1[1], a0[0], a0[1])
-                    d4 = _orient(b0[0], b0[1], b1[0], b1[1], a1[0], a1[1])
-                    if (d1 * d2) < -_EPS and (d3 * d4) < -_EPS:
-                        return False
-                elif _any_segment_intersection(sa, sb):
-                    return False
+    """OGC isSimple: no path or ring intersects itself other than where
+    consecutive edges share their vertex (rings are tested one by one, as
+    JTS does); MultiPoint simple iff no duplicate points."""
+    if g.dim == 0:
+        pts = np.round(np.asarray(list(_iter_points(g)), dtype=np.float64), 12)
+        return len(np.unique(pts, axis=0)) == len(pts)
+    for path in g.rings():
+        segs = np.concatenate([path[:-1], path[1:]], axis=1)
+        n = segs.shape[0]
+        i, j = np.triu_indices(n, 1)
+        closed = bool(np.allclose(path[0], path[-1]))
+        adjacent = (j - i == 1) | (closed & (i == 0) & (j == n - 1))
+        cross, touch, _, _ = _segment_pairs(segs, segs)
+        if (cross[i, j] | (touch[i, j] & ~adjacent)).any():
+            return False
     return True
+
+
+def _nearest(pts: np.ndarray, segs: np.ndarray):
+    """(N, E) coordinates of the point on each segment nearest each point."""
+    x0, y0, x1, y1 = (segs[:, i] for i in range(4))
+    t = np.clip(_param(pts[:, :1], pts[:, 1:], x0, y0, x1, y1), 0.0, 1.0)
+    return x0 + t * (x1 - x0), y0 + t * (y1 - y0)
 
 
 def closest_point_on(a: Geometry, b: Geometry) -> tuple[float, float]:
     """Point ON geometry ``a`` nearest to geometry ``b`` (planar), the JTS
-    closestPoints[0] analog behind st_closestPoint."""
+    closestPoints[0] analog behind st_closestPoint.
+
+    If they intersect, a common point: a vertex of one covered by the other,
+    else a crossing node. Otherwise a closest pair has a vertex on one side,
+    so the answer is a vertex of ``a`` or the projection onto ``a`` of a
+    vertex of ``b``, whichever lies nearest ``b``'s edges or points.
+    """
     if a.kind == "Point":
         return (float(a.coords[0]), float(a.coords[1]))
-    ea = _edge_array(a)
-    if a.kind == "MultiPoint" or ea.shape[0] == 0:
-        best, bd = None, np.inf
-        eb = _edge_array(b)
-        for p in _iter_points(a):
-            d = _point_to_geom_dist(p, b, eb)
-            if d < bd:
-                best, bd = (float(p[0]), float(p[1])), d
-        return best
-    if _intersects(a, b) and a.dim == 2:
-        p = _interior_probe(b) or next(_iter_points(b))
-        if _classify_point(p, a) != "exterior":
-            return (float(p[0]), float(p[1]))
-    best, bd = None, np.inf
-    # candidates: projections of b's sample points onto a's edges
-    for p in _sample_points(b) + list(_iter_points(b)):
-        px, py = float(p[0]), float(p[1])
-        x0, y0, x1, y1 = ea[:, 0], ea[:, 1], ea[:, 2], ea[:, 3]
-        dx, dy = x1 - x0, y1 - y0
-        L2 = np.maximum(dx * dx + dy * dy, _EPS)
-        t = np.clip(((px - x0) * dx + (py - y0) * dy) / L2, 0.0, 1.0)
-        qx, qy = x0 + t * dx, y0 + t * dy
-        d = np.hypot(qx - px, qy - py)
-        i = int(np.argmin(d))
-        if d[i] < bd:
-            best, bd = (float(qx[i]), float(qy[i])), float(d[i])
-    return best
-
-
-def _point_to_geom_dist(p, g: Geometry, eg: np.ndarray) -> float:
-    px, py = float(p[0]), float(p[1])
-    if eg.shape[0] == 0:
-        pts = np.asarray(list(_iter_points(g)), dtype=np.float64)
-        return float(np.hypot(pts[:, 0] - px, pts[:, 1] - py).min())
-    x0, y0, x1, y1 = eg[:, 0], eg[:, 1], eg[:, 2], eg[:, 3]
-    dx, dy = x1 - x0, y1 - y0
-    L2 = np.maximum(dx * dx + dy * dy, _EPS)
-    t = np.clip(((px - x0) * dx + (py - y0) * dy) / L2, 0.0, 1.0)
-    return float(np.hypot(x0 + t * dx - px, y0 + t * dy - py).min())
+    pa, pb = _prepare(a), _prepare(b)
+    if _intersects(a, b):
+        cross, _, ta, _ = _segment_pairs(pa.segs, pb.segs)
+        ia, ib = np.nonzero(cross)
+        s, t = pa.segs[ia], ta[ia, ib][:, None]
+        common = np.concatenate([
+            pb.pts[_locate(pb.pts, pa) != _E],
+            pa.pts[_locate(pa.pts, pb) != _E],
+            s[:, :2] + t * (s[:, 2:] - s[:, :2]),
+        ])
+        return (float(common[0, 0]), float(common[0, 1]))
+    cands = pa.pts
+    if pa.segs.size:
+        qx, qy = _nearest(pb.pts, pa.segs)
+        k = np.hypot(qx - pb.pts[:, :1], qy - pb.pts[:, 1:]).argmin(axis=1)
+        r = np.arange(len(k))
+        cands = np.concatenate([cands, np.stack([qx[r, k], qy[r, k]], axis=1)])
+    if pb.segs.size:
+        qx, qy = _nearest(cands, pb.segs)
+        d = np.hypot(qx - cands[:, :1], qy - cands[:, 1:]).min(axis=1)
+    else:
+        d = np.hypot(cands[:, :1] - pb.pts[:, 0], cands[:, 1:] - pb.pts[:, 1]).min(axis=1)
+    p = cands[d.argmin()]
+    return (float(p[0]), float(p[1]))
 
 
 def buffer_point_deg(lon: float, lat: float, meters: float, n: int = 100) -> Geometry:

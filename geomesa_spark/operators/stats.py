@@ -141,11 +141,13 @@ def frequency(df: DataFrame, col: str, group_cols: Sequence[str] = ()) -> DataFr
     return enumeration(df, col, group_cols)
 
 
-def iterator_stack_count(df: DataFrame) -> DataFrame:
+def iterator_stack_count(df: DataFrame, group_cols: Sequence[str] = ()) -> DataFrame:
     """IteratorStackCount analog: no server-side iterators exist, so report
-    the number of executor partitions that hold rows."""
-    return df.select(F.spark_partition_id().alias("pid")).agg(
-        F.countDistinct("pid").alias("cnt")
+    -> (*group_cols, cnt), the number of executor partitions that hold rows."""
+    return (
+        df.select(*group_cols, F.spark_partition_id().alias("pid"))
+        .groupBy(*group_cols)
+        .agg(F.countDistinct("pid").alias("cnt"))
     )
 
 
@@ -221,7 +223,7 @@ def _eval_stat(df: DataFrame, part: str, group_cols: list[str]) -> DataFrame:
             res=int(args[4]) if len(args) > 4 else 4,
         )
     if name == "IteratorStackCount":
-        return iterator_stack_count(df)
+        return iterator_stack_count(df, group_cols)
     raise ValueError(f"unknown stat: {name}")
 
 

@@ -202,3 +202,138 @@ def test_rect_relation():
     assert G.rect_relation(poly, -5, -5, -1, -1) == "disjoint"
     assert G.rect_relation(poly, -1, -1, 1, 1) == "overlapping"
     assert G.rect_relation(poly, -5, -5, 15, 15) == "overlapping"  # rect ⊃ poly
+    # a hole wholly inside the rect: the rect is not contained
+    holed = G.from_wkt(WKTS[3])
+    assert G.rect_relation(holed, 1, 1, 5, 5) == "overlapping"
+    assert G.rect_relation(holed, 5, 5, 9, 9) == "contained"
+    # a later part wholly inside the rect: the rect is not disjoint
+    multi = G.from_wkt(WKTS[6])
+    assert G.rect_relation(multi, 4, 4, 7, 7) == "overlapping"
+    assert G.rect_relation(multi, 2, 2, 4, 4) == "disjoint"
+
+
+# --- the exact DE-9IM kernel: hand-derived matrices --------------------------
+
+NOTCH = "POLYGON((0 0, 10 0, 10 1, 0.6 1, 0.6 0.2, 0.5 0.2, 0.5 1, 0 1, 0 0))"
+CONCAVE = "POLYGON((0 0, 3 0, 3 1, 1 1, 1 2, 3 2, 3 3, 0 3, 0 0))"  # C-shape
+HOLED = "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))"
+BIG_BOX = "POLYGON((-1 -1, 4 -1, 4 4, -1 4, -1 -1))"
+UNIT = "POLYGON((0 0, 1 0, 1 1, 0 1, 0 0))"
+
+# (a, b, de9im(a, b), the named predicates that hold for (a, b))
+KERNEL_CASES = {
+    # the line runs through the notch: its piece over the gap is exterior
+    "notch_line": (NOTCH, "LINESTRING(0.1 0.5, 9.9 0.5)", "1020F11F2",
+                   {"crosses", "intersects"}),
+    "notch_rect": (NOTCH, "POLYGON((0.1 0.4, 9.9 0.4, 9.9 0.6, 0.1 0.6, 0.1 0.4))",
+                   "212101212", {"overlaps", "intersects"}),
+    # the C's vertex mean (1.5, 1.5) lies in its own gap
+    "box_contains_c": (BIG_BOX, CONCAVE, "212FF1FF2",
+                       {"contains", "covers", "intersects"}),
+    "c_within_box": (CONCAVE, BIG_BOX, "2FF1FF212",
+                     {"within", "coveredby", "intersects"}),
+    # the box's centre lies in the hole
+    "box_spans_hole": (HOLED, "POLYGON((3 3, 7 3, 7 7, 3 7, 3 3))", "2121F12F2",
+                       {"overlaps", "intersects"}),
+    "box_in_hole": (HOLED, "POLYGON((4.5 4.5, 5.5 4.5, 5.5 5.5, 4.5 5.5, 4.5 4.5))",
+                    "FF2FF1212", {"disjoint"}),
+    "shared_edge": (UNIT, "POLYGON((1 0, 2 0, 2 1, 1 1, 1 0))", "FF2F11212",
+                    {"touches", "intersects"}),
+    # other start vertex, clockwise
+    "equal_boxes": (UNIT, "POLYGON((1 1, 1 0, 0 0, 0 1, 1 1))", "2FFF1FFF2",
+                    {"contains", "covers", "within", "coveredby", "equals", "intersects"}),
+}
+NAMED = ("contains", "covers", "within", "coveredby", "overlaps", "crosses",
+         "touches", "equals", "intersects", "disjoint")
+
+
+@pytest.mark.parametrize("case", sorted(KERNEL_CASES))
+def test_de9im_kernel(case):
+    a_wkt, b_wkt, matrix, holds = KERNEL_CASES[case]
+    a, b = G.from_wkt(a_wkt), G.from_wkt(b_wkt)
+    assert G.de9im(a, b) == matrix
+    transposed = "".join(matrix[3 * c + r] for r in range(3) for c in range(3))
+    assert G.de9im(b, a) == transposed
+    assert {p for p in NAMED if G.relate(a, b, p)} == holds
+
+
+def test_intersects_fast_path_agrees_with_kernel():
+    geoms = [BOX_REF, *POINTS.values(), *BOXES.values()]
+    geoms += [w for a, b, _, _ in KERNEL_CASES.values() for w in (a, b)]
+    geoms = [G.from_wkt(w) for w in geoms]
+    patterns = ("T********", "*T*******", "***T*****", "****T****")
+    for a in geoms:
+        for b in geoms:
+            m = G.de9im(a, b)
+            want = any(G.de9im_matches(m, p) for p in patterns)
+            assert G.relate(a, b, "intersects") is want, (a.wkt(), b.wkt(), m)
+
+
+
+def test_de9im_matches_grid_oracle():
+    """Random integer rectilinear points, lines and polygons (holes and
+    multi-parts included), rotated by 30 degrees, against an independent
+    oracle: every face, edge and vertex of such an arrangement holds a point
+    of the half-unit grid, whose cell centres, edge midpoints and integer
+    points are located one by one (dimension 2, 1 and 0)."""
+    rng = np.random.default_rng(11)
+    c, s = np.cos(np.pi / 6), np.sin(np.pi / 6)
+
+    def rot(t):
+        if isinstance(t[0], float):
+            return (c * t[0] - s * t[1], s * t[0] + c * t[1])
+        return tuple(rot(u) for u in t)
+
+    def steps():  # rectilinear polygon: a histogram of 1-4 columns
+        n, (x0, y0) = rng.integers(1, 5), rng.integers(-3, 4, 2)
+        ring = [(0, 0), (n, 0)]
+        for i, h in reversed(list(enumerate(rng.integers(1, 5, n)))):
+            ring += [(i + 1, h), (i, h)]
+        ring = [p for k, p in enumerate(ring + [(0, 0)]) if k == 0 or p != ring[k - 1]]
+        return ((tuple((float(x + x0), float(y + y0)) for x, y in ring),),)
+
+    def gen():
+        kind = rng.integers(0, 5)
+        if kind == 0:
+            return "Polygon", steps()[0]
+        if kind == 1:  # box with a hole
+            x0, y0 = rng.integers(-3, 3, 2)
+            w, h = rng.integers(3, 7, 2)
+            hx, hy = x0 + rng.integers(1, w - 1), y0 + rng.integers(1, h - 1)
+            hole = G.box(hx, hy, hx + rng.integers(1, x0 + w - hx), hy + rng.integers(1, y0 + h - hy))
+            rings = (G.box(x0, y0, x0 + w, y0 + h).coords[0], hole.coords[0][::-1])
+            return "Polygon", tuple(tuple((float(x), float(y)) for x, y in r) for r in rings)
+        if kind == 2:  # rectilinear path turning at every vertex
+            p, axis, path = rng.integers(-3, 5, 2), rng.integers(0, 2), []
+            path.append(tuple(map(float, p)))
+            for _ in range(rng.integers(1, 4)):
+                axis = 1 - axis
+                p = p.copy()
+                p[axis] += rng.choice([-1, 1]) * rng.integers(1, 4)
+                path.append(tuple(map(float, p)))
+            return "LineString", tuple(path)
+        if kind == 3:
+            return "MultiPoint", tuple(tuple(map(float, rng.integers(-3, 6, 2))) for _ in range(2))
+        a, b = steps(), steps()
+        if G.relate(G.Geometry("Polygon", a[0]), G.Geometry("Polygon", b[0]), "intersects"):
+            return "Polygon", a[0]
+        return "MultiPolygon", a + b
+
+    for _ in range(300):
+        a, b = (G.Geometry(*gen()) for _ in range(2))
+        if not (G.is_simple(a) and G.is_simple(b)):
+            continue
+        x0, y0, x1, y1 = np.r_[np.minimum(a.bounds()[:2], b.bounds()[:2]) - 1,
+                               np.maximum(a.bounds()[2:], b.bounds()[2:]) + 1]
+        gx, gy = np.meshgrid(np.arange(x0, x1 + 0.25, 0.5), np.arange(y0, y1 + 0.25, 0.5))
+        grid = np.stack([gx.ravel(), gy.ravel()], axis=1)
+        a, b = G.Geometry(a.kind, rot(a.coords)), G.Geometry(b.kind, rot(b.coords))
+        pts = np.stack([c * grid[:, 0] - s * grid[:, 1], s * grid[:, 0] + c * grid[:, 1]], axis=1)
+        want = np.full((3, 3), -1)
+        np.maximum.at(
+            want,
+            (G._locate(pts, G._prepare(a)), G._locate(pts, G._prepare(b))),
+            (grid % 1 != 0).sum(axis=1),
+        )
+        want = "".join("F" if v < 0 else str(v) for v in want.ravel())
+        assert G.de9im(a, b) == want, (a.wkt(), b.wkt())

@@ -65,6 +65,26 @@ def test_geometry_join_parity(spark, predicate):
     assert len(want_pairs) > 10  # fixture actually exercises matches
 
 
+def test_geometry_join_box_around_concave_polygon(spark):
+    """The refine must find a row whose box contains a concave driver
+    polygon with no boundary contact (the C's vertex mean lies in its gap)."""
+    polys = {"c": "POLYGON((0 0, 3 0, 3 1, 1 1, 1 2, 3 2, 3 3, 0 3, 0 0))"}
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "gid": ["around", "gap", "far"],
+                "geom": [
+                    to_wkb(box(-1, -1, 4, 4)),
+                    to_wkb(box(1.5, 1.2, 2.5, 1.8)),  # inside the C's gap
+                    to_wkb(box(10, 10, 11, 11)),
+                ],
+            }
+        )
+    )
+    out = geometry_join(df, polys, geom_col="geom", row_id="gid", predicate="intersects")
+    assert sorted(out.select("gid", "poly_id").collect()) == [("around", "c")]
+
+
 def test_geometry_join_dedup(spark):
     """A geometry spanning many cells must appear once per polygon."""
     big = box(-25.0, -15.0, 8.0, 20.0)  # inside 'west', spans many cells

@@ -138,6 +138,13 @@ class TestStatsDSL:
         assert sorted(got.columns) == ["bucket", "cat", "n"]
         assert got.set_index(["cat", "bucket"])["n"].to_dict() == want.to_dict()
 
+    def test_groupby_iterator_stack_count(self, df):
+        spec = "GroupBy(cat, IteratorStackCount())"
+        got = run_stats(df.coalesce(1), spec)[spec].toPandas()
+        assert sorted(got.columns) == ["cat", "cnt"]
+        assert sorted(got["cat"]) == ["a", "b"]
+        assert (got["cnt"] == 1).all()
+
     def test_z3_histogram(self, df):
         out = z3_histogram(df, period="day", res=2).toPandas()
         assert out["n"].sum() == 100

@@ -204,6 +204,14 @@ def test_st_closest_point(spark):
     assert _sql1(
         spark, f"st_asText(st_closestPoint({line}, st_geomFromWKT('POINT(3 4)')))"
     ) == "POINT (3 0)"
+    # the nearest point is a vertex of the first geometry
+    vee = "st_geomFromWKT('LINESTRING(0 1, 1 0.1, 2 1)')"
+    axis = "st_geomFromWKT('LINESTRING(-10 0, 10 0)')"
+    assert _sql1(spark, f"st_asText(st_closestPoint({vee}, {axis}))") == "POINT (1 0.1)"
+    # a box containing a C-shape: the answer is a common point, C's first vertex
+    big = "st_geomFromWKT('POLYGON((-1 -1, 4 -1, 4 4, -1 4, -1 -1))')"
+    c = "st_geomFromWKT('POLYGON((0 0, 3 0, 3 1, 1 1, 1 2, 3 2, 3 3, 0 3, 0 0))')"
+    assert _sql1(spark, f"st_asText(st_closestPoint({big}, {c}))") == "POINT (0 0)"
 
 
 def test_make_line_polygon(spark):
