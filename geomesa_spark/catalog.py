@@ -1725,7 +1725,7 @@ def q_geo_geom_join(spark, sf_dir):
         "event_id", "value", "geom"
     )
     polys = {pid: _box_wkt(b) for pid, b in BOXES.items()}
-    out = geometry_join(geoms, polys, geom_col="geom", row_id="event_id")
+    out = geometry_join(geoms, polys, geom_col="geom")
     return out.groupBy("poly_id").agg(
         F.count("*").alias("n_geoms"),
         F.round(F.sum("value"), 4).alias("sum_value"),
@@ -1832,9 +1832,9 @@ GJT_WINDOWS = {
 
 def q_geo_geom_join_time(spark, sf_dir):
     """Time-extended non-point geometry join (XZ3 analog): event boxes join
-    region polygons only within each polygon's [t0, t1) window; the candidate
-    key is (bbox cell, epoch-week bin) so out-of-window epochs are pruned by
-    the join, not scanned (XZ3SFC.scala / Z3IndexKeySpace.scala:98-160)."""
+    region polygons only within each polygon's [t0, t1) window; each row's
+    candidate polygons are tested against their windows before any geometry
+    test (XZ3SFC.scala)."""
     from .operators.geometry_join import geometry_join_time
 
     geoms = _event_box_geoms(_points(spark, sf_dir)).select(
@@ -1842,10 +1842,7 @@ def q_geo_geom_join_time(spark, sf_dir):
         F.col("ts").cast("timestamp").cast("long").cast("double").alias("ts_s"),
     )
     polys = {pid: _box_wkt(b) for pid, b in BOXES.items()}
-    out = geometry_join_time(
-        geoms, polys, GJT_WINDOWS, geom_col="geom", ts="ts_s",
-        row_id="event_id", period_s=GJT_WEEK,
-    )
+    out = geometry_join_time(geoms, polys, GJT_WINDOWS, geom_col="geom", ts="ts_s")
     return out.groupBy("poly_id").agg(
         F.count("*").alias("n_geoms"),
         F.round(F.sum("value"), 4).alias("sum_value"),

@@ -29,6 +29,7 @@ from __future__ import annotations
 import math
 import struct
 from dataclasses import dataclass
+from functools import cached_property
 from typing import NamedTuple
 
 import numpy as np
@@ -50,6 +51,13 @@ class Geometry:
 
     # --- structure accessors -------------------------------------------------
     def bounds(self) -> tuple[float, float, float, float]:
+        return self._bounds
+
+    # computed once per object: a driver polygon is refined against every
+    # row of a join (cached_property writes the instance __dict__, which a
+    # frozen dataclass allows; neither enters eq or hash)
+    @cached_property
+    def _bounds(self) -> tuple[float, float, float, float]:
         pts = np.asarray(list(_iter_points(self)), dtype=np.float64)
         return (
             float(pts[:, 0].min()),
@@ -57,6 +65,13 @@ class Geometry:
             float(pts[:, 0].max()),
             float(pts[:, 1].max()),
         )
+
+    @cached_property
+    def _prepared(self) -> _Prepared:
+        p = _prepare(self)
+        for a in p[1:]:
+            a.flags.writeable = False  # shared by every later caller
+        return p
 
     @property
     def dim(self) -> int:
@@ -613,7 +628,7 @@ def de9im(a: Geometry, b: Geometry) -> str:
     bounded component of ``I(a) ∩ I(b)``, ``I(a) ∩ E(b)`` or ``E(a) ∩ I(b)``
     is fenced by such sub-edges.
     """
-    pa, pb = _prepare(a), _prepare(b)
+    pa, pb = a._prepared, b._prepared
     m = np.full((3, 3), -1)
     m[_E, _E] = 2
     # where an edge's own points lie: interior of a line, boundary of an area
@@ -714,7 +729,7 @@ def _intersects(a: Geometry, b: Geometry) -> bool:
         or abounds[1] > bbounds[3] + _EPS
     ):
         return False
-    pa, pb = _prepare(a), _prepare(b)
+    pa, pb = a._prepared, b._prepared
     if pa.segs.size and pb.segs.size:
         cross, touch, _, _ = _segment_pairs(pa.segs, pb.segs)
         if cross.any() or touch.any():
@@ -723,7 +738,8 @@ def _intersects(a: Geometry, b: Geometry) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Simplicity, closest point (st_isSimple / st_closestPoint analogs —
+# Simplicity, closest point, distance (st_isSimple / st_closestPoint /
+# st_distance analogs —
 # GeometricAccessorFunctions.scala:55-70)
 # ---------------------------------------------------------------------------
 
@@ -741,7 +757,17 @@ def is_simple(g: Geometry) -> bool:
         closed = bool(np.allclose(path[0], path[-1]))
         adjacent = (j - i == 1) | (closed & (i == 0) & (j == n - 1))
         cross, touch, _, _ = _segment_pairs(segs, segs)
+        # consecutive edges may share only their vertex: antiparallel ones
+        # fold back and overlap past it (the pair wraps round on a ring)
+        d = segs[:, 2:] - segs[:, :2]
+        nxt = np.roll(d, -1, axis=0)
+        fold = (
+            np.abs(d[:, 0] * nxt[:, 1] - d[:, 1] * nxt[:, 0])
+            <= _EPS * np.hypot(*d.T) * np.hypot(*nxt.T)
+        ) & ((d * nxt).sum(axis=1) < 0)
         if (cross[i, j] | (touch[i, j] & ~adjacent)).any():
+            return False
+        if fold[: n if closed else n - 1].any():
             return False
     return True
 
@@ -764,7 +790,7 @@ def closest_point_on(a: Geometry, b: Geometry) -> tuple[float, float]:
     """
     if a.kind == "Point":
         return (float(a.coords[0]), float(a.coords[1]))
-    pa, pb = _prepare(a), _prepare(b)
+    pa, pb = a._prepared, b._prepared
     if _intersects(a, b):
         cross, _, ta, _ = _segment_pairs(pa.segs, pb.segs)
         ia, ib = np.nonzero(cross)
@@ -775,6 +801,16 @@ def closest_point_on(a: Geometry, b: Geometry) -> tuple[float, float]:
             s[:, :2] + t * (s[:, 2:] - s[:, :2]),
         ])
         return (float(common[0, 0]), float(common[0, 1]))
+    cands, d = _disjoint_candidates(pa, pb)
+    p = cands[d.argmin()]
+    return (float(p[0]), float(p[1]))
+
+
+def _disjoint_candidates(pa: _Prepared, pb: _Prepared):
+    """Where a closest pair of two disjoint geometries lies on ``pa``: a
+    closest pair has a vertex on one side, so it is a vertex of ``pa`` or
+    the projection onto ``pa`` of a vertex of ``pb``. -> (candidate points
+    (N, 2), the distance of each to ``pb``'s edges or points)."""
     cands = pa.pts
     if pa.segs.size:
         qx, qy = _nearest(pb.pts, pa.segs)
@@ -783,11 +819,16 @@ def closest_point_on(a: Geometry, b: Geometry) -> tuple[float, float]:
         cands = np.concatenate([cands, np.stack([qx[r, k], qy[r, k]], axis=1)])
     if pb.segs.size:
         qx, qy = _nearest(cands, pb.segs)
-        d = np.hypot(qx - cands[:, :1], qy - cands[:, 1:]).min(axis=1)
-    else:
-        d = np.hypot(cands[:, :1] - pb.pts[:, 0], cands[:, 1:] - pb.pts[:, 1]).min(axis=1)
-    p = cands[d.argmin()]
-    return (float(p[0]), float(p[1]))
+        return cands, np.hypot(qx - cands[:, :1], qy - cands[:, 1:]).min(axis=1)
+    return cands, np.hypot(cands[:, :1] - pb.pts[:, 0], cands[:, 1:] - pb.pts[:, 1]).min(axis=1)
+
+
+def distance(a: Geometry, b: Geometry) -> float:
+    """Planar distance between two geometries (st_distance): 0 when they
+    intersect, else the nearest of :func:`_disjoint_candidates`."""
+    if _intersects(a, b):
+        return 0.0
+    return float(_disjoint_candidates(a._prepared, b._prepared)[1].min())
 
 
 def buffer_point_deg(lon: float, lat: float, meters: float, n: int = 100) -> Geometry:

@@ -542,26 +542,10 @@ def _build():
 
     # measures -------------------------------------------------------------
     def dist_planar(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            if x is None or y is None:
-                out.append(None)
-                continue
-            ga, gb = _parse(x), _parse(y)
-            if ga.kind == "Point" and gb.kind == "Point":
-                out.append(
-                    math.hypot(
-                        ga.coords[0] - gb.coords[0], ga.coords[1] - gb.coords[1]
-                    )
-                )
-            else:
-                pa = np.asarray(list(G._iter_points(ga)))
-                pb = np.asarray(list(G._iter_points(gb)))
-                d = np.hypot(
-                    pa[:, None, 0] - pb[None, :, 0], pa[:, None, 1] - pb[None, :, 1]
-                )
-                out.append(float(d.min()))
-        return pd.Series(out)
+        return pd.Series([
+            None if x is None or y is None else G.distance(_parse(x), _parse(y))
+            for x, y in zip(a, b)
+        ])
 
     reg["st_distance"] = (F.pandas_udf(dist_planar, T.DoubleType()), "geom_a, geom_b")
 

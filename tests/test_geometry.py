@@ -196,6 +196,15 @@ def test_buffer_point():
     assert (lon1 - lon0) > (lat1 - lat0)
 
 
+def test_is_simple_fold_back():
+    """A line whose edge folds back onto its previous edge overlaps itself
+    past their shared vertex (JTS: not simple); collinear edges running on
+    stay simple."""
+    assert not G.is_simple(G.from_wkt("LINESTRING(3 0, 3 2, 3 1)"))
+    assert not G.is_simple(G.from_wkt("LINESTRING(0 0, 4 0, 0 0)"))
+    assert G.is_simple(G.from_wkt("LINESTRING(0 0, 1 0, 2 0)"))
+
+
 def test_rect_relation():
     poly = G.from_wkt("POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))")
     assert G.rect_relation(poly, 2, 2, 3, 3) == "contained"

@@ -49,7 +49,7 @@ def test_geometry_join_parity(spark, predicate):
     )
     df = spark.createDataFrame(pdf)
     got = (
-        geometry_join(df, POLYS, geom_col="geom", row_id="gid", predicate=predicate)
+        geometry_join(df, POLYS, geom_col="geom", predicate=predicate)
         .select("gid", "poly_id")
         .toPandas()
     )
@@ -81,7 +81,7 @@ def test_geometry_join_box_around_concave_polygon(spark):
             }
         )
     )
-    out = geometry_join(df, polys, geom_col="geom", row_id="gid", predicate="intersects")
+    out = geometry_join(df, polys, geom_col="geom", predicate="intersects")
     assert sorted(out.select("gid", "poly_id").collect()) == [("around", "c")]
 
 
@@ -91,7 +91,7 @@ def test_geometry_join_dedup(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"gid": ["big"], "geom": [to_wkb(big)]})
     )
-    out = geometry_join(df, POLYS, geom_col="geom", row_id="gid").toPandas()
+    out = geometry_join(df, POLYS, geom_col="geom").toPandas()
     assert list(out["poly_id"]).count("west") == 1
 
 
@@ -104,55 +104,94 @@ def test_geometry_join_generated_rid(spark):
     assert set(out["poly_id"]) == {"west"}  # box(0..1) is west of east's x>=5
 
 
+def _matcher(polys=POLYS, res_j=8):
+    """geometry_join's row-local batch body over ``polys``, called on the
+    driver: (geoms, ts, windows) -> per row, the matched poly ids."""
+    from geomesa_spark.operators.geometry_join import _geom_match, _poly_cells_at
+    from geomesa_spark.operators.spatial_join import prepare_polygons
+
+    parsed = {pid: from_wkt(w) for pid, w in polys.items()}
+    cell_polys = _poly_cells_at(prepare_polygons(parsed, max_cells=2048).cover_rows, res_j)
+
+    def match(geoms, ts=None, windows=None, predicate="intersects"):
+        wkb = [None if g is None else to_wkb(g) for g in geoms]
+        ts = [None] * len(geoms) if ts is None else ts
+        return _geom_match(wkb, ts, cell_polys, parsed, predicate, res_j, windows)
+
+    return match
+
+
+def test_geom_match_distinct_ids_and_nulls():
+    """A row spanning many cells of both polygons gets each id once; a null
+    geometry, or a null ts when windows are given, matches nothing."""
+    match = _matcher()
+    big = box(-25.0, -15.0, 30.0, 20.0)  # many res-8 cells of west and east
+    assert match([big, None, box(60, 60, 61, 61)]) == [["east", "west"], [], []]
+    windows = {"west": (0.0, 10.0), "east": (0.0, 10.0)}
+    assert match([big, big, big], ts=[5.0, None, float("nan")], windows=windows) == [
+        ["east", "west"], [], []
+    ]
+
+
+def test_geom_match_half_open_windows():
+    """[t0, t1) is half-open: a row at exactly t0 matches, one at t1 does
+    not; an empty or reversed window matches nothing, and neither does a
+    polygon missing from the windows."""
+    match = _matcher()
+    g = box(-10, -10, -8, -8)  # inside 'west' only
+    t0, t1 = 1_704_067_200.0, 1_705_276_800.0
+    rows, ts = [g] * 3, [t0, t1 - 1.0, t1]
+    assert match(rows, ts, {"west": (t0, t1)}) == [["west"], ["west"], []]
+    assert match(rows, ts, {"west": (t0, t0)}) == [[], [], []]
+    assert match(rows, ts, {"west": (t1, t0)}) == [[], [], []]
+    both = box(6, 0, 9, 3)  # inside 'west' and 'east'
+    assert match([both], [t0], {"east": (t0, t1)}) == [["east"]]
+    assert match([both], [t0], {}) == [[]]
+
+
 def test_geometry_join_time_semantics_and_pruning(spark):
-    """XZ3 analog: (bbox cell, epoch bin) keys. Semantics: a row joins a
-    polygon iff it intersects spatially AND its ts falls in the polygon's
-    window. Pruning: rows in epochs the window never touches produce ZERO
-    candidate pairs (they are filtered by the join key, not by a refine)."""
-    import numpy as np
-    from geomesa_spark.operators.geometry_join import (
-        _geom_candidates,
-        geometry_join_time,
-    )
+    """XZ3 analog: a row joins a polygon iff it intersects spatially AND
+    its ts falls in the polygon's window. Pruning: the time test runs on
+    the row's candidate ids, so an out-of-window row never reaches a
+    relate, end to end and in the batch body."""
+    from unittest import mock
+
+    from geomesa_spark.operators.geometry_join import geometry_join_time
+
+    gj = sys.modules["geomesa_spark.operators.geometry_join"]
 
     week = 604_800
-    t0 = 1_704_067_200  # 2024-01-01, epoch-aligned enough for bins
+    t0 = 1_704_067_200  # 2024-01-01
+    geoms = [
+        box(-10, -10, -8, -8),   # a: in west, week 0
+        box(-10, -10, -8, -8),   # b: in west, week 5 (outside)
+        box(11, 2, 13, 4),       # c: in east only, week 1
+        box(60, 60, 61, 61),     # d: in neither
+    ]
+    ts = [
+        float(t0 + 3 * 86400),
+        float(t0 + 5 * week + 3600),
+        float(t0 + week + 86400),
+        float(t0),
+    ]
     pdf = pd.DataFrame(
-        {
-            "gid": ["a", "b", "c", "d"],
-            "geom": [
-                to_wkb(box(-10, -10, -8, -8)),   # in west, week 0
-                to_wkb(box(-10, -10, -8, -8)),   # in west, week 5 (outside)
-                to_wkb(box(11, 2, 13, 4)),       # in east only, week 1
-                to_wkb(box(60, 60, 61, 61)),     # in neither
-            ],
-            "ts_s": [
-                float(t0 + 3 * 86400),
-                float(t0 + 5 * week + 3600),
-                float(t0 + week + 86400),
-                float(t0),
-            ],
-        }
+        {"gid": ["a", "b", "c", "d"], "geom": [to_wkb(g) for g in geoms], "ts_s": ts}
     )
     df = spark.createDataFrame(pdf)
     windows = {
         "west": (float(t0), float(t0 + 2 * week)),       # weeks 0-1
         "east": (float(t0 + week), float(t0 + 2 * week)),  # week 1 only
     }
-    out = geometry_join_time(
-        df, POLYS, windows, geom_col="geom", ts="ts_s", row_id="gid"
-    ).toPandas()
-    got = set(zip(out["gid"], out["poly_id"]))
-    assert got == {("a", "west"), ("c", "east")}
+    out = geometry_join_time(df, POLYS, windows, geom_col="geom", ts="ts_s").toPandas()
+    assert set(zip(out["gid"], out["poly_id"])) == {("a", "west"), ("c", "east")}
 
-    # pruning assertion: row b (week 5) must not even become a candidate
-    cand, rows2, rid, _, _, _ = _geom_candidates(
-        df, POLYS, "geom", "gid", 8, 2048,
-        time_windows=windows, ts="ts_s", period_s=week,
-    )
-    cpdf = cand.toPandas()
-    assert "b" not in set(cpdf["gid"])       # epoch-bin key pruned it
-    assert ("a") in set(cpdf["gid"])         # same geometry, in-window week
+    match = _matcher()
+    with mock.patch.object(gj, "relate", wraps=gj.relate) as spy:
+        assert match(geoms, ts, windows) == [["west"], [], ["east"], []]
+    related = [c.args[0].bounds() for c in spy.call_args_list]
+    # row a only: b is the same box in week 5, out of every window
+    assert related.count(geoms[1].bounds()) == 1
+    assert geoms[3].bounds() not in related  # d has no candidate cell
 
 
 def test_geometry_join_tables_brute_force(spark):
@@ -224,37 +263,33 @@ def test_geometry_join_tables_int32_ids_and_same_name_guard(spark):
 
 
 def test_geometry_join_time_window_ending_on_bin_boundary(spark):
-    """A half-open window [t0, t1) whose t1 starts an epoch bin covers bins
-    t0 // p .. t1 // p - 1 only. At epoch-second magnitudes (~1.7e9)
-    ``t1 - 1e-9 == t1``, so that form broadcast the bin starting at t1 and
-    a row in it (ts >= t1) became a candidate; an empty window on a
-    boundary got a bin too."""
-    from geomesa_spark.operators.geometry_join import (
-        _geom_candidates,
-        _window_bins,
-    )
+    """A half-open window [t0, t1) whose t1 falls on a week boundary: at
+    epoch-second magnitudes (~1.7e9) ``t1 - 1e-9 == t1``, so an end test
+    written that way would admit a row at t1; an empty window on a
+    boundary matches nothing."""
+    from geomesa_spark.operators.geometry_join import geometry_join_time
 
     week = 604_800
     t0, t1 = float(2817 * week + 100), float(2819 * week)
-    assert _window_bins(t0, t1, week).tolist() == [2817, 2818]
-    assert _window_bins(t0, t1 + 1.0, week).tolist() == [2817, 2818, 2819]
-    assert _window_bins(t1, t1, week).tolist() == []
-    assert _window_bins(t1, t0, week).tolist() == []
-    g = to_wkb(box(-10, -10, -8, -8))  # inside 'west'
+    g = box(-10, -10, -8, -8)  # inside 'west'
+    match = _matcher({"west": POLYS["west"]})
+    assert match([g] * 3, [t1 - 1.0, t1, t1 + 1.0], {"west": (t0, t1 + 1.0)}) == [
+        ["west"], ["west"], []
+    ]
     df = spark.createDataFrame(
-        pd.DataFrame({"gid": ["in", "after"], "geom": [g, g],
-                      "ts_s": [t0 + 3600.0, t1 + 3600.0]})
+        pd.DataFrame({"gid": ["in", "at_end", "after"], "geom": [to_wkb(g)] * 3,
+                      "ts_s": [t0 + 3600.0, t1, t1 + 3600.0]})
     )
 
-    def cand_ids(window):
-        cand, *_ = _geom_candidates(
-            df, {"west": POLYS["west"]}, "geom", "gid", 8, 2048,
-            time_windows={"west": window}, ts="ts_s", period_s=week,
+    def ids(window):
+        out = geometry_join_time(
+            df, {"west": POLYS["west"]}, {"west": window}, geom_col="geom", ts="ts_s"
         )
-        return set(cand.toPandas()["gid"])
+        return {r["gid"] for r in out.collect()}
 
-    assert cand_ids((t0, t1)) == {"in"}
-    assert cand_ids((t1, t1)) == set()
+    assert ids((t0, t1)) == {"in"}
+    assert ids((t1, t1)) == set()
+    assert ids((t1, t0)) == set()
 
 
 def _edge_geoms():
@@ -351,3 +386,41 @@ def test_bbox_udf_fields_in_schema_order(spark):
         spark.conf.unset(key)
     assert (row["geom_xmin"], row["geom_xmax"], row["geom_ymin"],
             row["geom_ymax"]) == (1.0, 3.0, 2.0, 4.0)
+
+
+def test_geometry_join_plan_one_python_node_per_side(spark):
+    """Over UDF-built WKB the polygon-dict join is one row-local step: one
+    geom_match ArrowEvalPython, the fixture UDF evaluated once, and no
+    exchange below geom_match but the round-robin spread (no dedup
+    exchange, no re-fetch join)."""
+    from geomesa_spark.operators.geometry_join import geometry_join
+
+    def fixture_box(x):
+        return box(x, x / 2, x + 3, x / 2 + 3)
+
+    @F.pandas_udf("binary")
+    def box_wkb(v: pd.Series) -> pd.Series:
+        return pd.Series([to_wkb(fixture_box(x)) for x in v])
+
+    rows = spark.range(200, numPartitions=1).select(
+        F.col("id").alias("gid"), box_wkb((F.col("id") % 40 - 20).cast("double")).alias("geom")
+    )
+    joined = geometry_join(rows, POLYS)
+    nodes = _python_nodes(joined)
+    assert len(nodes) == 2
+    assert sum("geom_match" in n and "ArrowEvalPython" in n for n in nodes) == 1
+    assert sum("box_wkb" in n for n in nodes) == 1
+    plan = joined._jdf.queryExecution().executedPlan().toString().splitlines()
+    exchanges = [i for i, ln in enumerate(plan) if "Exchange" in ln]
+    match_at = next(i for i, ln in enumerate(plan) if "geom_match" in ln)
+    assert len(exchanges) == 1 and exchanges[0] > match_at
+    assert "RoundRobinPartitioning" in plan[exchanges[0]]
+    got = {(r["gid"], r["poly_id"]) for r in joined.collect()}
+    parsed = {pid: from_wkt(w) for pid, w in POLYS.items()}
+    want = {
+        (i, pid)
+        for i in range(200)
+        for pid, poly in parsed.items()
+        if relate(fixture_box(i % 40 - 20), poly, "intersects")
+    }
+    assert got == want and want

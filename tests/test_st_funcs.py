@@ -100,6 +100,18 @@ def test_distance_sphere(spark):
     assert abs(d - 343_500) < 3_000
 
 
+def test_distance_planar(spark):
+    """st_distance is the distance between the geometries, not between
+    their nearest vertices: 0 when one contains the other, and a point's
+    offset from a segment's interior."""
+    sq = "st_geomFromWKT('POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))')"
+    assert _sql1(spark, f"st_distance({sq}, st_geomFromWKT('POINT(5 5)'))") == 0.0
+    line = "st_geomFromWKT('LINESTRING(0 0, 10 0)')"
+    assert _sql1(
+        spark, f"st_distance({line}, st_geomFromWKT('POINT(5 1)'))"
+    ) == pytest.approx(1.0)
+
+
 def test_translate_and_centroid(spark):
     c = _sql1(
         spark,
