@@ -58,13 +58,8 @@ class Geometry:
     # frozen dataclass allows; neither enters eq or hash)
     @cached_property
     def _bounds(self) -> tuple[float, float, float, float]:
-        pts = np.asarray(list(_iter_points(self)), dtype=np.float64)
-        return (
-            float(pts[:, 0].min()),
-            float(pts[:, 1].min()),
-            float(pts[:, 0].max()),
-            float(pts[:, 1].max()),
-        )
+        xs, ys = zip(*((p[0], p[1]) for p in _iter_points(self)))
+        return (float(min(xs)), float(min(ys)), float(max(xs)), float(max(ys)))
 
     @cached_property
     def _prepared(self) -> _Prepared:

@@ -10,9 +10,10 @@ optimizer rule living in the JVM (reference: geomesa-spark/geomesa-spark-sql
 plain ``spark.sql(...)``/``df.filter(udf(...))`` query that never touches
 this package's planner gets the index-prefilter treatment automatically.
 
-The rule (jvm/src/geomesaspark/ext/BBoxPrefilterRule.java, compiled to
-dist/geomesa-spark-ext.jar by jvm/build.sh with nothing but javac + the
-pyspark distribution's own jars) rewrites
+The rule (jvm/src/geomesaspark/ext/BBoxPrefilterRule.java, compiled into
+the engine jar by ``session.engine_jar`` with nothing but javac + the Spark
+distribution's own jars; ``jvm/build.sh`` builds the same classes into
+dist/geomesa-spark-ext.jar for spark-submit) rewrites
 
     Filter(... st_pip_wkt(lon, lat, '<WKT literal>') ...)
 
@@ -32,8 +33,6 @@ spark-submit next to the --py-files zip).
 from __future__ import annotations
 
 import itertools
-import os
-import subprocess
 
 import numpy as np
 import pandas as pd
@@ -66,34 +65,15 @@ def _sql_over_view(spark: SparkSession, df: DataFrame, prefix: str, where: str):
         spark.catalog.dropTempView(view)
 
 EXTENSION_CLASS = "geomesaspark.ext.SpatialExtensions"
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-JAR_PATH = os.path.join(_REPO, "dist", "geomesa-spark-ext.jar")
 
 
-def build_extensions_jar(force: bool = False) -> str:
-    """Compile jvm/src -> dist/geomesa-spark-ext.jar if missing OR stale
-    (any .java under jvm/src newer than the jar — a checkout that built
-    the jar before a rule change must not silently load the old rule).
-    javac + jar against pyspark's bundled jars; no other toolchain."""
-    stale = force or not os.path.exists(JAR_PATH)
-    if not stale:
-        jar_mtime = os.path.getmtime(JAR_PATH)
-        src_root = os.path.join(_REPO, "jvm", "src")
-        for root, _, files in os.walk(src_root):
-            if any(
-                f.endswith(".java")
-                and os.path.getmtime(os.path.join(root, f)) > jar_mtime
-                for f in files
-            ):
-                stale = True
-                break
-    if stale:
-        subprocess.run(
-            ["/bin/sh", os.path.join(_REPO, "jvm", "build.sh")],
-            check=True,
-            capture_output=True,
-        )
-    return JAR_PATH
+def build_extensions_jar() -> str:
+    """Path of the engine jar that holds the rule: ``session.engine_jar``,
+    compiled from jvm/src into the user cache once per hash of the
+    sources. Raises RuntimeError when it cannot be built."""
+    from .session import engine_jar
+
+    return engine_jar()
 
 
 def extended_session(
@@ -110,12 +90,11 @@ def extended_session(
         )
     from .session import get_spark
 
-    jar = build_extensions_jar()
     return get_spark(
         cpus=cpus,
         app=app,
         extra_conf={
-            "spark.jars": jar,
+            "spark.jars": build_extensions_jar(),
             "spark.sql.extensions": EXTENSION_CLASS,
             **conf,
         },

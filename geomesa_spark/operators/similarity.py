@@ -229,14 +229,21 @@ def embedding_neardup_pairs(
     )
 
 
+# driver-side training of the IVF centroids and PQ codebooks: sample bound,
+# Lloyd iterations and RNG seed (fixed, so an index build is deterministic)
+_SAMPLE_ROWS = 10_000
+_TRAIN_ITERS = 8
+_TRAIN_SEED = 42
+
+
 def train_ivf_centroids(
     vectors: DataFrame,
     dim: int,
     n_centroids: int = 64,
     vec_col: str = "embedding",
-    sample_rows: int = 10_000,
-    iters: int = 8,
-    seed: int = 42,
+    sample_rows: int = _SAMPLE_ROWS,
+    iters: int = _TRAIN_ITERS,
+    seed: int = _TRAIN_SEED,
 ) -> np.ndarray:
     """Coarse quantizer for IVF: k-means (Lloyd) on a driver-side sample.
 
@@ -244,18 +251,26 @@ def train_ivf_centroids(
     sample_rows no matter the input size); assignment happens distributed.
     Deterministic: fixed seed, fixed iteration count.
     """
+    X = _train_sample(vectors, vec_col, sample_rows, "train_ivf_centroids")
+    return _ivf_centroids(X, n_centroids, iters, seed)
+
+
+def _train_sample(vectors: DataFrame, vec_col: str, sample_rows: int, who: str) -> np.ndarray:
+    """The first ``sample_rows`` vectors as unit rows: one job, one Arrow
+    collect, shared by both trainers of an index build."""
     pdf = vectors.select(vec_col).limit(sample_rows).toPandas()
     if len(pdf) == 0:
-        raise ValueError(
-            "train_ivf_centroids: vectors table is empty — nothing to sample"
-        )
-    X = _unit_rows(pdf[vec_col])
+        raise ValueError(f"{who}: vectors table is empty — nothing to sample")
+    return _unit_rows(pdf[vec_col])
+
+
+def _ivf_centroids(X: np.ndarray, n_centroids: int, iters: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     cent = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
     for _ in range(iters):
         sims = X @ cent.T
         assign = np.argmax(sims, axis=1)
-        # vectorized Lloyd update (same form as train_pq_codebooks):
+        # vectorized Lloyd update (same form as _pq_codebooks):
         # scatter-add + count division, empty clusters keep their centroid
         sums = np.zeros_like(cent)
         np.add.at(sums, assign, X)
@@ -335,9 +350,9 @@ def train_pq_codebooks(
     m: int = 8,
     ksub: int = 256,
     vec_col: str = "embedding",
-    sample_rows: int = 10_000,
-    iters: int = 8,
-    seed: int = 42,
+    sample_rows: int = _SAMPLE_ROWS,
+    iters: int = _TRAIN_ITERS,
+    seed: int = _TRAIN_SEED,
 ) -> np.ndarray:
     """Product-quantization codebooks: -> (m, ksub, dim // m) float64.
 
@@ -349,17 +364,20 @@ def train_pq_codebooks(
     bounded at ``sample_rows`` regardless of table size: training cost
     is O(sample x ksub x dim) on the driver, never a cluster job.
     """
+    _check_pq_shape(dim, m, ksub)
+    X = _train_sample(vectors, vec_col, sample_rows, "train_pq_codebooks")
+    return _pq_codebooks(X, dim, m, ksub, iters, seed)
+
+
+def _check_pq_shape(dim: int, m: int, ksub: int) -> None:
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
     if not 1 <= ksub <= 256:
         raise ValueError(f"ksub={ksub} must fit a uint8 code (1..256)")
+
+
+def _pq_codebooks(X: np.ndarray, dim: int, m: int, ksub: int, iters: int, seed: int) -> np.ndarray:
     dsub = dim // m
-    pdf = vectors.select(vec_col).limit(sample_rows).toPandas()
-    if len(pdf) == 0:
-        raise ValueError(
-            "train_pq_codebooks: vectors table is empty — nothing to sample"
-        )
-    X = _unit_rows(pdf[vec_col])
     rng = np.random.default_rng(seed)
     books = np.empty((m, ksub, dsub), dtype=np.float64)
     k_eff = min(ksub, len(X))
@@ -426,12 +444,16 @@ def _pq_model(
     codebooks: np.ndarray | None,
     centroids: np.ndarray | None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(codebooks, centroids): the arrays given, else trained on bounded
-    driver samples."""
+    """(codebooks, centroids): the arrays given, else trained on one
+    bounded driver sample."""
     if codebooks is None:
-        codebooks = train_pq_codebooks(vectors, dim, m=m, ksub=ksub, vec_col=vec_col)
-    if centroids is None:
-        centroids = train_ivf_centroids(vectors, dim, n_centroids, vec_col)
+        _check_pq_shape(dim, m, ksub)
+    if codebooks is None or centroids is None:
+        X = _train_sample(vectors, vec_col, _SAMPLE_ROWS, "PQ index training")
+        if codebooks is None:
+            codebooks = _pq_codebooks(X, dim, m, ksub, _TRAIN_ITERS, _TRAIN_SEED)
+        if centroids is None:
+            centroids = _ivf_centroids(X, n_centroids, _TRAIN_ITERS, _TRAIN_SEED)
     return codebooks, centroids
 
 

@@ -34,12 +34,49 @@ SharedArchiveFile``), which maps those classes already parsed from one file.
   ``SPARK_CONF_DIR`` pointed at an empty cache directory instead), or when the
   cache directory cannot be written. If the JVM fails to start with the
   archive (e.g. a truncated file), the archive is moved aside to
-  ``<name>.bad`` and the session is started once more without it.
+  ``<name>.bad`` and the session is started once more without it; when
+  that start fails as well, the archive is put back and the error raised.
+
+Engine jar and the ``file:`` filesystem. Without Hadoop's native library,
+the stock local filesystem sets every permission by forking a ``chmod``
+process: one per data file, ``.crc`` sidecar and directory a write creates
+(165-187 forks for one 150-row ``write_partitioned`` day, 103 for a small
+``build_pq_index``). The engine jar holds
+``geomesaspark.fs.NoForkLocalFileSystem`` (``jvm/src/``), which sets the
+mode with one ``chmod(2)`` and is otherwise Hadoop's checksummed
+``LocalFileSystem``; :func:`get_spark` makes it ``fs.file.impl`` when it
+launches a ``local[N]`` driver JVM.
+
+- **Build.** :func:`engine_jar` compiles every class under ``jvm/src``
+  (javac ``--release 17`` against the Spark jars, about 2.5 s) into
+  ``<cache>/engine-<key>.jar``, next to the class-data archives; the key
+  hashes the Java sources, the pyspark version and the release, so a fresh
+  checkout or a ``git clean`` reuses the jar. ``jvm/build.sh`` copies the
+  same jar to ``dist/`` for ``spark-submit --jars``. With no JDK compiler
+  (or no ``jvm/src``, e.g. the package shipped as a zip) the session starts
+  on the stock filesystem after a warning.
+- **Loading.** The jar goes on ``spark.jars`` and every plain-path or
+  ``file:`` entry there becomes ``local:<absolute path>``: SparkSubmit
+  resolves ``file:`` entries through a Hadoop filesystem before the jar is
+  on any class path, and would then fail to load the class it is told to
+  use. ``local:`` needs no filesystem and is valid for ``local[N]``.
+  ``spark.jars`` is not on the JVM's application class path, so the
+  class-data archive still maps. A caller's own
+  ``spark.hadoop.fs.file.impl`` is kept, and the stock filesystem stays
+  when ``spark.files``, ``spark.submit.pyFiles``, ``spark.archives``,
+  ``spark.jars.packages`` or ``PYSPARK_SUBMIT_ARGS`` is set: SparkSubmit
+  resolves those through the filesystem too (the Ivy-resolved packages
+  join the jar list as plain paths after this rewrite), and ``local:``
+  would keep the files of the first three out of ``SparkFiles``.
+- **Not covered.** Structured Streaming checkpoints go through Hadoop's
+  ``FileContext`` (``LocalFs``), which does not read ``fs.file.impl``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import fcntl
+import glob
 import hashlib
 import json
 import os
@@ -48,8 +85,12 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import warnings
+import zipfile
+from urllib.parse import urlparse
 
 from pyspark import SparkContext
+from pyspark import __version__ as _PYSPARK_VERSION
 from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
@@ -60,6 +101,17 @@ _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 _BUILD_TIMEOUT_S = 600
 # the directory holding this package (a zip under --py-files works as well)
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the engine's JVM classes: the Catalyst rule (extensions.py) and the
+# file: filesystem
+_JVM_SRC = os.path.join(_PKG_PARENT, "jvm", "src")
+FS_IMPL = "geomesaspark.fs.NoForkLocalFileSystem"
+# confs whose files SparkSubmit resolves through the file: filesystem at
+# launch (spark.jars.packages: the Ivy-resolved jars, added as plain paths)
+_SUBMIT_FILES = ("spark.files", "spark.submit.pyFiles", "spark.archives", "spark.jars.packages")
+# class-file target of the engine jar: the oldest Java the bundled Spark
+# runs on, so a jar compiled by a newer JDK still loads on any JVM sharing
+# the cache
+_JAVA_RELEASE = "17"
 
 
 def get_spark(
@@ -114,9 +166,89 @@ def get_spark(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PKG_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )
+    if not _jvm_running() and conf["spark.master"].startswith("local"):
+        _use_engine_jar(conf)
     spark = _start(conf)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _jvm_running() -> bool:
+    return SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+
+
+def _use_engine_jar(conf: dict) -> None:
+    """Put the engine jar on ``spark.jars`` (all local entries as
+    ``local:``) and make its class the ``file:`` filesystem; warn and leave
+    ``conf`` alone when the jar cannot be built (module docstring)."""
+    try:
+        jar = engine_jar()
+    except RuntimeError as e:
+        warnings.warn(f"starting on the stock file: filesystem: {e}", RuntimeWarning, stacklevel=3)
+        return
+    jars = [jar] + [j.strip() for j in conf.get("spark.jars", "").split(",") if j.strip()]
+    conf["spark.jars"] = ",".join(dict.fromkeys(u for j in jars for u in _local_uris(j)))
+    if not os.environ.get("PYSPARK_SUBMIT_ARGS") and not any(conf.get(k) for k in _SUBMIT_FILES):
+        conf.setdefault("spark.hadoop.fs.file.impl", FS_IMPL)
+
+
+def _local_uris(entry: str) -> list[str]:
+    """A ``spark.jars`` entry as ``local:`` URIs: a plain path or ``file:``
+    URI is globbed as SparkSubmit would; other schemes pass through."""
+    u = urlparse(entry)
+    if u.scheme not in ("", "file"):
+        return [entry]
+    path = os.path.abspath(u.path if u.scheme else entry)
+    return ["local:" + p for p in sorted(filter(os.path.isfile, glob.glob(path))) or [path]]
+
+
+def engine_jar() -> str:
+    """Path of the engine jar (every class under ``jvm/src``) in the user
+    cache, compiled first if this hash of the sources has none yet. Raises
+    RuntimeError when it cannot be built."""
+    srcs = sorted(
+        os.path.join(root, f)
+        for root, _, files in os.walk(_JVM_SRC) for f in files if f.endswith(".java")
+    )
+    if not srcs:
+        raise RuntimeError(f"no Java sources under {_JVM_SRC}")
+    h = hashlib.sha256(f"{_PYSPARK_VERSION}\0{_JAVA_RELEASE}".encode())
+    for p in srcs:
+        with open(p, "rb") as fh:
+            h.update(f"\0{os.path.relpath(p, _JVM_SRC)}\0".encode() + fh.read())
+    path = os.path.join(_cache_dir(), f"engine-{h.hexdigest()[:16]}.jar")
+    if os.path.exists(path):
+        return path
+    javac = _jdk_tool("javac")
+    if javac is None:
+        raise RuntimeError("no JDK compiler (javac) found to build the engine jar")
+    try:
+        with _cache_lock():
+            if not os.path.exists(path):
+                _compile_jar(javac, srcs, path)
+    except (OSError, subprocess.SubprocessError) as e:
+        raise RuntimeError(f"cannot build the engine jar: {e}") from e
+    return path
+
+
+def _compile_jar(javac: str, srcs: list[str], path: str) -> None:
+    """javac against the Spark jars into a temp dir, zipped to a temp name
+    and published with ``os.replace``."""
+    with tempfile.TemporaryDirectory(dir=_cache_dir()) as out:
+        r = subprocess.run(
+            [javac, "--release", _JAVA_RELEASE, "-proc:none", "-encoding", "UTF-8", "-d", out,
+             "-cp", os.path.join(_find_spark_home(), "jars", "*"), *srcs],
+            capture_output=True, text=True, timeout=_BUILD_TIMEOUT_S,
+        )
+        if r.returncode != 0:
+            raise RuntimeError(f"javac failed: {(r.stdout + r.stderr)[-4000:]}")
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
+            z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+            for root, _, files in sorted(os.walk(out)):
+                for f in sorted(files):
+                    z.write(os.path.join(root, f), os.path.relpath(os.path.join(root, f), out))
+        os.replace(tmp, path)
 
 
 def _builder(conf: dict) -> SparkSession.Builder:
@@ -148,7 +280,14 @@ def _start(conf: dict) -> SparkSession:
         os.replace(archive, archive + ".bad")
     finally:
         os.environ.pop("SPARK_CONF_DIR", None)
-    return _builder(conf).getOrCreate()
+    try:
+        return _builder(conf).getOrCreate()
+    except PySparkRuntimeError:
+        if SparkContext._gateway is None:
+            # fails without the archive too: the launch, not the archive,
+            # is at fault, so the archive is kept
+            os.replace(archive + ".bad", archive)
+        raise
 
 
 def _cache_dir() -> str:
@@ -160,11 +299,27 @@ def _empty_conf_dir() -> str:
     return os.path.join(_cache_dir(), "conf")
 
 
+@contextlib.contextmanager
+def _cache_lock():
+    """One build at a time in the cache; a waiter then finds it
+    published."""
+    os.makedirs(_cache_dir(), exist_ok=True)
+    with open(os.path.join(_cache_dir(), ".lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        yield
+
+
+def _jdk_tool(name: str) -> str | None:
+    java_home = os.environ.get("JAVA_HOME")
+    tool = os.path.join(java_home, "bin", name) if java_home else shutil.which(name)
+    return tool if tool and os.path.exists(tool) else None
+
+
 def _class_archive(conf: dict) -> str | None:
     """Path of the class-data archive for this session, building it first if
     needed; None when no archive applies."""
-    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
-        return None  # the driver JVM already runs
+    if _jvm_running():
+        return None
     if any(os.environ.get(v) for v in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR")):
         return None
     if conf.get("spark.driver.extraClassPath"):
@@ -181,9 +336,7 @@ def _class_archive(conf: dict) -> str | None:
             return None
         os.makedirs(_empty_conf_dir(), exist_ok=True)
         path = os.path.join(_cache_dir(), f"classes-{key}.jsa")
-        with open(os.path.join(_cache_dir(), ".lock"), "w") as lock:
-            # one build at a time; a waiter then finds the archive published
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with _cache_lock():
             if not os.path.exists(path) and not os.path.exists(path + ".failed"):
                 _build(path, conf)
         return path if os.path.exists(path) else None
@@ -193,9 +346,8 @@ def _class_archive(conf: dict) -> str | None:
 
 def archive_key(spark_home: str, driver_memory: str) -> str | None:
     """Archive key: JDK binary + Spark jars + compressed-oops heap mode."""
-    java_home = os.environ.get("JAVA_HOME")
-    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
-    if not java or not os.path.exists(java):
+    java = _jdk_tool("java")
+    if java is None:
         return None
     java = os.path.realpath(java)
     libjvm = os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "server", "libjvm.so")

@@ -111,25 +111,30 @@ def lonlat_of(ids: np.ndarray, hot_city: int | None = None, hot_frac: float = 0.
     return np.clip(lon, -180.0, 179.999999), np.clip(lat, -90.0, 89.999999)
 
 
-def pixels_of(i: int) -> np.ndarray:
-    """Deterministic (h, w, 3) uint8 pattern for row ``i`` (gradient + waves)."""
-    ids = np.array([i], dtype=np.int64)
-    h = 8 + int(_u01(ids, 10)[0] * 57)  # 8..64
-    w = 8 + int(_u01(ids, 11)[0] * 57)
-    fx = 1.0 + _u01(ids, 12)[0] * 7.0
-    fy = 1.0 + _u01(ids, 13)[0] * 7.0
-    ph = _u01(ids, 14)[0] * 2 * np.pi
+def _patterns(ids: np.ndarray):
+    """Per-row pattern scalars of :func:`pixels_of`, one ``_u01`` call per
+    salt for the whole batch: (h, w, fx, fy, phase, 8x8 noise grids)."""
+    h = 8 + (_u01(ids, 10) * 57).astype(np.int64)  # 8..64
+    w = 8 + (_u01(ids, 11) * 57).astype(np.int64)
+    fx = 1.0 + _u01(ids, 12) * 7.0
+    fy = 1.0 + _u01(ids, 13) * 7.0
+    ph = _u01(ids, 14) * 2 * np.pi
+    # per-image 8x8 structured noise (seeded, deterministic) upsampled to
+    # full size: gives each image a distinct block signature so perceptual
+    # hashes separate, with amplitude >> lossy quantization noise
+    cell_ids = ids[:, None] * np.int64(64) + np.arange(64, dtype=np.int64)
+    noise8 = (_u01(cell_ids.ravel(), 15).reshape(len(ids), 8, 8) - 0.5) * 160.0
+    return h, w, fx, fy, ph, noise8
+
+
+def _render(h: int, w: int, fx, fy, ph, noise8: np.ndarray) -> np.ndarray:
+    """(h, w, 3) uint8 gradient + waves + upsampled block noise."""
     yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
     base = (
         127.5
         + 60.0 * np.sin(2 * np.pi * fx * xx / w + ph)
         + 60.0 * np.cos(2 * np.pi * fy * yy / h)
     )
-    # per-image 8x8 structured noise (seeded, deterministic) upsampled to
-    # full size: gives each image a distinct block signature so perceptual
-    # hashes separate, with amplitude >> lossy quantization noise
-    cell_ids = (np.int64(i) * np.int64(64) + np.arange(64, dtype=np.int64)).reshape(8, 8)
-    noise8 = (_u01(cell_ids.ravel(), 15).reshape(8, 8) - 0.5) * 160.0
     ri = np.minimum((yy * 8 / h).astype(np.int64), 7)
     ci = np.minimum((xx * 8 / w).astype(np.int64), 7)
     noise = noise8[ri, ci]
@@ -144,44 +149,50 @@ def pixels_of(i: int) -> np.ndarray:
     return np.clip(arr, 0, 255).astype(np.uint8)
 
 
+def pixels_of(i: int) -> np.ndarray:
+    """Deterministic (h, w, 3) uint8 pattern for row ``i`` (gradient + waves)."""
+    h, w, fx, fy, ph, noise8 = _patterns(np.array([i], dtype=np.int64))
+    return _render(int(h[0]), int(w[0]), fx[0], fy[0], ph[0], noise8[0])
+
+
+def _captions(ids: np.ndarray) -> list[str]:
+    words = [
+        np.array(vocab)[(_u01(ids, salt) * len(vocab)).astype(np.int64)]
+        for salt, vocab in ((20, _ADJECTIVES), (21, _NOUNS), (22, _PLACES))
+    ]
+    return [f"{a} {n} at {p}" for a, n, p in zip(*words)]
+
+
 def caption_of(i: int) -> str:
-    ids = np.array([i], dtype=np.int64)
-    a = _ADJECTIVES[int(_u01(ids, 20)[0] * len(_ADJECTIVES))]
-    n = _NOUNS[int(_u01(ids, 21)[0] * len(_NOUNS))]
-    p = _PLACES[int(_u01(ids, 22)[0] * len(_PLACES))]
-    return f"{a} {n} at {p}"
+    return _captions(np.array([i], dtype=np.int64))[0]
 
 
 def generate_batch(ids: np.ndarray, hot_city: int | None = None, hot_frac: float = 0.0,
                    fmts: list[str] | None = None) -> pd.DataFrame:
-    """Generate the image table rows for the given int64 row ids (vectorized
-    where possible; image encode is per-row numpy over small arrays)."""
+    """Generate the image table rows for the given int64 row ids: every
+    per-row scalar in one vectorized pass, then the per-row render, encode
+    and hash over small arrays. Row ``i`` equals ``pixels_of(i)`` and
+    ``caption_of(i)``."""
     ids = np.asarray(ids, dtype=np.int64)
     fmts = fmts or FMTS
     lon, lat = lonlat_of(ids, hot_city=hot_city, hot_frac=hot_frac)
     ts = TS_EPOCH + (_u01(ids, 7) * TS_SPAN).astype(np.int64)
-    rows = []
-    for k, i in enumerate(ids):
-        arr = pixels_of(int(i))
-        fmt = fmts[int(i) % len(fmts)]
-        buf = img.encode_image(arr, fmt)
-        rows.append(
-            (
-                f"img{int(i):010d}",
-                buf,
-                arr.shape[1],
-                arr.shape[0],
-                fmt,
-                caption_of(int(i)),
-                img.phash64(arr),
-            )
-        )
-    pdf = pd.DataFrame(
-        rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-    )
-    pdf["w"] = pdf["w"].astype("int32")
-    pdf["h"] = pdf["h"].astype("int32")
-    pdf["phash"] = pdf["phash"].astype("int64")
+    h, w, fx, fy, ph, noise8 = _patterns(ids)
+    fmt = [fmts[i % len(fmts)] for i in ids.tolist()]
+    bufs, phash = [], []
+    for f, *pattern in zip(fmt, h.tolist(), w.tolist(), fx, fy, ph, noise8):
+        arr = _render(*pattern)  # one image alive at a time
+        bufs.append(img.encode_image(arr, f))
+        phash.append(img.phash64(arr))
+    pdf = pd.DataFrame({
+        "image_id": [f"img{i:010d}" for i in ids.tolist()],
+        "bytes": bufs,
+        "w": w.astype("int32"),
+        "h": h.astype("int32"),
+        "fmt": fmt,
+        "caption": _captions(ids),
+        "phash": np.array(phash, dtype=np.int64),
+    })
     pdf["lon"] = lon
     pdf["lat"] = lat
     pdf["ts"] = pd.to_datetime(ts, unit="s")

@@ -1,12 +1,12 @@
 #!/bin/sh
-# Build dist/geomesa-spark-ext.jar: the Catalyst extension rule
-# (jvm/src/geomesaspark/ext/*.java) compiled against the pyspark
-# distribution's own jars. Plain javac + jar — no Maven/Scala toolchain.
+# Build dist/geomesa-spark-ext.jar for spark-submit --jars: the engine jar,
+# every class under jvm/src (the Catalyst extension rule in geomesaspark/ext,
+# the file: filesystem in geomesaspark/fs). geomesa_spark.session.engine_jar
+# is the one builder (javac against the Spark distribution's own jars, cached
+# per hash of the sources); this copies its jar out of the user cache.
 set -e
-cd "$(dirname "$0")"
-SPARK_JARS=$(python -c "import pyspark, os; print(os.path.join(os.path.dirname(pyspark.__file__), 'jars'))")
-rm -rf build
-mkdir -p build ../dist
-javac -encoding UTF-8 -cp "$SPARK_JARS/*" -d build $(find src -name '*.java')
-jar cf ../dist/geomesa-spark-ext.jar -C build .
-echo "built ../dist/geomesa-spark-ext.jar"
+cd "$(dirname "$0")/.."
+JAR=$(python -c "from geomesa_spark.session import engine_jar; print(engine_jar())")
+mkdir -p dist
+cp "$JAR" dist/geomesa-spark-ext.jar
+echo "built dist/geomesa-spark-ext.jar"

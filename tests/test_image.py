@@ -114,6 +114,45 @@ def test_generator_deterministic_and_valid():
         assert row.phash == img.phash64(truth)
 
 
+def _batch_digest(pdf) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for c in ("image_id", "fmt", "caption"):
+        h.update("\0".join(pdf[c]).encode())
+    h.update(b"".join(pdf["bytes"]))
+    for c in ("w", "h", "phash", "lon", "lat"):
+        h.update(pdf[c].to_numpy().tobytes())
+    h.update(pdf["ts"].astype("int64").to_numpy().tobytes())
+    return h.hexdigest()[:16]
+
+
+@pytest.mark.parametrize("start, digest", [
+    (0, "0328557fd6718afc"),
+    (10**6, "314f808a086e5431"),
+    (7_777_777_000, "5fc9e9ae2f58c897"),
+])
+def test_generate_batch_equals_per_row_path(start, digest):
+    """The batch generator derives its per-row scalars vectorized; every row
+    must still equal the per-row API (pixels_of, caption_of), and the FMTS
+    recipe must reproduce the frozen table (digest of the per-row
+    generator this batch path replaced)."""
+    ids = start + np.arange(60, dtype=np.int64)
+    pdf = src.generate_batch(ids, fmts=src.FMTS)
+    arrs = [src.pixels_of(int(i)) for i in ids]
+    fmts = [src.FMTS[int(i) % 3] for i in ids]
+    ref = pdf.assign(
+        bytes=[img.encode_image(a, f) for a, f in zip(arrs, fmts)],
+        w=np.array([a.shape[1] for a in arrs], dtype=np.int32),
+        h=np.array([a.shape[0] for a in arrs], dtype=np.int32),
+        fmt=fmts,
+        caption=[src.caption_of(int(i)) for i in ids],
+        phash=np.array([img.phash64(a) for a in arrs], dtype=np.int64),
+    )
+    assert pdf.equals(ref)
+    assert _batch_digest(pdf) == digest
+
+
 def test_generator_hot_city_skew():
     ids = np.arange(0, 5000)
     pdf = src.generate_batch(ids, hot_city=0, hot_frac=0.5)

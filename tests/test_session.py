@@ -1,6 +1,7 @@
 """get_spark session start: the class-data archive (built once into the user
-cache, mapped by later sessions, never fatal) and the Python worker daemon
-(its import path, one daemon per session, the frozen preload).
+cache, mapped by later sessions, never fatal), the Python worker daemon
+(its import path, one daemon per session, the frozen preload) and the
+engine jar's file: filesystem (no forked chmod, same modes, checksums).
 
 Sessions that test the start run in their own subprocess with a temp
 XDG_CACHE_HOME: the archive applies only where a process launches its
@@ -10,6 +11,7 @@ against a symlinked copy of SPARK_HOME whose conf dir the test controls."""
 import gc
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -25,6 +27,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PROBE = """
 import json, sys
 sys.path.insert(0, {repo!r})
+{pre}
 from geomesa_spark.session import get_spark
 spark = get_spark(cpus=2, extra_conf=json.loads(sys.argv[1]))
 mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
@@ -51,16 +54,20 @@ def _spark_home(root, conf_files=None):
     return root
 
 
-def _session(home, cache, cwd, extra_conf=None, extra=""):
-    env = {k: v for k, v in os.environ.items()
+def _session(home, cache, cwd, extra_conf=None, extra="", pre="", env=None, ok=True):
+    env = {k: v for k, v in {**os.environ, **(env or {})}.items()
            if k not in ("PYTHONPATH", "SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR")}
     env.update(SPARK_HOME=str(home), XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM="2g")
     r = subprocess.run(
-        [sys.executable, "-c", _PROBE.format(repo=REPO, extra=extra), json.dumps(extra_conf or {})],
+        [sys.executable, "-c", _PROBE.format(repo=REPO, extra=extra, pre=pre),
+         json.dumps(extra_conf or {})],
         cwd=cwd, env=env, capture_output=True, text=True, timeout=900,
     )
+    if not ok:
+        assert r.returncode != 0, r.stdout[-2000:]
+        return {"stderr": r.stderr}
     assert r.returncode == 0, r.stderr[-4000:]
-    return json.loads(r.stdout.strip().splitlines()[-1])
+    return {**json.loads(r.stdout.strip().splitlines()[-1]), "stderr": r.stderr}
 
 
 def _archive_arg(out):
@@ -111,6 +118,25 @@ def test_truncated_archive_is_moved_aside(built, tmp_path):
     assert _archive_arg(out) == []  # the retry started without it
     assert not bad.exists()
     assert bad.with_name(bad.name + ".bad").exists()
+
+
+def test_archive_kept_when_start_fails_without_it(built, tmp_path):
+    """A launch that fails with and without the archive (here SparkSubmit
+    cannot load the file: filesystem it must resolve spark.files with)
+    raises and leaves the good archive in place."""
+    home, _, archive = built
+    cache = tmp_path / "cache"
+    (cache / "geomesa_spark" / "conf").mkdir(parents=True)
+    kept = cache / "geomesa_spark" / archive.name
+    kept.write_bytes(archive.read_bytes())
+    (tmp_path / "data.txt").write_text("x")
+    out = _session(home, cache, tmp_path, {
+        "spark.files": str(tmp_path / "data.txt"),
+        "spark.hadoop.fs.file.impl": "geomesa.NoSuchFileSystem",
+    }, ok=False)
+    assert "geomesa.NoSuchFileSystem" in out["stderr"]
+    assert kept.exists() and kept.stat().st_size == archive.stat().st_size
+    assert not kept.with_name(kept.name + ".bad").exists()
 
 
 def test_heap_modes_get_different_archive_keys():
@@ -198,3 +224,174 @@ def test_workers_fork_from_a_frozen_preload(spark):
     freeze_count = pandas_udf(lambda s: s * 0 + gc.get_freeze_count(), "long")
     counts = spark.range(4).select(freeze_count("id").alias("n")).toPandas()["n"]
     assert (counts > 0).all(), counts.tolist()
+
+
+def test_file_writes_fork_no_chmod(tmp_path):
+    """write_partitioned and build_pq_index through the engine's file:
+    filesystem: no chmod process, modes from the Hadoop umask (027 here,
+    as the process umask), .crc sidecars, and a corrupted data file fails
+    its checksum on read. A logging chmod first on PATH counts the forks."""
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    log = tmp_path / "chmod.log"
+    (bin_dir / "chmod").write_text(
+        f"#!/bin/sh\necho \"$*\" >> {log}\nexec {shutil.which('chmod')} \"$@\"\n")
+    (bin_dir / "chmod").chmod(0o755)
+    home = _spark_home(tmp_path / "spark", {"spark-defaults.conf": "# none\n"})
+    tbl, idx = tmp_path / "tbl", tmp_path / "idx"
+    ops = f"""
+import os, numpy as np, pandas as pd
+from geomesa_spark.operators.similarity import build_pq_index
+from geomesa_spark.sources.storage import write_partitioned
+def forks():
+    return len(open({str(log)!r}).readlines()) if os.path.exists({str(log)!r}) else 0
+out["fs"] = spark._jsc.hadoopConfiguration().get("fs.file.impl")
+rng = np.random.default_rng(3)
+pts = spark.createDataFrame(pd.DataFrame({{
+    "image_id": [f"img{{i}}" for i in range(150)],
+    "lon": rng.uniform(-180, 180, 150), "lat": rng.uniform(-80, 80, 150),
+    "ts": pd.to_datetime(1704067200 + rng.integers(0, 2 * 86400, 150), unit="s")}}))
+vecs = spark.createDataFrame(pd.DataFrame({{
+    "vec_id": np.arange(200),
+    "embedding": rng.normal(size=(200, 16)).astype(np.float32).tolist()}}))
+n0 = forks()
+write_partitioned(pts, {str(tbl)!r}, mode="overwrite")
+write_partitioned(pts, {str(tbl)!r}, mode="append")
+out["write_forks"] = forks() - n0
+n0 = forks()
+build_pq_index(vecs, {str(idx)!r}, dim=16, m=4, ksub=16, n_centroids=4)
+out["index_forks"] = forks() - n0
+out["rows"] = spark.read.parquet({str(tbl)!r}).count()
+jvm = spark._jvm
+sticky = jvm.org.apache.hadoop.fs.Path({str(tmp_path / "sticky")!r})
+fs = sticky.getFileSystem(spark._jsc.hadoopConfiguration())
+fs.mkdirs(sticky)
+fs.setPermission(sticky, jvm.org.apache.hadoop.fs.permission.FsPermission("1750"))
+out["sticky_mode"] = os.stat({str(tmp_path / "sticky")!r}).st_mode & 0o7777
+bad = next(os.path.join(d, f) for d, _, fs_ in os.walk({str(tbl)!r})
+           for f in fs_ if f.endswith(".parquet"))
+with open(bad, "r+b") as fh:
+    fh.seek(os.path.getsize(bad) // 2)
+    b = fh.read(1)
+    fh.seek(-1, 1)
+    fh.write(bytes([b[0] ^ 0xFF]))
+try:
+    spark.read.parquet(bad).collect()
+    out["corrupt"] = "read"
+except Exception as e:
+    out["corrupt"] = "ChecksumException" if "ChecksumException" in str(e) else str(e)[:300]
+"""
+    out = _session(
+        home, tmp_path / "cache", tmp_path,
+        {"spark.hadoop.fs.permissions.umask-mode": "027"}, extra=ops,
+        pre="import os; os.umask(0o027)",
+        env={"PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}"},
+    )
+    assert out["fs"] == session.FS_IMPL
+    assert out["write_forks"] == 0 and out["index_forks"] == 0, log.read_text()
+    assert out["rows"] == 300
+    assert out["sticky_mode"] == 0o1750
+    assert out["corrupt"] == "ChecksumException"
+    n_files = 0
+    for root in (tbl, idx):
+        for d, dirs, files in os.walk(root):
+            assert os.stat(d).st_mode & 0o777 == 0o777 & ~0o027, d
+            for f in files:
+                assert os.stat(os.path.join(d, f)).st_mode & 0o777 == 0o666 & ~0o027, f
+                if f.endswith(".parquet"):
+                    assert f".{f}.crc" in files
+                    n_files += 1
+    assert n_files > 10
+
+
+def test_plain_caller_jar_still_starts(tmp_path):
+    """A caller's plain-path spark.jars entry joins the engine jar as a
+    local: URI and its resources load."""
+    import zipfile
+
+    jar = tmp_path / "own.jar"
+    with zipfile.ZipFile(jar, "w") as z:
+        z.writestr("geomesa-probe.txt", "probe")
+    home = _spark_home(tmp_path / "spark", {"spark-defaults.conf": "# none\n"})
+    probe = """
+out["res"] = spark._jvm.java.lang.Thread.currentThread().getContextClassLoader().getResource(
+    "geomesa-probe.txt") is not None
+"""
+    out = _session(home, tmp_path / "cache", tmp_path, {"spark.jars": str(jar)}, extra=probe)
+    assert out["sum"] == 4950 and out["res"]
+    jars = out["conf"]["spark.jars"].split(",")
+    assert f"local:{jar}" in jars
+    assert any(j.startswith("local:") and "/engine-" in j for j in jars)
+    assert out["conf"]["spark.hadoop.fs.file.impl"] == session.FS_IMPL
+
+
+def test_no_compiler_starts_on_stock_filesystem(tmp_path):
+    """A JDK without javac: one warning, and the session starts without the
+    engine jar or the file: filesystem swap."""
+    jdk = tmp_path / "jdk" / "bin"
+    jdk.mkdir(parents=True)
+    (jdk / "java").symlink_to(os.path.realpath(shutil.which("java")))
+    home = _spark_home(tmp_path / "spark", {"spark-defaults.conf": "# none\n"})
+    out = _session(home, tmp_path / "cache", tmp_path, env={"JAVA_HOME": str(tmp_path / "jdk")})
+    assert out["sum"] == 4950
+    assert "spark.hadoop.fs.file.impl" not in out["conf"]
+    assert "engine-" not in out["conf"].get("spark.jars", "")
+    assert out["stderr"].count("starting on the stock file: filesystem") == 1
+
+
+def test_engine_jar_conf(tmp_path, monkeypatch):
+    """Local spark.jars entries become local: URIs (globs expanded, other
+    schemes kept) next to the engine jar; the file: filesystem is left
+    stock when SparkSubmit would resolve other file lists through it, and a
+    caller's own fs.file.impl wins. The engine jar is a stand-in: the
+    build is tested through build.sh and the subprocess sessions."""
+    for name in ("a.jar", "b.jar", "engine.jar"):
+        (tmp_path / name).write_bytes(b"")
+    engine = tmp_path / "engine.jar"
+    monkeypatch.setattr(session, "engine_jar", lambda: str(engine))
+    monkeypatch.chdir(tmp_path / "..")
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    conf = {"spark.jars": f"{tmp_path.name}/a.jar, file:{tmp_path}/[ab].jar,hdfs://nn/c.jar"}
+    session._use_engine_jar(conf)
+    assert conf["spark.jars"].split(",") == [
+        f"local:{engine}", f"local:{tmp_path}/a.jar", f"local:{tmp_path}/b.jar", "hdfs://nn/c.jar"]
+    assert conf["spark.hadoop.fs.file.impl"] == session.FS_IMPL
+    conf = {"spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem"}
+    session._use_engine_jar(conf)
+    assert conf["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.LocalFileSystem"
+    for files in ("spark.files", "spark.submit.pyFiles", "spark.archives", "spark.jars.packages"):
+        conf = {files: str(tmp_path / "a.jar")}
+        session._use_engine_jar(conf)
+        assert conf["spark.jars"] == f"local:{engine}"
+        assert "spark.hadoop.fs.file.impl" not in conf
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", f"--files {tmp_path}/a.jar pyspark-shell")
+    conf = {}
+    session._use_engine_jar(conf)
+    assert "spark.hadoop.fs.file.impl" not in conf
+
+
+@pytest.mark.skipif(session._jdk_tool("javac") is None, reason="no JDK compiler")
+def test_build_script_copies_the_engine_jar(tmp_path):
+    """jvm/build.sh copies the one cached engine jar to dist/: both
+    packages under jvm/src, class files for the oldest supported Java."""
+    import zipfile
+
+    tree = tmp_path / "tree"
+    shutil.copytree(os.path.join(REPO, "jvm", "src"), tree / "jvm" / "src")
+    shutil.copy(os.path.join(REPO, "jvm", "build.sh"), tree / "jvm" / "build.sh")
+    shutil.copytree(os.path.join(REPO, "geomesa_spark"), tree / "geomesa_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["XDG_CACHE_HOME"] = str(tmp_path / "cache")
+    r = subprocess.run(["/bin/sh", str(tree / "jvm" / "build.sh")], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-4000:]
+    dist = tree / "dist" / "geomesa-spark-ext.jar"
+    cached = list((tmp_path / "cache" / "geomesa_spark").glob("engine-*.jar"))
+    assert len(cached) == 1 and dist.read_bytes() == cached[0].read_bytes()
+    with zipfile.ZipFile(dist) as z:
+        names = z.namelist()
+        assert "geomesaspark/ext/SpatialExtensions.class" in names
+        assert f"{session.FS_IMPL.replace('.', '/')}.class" in names
+        major = int.from_bytes(z.read(f"{session.FS_IMPL.replace('.', '/')}.class")[6:8], "big")
+    assert major == 44 + int(session._JAVA_RELEASE)
