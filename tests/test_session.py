@@ -1,7 +1,8 @@
 """get_spark session start: the class-data archive (built once into the user
 cache, mapped by later sessions, never fatal), the Python worker daemon
-(its import path, one daemon per session, the frozen preload) and the
-engine jar's file: filesystem (no forked chmod, same modes, checksums).
+(its import path, one daemon per session, the frozen preload, the lazy
+zipimport directories) and the engine jar's file: filesystem (no forked
+chmod, same modes, checksums).
 
 Sessions that test the start run in their own subprocess with a temp
 XDG_CACHE_HOME: the archive applies only where a process launches its
@@ -224,6 +225,115 @@ def test_workers_fork_from_a_frozen_preload(spark):
     freeze_count = pandas_udf(lambda s: s * 0 + gc.get_freeze_count(), "long")
     counts = spark.range(4).select(freeze_count("id").alias("n")).toPandas()["n"]
     assert (counts > 0).all(), counts.tolist()
+
+
+# imports a module from each of three subpackages of one zip archive (an
+# importer for the archive, the package and each subpackage), spies on the
+# directory reads of the next invalidate_caches, import and archive
+# rewrite, and prints them as JSON
+_ZIP_PROBE = """
+import gc, importlib, json, sys, zipfile, zipimport
+from geomesa_spark.worker_daemon import _lazy_zip_directories
+out = {"frozen": gc.get_freeze_count(), "preloaded": "pandas" in sys.modules}
+archive = sys.argv[1]
+def write(extra=()):
+    with zipfile.ZipFile(archive, "w") as z:
+        for name in ("zpkg/__init__.py", "zpkg/late.py", *extra):
+            z.writestr(name, "")
+        for i in range(3):
+            z.writestr(f"zpkg/sub{i}/__init__.py", "")
+            z.writestr(f"zpkg/sub{i}/mod.py", "")
+write()
+sys.path.insert(0, archive)
+_lazy_zip_directories()
+for i in range(3):
+    importlib.import_module(f"zpkg.sub{i}.mod")
+out["importers"] = sum(isinstance(i, zipimport.zipimporter) and i.archive == archive
+                       for i in sys.path_importer_cache.values())
+reads, read = [], zipimport._read_directory
+zipimport._read_directory = lambda path: reads.append(path) or read(path)
+importlib.invalidate_caches()
+out["invalidate_reads"] = len(reads)
+import zpkg.late
+out["import_reads"] = len(reads)
+write(("zpkg/sub1/fresh.py",))
+importlib.invalidate_caches()
+import zpkg.sub1.fresh
+out["fresh"] = zpkg.sub1.fresh.__file__
+print(json.dumps(out))
+"""
+
+
+def _run_python(code, *args):
+    env = dict(os.environ, PYTHONPATH=REPO)
+    res = subprocess.run([sys.executable, "-c", code, *map(str, args)], env=env,
+                         capture_output=True, text=True, timeout=60)
+    assert res.returncode == 0, res.stderr
+    return json.loads(res.stdout.splitlines()[-1])
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="stock zipimport is lazy")
+def test_invalidation_reads_zip_directories_lazily(tmp_path):
+    """With the backport, invalidate_caches reads no zip directory, the
+    next import reads its archive once for all five importers, and a
+    rewritten archive's new module imports. Importing the function runs
+    neither the daemon's preload nor its gc.freeze."""
+    archive = tmp_path / "pkgs.zip"
+    out = _run_python(_ZIP_PROBE, archive)
+    assert out["frozen"] == 0 and not out["preloaded"]
+    assert out["importers"] == 5
+    assert out["invalidate_reads"] == 0
+    assert out["import_reads"] == 1
+    assert out["fresh"] == os.path.join(archive, "zpkg", "sub1", "fresh.py")
+
+
+@pytest.mark.parametrize("stock", [
+    "sys.version_info = (3, 13, 0, 'final', 0)",
+    "del zipimport._zip_directory_cache",
+])
+def test_lazy_zip_directories_keeps_stock_zipimport(stock):
+    """On Python >= 3.13, and on a zipimport without the directory cache,
+    the backport changes nothing."""
+    out = _run_python(f"""
+import json, sys, zipimport
+from geomesa_spark.worker_daemon import _lazy_zip_directories
+before = dict(vars(zipimport.zipimporter))
+{stock}
+_lazy_zip_directories()
+print(json.dumps(dict(vars(zipimport.zipimporter)) == before))
+""")
+    assert out is True
+
+
+def test_workers_invalidate_zip_directories_lazily(spark):
+    """Every task calls importlib.invalidate_caches
+    (pyspark.worker_util.setup_spark_files). In a worker that imported
+    pyspark from pyspark.zip, that call drops the archive's directory
+    instead of re-reading it, in the first job's worker and in the reused
+    one of the next job."""
+    from pyspark.sql.functions import pandas_udf
+
+    if os.environ.get("SPARK_GRAFT_NO_DAEMON_PRELOAD") == "1":
+        pytest.skip("stock daemon")
+
+    def dropped(s):
+        import importlib
+        import zipimport
+
+        import pyspark
+
+        loader = pyspark.__loader__
+        if not isinstance(loader, zipimport.zipimporter):
+            return s * 0 - 1
+        importlib.invalidate_caches()
+        return s * 0 + int(loader.archive not in zipimport._zip_directory_cache)
+
+    lazy = pandas_udf(dropped, "long")
+    for _ in range(2):
+        flags = spark.range(4).select(lazy("id").alias("f")).toPandas()["f"]
+        if (flags == -1).all():
+            pytest.skip("workers import pyspark from a directory")
+        assert (flags == 1).all(), flags.tolist()
 
 
 def test_file_writes_fork_no_chmod(tmp_path):
