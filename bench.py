@@ -241,13 +241,14 @@ def run_geom_skew(spark) -> dict:
     the cell-key equi-join emits ~4M candidate pairs from ONE shuffle
     partition. The timed job is the operator's CANDIDATE stage
     (geometry_join_tables_candidates — the grid-partitioned join where hot
-    cells concentrate); the stages downstream of it (pair dedup exchange,
-    refetch, round-robin re-spread, refine) are pair-parallel by
-    construction, so an end-to-end timing dilutes join-stage skew below
-    noise (measured: 48.7 s no-split vs 49.0 s split at this workload —
-    that graceful degradation is itself the design, but it cannot WITNESS
-    the split). Three arms over the identical workload, 1 warmup + median
-    of 3 interleaved reps each (run_skew's protocol):
+    cells concentrate, keeping each pair in its lowest shared cell); the
+    stages downstream of it (round-robin re-spread, refine) are
+    pair-parallel by construction, and the refine dominates an end-to-end
+    timing (local[4] on a 4-core host: candidate stage 2.5-3.3 s in every
+    arm, full join 350-410 s with a run-to-run spread larger than the whole
+    candidate stage), so only a stage-level timing can witness the split.
+    Three arms over the identical workload, 1 warmup + median of 3
+    interleaved reps each (run_skew's protocol):
 
     - broadcast: default confs — the slim cell-key side fits the broadcast
       threshold, every task joins its local rows, skew never concentrates.
@@ -256,7 +257,7 @@ def run_geom_skew(spark) -> dict:
       ~7 MB, below the 256 MB default) — the split must engage (the warmup
       records the plan's skew markers as proof).
     - smj_no_split: broadcast disabled, AQE skew-join OFF — the control
-      that pays the hot partition's 4M-row emit + partial dedup serially.
+      that pays the hot partition's 4M-row emit serially.
 
     One full geometry_join_tables run under DEFAULT confs is reported
     alongside (full_join_default) so the end-to-end materiality claim
@@ -342,13 +343,11 @@ def run_geom_skew(spark) -> dict:
             out[name]["samples"].append(round(_t.time() - t0, 3))
     for name in arms:
         out[name]["seconds"] = statistics.median(out[name]["samples"])
-    # ONE end-to-end run under DEFAULT confs for context: the full join's
-    # downstream stages (pair-dedup exchange, refetch, round-robin
-    # re-spread, refine) are pair-parallel by construction, so join-stage
-    # skew dilutes out of the total (dev measurement: split 49.0 s vs
-    # unsplit 48.7 s end-to-end at these sizes). Running it under each
-    # arm's confs would mislead - the split arm's lowered advisory
-    # partition size penalizes every OTHER exchange in the full plan.
+    # ONE end-to-end run under DEFAULT confs for context: the refine
+    # dominates it (see the docstring), so join-stage skew dilutes out of
+    # the total. Running it under each arm's confs would mislead - the split
+    # arm's lowered advisory partition size penalizes every OTHER exchange
+    # in the full plan.
     t0 = _t.time()
     full_rows, _ = _run_own_qe(geometry_join_tables(left, right, "l_id", "r_id"))
     out["full_join_default"] = {

@@ -1679,9 +1679,9 @@ NATION_LAT = "(cast((n_nationkey * 40503) % 1800000 as double) / 10000.0 - 90.0)
 def q_geo_geom_join_tables(spark, sf_dir):
     """Two-relation geometry join (both sides DataFrames of WKB — no driver
     polygon dict): event boxes x nation boxes through the grid-partitioned
-    cell join + dedup + exact refine. The oracle is the brute-force
-    box-intersects join in SQL (boxes make DE-9IM intersects exactly
-    expressible as coordinate comparisons)."""
+    cell join (each pair kept in its lowest shared cell) + exact refine.
+    The oracle is the brute-force box-intersects join in SQL (boxes make
+    DE-9IM intersects exactly expressible as coordinate comparisons)."""
     from .operators.geometry_join import geometry_join_tables
 
     left = _event_box_geoms(_points(spark, sf_dir)).select("event_id", "geom")

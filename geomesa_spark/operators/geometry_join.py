@@ -17,16 +17,16 @@ the same inside the row, with the polygon side a driver dict:
         --native explode--> rows x poly_id
 
 A row meeting a polygon through several cells gets it once (the candidate
-ids are a set), and a row with no match drops out in the explode, so there
-is no candidate exchange, dedup or re-fetch join. One fixed join resolution
-covers every polygon: its cover's finer cells collapse to res_j ancestors
-and coarser cells expand to res_j children, both bounded by the cover
-budget.
+ids are a set), and a row with no match drops out in the explode: no
+candidate leaves its row. One fixed join resolution covers every polygon:
+its cover's finer cells collapse to res_j ancestors and coarser cells
+expand to res_j children, both bounded by the cover budget.
 
 :func:`geometry_join_tables` joins two DataFrames of geometries; there the
-shuffle is inherent, so both sides key bbox cells natively and meet in one
-equi-join (the two-relation join of RelationUtils.scala:39-53, with the
-dedup it leaves as a TODO made explicit).
+shuffle is inherent. Both sides explode their bbox cells natively with the
+geometry in the row and meet in one equi-join on the cell that keeps each
+pair only in its lowest shared cell, so each pair reaches the refine once
+(the two-relation join of RelationUtils.scala:39-53).
 """
 
 from __future__ import annotations
@@ -116,6 +116,7 @@ def _geom_join(
     the re-spread exchange."""
     from .spatial_join import prepare_polygons
 
+    _check_predicate(predicate)
     polys = {
         pid: (from_wkt(g) if isinstance(g, str) else g) for pid, g in polygons.items()
     }
@@ -191,31 +192,29 @@ def _bbox_struct_udf():
     return geom_bbox
 
 
-def _bbox_cell_keys(rows, geom_col, row_id, res_j):
-    """(row_id, ccell) keys: one row per res_j cell of the row
-    geometry's bounding box, expanded natively (sequence/explode + the
-    morton SQL), so any id dtype passes through untouched. The bbox comes
-    from one ``geom_bbox`` UDF pass.
+def _bbox_cell_keys(rows, geom_col, res_j):
+    """``rows`` exploded to one row per res_j grid cell ``(__x, __y)`` of
+    the geometry's bounding box (one ``geom_bbox`` UDF pass, then native
+    sequence/explode), plus the box's first cell ``(__x0, __y0)``.
 
-    A null bbox emits no key. ``greatest()`` skips nulls, so a null bound
-    would clamp into cell 0; a null sequence START explodes to no rows
-    instead. Not a ``.filter``: Catalyst pushes that below the caller's
-    re-spread exchange, and both the bbox UDF and the caller's geometry
-    UDF then run twice. For the same reason each explode takes its
-    sequence expression inline: over a plain column, Catalyst infers a
-    ``size(col) > 0`` filter and pushes it, UDF and all, below the
-    generator."""
+    A null bbox emits no row: ``greatest()`` skips nulls, so a null bound
+    would clamp into cell 0, but a null sequence START explodes to nothing.
+    Not a ``.filter``: Catalyst pushes that below the caller's re-spread
+    exchange, and both the bbox UDF and the caller's geometry UDF then run
+    twice. For the same reason each explode takes its sequence expression
+    inline: over a plain column, Catalyst infers a ``size(col) > 0`` filter
+    and pushes it, UDF and all, below the generator."""
     rows = rows.withColumn("__bbox", _bbox_struct_udf()(F.col(geom_col)))
     xmin, xmax, ymin, ymax = bbox = [f"__bbox.{p}" for p in _BBOX]
     x0, y0 = cells.xy_sql_expr(xmin, ymin, res_j)
     x1, y1 = cells.xy_sql_expr(xmax, ymax, res_j)
     valid = " AND ".join(f"{c} IS NOT NULL" for c in bbox)
+    xs = F.expr(f"sequence(CASE WHEN {valid} THEN {x0} END, {x1})")
     return (
-        rows.select(row_id, "__bbox", F.explode(
-            F.expr(f"sequence(CASE WHEN {valid} THEN {x0} END, {x1})")
-        ).alias("__x"))
-        .select(row_id, "__x", F.explode(F.expr(f"sequence({y0}, {y1})")).alias("__y"))
-        .select(row_id, F.expr(cells.encode_xy_sql("__x", "__y")).alias("ccell"))
+        rows.select("*", F.explode(xs).alias("__x"))
+        .select("*", F.explode(F.expr(f"sequence({y0}, {y1})")).alias("__y"))
+        .withColumns({"__x0": F.expr(x0), "__y0": F.expr(y0)})
+        .drop("__bbox")
     )
 
 
@@ -234,6 +233,14 @@ def _relate_mask(geoms, others, predicate: str) -> np.ndarray:
     )
 
 
+def _check_predicate(predicate: str) -> None:
+    """Every geometry join tests only the pairs that share a grid cell, so
+    ``disjoint`` would silently return almost nothing: refuse it."""
+    if predicate.lower() == "disjoint":
+        raise ValueError("predicate 'disjoint' is not supported: the geometry "
+                         "joins only test pairs that share a grid cell")
+
+
 def geometry_join_tables(
     left: DataFrame,
     right: DataFrame,
@@ -244,63 +251,71 @@ def geometry_join_tables(
     predicate: str = "intersects",
     res_j: int = DEFAULT_JOIN_RES,
 ) -> DataFrame:
-    """-> (left_id, right_id): the general grid-partitioned geometry join —
-    BOTH sides are DataFrames of arbitrary WKB geometries (geometry_join's
-    polygon side is a driver dict; this is the two-relation XZ join of the
-    reference's GeoMesaJoinRelation, RelationUtils.scala:39-53, with the
-    dedup it leaves as a TODO made explicit).
-
-    Plan: each side maps to (id, bbox cell @ res_j) keys — one ``geom_bbox``
-    UDF pass per side, then a native cell expansion — then ONE equi-join on
-    the cell key — the grid partitioning: both sides shuffle on cell,
-    co-locating spatial neighborhoods — then dropDuplicates((left_id,
-    right_id)) collapses multi-cell matches, the geometries are re-fetched
-    by id (candidates carry two ids through the dedup shuffle, never WKB
-    payloads), and the exact DE-9IM refine runs as a mapInPandas barrier. Hot cells are AQE
-    skew-join territory; ids must be unique per side (required for the
-    dedup and re-fetch) and the two id column names must differ (the pair
-    output carries both).
+    """-> (left_id, right_id), one row per pair of input rows with
+    ``left_geom <predicate> right_geom``: the general grid-partitioned join
+    of two DataFrames of WKB geometries (the two-relation XZ join of the
+    reference's GeoMesaJoinRelation, RelationUtils.scala:39-53;
+    geometry_join's polygon side is a driver dict). The candidate pairs of
+    :func:`_cell_pairs` carry both geometries, so the exact DE-9IM refine
+    runs on them in place as a mapInPandas barrier. Hot cells are AQE
+    skew-join territory; the two id column names must differ.
 
     Inputs should be scan-rooted (or cheap to recompute): the small-input
     probe materializes a shuffle-rooted input's stages once extra (see
     util.narrow_is_small) — persist/write such inputs first, as a
     production pipeline would.
     """
-    cand = geometry_join_tables_candidates(
-        left, right, left_id, right_id, left_geom, right_geom, res_j
-    )
-    pairs = (
-        cand.join(left.select(left_id, F.col(left_geom).alias("__lg")), left_id)
-        .join(right.select(right_id, F.col(right_geom).alias("__rg")), right_id)
-    )
+    _check_predicate(predicate)
+    pairs = _cell_pairs(left, right, left_id, right_id, left_geom, right_geom, res_j)
     # Fixed-N ROUND-ROBIN repartition before the CPU-bound refine, always:
-    # well-partitioned inputs still give byte-small candidate exchanges that
-    # AQE (sizing in BYTES; the refine costs per ROW) coalesces to a few
-    # tasks — measured 44 s of a 58 s join at 900k pairs on 7 tasks vs ~2 s
-    # spread (SCALE.md "Python stages vs AQE partition coalescing"). AQE
-    # never re-coalesces a user-numbered repartition; N = max(parallelism,
-    # shuffle.partitions). Not keyed: a (left_id, right_id) hash layout
-    # equals the dedup exchange's, so EnsureRequirements elides it and the
-    # refine lands back on the coalesced partitions.
+    # AQE sizes partitions in BYTES and the refine costs per ROW, so it
+    # would coalesce the pairs onto a few tasks — measured 44 s of a 58 s
+    # join at 900k pairs on 7 tasks vs ~2 s spread (SCALE.md "Python stages
+    # vs AQE partition coalescing"). AQE never re-coalesces a user-numbered
+    # repartition; N = max(parallelism, shuffle.partitions).
     spark = pairs.sparkSession
-    n_spread = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
-    pairs = pairs.repartition(n_spread)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in pairs.schema
-        if f.name in (left_id, right_id)
-    )
+    n_spread = max(spark.sparkContext.defaultParallelism,
+                   int(spark.conf.get("spark.sql.shuffle.partitions", "200")))
+    ids = [left_id, right_id]
 
     def refine(batches):
         for pdf in batches:
             rights = (from_wkb(bytes(w)) for w in pdf["__rg"])
-            keep = _relate_mask(pdf["__lg"], rights, predicate)
-            yield pdf.loc[keep, [c for c in pdf.columns if c in (left_id, right_id)]]
+            yield pdf.loc[_relate_mask(pdf["__lg"], rights, predicate), ids]
 
-    return pairs.mapInPandas(refine, schema=schema)
+    return pairs.repartition(n_spread).mapInPandas(refine, pairs.select(ids).schema)
+
+
+def _cell_pairs(left, right, left_id, right_id, left_geom, right_geom, res_j):
+    """-> (left_id, __lg, right_id, __rg): each pair of rows whose bboxes
+    share a res_j grid cell, ONCE, with both WKB geometries.
+
+    Each side (re-spread when small) carries (id, geom) through the
+    bbox-cell explode of :func:`_bbox_cell_keys`. The sides meet in ONE
+    equi-join on the cell (x, y) — both shuffle on it, co-locating spatial
+    neighborhoods — and keep a pair only in its LOWEST shared cell,
+    ``x = greatest(l.x0, r.x0) AND y = greatest(l.y0, r.y0)``: the cell
+    function is monotone, so two bboxes share a rectangle of cells with
+    one lowest corner."""
+    if left_id == right_id:
+        raise ValueError(f"left_id and right_id must differ (both {left_id!r}); "
+                         "alias one side before joining")
+
+    def keys(df, id_col, geom_col, side):
+        narrow = df.select(id_col, geom_col)
+        keyed = _bbox_cell_keys(spread_small(narrow, known_small=narrow_is_small(df)),
+                                geom_col, res_j)
+        names = {geom_col: "g", "__x": "x", "__y": "y", "__x0": "x0", "__y0": "y0"}
+        return keyed.withColumnsRenamed({c: f"__{side}{n}" for c, n in names.items()})
+
+    return (
+        keys(left, left_id, left_geom, "l")
+        .join(keys(right, right_id, right_geom, "r"), F.expr(
+            "__lx = __rx AND __ly = __ry"
+            " AND __lx = greatest(__lx0, __rx0) AND __ly = greatest(__ly0, __ry0)"
+        ))
+        .select(left_id, "__lg", right_id, "__rg")
+    )
 
 
 def geometry_join_tables_candidates(
@@ -312,32 +327,13 @@ def geometry_join_tables_candidates(
     right_geom: str = "geom",
     res_j: int = DEFAULT_JOIN_RES,
 ) -> DataFrame:
-    """-> deduped (left_id, right_id) cell-cover candidate pairs — the
-    grid-partitioned JOIN stage of :func:`geometry_join_tables`, exposed on
-    its own because (a) it is where hot cells concentrate (the bench's
-    run_geom_skew arms time this stage under AQE skew-split on/off — the
-    downstream refetch+refine is pair-parallel by construction and dilutes
-    any join-stage skew out of an end-to-end timing), and (b) callers with
-    their own refinement (e.g. an attribute filter that subsumes the exact
-    predicate) can consume candidates directly. Loose by design: every
-    output pair's bboxes share a res_j cell; the exact DE-9IM predicate has
-    NOT run."""
-    if left_id == right_id:
-        raise ValueError(
-            f"left_id and right_id must differ (both {left_id!r}); alias "
-            "one side before joining"
-        )
-
-    def keys(df, id_col, geom_col):
-        narrow = df.select(id_col, geom_col)
-        return _bbox_cell_keys(
-            spread_small(narrow, known_small=narrow_is_small(df)),
-            geom_col, id_col, res_j,
-        )
-
-    return (
-        keys(left, left_id, left_geom)
-        .join(keys(right, right_id, right_geom), "ccell")
-        .select(left_id, right_id)
-        .dropDuplicates([left_id, right_id])
-    )
+    """-> (left_id, right_id) candidate pairs: the grid-partitioned JOIN
+    stage of :func:`geometry_join_tables` (its :func:`_cell_pairs` without
+    the geometries), one row per pair of input ROWS whose bboxes share a
+    res_j cell, so a pair of ids is unique only when ids are unique per
+    side. Exposed because hot cells concentrate here (the bench's
+    run_geom_skew arms time it under AQE skew-split on/off), and for
+    callers with their own refinement. Loose by design: the exact DE-9IM
+    predicate has NOT run."""
+    pairs = _cell_pairs(left, right, left_id, right_id, left_geom, right_geom, res_j)
+    return pairs.select(left_id, right_id)

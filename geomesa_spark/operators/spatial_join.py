@@ -268,6 +268,12 @@ def _pip_refine_udf(edges_of, include_boundary: bool = True):
     return pip
 
 
+def join_strategy(n_cover: int) -> str:
+    """The one broadcast-vs-shuffle decision, by cover size: ``spatial_join``
+    executes it for ``strategy="auto"`` and the planner explains it."""
+    return "broadcast" if n_cover <= BROADCAST_COVER_LIMIT else "shuffle"
+
+
 def spatial_join(
     points: DataFrame,
     polygons: dict[str, Geometry | str] | PreparedPolygons,
@@ -335,7 +341,7 @@ def spatial_join(
             .drop(*([cell_col] if cell_col == "__cell" else []))
         )
     if strategy == "auto":
-        strategy = "broadcast" if n_cover <= BROADCAST_COVER_LIMIT else "shuffle"
+        strategy = join_strategy(n_cover)
 
     cover_schema = T.StructType(
         [

@@ -11,8 +11,8 @@ Re-creates the decision layer of the reference's query lifecycle
   cheapest wins. Here the candidates are partition/cover pruning schemes.
 - full-table-scan guard: ``QueryProperties.scala:40-54`` blocks unfiltered
   scans above a threshold unless explicitly allowed.
-- physical join strategy: broadcast vs salted-shuffle by cover size — the
-  decision spatial_join executes; the planner exposes and explains it.
+- physical join strategy: broadcast vs salted shuffle by cover size —
+  ``spatial_join.join_strategy``; the planner exposes and explains it.
 
 The planner does NOT re-do what Catalyst already does (predicate pushdown,
 column pruning, join reordering, AQE). It decides the things Catalyst cannot
@@ -43,7 +43,7 @@ class FullTableScanBlocked(Exception):
 @dataclass
 class SpatialQueryPlan:
     strategy: str                 # z2 | z3 | attribute | full-scan
-    join_exec: str | None = None  # broadcast | salted-shuffle | None
+    join_exec: str | None = None  # broadcast | shuffle | None
     cost: float = 0.0
     cover_contained: int = 0
     cover_overlapping: int = 0
@@ -104,7 +104,7 @@ def plan_query(
     plan = SpatialQueryPlan(strategy=strategy, cost=cost)
 
     if geom is not None and strategy in ("z2", "z3"):
-        from ..operators.spatial_join import BROADCAST_COVER_LIMIT, prepare_polygons
+        from ..operators.spatial_join import join_strategy, prepare_polygons
 
         if isinstance(geom, str):
             geom = from_wkt(geom)
@@ -112,10 +112,7 @@ def plan_query(
         plan.cover_contained = prepared.n_contained
         plan.cover_overlapping = prepared.n_overlapping
         plan.cover_resolutions = sorted({r for r, *_ in prepared.cover_rows})
-        n_cover = len(prepared.cover_rows)
-        plan.join_exec = (
-            "broadcast" if n_cover <= BROADCAST_COVER_LIMIT else "salted-shuffle"
-        )
+        plan.join_exec = join_strategy(len(prepared.cover_rows))
         if prepared.n_overlapping == 0:
             plan.refine = "none"
             plan.notes.append("cover fully contained: loose-bbox fast path")

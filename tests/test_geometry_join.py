@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -232,6 +233,74 @@ def test_geometry_join_tables_brute_force(spark):
     assert got == {(1, 100), (1, 200), (2, 200)}
 
 
+@pytest.mark.parametrize("res", [4, 8, 10])
+def test_geometry_join_tables_edge_geoms_brute_force(spark, res):
+    """Every pair of the grid-edge geometries (plus boxes meeting on a res-8
+    cell edge and a row repeating an id) against brute-force relate(), for
+    several predicates: each true pair once — kept in its lowest shared
+    cell — and each row of a repeated id paired on its own."""
+    from geomesa_spark.operators.geometry_join import (
+        geometry_join_tables,
+        geometry_join_tables_candidates,
+    )
+
+    geoms = _edge_geoms() + [
+        box(0.0, 0.0, 1.40625, 1.40625),          # meets the next two on
+        box(1.40625, 0.0, 2.8125, 0.703125),      # res-8 cell edges
+        box(-1.0, 1.40625, 1.40625, 2.0),
+    ]
+    ids = list(range(len(geoms))) + [0]           # id 0 twice
+    geoms = geoms + [geoms[0]]
+    pdf = pd.DataFrame({"gid": ids, "geom": [to_wkb(g) for g in geoms]})
+    l = spark.createDataFrame(pdf.rename(columns={"gid": "lid"}))
+    r = spark.createDataFrame(pdf.rename(columns={"gid": "rid"}))
+    for predicate in ("intersects", "within", "touches"):
+        got = sorted(
+            (row["lid"], row["rid"])
+            for row in geometry_join_tables(
+                l, r, "lid", "rid", predicate=predicate, res_j=res
+            ).collect()
+        )
+        want = sorted(
+            (i, j)
+            for i, a in zip(ids, geoms)
+            for j, b in zip(ids, geoms)
+            if relate(a, b, predicate)
+        )
+        assert got == want, predicate
+        assert any(i != j for i, j in want), predicate
+    # the candidate stage pairs rows, not ids: each row pairing once, so a
+    # repeated id repeats its pairs
+    cand = Counter(
+        tuple(row)
+        for row in geometry_join_tables_candidates(l, r, "lid", "rid", res_j=res).collect()
+    )
+    assert all(n == ids.count(i) * ids.count(j) for (i, j), n in cand.items())
+    assert cand[(0, 0)] == 4
+    assert {(i, j) for i, a in zip(ids, geoms) for j, b in zip(ids, geoms)
+            if relate(a, b, "intersects")} <= set(cand)
+
+
+def test_geometry_joins_refuse_disjoint(spark):
+    """The joins only test pairs that share a grid cell, so ``disjoint``
+    would silently return almost nothing: every join refuses it."""
+    from geomesa_spark.operators.geometry_join import (
+        geometry_join_tables,
+        geometry_join_time,
+    )
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"gid": [1], "geom": [to_wkb(box(0, 0, 1, 1))], "ts_s": [0.0]})
+    )
+    other = df.withColumnRenamed("gid", "oid")
+    with pytest.raises(ValueError, match="disjoint"):
+        geometry_join(df, POLYS, predicate="disjoint")
+    with pytest.raises(ValueError, match="disjoint"):
+        geometry_join_time(df, POLYS, {"west": (0.0, 1.0)}, predicate="DISJOINT")
+    with pytest.raises(ValueError, match="disjoint"):
+        geometry_join_tables(df, other, "gid", "oid", predicate="disjoint")
+
+
 def test_geometry_join_tables_int32_ids_and_same_name_guard(spark):
     """int32 id columns must work without caller-side casts (the native
     cell keys carry any id dtype), and identical id names on both sides
@@ -306,9 +375,10 @@ def _edge_geoms():
 
 @pytest.mark.parametrize("res", [4, 8, 10])
 def test_bbox_cell_keys_match_numpy_reference(spark, res):
-    """Native cell keys equal the numpy encoder over Geometry.bounds(); the
-    int32 id keeps its dtype, and a null geometry emits no key (a null
-    bound must not clamp into cell 0)."""
+    """Native bbox cells equal the numpy grid coords over Geometry.bounds(),
+    each row carrying its box's first cell; the int32 id and the geometry
+    pass through, and a null geometry emits no row (a null bound must not
+    clamp into cell 0)."""
     from geomesa_spark.core import cells
     from geomesa_spark.operators.geometry_join import _bbox_cell_keys
 
@@ -317,19 +387,25 @@ def test_bbox_cell_keys_match_numpy_reference(spark, res):
     for gid, g in enumerate(geoms):
         x0, y0, x1, y1 = g.bounds()
         (cx0, cx1), (cy0, cy1) = cells.xy_of([x0, x1], [y0, y1], res)
-        xs, ys = np.meshgrid(np.arange(cx0, cx1 + 1), np.arange(cy0, cy1 + 1))
-        want |= {(gid, int(c)) for c in cells.encode_xy(xs.ravel(), ys.ravel())}
+        want |= {
+            (gid, int(x), int(y), int(cx0), int(cy0))
+            for x in range(cx0, cx1 + 1)
+            for y in range(cy0, cy1 + 1)
+        }
     null_gid = len(geoms)
+    wkb = [to_wkb(g) for g in geoms] + [None]
     df = spark.createDataFrame(
-        pd.DataFrame({"gid": np.arange(null_gid + 1, dtype=np.int32),
-                      "geom": [to_wkb(g) for g in geoms] + [None]}),
+        pd.DataFrame({"gid": np.arange(null_gid + 1, dtype=np.int32), "geom": wkb}),
         schema="gid int, geom binary",
     )
-    keys = _bbox_cell_keys(df, "geom", "gid", res)
+    keys = _bbox_cell_keys(df, "geom", res)
+    assert keys.columns == ["gid", "geom", "__x", "__y", "__x0", "__y0"]
     assert keys.schema["gid"].dataType.simpleString() == "int"
-    got = [(r["gid"], r["ccell"]) for r in keys.collect()]
+    rows = keys.collect()
+    assert all(bytes(r["geom"]) == wkb[r["gid"]] for r in rows)
+    got = [(r["gid"], r["__x"], r["__y"], r["__x0"], r["__y0"]) for r in rows]
     assert len(got) == len(set(got))
-    assert null_gid not in {gid for gid, _ in got}
+    assert null_gid not in {gid for gid, *_ in got}
     assert set(got) == want
 
 
@@ -343,30 +419,42 @@ def _python_nodes(df):
 
 
 def test_geometry_join_tables_bbox_udf_once_per_side(spark):
-    """Over UDF-built WKB the key path parses each side's geometry for its
-    bbox in ONE ArrowEvalPython (no second evaluation pushed below the
-    explode or an exchange)."""
+    """Over UDF-built WKB each side parses its geometry for the bbox in ONE
+    ArrowEvalPython, and the refine reads the geometries the join carried:
+    no re-fetch of either side. With small inputs the re-spread exchange
+    sits between the WKB UDF and geom_bbox (as in the catalog entry), and
+    each side's WKB UDF still runs once per row."""
     from geomesa_spark.operators.geometry_join import geometry_join_tables
+
+    calls = spark.sparkContext.accumulator(0)
 
     @F.pandas_udf("binary")
     def box_wkb(v: pd.Series) -> pd.Series:
+        calls.add(len(v))
         return pd.Series([to_wkb(box(x, x / 2, x + 3, x / 2 + 3)) for x in v])
 
-    def side(n, id_col):
-        return spark.range(n).select(
+    def side(n, id_col, parts=None):
+        return spark.range(n, numPartitions=parts).select(
             F.col("id").alias(id_col),
             box_wkb((F.col("id") % 40).cast("double")).alias("geom"),
         )
 
-    left, right = side(200, "lid"), side(50, "rid")
-    joined = geometry_join_tables(left, right, "lid", "rid")
+    joined = geometry_join_tables(side(200, "lid"), side(50, "rid"), "lid", "rid")
     nodes = _python_nodes(joined)
     bbox_nodes = [n for n in nodes if "geom_bbox" in n]
     assert len(bbox_nodes) == 2
     assert all("ArrowEvalPython" in n for n in bbox_nodes)
-    # + one WKB re-fetch per side and the refine: nothing evaluated twice
-    assert len(nodes) == 5
+    # one bbox node per side and the refine: no re-fetch, no dedup
+    assert len(nodes) == 3
 
+    small = geometry_join_tables(side(200, "lid", 1), side(50, "rid", 1), "lid", "rid")
+    nodes = _python_nodes(small)
+    assert len(nodes) == 5
+    assert sum("box_wkb" in n for n in nodes) == 2
+    assert not any("box_wkb" in n and "geom_bbox" in n for n in nodes)
+    calls.value = 0
+    assert small.count() > 0
+    assert calls.value == 250
 
 
 def test_bbox_udf_fields_in_schema_order(spark):
