@@ -1640,35 +1640,23 @@ GJ_HALF = 0.75  # half-size of the per-event box geometries (degrees)
 
 def _event_box_geoms(pts, half: float = GJ_HALF):
     """WKB box geometry per row (batched construction) — the non-point-row
-    fixture for the XZ2/XZ3/table-join entries."""
+    fixture for the XZ2/XZ3/table-join entries — beside its bbox columns
+    ``geom_xmin/_xmax/_ymin/_ymax`` (``extensions.with_bbox_columns``'
+    layout), computed natively from the same lon/lat arithmetic."""
+    from .core.geometry import boxes_wkb
 
     @F.pandas_udf("binary")
     def box_wkb(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        # fully batched WKB construction (same 93-byte LE polygon layout as
-        # core.geometry.to_wkb for a 5-point box ring): header bytes tiled,
-        # coordinates written through one (n, 10) float64 view
-        import struct
-
         lo = lon.to_numpy(dtype=np.float64)
         la = lat.to_numpy(dtype=np.float64)
-        n = len(lo)
-        x0, y0 = lo - half, la - half
-        x1, y1 = lo + half, la + half
-        coords = np.empty((n, 10), dtype="<f8")
-        coords[:, 0::2] = np.column_stack([x0, x1, x1, x0, x0])
-        coords[:, 1::2] = np.column_stack([y0, y0, y1, y1, y0])
-        header = np.frombuffer(
-            b"\x01" + struct.pack("<III", 3, 1, 5), dtype=np.uint8
-        )
-        buf = np.empty((n, 13 + 80), dtype=np.uint8)
-        buf[:, :13] = header
-        buf[:, 13:] = coords.view(np.uint8)
-        return pd.Series([row.tobytes() for row in buf])
+        return pd.Series(boxes_wkb(lo - half, la - half, lo + half, la + half))
 
-    return pts.withColumn(
-        "geom",
-        box_wkb(F.col("lon").cast("double"), F.col("lat").cast("double")),
-    )
+    lon, lat = F.col("lon").cast("double"), F.col("lat").cast("double")
+    return pts.withColumns({
+        "geom": box_wkb(lon, lat),
+        "geom_xmin": lon - half, "geom_xmax": lon + half,
+        "geom_ymin": lat - half, "geom_ymax": lat + half,
+    })
 
 
 GJT_HALF = 6.0  # nation-box half-size for the table-to-table join entry
@@ -1684,7 +1672,7 @@ def q_geo_geom_join_tables(spark, sf_dir):
     DE-9IM intersects exactly expressible as coordinate comparisons)."""
     from .operators.geometry_join import geometry_join_tables
 
-    left = _event_box_geoms(_points(spark, sf_dir)).select("event_id", "geom")
+    left = _event_box_geoms(_points(spark, sf_dir))
     (nation,) = _load(spark, sf_dir, "nation")
     nb = nation.select(
         # the raw (int32) key is intentionally NOT cast: the native cell
@@ -1694,10 +1682,8 @@ def q_geo_geom_join_tables(spark, sf_dir):
         F.expr(NATION_LON).cast("double").alias("lon"),
         F.expr(NATION_LAT).cast("double").alias("lat"),
     )
-    right = _event_box_geoms(nb, half=GJT_HALF).select("n_nationkey", "geom")
-    pairs = geometry_join_tables(
-        left, right, left_id="event_id", right_id="n_nationkey"
-    )
+    right = _event_box_geoms(nb, half=GJT_HALF)
+    pairs = geometry_join_tables(left, right, left_id="event_id", right_id="n_nationkey")
     return pairs.groupBy("n_nationkey").agg(
         F.count("*").cast("long").alias("n_pairs")
     ).select(F.col("n_nationkey").cast("long").alias("n_nationkey"), "n_pairs")

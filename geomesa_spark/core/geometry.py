@@ -287,6 +287,23 @@ def to_wkb(g: Geometry) -> bytes:
     return b"".join(out)
 
 
+_BOX_WKB_HEADER = np.frombuffer(b"\x01" + struct.pack("<III", 3, 1, 5), dtype=np.uint8)
+
+
+def boxes_wkb(x0, y0, x1, y1) -> list[bytes]:
+    """Batched ``to_wkb(box(x0, y0, x1, y1))`` over equal-length arrays:
+    the same 93-byte little-endian polygon (one 5-point ring), header bytes
+    tiled and every coordinate written through one (n, 10) float64 view."""
+    x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64) for v in (x0, y0, x1, y1))
+    coords = np.empty((len(x0), 10), dtype="<f8")
+    coords[:, 0::2] = np.column_stack([x0, x1, x1, x0, x0])
+    coords[:, 1::2] = np.column_stack([y0, y0, y1, y1, y0])
+    buf = np.empty((len(x0), 13 + 80), dtype=np.uint8)
+    buf[:, :13] = _BOX_WKB_HEADER
+    buf[:, 13:] = coords.view(np.uint8)
+    return [row.tobytes() for row in buf]
+
+
 def from_wkb(buf: bytes) -> Geometry:
     geom, _ = _read_wkb(memoryview(buf), 0)
     return geom

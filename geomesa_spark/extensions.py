@@ -134,25 +134,38 @@ def register_st_dwithin_pt(spark: SparkSession):
     return spark.udf.register("st_dwithin_pt", st_dwithin_pt)
 
 
-def with_bbox_columns(df: DataFrame, geom_col: str = "geom") -> DataFrame:
-    """Writer-side step for WKB geometry tables: materialize the per-row
-    bounding box as four plain double columns ``{geom}_xmin/_xmax/_ymin/
-    _ymax`` next to the opaque binary column — the XZ-storage analog
-    (reference: geomesa-index-api XZ2/XZ3 write keys derived from the
-    geometry envelope). Parquet keeps min/max row-group statistics for
-    plain doubles, so the JVM rule's injected range conjuncts prune IO
-    where a predicate over WKB bytes never could. One Arrow-batched parse
-    per row at WRITE time; queries pay nothing.
+_BBOX = ("xmin", "xmax", "ymin", "ymax")
 
-    Null geometry -> null bbox columns (any range conjunct then evaluates
-    null and the row drops, matching the refine UDF's False on null)."""
-    from .operators.geometry_join import _BBOX, _bbox_struct_udf
+
+def with_bbox_columns(df: DataFrame, geom_col: str = "geom") -> DataFrame:
+    """Writer-side step for WKB geometry tables, and the package's one WKB
+    -> bounding-box parser: materialize the per-row box as four plain
+    double columns ``{geom}_xmin/_xmax/_ymin/_ymax`` next to the opaque
+    binary column — the XZ-storage analog (reference: geomesa-index-api
+    XZ2/XZ3 write keys derived from the geometry envelope). Parquet keeps
+    min/max row-group statistics for plain doubles, so the JVM rule's
+    injected range conjuncts prune IO where a predicate over WKB bytes
+    never could, and ``geometry_join_tables`` keys each side by these
+    columns when it carries them. One Arrow-batched parse per row at WRITE
+    time; queries pay nothing.
+
+    CONTRACT (the same trust class for the JVM rule and the table join):
+    the columns must be the bounds of the geometry beside them — a stale
+    box prunes or misses real rows. Null geometry -> null bbox columns
+    (any range conjunct then evaluates null and the row drops, and the
+    join emits no cell for it, matching the refine's False on null)."""
+    from .core.geometry import from_wkb
+
+    @F.pandas_udf(", ".join(f"{p} double" for p in _BBOX))
+    def geom_bbox(wkb: pd.Series) -> pd.DataFrame:
+        rows = [(None,) * 4 if w is None else from_wkb(bytes(w)).bounds() for w in wkb]
+        # bounds() is (xmin, ymin, xmax, ymax); emit in the declared order
+        return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])[list(_BBOX)]
 
     b = f"__{geom_col}_bbox"
-    out = df.withColumn(b, _bbox_struct_udf()(F.col(geom_col)))
-    for part in _BBOX:
-        out = out.withColumn(f"{geom_col}_{part}", F.col(f"{b}.{part}"))
-    return out.drop(b)
+    return df.withColumn(b, geom_bbox(F.col(geom_col))).withColumns(
+        {f"{geom_col}_{p}": F.col(f"{b}.{p}") for p in _BBOX}
+    ).drop(b)
 
 
 def with_point_cell_column(

@@ -278,12 +278,7 @@ def _build():
     def make_bbox(
         x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
     ) -> pd.Series:
-        return pd.Series(
-            [
-                _wkb(G.box(float(a), float(b), float(c), float(d)))
-                for a, b, c, d in zip(x0, y0, x1, y1)
-            ]
-        )
+        return pd.Series(G.boxes_wkb(x0, y0, x1, y1))
 
     bbox_udf = F.pandas_udf(make_bbox, T.BinaryType())
     for name in ("st_makeBBOX", "st_makeBox2D"):

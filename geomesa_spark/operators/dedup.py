@@ -35,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .util import narrow_is_small, spread_small
+
 _HASH_PRIME = (1 << 61) - 1
 
 
@@ -117,21 +119,6 @@ def _window_hashes(text: str, n: int) -> np.ndarray:
     return (win * powers).sum(axis=1) & np.uint64(0xFFFFFFFF)
 
 
-def _split_small_input(
-    df: DataFrame, known_small: bool | None = None
-) -> DataFrame:
-    """Repartition tiny inputs to the session parallelism before a signature
-    UDF: a small-SF parquet arrives as ONE file split, which would serialize
-    the whole Arrow stage on one core (measured: the entire sf0.1 minhash
-    pipeline ran single-task). At production scale inputs carry natural
-    splits and this is a no-op. Shared impl: operators/util.spread_small —
-    pass ``known_small`` (probed on a narrow ancestor) for shuffle-rooted
-    frames, whose direct probe would double-execute the pipeline."""
-    from .util import spread_small
-
-    return spread_small(df, known_small)
-
-
 def minhash_signature_udf(num_hashes: int = 64, shingle_n: int = 5):
     """Arrow-batched UDF: text -> array<long> minhash signature.
 
@@ -202,12 +189,10 @@ def minhash_lsh_pairs(
     multiplicatively while 1 - (1 - J^r)^b keeps recall high (e.g. r=4,
     b=16 at J=0.9 misses 3e-6).
     """
-    from .util import narrow_is_small
-
     rows_per_band = num_hashes // bands
     sig = minhash_signature_udf(num_hashes, shingle_n)
     small_input = narrow_is_small(df.select(F.col(id_col), F.col(text_col)))
-    with_sig = _split_small_input(
+    with_sig = spread_small(
         df.select(F.col(id_col), F.col(text_col)), known_small=small_input
     ).withColumn("__sig", sig(F.col(text_col)))
 
@@ -258,7 +243,7 @@ def minhash_lsh_pairs(
     # id-pair shuffle BEFORE the texts are attached; gated on the INPUT's
     # probe (cand is shuffle-rooted — probing it directly would run the
     # whole candidate pipeline twice), so at production this is a no-op.
-    cand = _split_small_input(cand, known_small=small_input)
+    cand = spread_small(cand, known_small=small_input)
 
     texts = df.select(F.col(id_col), F.col(text_col))
     joined = (
@@ -356,7 +341,7 @@ def winnow_overlap_pairs(
     # blocks are freed by the ContextCleaner when the result frames are
     # garbage collected (knn.py:166 / retrieval.py hygiene).
     fps = (
-        _split_small_input(df.select(F.col(id_col), F.col(text_col)))
+        spread_small(df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), F.explode(wf(F.col(text_col))).alias("fp"))
         .localCheckpoint(eager=True)
     )
@@ -449,7 +434,7 @@ def dup_span_stats(
     from pyspark.sql import Window
 
     spans = (
-        _split_small_input(df.filter(F.length(text_col) >= w).select(id_col, text_col))
+        spread_small(df.filter(F.length(text_col) >= w).select(id_col, text_col))
         .select(
             F.col(id_col),
             F.explode(F.expr(f"sequence(1, length({text_col}) - {w} + 1)")).alias("i"),
@@ -623,7 +608,7 @@ def dup_span_stats_hashed(
     # localCheckpoint: the span frame feeds BOTH the survivor aggregate and
     # the join-back — without it the Arrow hashing pass runs once per side.
     spans = (
-        _split_small_input(df.filter(F.length(text_col) >= w).select(id_col, text_col))
+        spread_small(df.filter(F.length(text_col) >= w).select(id_col, text_col))
         .mapInPandas(emit, out_schema)
         .localCheckpoint(eager=True)
     )
@@ -846,7 +831,7 @@ def simhash_pairs(
     4-chunk banding silently lost recall whenever max_hamming > 3). Exact
     popcount verify is native bit_count — no UDF past the signature stage."""
     sh = simhash_udf()
-    with_h = _split_small_input(df.select(id_col, text_col)).withColumn(
+    with_h = spread_small(df.select(id_col, text_col)).withColumn(
         "__sh", sh(F.col(text_col))
     ).select(id_col, "__sh")
     return hamming_neardup_pairs(with_h, "__sh", id_col, max_hamming)

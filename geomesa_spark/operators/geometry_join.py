@@ -23,10 +23,14 @@ its cover's finer cells collapse to res_j ancestors and coarser cells
 expand to res_j children, both bounded by the cover budget.
 
 :func:`geometry_join_tables` joins two DataFrames of geometries; there the
-shuffle is inherent. Both sides explode their bbox cells natively with the
-geometry in the row and meet in one equi-join on the cell that keeps each
-pair only in its lowest shared cell, so each pair reaches the refine once
-(the two-relation join of RelationUtils.scala:39-53).
+shuffle is inherent. Each side's box is its ``{geom}_xmin/_xmax/_ymin/
+_ymax`` columns — read as written when the table carries them
+(``extensions.with_bbox_columns``, the write-time envelope of
+XZ2SFC.scala:54-77), else derived per query by that same function. Both
+sides explode their bbox cells natively with the geometry in the row and
+meet in one equi-join on the cell that keeps each pair only in its lowest
+shared cell, so each pair reaches the refine once (the two-relation join
+of RelationUtils.scala:39-53).
 """
 
 from __future__ import annotations
@@ -37,17 +41,17 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core import cells
 from ..core.geometry import Geometry, from_wkb, from_wkt, relate
+from ..extensions import _BBOX, with_bbox_columns
 
 DEFAULT_JOIN_RES = 8       # 256x256 world grid (~1.4 deg cells)
-_BBOX = ("xmin", "xmax", "ymin", "ymax")
 
 
 # re-spread rationale (shared impl: operators/util.spread_small): small-SF
 # parquet arrives as ONE split and AQE coalesces small exchanges to ~1
 # partition, either of which serializes a Python stage on one core
-# (measured: 13 s and ~14 s single-task at sf0.1). The table join's spreads
-# are gated on the NARROW input's probe — probing the shuffle-rooted join
-# itself would execute its stages twice.
+# (measured: 13 s and ~14 s single-task at sf0.1). The table join spreads
+# only a side that must derive its bbox in Python, gated on that NARROW
+# input's probe — probing the shuffle-rooted join would run its stages twice.
 from .util import narrow_is_small, spread_small
 
 
@@ -173,39 +177,21 @@ def geometry_join_time(
     )
 
 
-def _bbox_struct_udf():
-    """The package's one WKB -> bounding-box parser: a pandas UDF returning
-    struct<xmin, xmax, ymin, ymax> doubles (all null for a null geometry).
-    Feeds the join keys below and ``extensions.with_bbox_columns``."""
-
-    @F.pandas_udf(", ".join(f"{p} double" for p in _BBOX))
-    def geom_bbox(wkb: pd.Series) -> pd.DataFrame:
-        rows = []
-        for w in wkb:
-            if w is None:
-                rows.append((None,) * 4)
-                continue
-            x0, y0, x1, y1 = from_wkb(bytes(w)).bounds()
-            rows.append((x0, x1, y0, y1))
-        return pd.DataFrame(rows, columns=list(_BBOX))
-
-    return geom_bbox
-
-
 def _bbox_cell_keys(rows, geom_col, res_j):
     """``rows`` exploded to one row per res_j grid cell ``(__x, __y)`` of
-    the geometry's bounding box (one ``geom_bbox`` UDF pass, then native
-    sequence/explode), plus the box's first cell ``(__x0, __y0)``.
+    the geometry's bounding box, read from its ``{geom_col}_xmin/_xmax/
+    _ymin/_ymax`` columns (:func:`extensions.with_bbox_columns`) by native
+    sequence/explode, plus the box's first cell ``(__x0, __y0)``; the bbox
+    columns are dropped.
 
     A null bbox emits no row: ``greatest()`` skips nulls, so a null bound
     would clamp into cell 0, but a null sequence START explodes to nothing.
     Not a ``.filter``: Catalyst pushes that below the caller's re-spread
-    exchange, and both the bbox UDF and the caller's geometry UDF then run
-    twice. For the same reason each explode takes its sequence expression
-    inline: over a plain column, Catalyst infers a ``size(col) > 0`` filter
-    and pushes it, UDF and all, below the generator."""
-    rows = rows.withColumn("__bbox", _bbox_struct_udf()(F.col(geom_col)))
-    xmin, xmax, ymin, ymax = bbox = [f"__bbox.{p}" for p in _BBOX]
+    exchange, and a bbox UDF under it then runs twice. For the same reason
+    each explode takes its sequence expression inline: over a plain
+    column, Catalyst infers a ``size(col) > 0`` filter and pushes it, UDF
+    and all, below the generator."""
+    xmin, xmax, ymin, ymax = bbox = [f"{geom_col}_{p}" for p in _BBOX]
     x0, y0 = cells.xy_sql_expr(xmin, ymin, res_j)
     x1, y1 = cells.xy_sql_expr(xmax, ymax, res_j)
     valid = " AND ".join(f"{c} IS NOT NULL" for c in bbox)
@@ -214,7 +200,7 @@ def _bbox_cell_keys(rows, geom_col, res_j):
         rows.select("*", F.explode(xs).alias("__x"))
         .select("*", F.explode(F.expr(f"sequence({y0}, {y1})")).alias("__y"))
         .withColumns({"__x0": F.expr(x0), "__y0": F.expr(y0)})
-        .drop("__bbox")
+        .drop(*bbox)
     )
 
 
@@ -260,10 +246,13 @@ def geometry_join_tables(
     runs on them in place as a mapInPandas barrier. Hot cells are AQE
     skew-join territory; the two id column names must differ.
 
-    Inputs should be scan-rooted (or cheap to recompute): the small-input
-    probe materializes a shuffle-rooted input's stages once extra (see
-    util.narrow_is_small) — persist/write such inputs first, as a
-    production pipeline would.
+    A side carrying ``{geom}_xmin/_xmax/_ymin/_ymax`` columns is keyed by
+    them under ``extensions.with_bbox_columns``' contract (they must be the
+    geometry's bounds); a side without them derives them with that
+    function. Such a side should be scan-rooted (or cheap to recompute):
+    its small-input probe materializes a shuffle-rooted input's stages once
+    extra (see util.narrow_is_small) — persist/write such inputs first, as
+    a production pipeline would.
     """
     _check_predicate(predicate)
     pairs = _cell_pairs(left, right, left_id, right_id, left_geom, right_geom, res_j)
@@ -290,8 +279,10 @@ def _cell_pairs(left, right, left_id, right_id, left_geom, right_geom, res_j):
     """-> (left_id, __lg, right_id, __rg): each pair of rows whose bboxes
     share a res_j grid cell, ONCE, with both WKB geometries.
 
-    Each side (re-spread when small) carries (id, geom) through the
-    bbox-cell explode of :func:`_bbox_cell_keys`. The sides meet in ONE
+    Each side carries (id, geom, bbox columns) through the bbox-cell
+    explode of :func:`_bbox_cell_keys`: as it is when its schema has the
+    columns (no probe, no exchange, no Python node), else re-spread when
+    small and boxed by ``with_bbox_columns``. The sides meet in ONE
     equi-join on the cell (x, y) — both shuffle on it, co-locating spatial
     neighborhoods — and keep a pair only in its LOWEST shared cell,
     ``x = greatest(l.x0, r.x0) AND y = greatest(l.y0, r.y0)``: the cell
@@ -302,9 +293,15 @@ def _cell_pairs(left, right, left_id, right_id, left_geom, right_geom, res_j):
                          "alias one side before joining")
 
     def keys(df, id_col, geom_col, side):
-        narrow = df.select(id_col, geom_col)
-        keyed = _bbox_cell_keys(spread_small(narrow, known_small=narrow_is_small(df)),
-                                geom_col, res_j)
+        bbox = [f"{geom_col}_{p}" for p in _BBOX]
+        if set(bbox) <= set(df.columns):
+            boxed = df.select(id_col, geom_col, *bbox)
+        else:
+            narrow = df.select(id_col, geom_col)
+            boxed = with_bbox_columns(
+                spread_small(narrow, known_small=narrow_is_small(df)), geom_col
+            )
+        keyed = _bbox_cell_keys(boxed, geom_col, res_j)
         names = {geom_col: "g", "__x": "x", "__y": "y", "__x0": "x0", "__y0": "y0"}
         return keyed.withColumnsRenamed({c: f"__{side}{n}" for c, n in names.items()})
 

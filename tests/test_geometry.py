@@ -144,6 +144,18 @@ def test_wkb_roundtrip(wkt):
     assert G.from_wkb(G.to_wkb(g)) == g
 
 
+def test_boxes_wkb_matches_to_wkb():
+    """The batched box builder writes exactly ``to_wkb(box(...))``'s bytes,
+    NaN, infinite and negative-zero coordinates included."""
+    rng = np.random.default_rng(3)
+    c = rng.uniform(-180, 180, (40, 4))
+    c[0] = [np.nan, 1.0, 2.0, np.nan]
+    c[1] = [-0.0, np.inf, -np.inf, 0.0]
+    got = G.boxes_wkb(c[:, 0], c[:, 1], c[:, 2], c[:, 3])
+    assert got == [G.to_wkb(G.box(*map(float, row))) for row in c]
+    assert G.boxes_wkb([], [], [], []) == []
+
+
 def test_pip_vectorized_with_hole():
     g = G.from_wkt(WKTS[3])  # box with hole
     edges = G.polygon_edges(g)

@@ -239,6 +239,19 @@ def test_geometry_join_tables_edge_geoms_brute_force(spark, res):
     cell edge and a row repeating an id) against brute-force relate(), for
     several predicates: each true pair once — kept in its lowest shared
     cell — and each row of a repeated id paired on its own."""
+    _edge_geoms_brute_force(spark, res, lambda df: df)
+
+
+@pytest.mark.parametrize("res", [4, 8, 10])
+def test_geometry_join_tables_edge_geoms_bbox_columns_brute_force(spark, res):
+    """The same checks on inputs that carry ``with_bbox_columns``' boxes,
+    which the join reads instead of deriving its own."""
+    from geomesa_spark.extensions import with_bbox_columns
+
+    _edge_geoms_brute_force(spark, res, with_bbox_columns)
+
+
+def _edge_geoms_brute_force(spark, res, prepare):
     from geomesa_spark.operators.geometry_join import (
         geometry_join_tables,
         geometry_join_tables_candidates,
@@ -252,8 +265,8 @@ def test_geometry_join_tables_edge_geoms_brute_force(spark, res):
     ids = list(range(len(geoms))) + [0]           # id 0 twice
     geoms = geoms + [geoms[0]]
     pdf = pd.DataFrame({"gid": ids, "geom": [to_wkb(g) for g in geoms]})
-    l = spark.createDataFrame(pdf.rename(columns={"gid": "lid"}))
-    r = spark.createDataFrame(pdf.rename(columns={"gid": "rid"}))
+    l = prepare(spark.createDataFrame(pdf.rename(columns={"gid": "lid"})))
+    r = prepare(spark.createDataFrame(pdf.rename(columns={"gid": "rid"})))
     for predicate in ("intersects", "within", "touches"):
         got = sorted(
             (row["lid"], row["rid"])
@@ -375,11 +388,13 @@ def _edge_geoms():
 
 @pytest.mark.parametrize("res", [4, 8, 10])
 def test_bbox_cell_keys_match_numpy_reference(spark, res):
-    """Native bbox cells equal the numpy grid coords over Geometry.bounds(),
-    each row carrying its box's first cell; the int32 id and the geometry
-    pass through, and a null geometry emits no row (a null bound must not
-    clamp into cell 0)."""
+    """Native bbox cells over ``with_bbox_columns``' boxes equal the numpy
+    grid coords over Geometry.bounds(), each row carrying its box's first
+    cell; the int32 id and the geometry pass through, the bbox columns are
+    dropped, and a null geometry emits no row (a null bound must not clamp
+    into cell 0)."""
     from geomesa_spark.core import cells
+    from geomesa_spark.extensions import with_bbox_columns
     from geomesa_spark.operators.geometry_join import _bbox_cell_keys
 
     geoms = _edge_geoms()
@@ -398,7 +413,7 @@ def test_bbox_cell_keys_match_numpy_reference(spark, res):
         pd.DataFrame({"gid": np.arange(null_gid + 1, dtype=np.int32), "geom": wkb}),
         schema="gid int, geom binary",
     )
-    keys = _bbox_cell_keys(df, "geom", res)
+    keys = _bbox_cell_keys(with_bbox_columns(df), "geom", res)
     assert keys.columns == ["gid", "geom", "__x", "__y", "__x0", "__y0"]
     assert keys.schema["gid"].dataType.simpleString() == "int"
     rows = keys.collect()
@@ -418,12 +433,28 @@ def _python_nodes(df):
     return [ln for ln in plan.splitlines() if re.search("|".join(PYTHON_NODES), ln)]
 
 
+def _subtrees(df, node):
+    """The plan lines below each ``node`` of df's physical plan."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    col = [ln.find("+- ") + 3 for ln in lines]  # where each node's name starts
+    out = []
+    for i, ln in enumerate(lines):
+        if ln[col[i]:].startswith(node):
+            j = i + 1
+            while j < len(lines) and col[j] > col[i]:
+                j += 1
+            out.append(lines[i + 1:j])
+    return out
+
+
 def test_geometry_join_tables_bbox_udf_once_per_side(spark):
-    """Over UDF-built WKB each side parses its geometry for the bbox in ONE
-    ArrowEvalPython, and the refine reads the geometries the join carried:
-    no re-fetch of either side. With small inputs the re-spread exchange
-    sits between the WKB UDF and geom_bbox (as in the catalog entry), and
-    each side's WKB UDF still runs once per row."""
+    """Over UDF-built WKB a side without bbox columns parses its geometry
+    for the bbox in ONE geom_bbox ArrowEvalPython, and the refine reads the
+    geometries the join carried: no re-fetch of either side. With small
+    inputs the re-spread exchange sits between the WKB UDF and geom_bbox,
+    and each side's WKB UDF still runs once per row. A side that carries
+    ``{geom}_xmin/..`` columns (as the catalog entry's do) is keyed by them
+    as is: no geom_bbox node and no exchange below its cell explode."""
     from geomesa_spark.operators.geometry_join import geometry_join_tables
 
     calls = spark.sparkContext.accumulator(0)
@@ -433,17 +464,21 @@ def test_geometry_join_tables_bbox_udf_once_per_side(spark):
         calls.add(len(v))
         return pd.Series([to_wkb(box(x, x / 2, x + 3, x / 2 + 3)) for x in v])
 
-    def side(n, id_col, parts=None):
+    def side(n, id_col, parts=None, boxed=False):
+        x = (F.col("id") % 40).cast("double")
+        bbox = {"xmin": x, "xmax": x + 3, "ymin": x / 2, "ymax": x / 2 + 3}
         return spark.range(n, numPartitions=parts).select(
-            F.col("id").alias(id_col),
-            box_wkb((F.col("id") % 40).cast("double")).alias("geom"),
+            F.col("id").alias(id_col), box_wkb(x).alias("geom"),
+            *(c.alias(f"geom_{p}") for p, c in bbox.items() if boxed),
         )
+
+    def bbox_nodes(nodes):
+        return [n for n in nodes if re.search(r"\bgeom_bbox\(", n)]
 
     joined = geometry_join_tables(side(200, "lid"), side(50, "rid"), "lid", "rid")
     nodes = _python_nodes(joined)
-    bbox_nodes = [n for n in nodes if "geom_bbox" in n]
-    assert len(bbox_nodes) == 2
-    assert all("ArrowEvalPython" in n for n in bbox_nodes)
+    assert len(bbox_nodes(nodes)) == 2
+    assert all("ArrowEvalPython" in n for n in bbox_nodes(nodes))
     # one bbox node per side and the refine: no re-fetch, no dedup
     assert len(nodes) == 3
 
@@ -454,6 +489,19 @@ def test_geometry_join_tables_bbox_udf_once_per_side(spark):
     assert not any("box_wkb" in n and "geom_bbox" in n for n in nodes)
     calls.value = 0
     assert small.count() > 0
+    assert calls.value == 250
+
+    boxed = geometry_join_tables(
+        side(200, "lid", 1, boxed=True), side(50, "rid", 1, boxed=True), "lid", "rid"
+    )
+    nodes = _python_nodes(boxed)
+    assert len(nodes) == 3 and not bbox_nodes(nodes)
+    assert sum("box_wkb" in n for n in nodes) == 2
+    below = _subtrees(boxed, "Generate")
+    assert below and not any("Exchange" in ln for sub in below for ln in sub)
+    want = sorted(small.collect())
+    calls.value = 0
+    assert sorted(boxed.collect()) == want
     assert calls.value == 250
 
 

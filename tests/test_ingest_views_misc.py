@@ -212,46 +212,33 @@ class TestRound2Converters:
 
         assert os.path.getsize(base + ".dbf") > 32
 
-    def test_shapefile_distributed_matches_client_path(self, spark, tmp_path):
-        """Scale-path shapefile (part-file render + driver byte merge): same
-        point set and same DBF bytes-per-record as the bounded client path,
-        at 2x the client fixture and across multiple partitions, with no
-        toLocalIterator anywhere (VERDICT r4 next-round #7)."""
+    def test_shapefile_keeps_row_order_across_partitions(self, spark, tmp_path):
+        """Part-file render + driver byte merge keeps the DataFrame's row
+        order: the same ordered frame exported from 1 and from 8 partitions
+        gives its points in collect() order and byte-identical .shp/.shx/
+        .dbf files, and the part files are cleaned up."""
+        import os
+
         from geomesa_spark.sources.exports import (
             export_shapefile,
-            export_shapefile_distributed,
             read_shapefile_points,
         )
 
-        rows = [(i * 0.5, 40.0 - i * 0.25, f"f{i}", i * 2.0) for i in range(20)]
-        df = spark.createDataFrame(
-            rows, "lon double, lat double, name string, v double"
-        ).repartition(4)
-        base_d = str(tmp_path / "dist")
-        n = export_shapefile_distributed(df, base_d)
-        assert n == 20
-        got = sorted(read_shapefile_points(base_d))
-        assert got == sorted((r[0], r[1]) for r in rows)
-        # headers + record framing identical to the client path modulo order
-        base_c = str(tmp_path / "client")
-        export_shapefile(df.coalesce(1).orderBy("name"), base_c)
-        import os
-
-        assert os.path.getsize(base_d + ".shp") == os.path.getsize(base_c + ".shp")
-        assert os.path.getsize(base_d + ".shx") == os.path.getsize(base_c + ".shx")
-        assert os.path.getsize(base_d + ".dbf") == os.path.getsize(base_c + ".dbf")
-        assert not os.path.exists(base_d + ".parts")  # part files cleaned up
-
-    def test_shapefile_client_path_bound(self, spark, tmp_path):
-        from geomesa_spark.sources.exports import export_shapefile
-
-        df = spark.createDataFrame(
-            [(float(i), float(i)) for i in range(50)], "lon double, lat double"
-        )
-        import pytest as _pt
-
-        with _pt.raises(ValueError, match="max_rows"):
-            export_shapefile(df, str(tmp_path / "cap"), max_rows=10)
+        # (i * 37) % 200 is a permutation: every lon distinct
+        rows = [(((i * 37) % 200) * 0.5, 40.0 - i * 0.25, f"f{i}", i * 2.0)
+                for i in range(200)]
+        df = spark.createDataFrame(rows, "lon double, lat double, name string, v double")
+        files = []
+        for parts in (1, 8):
+            ordered = df.repartitionByRange(parts, "lon").sortWithinPartitions("lon")
+            assert ordered.rdd.getNumPartitions() == parts
+            base = str(tmp_path / f"p{parts}")
+            assert export_shapefile(ordered, base) == len(rows)
+            assert read_shapefile_points(base) == [(r.lon, r.lat) for r in ordered.collect()]
+            assert not os.path.exists(base + ".parts")
+            files.append({ext: open(base + ext, "rb").read()
+                          for ext in (".shp", ".shx", ".dbf")})
+        assert files[0] == files[1]
 
     def test_gml_and_leaflet(self, spark, tmp_path):
         from geomesa_spark.sources.exports import export_gml, export_leaflet
