@@ -37,6 +37,31 @@ SharedArchiveFile``), which maps those classes already parsed from one file.
   ``<name>.bad`` and the session is started once more without it; when
   that start fails as well, the archive is put back and the error raised.
 
+Classpath session extensions. Building a ``SparkSession`` ServiceLoader-loads
+every ``SparkSessionExtensionsProvider`` on the classpath. Under
+``$SPARK_HOME/jars`` the only one is spark-mllib's
+``org.apache.spark.sql.ml.InternalFunctionRegistration``, whose object puts
+``vector_to_array``, ``array_to_vector`` and ``aggregate_metrics`` into the
+JVM-wide internal function registry through TypeTag-typed Scala ``udf``
+calls: that starts Scala runtime reflection (about a thousand
+``scala.reflect.runtime`` classes and their signature unpickling) and made
+the JVM ``SparkSession`` constructor take 0.9-1.0 s of every session start
+(4-core host). No engine query calls those functions, but classic
+``pyspark.ml.functions.vector_to_array`` and ``array_to_vector`` resolve
+through them. So where :func:`get_spark` puts the engine jar on the driver
+(below), it also sets ``spark.sql.extensions.test.loadFromCp=false``
+(Spark's own switch for the scan, labelled test-only; ``tests/
+test_session.py`` fails if it stops working) and adds the jar's
+``geomesaspark.ext.LazyMlFunctions`` to ``spark.sql.extensions``: it
+registers the three names with builders that initialize MLlib's object on
+their first use, so only a session that calls them pays the reflection, at
+that first call. That cut the constructor to under 0.1 s. The class-data
+archive is dumped with the scan off too. ``spark.sql.extensions`` entries
+(the engine's Catalyst rule, ``extensions.py``, and a caller's own) are
+applied before the scan would run and are kept. A caller that needs the
+scan (another provider of its own on the classpath) passes
+``extra_conf={"spark.sql.extensions.test.loadFromCp": "true"}``.
+
 Engine jar and the ``file:`` filesystem. Without Hadoop's native library,
 the stock local filesystem sets every permission by forking a ``chmod``
 process: one per data file, ``.crc`` sidecar and directory a write creates
@@ -101,8 +126,8 @@ _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 _BUILD_TIMEOUT_S = 600
 # the directory holding this package (a zip under --py-files works as well)
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# the engine's JVM classes: the Catalyst rule (extensions.py) and the
-# file: filesystem
+# the engine's JVM classes: the Catalyst rule (extensions.py), the file:
+# filesystem and the lazy MLlib function registration
 _JVM_SRC = os.path.join(_PKG_PARENT, "jvm", "src")
 FS_IMPL = "geomesaspark.fs.NoForkLocalFileSystem"
 # confs whose files SparkSubmit resolves through the file: filesystem at
@@ -112,6 +137,10 @@ _SUBMIT_FILES = ("spark.files", "spark.submit.pyFiles", "spark.archives", "spark
 # runs on, so a jar compiled by a newer JDK still loads on any JVM sharing
 # the cache
 _JAVA_RELEASE = "17"
+# Spark's switch for the ServiceLoader scan of SparkSessionExtensionsProvider
+# classes on the classpath (StaticSQLConf.LOAD_SESSION_EXTENSIONS_FROM_CLASSPATH)
+_LOAD_EXTENSIONS_FROM_CP = "spark.sql.extensions.test.loadFromCp"
+_ML_FUNCTIONS = "geomesaspark.ext.LazyMlFunctions"
 
 
 def get_spark(
@@ -179,8 +208,9 @@ def _jvm_running() -> bool:
 
 def _use_engine_jar(conf: dict) -> None:
     """Put the engine jar on ``spark.jars`` (all local entries as
-    ``local:``) and make its class the ``file:`` filesystem; warn and leave
-    ``conf`` alone when the jar cannot be built (module docstring)."""
+    ``local:``), make its class the ``file:`` filesystem and skip the
+    classpath extension scan; warn and leave ``conf`` alone when the jar
+    cannot be built (module docstring)."""
     try:
         jar = engine_jar()
     except RuntimeError as e:
@@ -190,6 +220,10 @@ def _use_engine_jar(conf: dict) -> None:
     conf["spark.jars"] = ",".join(dict.fromkeys(u for j in jars for u in _local_uris(j)))
     if not os.environ.get("PYSPARK_SUBMIT_ARGS") and not any(conf.get(k) for k in _SUBMIT_FILES):
         conf.setdefault("spark.hadoop.fs.file.impl", FS_IMPL)
+    # no classpath extension scan; MLlib's SQL functions register on first use
+    if conf.setdefault(_LOAD_EXTENSIONS_FROM_CP, "false") == "false":
+        conf["spark.sql.extensions"] = ",".join(
+            e for e in (_ML_FUNCTIONS, conf.get("spark.sql.extensions")) if e)
 
 
 def _local_uris(entry: str) -> list[str]:
@@ -384,6 +418,7 @@ def _build(path: str, conf: dict) -> None:
         "spark.driver.memory": str(conf.get("spark.driver.memory", "1g")),
         "spark.ui.enabled": "false",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        _LOAD_EXTENSIONS_FROM_CP: "false",
         "spark.driver.defaultJavaOptions": f"-XX:ArchiveClassesAtExit={tmp} {_CDS_QUIET}",
     }
     script = (

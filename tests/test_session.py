@@ -1,8 +1,9 @@
 """get_spark session start: the class-data archive (built once into the user
 cache, mapped by later sessions, never fatal), the Python worker daemon
 (its import path, one daemon per session, the frozen preload, the lazy
-zipimport directories) and the engine jar's file: filesystem (no forked
-chmod, same modes, checksums).
+zipimport directories), the engine jar's file: filesystem (no forked
+chmod, same modes, checksums) and the skipped classpath scan for session
+extensions.
 
 Sessions that test the start run in their own subprocess with a temp
 XDG_CACHE_HOME: the archive applies only where a process launches its
@@ -157,6 +158,43 @@ def test_conf_dir_with_settings_gets_no_archive(tmp_path):
     assert out["conf"].get("spark.geomesa.test.marker") == "on"  # conf dir read
     assert _archive_arg(out) == []
     assert not list(cache.glob("**/*.jsa"))  # and nothing was built
+
+
+def test_start_skips_classpath_session_extensions(tmp_path):
+    """Start plus one job loads no Scala runtime reflection and not MLlib's
+    classpath-registered InternalFunctionRegistration; a caller's
+    loadFromCp=true brings both back. (A non-template conf file keeps the
+    class archive out of this test.)"""
+    home = _spark_home(tmp_path / "spark", {"spark-defaults.conf": "# none\n"})
+
+    def loaded(name, extra_conf):
+        log = tmp_path / f"{name}.log"
+        out = _session(home, tmp_path / "cache", tmp_path, {
+            **extra_conf, "spark.driver.extraJavaOptions": f"-Xlog:class+load:file={log}",
+        })
+        assert out["sum"] == 4950
+        lines = log.read_text().splitlines()
+        assert len(lines) > 5000
+        return (sum("] scala.reflect.runtime." in ln for ln in lines),
+                any("] org.apache.spark.sql.ml.InternalFunctionRegistration " in ln
+                    for ln in lines))
+
+    assert loaded("default", {}) == (0, False)
+    reflection, registration = loaded("scan", {session._LOAD_EXTENSIONS_FROM_CP: "true"})
+    assert reflection > 100 and registration
+
+
+def test_classic_ml_vector_functions_register_on_first_use(spark):
+    """Classic pyspark.ml.functions resolve MLlib's internal SQL functions,
+    which a session without the classpath scan registers on first use."""
+    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.linalg import DenseVector
+
+    df = spark.range(3).selectExpr("id", "array(id * 1.5D, -CAST(id AS DOUBLE)) AS a")
+    vec = df.select("id", array_to_vector("a").alias("v"))
+    rows = vec.select("id", "v", vector_to_array("v").alias("b")).orderBy("id").collect()
+    assert [r.v for r in rows] == [DenseVector([i * 1.5, -i]) for i in range(3)]
+    assert [r.b for r in rows] == [[i * 1.5, float(-i)] for i in range(3)]
 
 
 def test_daemon_finds_package_reached_through_sys_path(tmp_path):
@@ -478,6 +516,15 @@ def test_engine_jar_conf(tmp_path, monkeypatch):
     conf = {}
     session._use_engine_jar(conf)
     assert "spark.hadoop.fs.file.impl" not in conf
+    # the classpath extension scan goes, MLlib's lazy registration joins a
+    # caller's extensions; a caller's loadFromCp=true keeps the scan alone
+    conf = {"spark.sql.extensions": "caller.Ext"}
+    session._use_engine_jar(conf)
+    assert conf[session._LOAD_EXTENSIONS_FROM_CP] == "false"
+    assert conf["spark.sql.extensions"] == f"{session._ML_FUNCTIONS},caller.Ext"
+    conf = {session._LOAD_EXTENSIONS_FROM_CP: "true"}
+    session._use_engine_jar(conf)
+    assert "spark.sql.extensions" not in conf
 
 
 @pytest.mark.skipif(session._jdk_tool("javac") is None, reason="no JDK compiler")
